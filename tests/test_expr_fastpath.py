@@ -260,6 +260,23 @@ def test_lit_vec_memo_key_is_collision_proof(spark):
     assert _bits([float(x) for x in rows[0]["b"]]) == _bits(v2)
 
 
+def test_lit_vec_memo_tells_signed_zeros_apart(spark):
+    """Advice r15: 0.0 == -0.0, so a float-tuple memo key handed the
+    second of [0.0] and [-0.0] the literal built for the first. Each
+    value is now keyed on float.hex(); both orders are pinned (a memo
+    hit in either direction would copy the other zero's sign bit)."""
+    from toy_vector_db_spark.operators import knn as K
+
+    one = spark.range(1)
+    for first, second in (([0.0], [-0.0]), ([-0.0, 0.0], [0.0, 0.0])):
+        assert tuple(first) == tuple(second)  # the float keys alias
+        a, b = K._lit_vec(first), K._lit_vec(second)
+        assert str(a) != str(b)
+        rows = one.select(a.alias("a"), b.alias("b")).collect()
+        assert _bits([float(x) for x in rows[0]["a"]]) == _bits(first)
+        assert _bits([float(x) for x in rows[0]["b"]]) == _bits(second)
+
+
 def test_pq_lut_cache_key_is_content_keyed(spark, emb):
     """Advice r14 (low): _PQ_LUT_CACHE fingerprinted codebooks with
     Python's salted 64-bit hash(bytes) — collisions improbable, not

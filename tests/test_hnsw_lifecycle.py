@@ -18,24 +18,49 @@ def _edge_set(df):
     )
 
 
+def _chain_batches(base, lo, hi, cycles):
+    """``cycles`` consecutive ascending id slices of [lo, hi) — the
+    batches of an append-only ingest chain."""
+    bounds = [lo + (hi - lo) * c // cycles for c in range(cycles + 1)]
+    return [
+        base.where((F.col("vec_id") >= a) & (F.col("vec_id") < b))
+        for a, b in zip(bounds, bounds[1:])
+    ]
+
+
 def test_upsert_append_equals_scratch_build(spark, embeddings):
     """The append case (batch ids all greater than existing ids — the
     production shape for monotonically-assigned ids): reconstructing each
     touched shard's stored graph and replaying Algorithm 1 for the new
     ids must reproduce the scratch build EDGE FOR EDGE, because levels
-    are hash-seeded and insertion order is id order."""
+    are hash-seeded and insertion order is id order. Run as a 3-upsert
+    chain, each upsert on the previous one's (materialized) output; a
+    tombstone search over the chained index must return exactly the
+    scratch index's rows."""
     n = embeddings.count()
     cut = split_count(n, 0.95)
     base = embeddings.where(F.col("vec_id") < cut)
     init_cut = split_count(cut, 0.75)
     initial = base.where(F.col("vec_id") < init_cut)
-    batch = base.where(F.col("vec_id") >= init_cut)
-    parted0, edges0 = hnsw.hnsw_index(initial, P)
-    parted1, edges1 = hnsw.hnsw_upsert(parted0, edges0, batch, P)
-    scratch = hnsw.build_edges(base, P)
-    assert _edge_set(edges1) == _edge_set(scratch)
+    parted, edges = hnsw.hnsw_index(initial, P)
+    for batch in _chain_batches(base, init_cut, cut, 3):
+        parted, edges = hnsw.hnsw_upsert(parted, edges, batch, P)
+    scratch_p, scratch_e = hnsw.hnsw_index(base, P)
+    assert _edge_set(edges) == _edge_set(scratch_e)
     # the upserted vector table is the union, exactly
-    assert parted1.count() == base.count()
+    assert parted.count() == base.count()
+    qs = embeddings.where(F.col("vec_id") >= cut).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+    )
+    dead = base.select("vec_id").where(F.col("vec_id") % 17 == 0)
+    chained = hnsw.knn_hnsw_deleted(parted, edges, dead, qs, 10).collect()
+    scratch = hnsw.knn_hnsw_deleted(
+        scratch_p, scratch_e, dead, qs, 10
+    ).collect()
+    assert chained and sorted(map(tuple, chained)) == sorted(
+        map(tuple, scratch)
+    )
 
 
 def test_upsert_interleaved_falls_back_to_shard_rebuild(spark, embeddings):
@@ -138,6 +163,107 @@ def test_incremental_pack_prepopulates_and_matches_full(spark, embeddings):
     scratch_p, scratch_e = hnsw.hnsw_index(base, P)
     scratch = hnsw.knn_hnsw_prebuilt(scratch_p, scratch_e, qs, 10).collect()
     assert sorted(map(tuple, served)) == sorted(map(tuple, scratch))
+
+
+def _stages_of(spark, group, fn):
+    """Run ``fn`` under its own Spark job group; return its result and
+    the number of stages its jobs ran (stages skipped because their
+    shuffle output was reused are not counted)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed asynchronously by the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    stages = [
+        sid
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+        if store.lastStageAttempt(sid).status().toString() != "SKIPPED"
+    ]
+    return out, len(stages)
+
+
+def _plan_nodes(df):
+    """Node count of the optimized logical plan (one line per node)."""
+    return len(
+        df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    )
+
+
+def test_upsert_chain_keeps_stages_and_lineage_flat(spark, embeddings):
+    """Each upsert returns materialized (parted', edges') leaves, so an
+    upsert on an upserted index re-runs none of the earlier upserts'
+    ingest kernels: along a chain the stage count of every upsert and
+    the plan size of its outputs stay what they were at the first one
+    (lazy outputs grew both by one upsert's worth per cycle)."""
+    n = embeddings.count()
+    cut = split_count(n, 0.95)
+    base = embeddings.where(F.col("vec_id") < cut)
+    init_cut = split_count(cut, 0.75)
+    initial = base.where(F.col("vec_id") < init_cut)
+
+    parted, edges = hnsw.hnsw_index(initial, P)
+    hnsw.cached_packed_index(parted, edges)  # a serving session's start
+    stages, nodes = [], []
+    for c, batch in enumerate(_chain_batches(base, init_cut, cut, 4)):
+        (parted, edges), s = _stages_of(
+            spark, f"hnsw_upsert.{c}",
+            lambda: hnsw.hnsw_upsert(parted, edges, batch, P),
+        )
+        stages.append(s)
+        nodes.append((_plan_nodes(parted), _plan_nodes(edges)))
+    assert stages[-1] == stages[0], stages
+    assert nodes[-1] == nodes[0], nodes
+
+    cells, edges, cents = hnsw.routed_index(initial)
+    stages, nodes = [], []
+    for c, batch in enumerate(_chain_batches(base, init_cut, cut, 2)):
+        (cells, edges), s = _stages_of(
+            spark, f"hnsw_routed_upsert.{c}",
+            lambda: hnsw.hnsw_routed_upsert(cells, edges, cents, batch),
+        )
+        stages.append(s)
+        nodes.append((_plan_nodes(cells), _plan_nodes(edges)))
+    assert stages[-1] == stages[0], stages
+    assert nodes[-1] == nodes[0], nodes
+    assert cells.count() == base.count()
+
+
+def test_search_plan_over_upsert_chain_stays_flat(spark, embeddings):
+    """A tombstone search over the third upsert's output plans the same
+    shuffles and the same number of nodes as one over the first's: the
+    vector table a search scans is one leaf at any chain depth (a lazy
+    parted' was a Union per upsert, all of them planned per query)."""
+    from toy_vector_db_spark.plans import explain
+
+    n = embeddings.count()
+    cut = split_count(n, 0.95)
+    base = embeddings.where(F.col("vec_id") < cut)
+    init_cut = split_count(cut, 0.75)
+    initial = base.where(F.col("vec_id") < init_cut)
+    qs = embeddings.where(F.col("vec_id") >= cut).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+    )
+    dead = base.select("vec_id").where(F.col("vec_id") % 17 == 0)
+
+    def shape(parted, edges):
+        nodes = explain._nodes(explain.formatted_plan(
+            hnsw.knn_hnsw_deleted(parted, edges, dead, qs, 10)
+        ))
+        return nodes.count("Exchange"), len(nodes)
+
+    parted, edges = hnsw.hnsw_index(initial, P)
+    hnsw.cached_packed_index(parted, edges)
+    shapes = []
+    for batch in _chain_batches(base, init_cut, cut, 3):
+        parted, edges = hnsw.hnsw_upsert(parted, edges, batch, P)
+        shapes.append(shape(parted, edges))
+    assert shapes[-1] == shapes[0], shapes
 
 
 def test_delete_filters_tombstones_and_keeps_recall(spark, embeddings):

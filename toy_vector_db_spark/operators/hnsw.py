@@ -642,8 +642,10 @@ def _incremental_pack(
         # immediate). Dropping the cache entry here removes the last
         # live reference, so at most one superseded frame per lineage
         # transiently holds blocks between eviction and the cleaner's
-        # next pass — bounded, and a non-issue for the one-frame-deep
-        # ingest sessions the bench and tests run.
+        # next pass. The bound holds at any chain depth: new_parted and
+        # new_edges are themselves checkpoint leaves (_upsert_parted),
+        # so neither this frame nor the next upsert's plan references
+        # anything older than the pair it was packed from.
         old.unpersist()
 
 
@@ -1423,7 +1425,11 @@ def hnsw_upsert(
     one short-circuit scan per micro-batch).
 
     Returns (parted', edges') in the exact shape ``hnsw_index`` emits,
-    so every search entry point works unchanged on the upserted index."""
+    so every search entry point works unchanged on the upserted index.
+    Both are materialized checkpoint leaves (see ``_upsert_parted``), so
+    along a chain of upserts each one runs the same stages and only its
+    own kernel work, at the price of one O(index) in-memory copy per
+    upsert."""
     batch_p = _with_part(
         batch.select(id_col, vec_col), num_partitions, id_col
     )
@@ -1443,7 +1449,17 @@ def _upsert_parted(
     untouched shards' edge lists through, and replay/rebuild only the
     touched shards — the append-vs-interleaved logic is identical
     because it depends only on id order within a shard, not on how the
-    shard key was derived."""
+    shard key was derived.
+
+    Both outputs are MATERIALIZED before return, each one eager
+    localCheckpoint leaf: lineage is O(1) whatever chain of upserts
+    produced the input, so an upsert on an upserted index runs _ingest
+    for its own touched shards only and never replays the kernels of
+    earlier upserts. The trade is one in-memory copy of the index per
+    upsert (O(index): both frames are rewritten, untouched rows
+    included), the bound _incremental_pack already pays for the packed
+    frame; the superseded pair's blocks are released by the
+    ContextCleaner once the caller drops it."""
     dup = parted.join(
         F.broadcast(batch_p.select(id_col)), id_col, "semi"
     )
@@ -1483,10 +1499,23 @@ def _upsert_parted(
             "before ingest"
         )
     touched = sorted(int(p) for p in stats["parts"])
-    union_parted = parted.select(id_col, vec_col, "part").unionByName(
-        batch_p.select(id_col, vec_col, "part")
+    # the vector table as one leaf. Not re-laid out on the shard key:
+    # a localCheckpoint records the output partitioning of the executed
+    # plan, which under AQE is always unknown, so the hash layout would
+    # be forgotten and every search cogroup would still exchange the
+    # vectors. coalesce keeps the partition count from growing by the
+    # batch's partitions on every upsert of a chain (likewise the
+    # untouched edge rows below, by the ingest's partitions).
+    n_tasks = parted.sparkSession.sparkContext.defaultParallelism
+    union_parted = (
+        parted.select(id_col, vec_col, "part")
+        .unionByName(batch_p.select(id_col, vec_col, "part"))
+        .coalesce(n_tasks)
+        .localCheckpoint(eager=True)
     )
-    untouched_edges = edges.where(~F.col("part").isin(touched))
+    untouched_edges = edges.where(~F.col("part").isin(touched)).coalesce(
+        n_tasks
+    )
     touched_vecs = (
         parted.where(F.col("part").isin(touched))
         .select(id_col, vec_col, "part", F.lit(False).alias("_is_new"))
@@ -1495,8 +1524,16 @@ def _upsert_parted(
                 id_col, vec_col, "part", F.lit(True).alias("_is_new")
             )
         )
+        .repartition(n_tasks, "part")
     )
-    touched_edges = edges.where(F.col("part").isin(touched))
+    # both cogroup sides laid out on part in n_tasks partitions, as
+    # hnsw_index lays out the build: AQE never coalesces a repartition
+    # by number, so the touched shards' insert kernels spread over
+    # n_tasks tasks instead of the one task AQE coalesces a small
+    # ingest shuffle into
+    touched_edges = edges.where(F.col("part").isin(touched)).repartition(
+        n_tasks, "part"
+    )
 
     def _ingest(vec_pdf: pd.DataFrame, edge_pdf: pd.DataFrame) -> pd.DataFrame:
         cols = ["part", "layer", "src", "pos", "dst"]
@@ -1567,11 +1604,15 @@ def _upsert_parted(
             schema="part int, layer int, src long, pos int, dst long",
         )
     )
-    new_edges = untouched_edges.unionByName(ingested)
+    # one checkpoint leaf: _ingest runs here, once, and neither the
+    # delta pack below nor any later upsert on this output re-runs it
+    new_edges = untouched_edges.unionByName(ingested).localCheckpoint(
+        eager=True
+    )
     # serving fast-path (round 12, verdict r11 item 6): if the BASE pair
     # is already packed this session, derive the upserted pair's packed
     # artifact incrementally — untouched shards' rows pass through, only
-    # the touched shards re-pack
+    # the touched shards re-pack (from the new_edges leaf)
     _incremental_pack(
         parted, edges, union_parted, new_edges, touched, id_col
     )

@@ -85,13 +85,16 @@ def _lit_vec(vec) -> "F.Column":
     round-14 key was hash(tuple(vals)), under which distinct vectors can
     collide (hash(-1.0) == hash(-2.0) in CPython) and the second vector
     would silently reuse the first one's literal. Keying on the tuple
-    makes a wrong hit impossible; the tuple is already built, so the
-    only cost is holding ~n doubles per distinct query vector."""
+    makes a hash collision impossible. Each value is keyed on its
+    float.hex() form, not the float: 0.0 == -0.0 as floats, so a float
+    tuple key would hand [-0.0] the literal built for [0.0], while the
+    SQL literals (0.0D vs -0.0D) differ; hex() is exact and tells every
+    distinct double apart."""
     vals = [float(x) for x in vec]
     if not all(math.isfinite(x) for x in vals):
         return F.lit(vals).cast("array<double>")
     return V._cached_expr(
-        ("litvec", tuple(vals)),
+        ("litvec", tuple(x.hex() for x in vals)),
         "CAST(array(" + ", ".join(f"{x!r}D" for x in vals)
         + ") AS ARRAY<DOUBLE>)",
     )
