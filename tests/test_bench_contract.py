@@ -42,6 +42,43 @@ def test_every_session_cache_is_registered():
     assert not missing, f"session caches not in caches._cache_dicts(): {missing}"
 
 
+def test_one_pair_kernel_owns_the_emission_loop():
+    """The per-partition top-R accumulator (_TopRAcc) and the cell/label
+    row mask (_row_mask) belong to ONE Arrow pair kernel
+    (knn._pair_kernel); the cosine, PQ-ADC and SQ-ADC scorers plug into
+    it. A second function constructing _TopRAcc or calling _row_mask is
+    a re-forked copy of the emission loop. Attribution is to the
+    outermost enclosing function or method, so a nested kernel closure
+    counts for the function that builds it."""
+    owners: dict[str, set[str]] = {"_TopRAcc": set(), "_row_mask": set()}
+
+    def called(node):
+        f = node.func
+        return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+    for py in PKG.rglob("*.py"):
+        tree = ast.parse(py.read_text())
+        tops = []
+        for node in tree.body:
+            if isinstance(node, ast.ClassDef):
+                tops += [
+                    (f"{node.name}.{getattr(m, 'name', '')}", m)
+                    for m in node.body
+                ]
+            else:
+                tops.append((getattr(node, "name", None), node))
+        for name, top in tops:
+            if not isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(top):
+                if isinstance(node, ast.Call) and called(node) in owners:
+                    owners[called(node)].add(f"{py.name}:{name}")
+    assert owners == {
+        "_TopRAcc": {"knn.py:_pair_kernel"},
+        "_row_mask": {"knn.py:_pair_kernel"},
+    }, owners
+
+
 def test_snapshot_restore_drops_only_new_entries():
     d = caches._cache_dicts()[0]
     sentinel_old = ("__test_old__",)

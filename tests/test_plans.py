@@ -375,7 +375,9 @@ def test_unfiltered_serving_paths_pass_emission_cap(spark, monkeypatch):
     dominant linear-in-corpus serving term). Filtered calls must
     additionally route the label predicate INTO the kernel
     (qlabel_col + label_col — distributed since round 13), which is
-    what makes the bound legal there."""
+    what makes the bound legal there. Every bounded scorer runs through
+    the one knn._pair_kernel, so the spy sits there and each serving
+    call must reach it exactly once, with the expected scorer."""
     from pyspark.sql import functions as F
 
     from toy_vector_db_spark import registry
@@ -396,57 +398,52 @@ def test_unfiltered_serving_paths_pass_emission_cap(spark, monkeypatch):
     )
     qlabels = qs.select("query_id", F.lit("0").alias("qlabel"))
 
-    seen: dict[str, object] = {}
+    calls: list[tuple] = []
+    kernel = knn._pair_kernel
 
-    def spy(fn, name):
-        def wrapped(*a, **kw):
-            seen[name] = (
-                kw.get("emit_topk", "MISSING"),
-                kw.get("qlabel_col") is not None,
-            )
-            return fn(*a, **kw)
+    def spy(base, queries, scorer, *a, **kw):
+        calls.append((
+            scorer.name,
+            kw.get("emit_topk", "MISSING"),
+            kw.get("qlabel_col") is not None,
+        ))
+        return kernel(base, queries, scorer, *a, **kw)
 
-        return wrapped
+    monkeypatch.setattr(knn, "_pair_kernel", spy)
 
-    monkeypatch.setattr(
-        similarity, "_pq_pair_adc", spy(similarity._pq_pair_adc, "pq")
-    )
-    monkeypatch.setattr(
-        similarity, "_sq_pair_adc", spy(similarity._sq_pair_adc, "sq")
-    )
-    monkeypatch.setattr(
-        knn, "pair_scores", spy(knn.pair_scores, "pair")
-    )
+    def scored(*expected):
+        assert calls == [expected]
+        calls.clear()
 
     r = similarity._rerank_budget(base, 10)
     similarity.knn_ivfpq(base, qs, 10)
-    assert seen.pop("pq") == (r, False)
+    scored("pq", r, False)
     similarity.knn_ivfpq(base, qs, 10, labels=labels, query_labels=qlabels)
-    assert seen.pop("pq") == (r, True)
+    scored("pq", r, True)
     similarity.knn_ivfsq(base, qs, 10)
-    assert seen.pop("sq") == (r, False)
+    scored("sq", r, False)
     similarity.knn_ivfsq(base, qs, 10, labels=labels, query_labels=qlabels)
-    assert seen.pop("sq") == (r, True)
+    scored("sq", r, True)
     similarity.knn_sq_rerank(base, qs, 10)
-    assert seen.pop("sq") == (r, False)
+    scored("sq", r, False)
     similarity.knn_sq_rerank(
         base, qs, 10, labels=labels, query_labels=qlabels
     )
-    assert seen.pop("sq") == (r, True)
+    scored("sq", r, True)
     similarity.knn_bq2_rerank(base, qs, 10)
-    assert seen.pop("pair") == (r, False)
+    scored("cosine", r, False)
     similarity.knn_bq2_rerank(
         base, qs, 10, labels=labels, query_labels=qlabels
     )
-    assert seen.pop("pair") == (r, True)
+    scored("cosine", r, True)
     similarity.knn_ivfbq2(base, qs, 10)
-    assert seen.pop("pair") == (r, False)
+    scored("cosine", r, False)
     similarity.knn_ivfbq2(
         base, qs, 10, labels=labels, query_labels=qlabels
     )
-    assert seen.pop("pair") == (r, True)
+    scored("cosine", r, True)
     similarity.knn_pq_adc(base, qs, 10)
-    assert seen.pop("pq") == (10, False)
+    scored("pq", 10, False)
 
 
 def test_filtered_oversized_leg_never_shuffles_pair_frame(

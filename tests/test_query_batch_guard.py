@@ -232,37 +232,47 @@ def test_fallback_values_match_kernel_pq_adc(spark, embeddings, monkeypatch):
     knn._QUERY_COUNT_CACHE.clear()
 
 
-def test_fallback_values_match_kernel_ivfpq(spark, embeddings, monkeypatch):
-    """knn_ivfpq's bounded-batch path (kernel ADC with driver-collected
-    probe routing) vs its oversized broadcast-LUT plan: bit-identical,
-    including the filtered variant's label predicate applied on the
-    kernel's pair output."""
-    from toy_vector_db_spark.operators import similarity
-
+@pytest.mark.parametrize("family", ["ivfpq", "ivfsq", "ivfbq2"])
+def test_fallback_values_match_kernel_ivf_codec(
+    spark, embeddings, monkeypatch, family
+):
+    """Every kernel codec of similarity.ivf_search: the bounded path
+    (knn._pair_kernel with driver-collected probe routing) vs the
+    oversized Catalyst probe-join leg, forced with QUERY_BATCH_MAX=1 —
+    bit-identical unfiltered, label-filtered, and with histogram-guided
+    probing (label_hist). Each plan is checked to be the leg it claims,
+    so the value comparison cannot pass by running one leg twice."""
     base, qs = _splits(spark, embeddings)
     base = base.select("vec_id", "embedding")
-    kernel = similarity.knn_ivfpq(base, qs, 10).collect()
+    labels = base.select(
+        "vec_id", (F.col("vec_id") % 3).cast("string").alias("label")
+    )
+    qlabels = qs.select(
+        "query_id", (F.col("query_id") % 3).cast("string").alias("qlabel")
+    )
+    hist = similarity.cached_label_cell_hist(base, labels)
+    search = getattr(similarity, f"knn_{family}")
+    variants = {
+        "plain": {},
+        "labels": dict(labels=labels, query_labels=qlabels),
+        "label_hist": dict(
+            labels=labels, query_labels=qlabels, label_hist=hist
+        ),
+    }
+    kernel = {}
+    for name, kw in variants.items():
+        df = search(base, qs, 10, **kw)
+        assert "_score(" in explain.formatted_plan(df), (family, name)
+        kernel[name] = df.collect()
     monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 1)
     knn._QUERY_COUNT_CACHE.clear()
-    fallback = similarity.knn_ivfpq(base, qs, 10).collect()
-    assert sorted(map(tuple, kernel)) == sorted(map(tuple, fallback))
-    knn._QUERY_COUNT_CACHE.clear()
-
-
-def test_fallback_values_match_kernel_ivfsq(spark, embeddings, monkeypatch):
-    """knn_ivfsq's oversized-batch fallback (probe-join + inline ADC,
-    round 8): force it on the fixture batch and assert bit-identical
-    output vs the kernel-routed path — completing the per-family
-    fallback parity convention."""
-    from toy_vector_db_spark.operators import similarity
-
-    base, qs = _splits(spark, embeddings)
-    base = base.select("vec_id", "embedding")
-    kernel = similarity.knn_ivfsq(base, qs, 10).collect()
-    monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 1)
-    knn._QUERY_COUNT_CACHE.clear()
-    fallback = similarity.knn_ivfsq(base, qs, 10).collect()
-    assert sorted(map(tuple, kernel)) == sorted(map(tuple, fallback))
+    for name, kw in variants.items():
+        df = search(base, qs, 10, **kw)
+        assert "_score(" not in explain.formatted_plan(df), (family, name)
+        fallback = df.collect()
+        assert sorted(map(tuple, kernel[name])) == sorted(
+            map(tuple, fallback)
+        ), (family, name)
     knn._QUERY_COUNT_CACHE.clear()
 
 

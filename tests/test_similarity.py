@@ -476,11 +476,10 @@ def test_ivfpq_partitioned_search_prunes_and_matches(spark, embeddings):
     PARTITION PRUNING on centroid_id — the physical mechanism behind
     'probe = partition pruning' at 100 TB. Round 10: with bounded
     batches the probe set is collected driver-side before the scan
-    (the _pq_pair_adc routing), so the pruning is STATIC
-    (PartitionFilters at planning time) — strictly earlier than the
-    dynamic pruning the old probe-join plan produced at runtime; the
-    oversized-batch probe-join plan keeps DPP. Accept either, reject a
-    full unpruned scan."""
+    (similarity.ivf_search's kernel-leg routing), so the pruning is
+    STATIC (PartitionFilters at planning time) — strictly earlier than
+    the dynamic pruning the old probe-join plan produced at runtime.
+    Accept either, reject a full unpruned scan."""
     from pyspark.sql import functions as F
 
     n = embeddings.count()

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import math
 import os
+from typing import Callable, NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -217,8 +218,8 @@ QUERY_BATCH_MAX = 100_000
 # _TopRAcc's worst-case per-task buffer is nq × max(2R, R+8192) rows ×
 # 16 B (int64 id + float64 score). At QUERY_BATCH_MAX queries and the
 # R=16384 rerank budget that is ~50 GB — far past any sane task heap —
-# so the kernels gate the accumulator on this budget (round 12, r11
-# advice) and fall back to full STREAMING emission when it would not
+# so the pair kernel gates the accumulator on this budget (round 12, r11
+# advice) and falls back to full STREAMING emission when it would not
 # fit: more shuffle rows, but per-task memory bounded by one Arrow
 # batch instead of the buffer, and values identical either way. 256 MiB
 # covers every shipped serving shape (250 queries × R=16384 ≈ 131 MB)
@@ -304,15 +305,23 @@ def _input_snapshot(df: DataFrame) -> int:
     return hash(tuple(entries))
 
 
+def _frame_key(df: DataFrame, *extra) -> tuple:
+    """(appId, plan hash, input-file snapshot, *extra): the memo key of
+    every per-query-frame session cache (counts, collected batches, label
+    maps, probe routing, PQ LUTs)."""
+    return (
+        df.sparkSession.sparkContext.applicationId,
+        df.semanticHash(),
+        _input_snapshot(df),
+        *extra,
+    )
+
+
 def query_batch_count(queries: DataFrame) -> int:
     """Row count of the query frame, capped at QUERY_BATCH_MAX + 1
     (exact when ≤ QUERY_BATCH_MAX — limit returns every row there —
     and 'too big' otherwise, which is all the guard needs)."""
-    key = (
-        queries.sparkSession.sparkContext.applicationId,
-        queries.semanticHash(),
-        _input_snapshot(queries),
-    )
+    key = _frame_key(queries)
     if key not in _QUERY_COUNT_CACHE:
         _QUERY_COUNT_CACHE[key] = queries.limit(
             QUERY_BATCH_MAX + 1
@@ -333,13 +342,7 @@ _QUERY_BATCH_CACHE: dict[tuple, list] = {}
 def _collected_queries(
     queries: DataFrame, query_id_col: str, query_vec_col: str
 ) -> list[tuple[int, list[float]]]:
-    key = (
-        queries.sparkSession.sparkContext.applicationId,
-        queries.semanticHash(),
-        _input_snapshot(queries),
-        query_id_col,
-        query_vec_col,
-    )
+    key = _frame_key(queries, query_id_col, query_vec_col)
     if key not in _QUERY_BATCH_CACHE:
         _QUERY_BATCH_CACHE[key] = [
             (int(r[0]), [float(x) for x in r[1]])
@@ -369,13 +372,7 @@ def _collected_qlabel_map(
     _collected_queries (advice r13: the uncached form paid one extra
     Spark job over the query frame on EVERY bounded filtered serving
     call); registered in caches._cache_dicts."""
-    key = (
-        queries.sparkSession.sparkContext.applicationId,
-        queries.semanticHash(),
-        _input_snapshot(queries),
-        query_id_col,
-        qlabel_col,
-    )
+    key = _frame_key(queries, query_id_col, qlabel_col)
     if key not in _QLABEL_MAP_CACHE:
         _QLABEL_MAP_CACHE[key] = {
             int(r[0]): r[1]
@@ -443,23 +440,215 @@ class _TopRAcc:
         """(out_q, out_id, out_score) for the whole partition — each
         query's exact top-R (or everything, if the partition holds
         fewer than R rows for it)."""
-        n_q = len(qids)
-        for qi in range(n_q):
-            if self._len[qi]:
-                self._cut(qi)
-        out_q = np.concatenate(
-            [np.full(self._len[qi], qids[qi], dtype=np.int64)
-             for qi in range(n_q)]
-        ) if n_q else np.empty(0, dtype=np.int64)
-        out_id = np.concatenate(
-            [self._ids[qi][0] if self._len[qi]
-             else np.empty(0, dtype=np.int64) for qi in range(n_q)]
-        ) if n_q else np.empty(0, dtype=np.int64)
-        out_d = np.concatenate(
-            [self._sc[qi][0] if self._len[qi]
-             else np.empty(0, dtype=np.float64) for qi in range(n_q)]
-        ) if n_q else np.empty(0, dtype=np.float64)
-        return out_q, out_id.astype(np.int64, copy=False), out_d
+        live = [qi for qi in range(len(qids)) if self._len[qi]]
+        for qi in live:
+            self._cut(qi)
+        none = [np.empty(0, dtype=np.int64)]
+        out_q = [np.full(self._len[qi], qids[qi], np.int64) for qi in live]
+        out_id = np.concatenate([self._ids[qi][0] for qi in live] or none)
+        out_d = [self._sc[qi][0] for qi in live] or [np.empty(0)]
+        return (
+            np.concatenate(out_q or none),
+            out_id.astype(np.int64, copy=False),
+            np.concatenate(out_d),
+        )
+
+
+class _PairScorer(NamedTuple):
+    """What differs between the |base|×|queries| Arrow kernels — the
+    emission loop itself (routing masks, top-R, Arrow output) lives once,
+    in ``_pair_kernel``. ``payload`` are the base-side columns the score
+    reads (after the id); ``query_vec_col`` is the collected query column;
+    ``prep(queries, qrows)`` turns the collected batch into ``(qids,
+    score)`` where ``score(batch)`` returns one (rows, nq) float64 matrix
+    per ``score_cols`` entry (the first one ranks the top-R cut)."""
+
+    name: str
+    payload: tuple
+    query_vec_col: str
+    score_cols: tuple
+    prep: Callable
+
+
+def _query_matrix(qrows) -> tuple[np.ndarray, np.ndarray]:
+    qids = np.array([q[0] for q in qrows], dtype=np.int64)
+    return qids, np.array([q[1] for q in qrows], dtype=np.float64)
+
+
+def _cosine_scorer(
+    vec_col: str, query_vec_col: str, dual_metric: bool = False
+) -> _PairScorer:
+    """Clamped-cosine distance, BIT-IDENTICAL to ``_scored_product``
+    (asserted in tests/test_knn_kernel.py): row magnitudes accumulate
+    x·x left-to-right over the dim axis then sqrt; dots accumulate
+    acc += v_j·q_j in the same dim order (0.0 + x ≡ x); sim =
+    dot / (v_mag · q_mag) is one multiply then one divide; clamp =
+    np.maximum(sim, 0.0) ≡ greatest(0.0, sim) (no NaNs by fixture
+    contract); dist = 1.0 − clamped. One rounding per op, no FMA, no
+    pairwise summation — the same IEEE sequence the DuckDB oracle
+    evaluates. Requires fixed-dimension vectors (true of every fixture
+    table; the expression form keeps the ragged-input null-pad
+    semantics). ``dual_metric`` adds the polarization-identity euclidean
+    ``sqrt(greatest(0, |v|² + |q|² − 2·dot))`` from the same dot pass."""
+
+    def prep(queries, qrows):
+        qids, Q = _query_matrix(qrows)
+        qmags = np.array([_py_magnitude(q[1]) for q in qrows])
+
+        def score(batch):
+            X = list_col_to_matrix(batch.column("_vd"))
+            n, d = X.shape
+            mag = np.zeros(n)
+            for j in range(d):
+                mag += X[:, j] * X[:, j]
+            mag = np.sqrt(mag)
+            acc = np.zeros((n, len(qids)))
+            for j in range(d):
+                acc += X[:, j: j + 1] * Q[:, j][None, :]
+            sims = acc / (mag[:, None] * qmags[None, :])
+            dist = 1.0 - np.maximum(sims, 0.0)
+            if not dual_metric:
+                return [dist]
+            # ((|v|²+|q|²) − 2·dot) then clamp then sqrt — the exact
+            # associativity of the staged Catalyst expression
+            vm2 = mag * mag
+            qm2 = qmags * qmags
+            return [dist, np.sqrt(
+                np.maximum(vm2[:, None] + qm2[None, :] - 2.0 * acc, 0.0)
+            )]
+
+        return qids, score
+
+    return _PairScorer(
+        "cosine",
+        (F.col(vec_col).cast("array<double>").alias("_vd"),),
+        query_vec_col,
+        ("cos_dist", "euc_dist") if dual_metric else ("dist",),
+        prep,
+    )
+
+
+def _check_label_pair(label_col, qlabel_col) -> None:
+    if (label_col is None) != (qlabel_col is None):
+        raise ValueError("label_col and qlabel_col must be passed together")
+
+
+def _pair_kernel(
+    base: DataFrame,
+    queries: DataFrame,
+    scorer: _PairScorer,
+    id_col: str = "vec_id",
+    query_id_col: str = "query_id",
+    cells_by_query: dict[int, list] | None = None,
+    cell_col: str = "centroid_id",
+    emit_topk: int | None = None,
+    label_col: str | None = None,
+    qlabel_col: str | None = None,
+) -> DataFrame:
+    """(query_id, id, *score_cols) for every (query × base-row) pair the
+    routing allows — the ONE Arrow pair kernel every bounded-batch scorer
+    (cosine, PQ ADC, SQ ADC) runs through. The collected query batch
+    rides in the closure (the broadcast side by construction; bounded
+    and session-cached via ``_collected_queries`` — callers guard with
+    QUERY_BATCH_MAX first), the base scans distributed with only (id,
+    payload[, cell][, label]) crossing into Arrow, and each emitted pair
+    row is a few scalars.
+
+    ``cells_by_query`` routes IVF probing inside the kernel: a base row
+    is scored for a query only where its ``cell_col`` is in that query's
+    probed-cell list. ``label_col``/``qlabel_col`` add the IDSelector
+    equality: the caller attaches the stored label to the base frame and
+    the query's label to the QUERIES frame; both fold into one row mask
+    per query (``_row_mask``) before any row leaves the kernel.
+
+    ``emit_topk``: when the CALLER's next step is a per-query (score asc,
+    id asc) top-k cut with no intervening row filter, each partition
+    emits only its per-query top ``emit_topk`` rows (``_TopRAcc`` folds
+    the partition's Arrow batches) — a provable superset of the global
+    top-k with identical score doubles, turning |probed|×|queries| rows
+    into partitions×queries×k. It is dropped (streaming full emission,
+    values unchanged) when the buffer would exceed
+    EMIT_TOPK_BUDGET_BYTES."""
+    import pyarrow as pa
+
+    _check_label_pair(label_col, qlabel_col)
+    names = [query_id_col, id_col, *scorer.score_cols]
+    schema = f"{query_id_col} long, {id_col} long, " + ", ".join(
+        f"{c} double" for c in scorer.score_cols
+    )
+    qrows = _collected_queries(queries, query_id_col, scorer.query_vec_col)
+    if not qrows:
+        # empty query batch → empty pair set (np.array([]) would be 1-D
+        # and break the (nq, d) slicing in the scorers)
+        return base.sparkSession.createDataFrame([], schema)
+    qids, score = scorer.prep(queries, qrows)
+    nq = len(qids)
+    if emit_topk is not None and not emit_topk_within_budget(nq, emit_topk):
+        emit_topk = None  # buffer would not fit: stream full emission
+    cell_mask_lists = None
+    if cells_by_query is not None:
+        cell_mask_lists = [
+            np.array(cells_by_query.get(int(qid), []), dtype=np.int64)
+            for qid in qids
+        ]
+    qlabels = None
+    if qlabel_col is not None:
+        qmap = _collected_qlabel_map(queries, query_id_col, qlabel_col)
+        qlabels = [qmap.get(int(qid)) for qid in qids]
+    cols = [id_col, *scorer.payload]
+    if cells_by_query is not None:
+        cols.append(cell_col)
+    if label_col is not None:
+        cols.append(label_col)
+    src = base.select(*cols)
+
+    def _score(batches):
+        topr = _TopRAcc(nq, emit_topk) if emit_topk is not None else None
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            ids = batch.column(id_col).to_numpy().astype(np.int64, copy=False)
+            n = len(ids)
+            mats = score(batch)
+            cells = (
+                batch.column(cell_col).to_numpy()
+                if cell_mask_lists is not None
+                else None
+            )
+            lab = (
+                batch.column(label_col).to_numpy(zero_copy_only=False)
+                if label_col is not None
+                else None
+            )
+            masks = None
+            if cells is not None or lab is not None:
+                masks = [
+                    _row_mask(qi, n, cells, cell_mask_lists, lab, qlabels)
+                    for qi in range(nq)
+                ]
+            if topr is not None:
+                for qi in range(nq):
+                    if masks is None:
+                        topr.add(qi, ids, mats[0][:, qi])
+                    else:
+                        rows = np.nonzero(masks[qi])[0]
+                        topr.add(qi, ids[rows], mats[0][rows, qi])
+                continue
+            if masks is None:
+                out = [np.tile(qids, n), np.repeat(ids, nq)]
+                out += [m.ravel() for m in mats]
+            else:
+                ri, qi = np.nonzero(np.stack(masks, axis=1))
+                out = [qids[qi], ids[ri]] + [m[ri, qi] for m in mats]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(a) for a in out], names=names
+            )
+        if topr is not None:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(a) for a in topr.emit(qids)], names=names
+            )
+
+    return src.mapInArrow(_score, schema=schema)
 
 
 def pair_scores(
@@ -478,90 +667,26 @@ def pair_scores(
 ) -> DataFrame:
     """(query_id, vec_id, dist) for every (query × base-row) pair — the
     |base|×|queries| hot loop of exact batch search, argmin/argmax, and
-    (with ``cells_by_query``) IVF cell-probed search, as a VECTORIZED
-    Arrow kernel (round 6).
+    (with ``cells_by_query``) IVF cell-probed search: ``_pair_kernel``
+    with the ``_cosine_scorer``. The expression form's distance is an
+    interpreted higher-order fold (Catalyst does not codegen lambda
+    functions), measured at ~25 µs per pair; the kernel is ~1 µs.
 
-    ``emit_topk`` (round 10, upgraded to per-PARTITION accumulation in
-    round 11 — the 100 TB emission fix): when the CALLER's next step is
-    a per-query (dist asc, id asc) top-k cut with NO intervening row
-    filter, the kernel emits only each query's top ``emit_topk`` rows
-    PER PARTITION under that same order (``_TopRAcc`` folds the
-    partition's Arrow batches into one bounded RecordBatch) — a provable
-    superset of the global top-k (every partition keeps its k best, so
-    the true top-k can never be lost), with identical dist doubles. This
-    turns the kernel's output from |probed|×|queries| rows into
-    partitions×queries×k rows: at the 200k-vector scale study the
-    unbounded ivf-probe emission was ~5M pair rows through Arrow + the
-    partial window — the dominant serving cost, and one that grows
-    linearly with the corpus while the answer stays k rows. NOT legal
-    when a post-kernel predicate (label pre-filter) runs before the
-    cut — those callers keep full emission. Incompatible with
-    ``dual_metric`` (the evaluation pipeline consumes full pair sets).
+    ``dual_metric`` emits ``cos_dist`` and ``euc_dist`` (the evaluation
+    pipeline's staged-dot form, registry._eval_frames) instead of
+    ``dist``; it is incompatible with ``emit_topk`` (the evaluation
+    pipeline consumes full pair sets). Routing, labels and ``emit_topk``
+    follow ``_pair_kernel``.
 
-    Why: the expression form's distance is an interpreted higher-order
-    fold — Catalyst does not codegen lambda functions — measured at
-    ~25 µs per pair; the kernel is ~1 µs. The query batch rides in the
-    kernel closure (it is the broadcast side by construction; bounded,
-    session-cached via ``_collected_queries``), the base scans
-    distributed with only (id, vector[, cell]) crossing into Arrow, and
-    the emitted pair rows are 3 scalars — slimmer than the joined-row
-    stream the crossJoin produced. The per-query top-k / argmin shuffle
-    downstream is unchanged.
-
-    BIT-IDENTICAL to ``_scored_product`` (asserted in
-    tests/test_knn_kernel.py): row magnitudes accumulate x·x
-    left-to-right over the dim axis then sqrt; dots accumulate
-    acc += v_j·q_j in the same dim order (0.0 + x ≡ x); sim =
-    dot / (v_mag · q_mag) is one multiply then one divide;
-    clamp = np.maximum(sim, 0.0) ≡ greatest(0.0, sim) (no NaNs by
-    fixture contract); dist = 1.0 − clamped. One rounding per op, no
-    FMA, no pairwise summation — the same IEEE sequence the DuckDB
-    oracle evaluates. Requires fixed-dimension vectors (true of every
-    fixture table; the expression form keeps the ragged-input
-    null-pad semantics).
-
-    ``cells_by_query`` routes IVF probing INSIDE the kernel: pairs are
-    emitted only where the base row's ``cell_col`` is in the query's
-    probed-cell list — the nprobe/C selectivity applied before any row
-    leaves the kernel.
-
-    ``dual_metric`` additionally emits the polarization-identity
-    euclidean (``sqrt(greatest(0, |v|² + |q|² − 2·dot))`` — the
-    evaluation pipeline's staged-dot form, registry._eval_frames) as
-    ``euc_dist`` next to ``cos_dist``: one dot pass, two metrics, same
-    expression tree as the Catalyst/oracle form op for op.
-
-    ``label_col``/``qlabel_col`` (round 12, verdict r11 item 2; made
-    fully DISTRIBUTED in round 13, verdict r12 item 1): the caller
-    attaches the stored label attribute to the base frame (named by
-    ``label_col``) and the query's label to the QUERIES frame (named by
-    ``qlabel_col``); rows are scored for a query only where label ==
-    the query's qlabel — the Faiss-IDSelector equality, applied inside
-    the kernel on bounded batches (the per-query labels are collected
-    under the same QUERY_BATCH_MAX contract as the query vectors),
-    which is what makes ``emit_topk`` legal on filtered paths
-    (bit-identity asserted in tests/test_similarity.py). On OVERSIZED
-    batches the label rides the Catalyst fallback as a plain column and
-    the equality becomes part of the pair-producing join itself (never
-    a post-join filter of a shuffled pair frame), so the filtered
-    fallback stays shuffle-bounded at any query count.
-
-    GUARD (round 7): the kernel ships the query batch driver-side and
-    into task closures, which is only sane for a bounded serving batch.
-    Above QUERY_BATCH_MAX query rows this falls back to the
+    GUARD: above QUERY_BATCH_MAX query rows this falls back to the
     pure-Catalyst ``_scored_product`` form (no driver collect, no
     broadcast of the oversized side) — bit-identical values, different
-    physical plan. ``emit_topk`` is additionally dropped (falling back
-    to streaming full emission, values unchanged) when the _TopRAcc
-    buffer would exceed EMIT_TOPK_BUDGET_BYTES."""
-    import pyarrow as pa
-
+    physical plan. There the label equality references both sides of
+    the product, so Catalyst folds it into the pair-producing join
+    itself and no unfiltered pair row reaches a shuffle."""
     if emit_topk is not None and dual_metric:
         raise ValueError("emit_topk is incompatible with dual_metric")
-    if (label_col is None) != (qlabel_col is None):
-        raise ValueError(
-            "label_col and qlabel_col must be passed together"
-        )
+    _check_label_pair(label_col, qlabel_col)
     if query_batch_count(queries) > QUERY_BATCH_MAX:
         if cells_by_query is not None:
             # the caller already holds a per-query routing dict, i.e.
@@ -576,10 +701,6 @@ def pair_scores(
             dual_metric=dual_metric, broadcast_queries=False,
         )
         if label_col is not None:
-            # distributed IDSelector (round 13): the equality references
-            # both sides of the product, so Catalyst folds it into the
-            # pair-producing join's condition — no unfiltered pair row
-            # ever reaches a shuffle, at any nq
             scored = scored.where(
                 F.col(label_col) == F.col(qlabel_col)
             )
@@ -592,128 +713,15 @@ def pair_scores(
             else [F.col("dist")]
         )
         return scored.select(*cols)
-
-    qrows = _collected_queries(queries, query_id_col, query_vec_col)
-    if not qrows:
-        # empty query batch → empty pair set (np.array([]) would be 1-D
-        # and break the (nq, d) slicing below)
-        schema_empty = (
-            f"{query_id_col} long, {id_col} long,"
-            + (" cos_dist double, euc_dist double" if dual_metric
-               else " dist double")
-        )
-        return base.sparkSession.createDataFrame([], schema_empty)
-    qids = np.array([q[0] for q in qrows], dtype=np.int64)
-    Q = np.array([q[1] for q in qrows], dtype=np.float64)  # (nq, d)
-    qmags = np.array([_py_magnitude(q[1]) for q in qrows])
-    nq = len(qids)
-    if emit_topk is not None and not emit_topk_within_budget(nq, emit_topk):
-        emit_topk = None  # buffer would not fit: stream full emission
-    cell_mask_lists = None
-    if cells_by_query is not None:
-        cell_mask_lists = [
-            np.array(sorted(cells_by_query.get(int(qid), [])), dtype=np.int64)
-            for qid in qids
-        ]
-    qlabels = None
-    if qlabel_col is not None:
-        qmap = _collected_qlabel_map(queries, query_id_col, qlabel_col)
-        qlabels = [qmap.get(int(qid)) for qid in qids]
-
-    cols = [id_col, F.col(vec_col).cast("array<double>").alias("_vd")]
-    if cells_by_query is not None:
-        cols.append(cell_col)
-    if label_col is not None:
-        cols.append(label_col)
-    src = base.select(*cols)
-
-    def _score(batches):
-        # per-PARTITION top-R accumulation (round 11): one emitted
-        # RecordBatch per partition of ≤ nq×R rows, instead of per-batch
-        # cuts that a 10k Arrow batch never triggers at R=16384
-        topr = _TopRAcc(nq, emit_topk) if emit_topk is not None else None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(id_col).to_numpy()
-            X = list_col_to_matrix(batch.column("_vd"))
-            n, d = X.shape
-            mag = np.zeros(n)
-            for j in range(d):
-                mag += X[:, j] * X[:, j]
-            mag = np.sqrt(mag)
-            acc = np.zeros((n, nq))
-            for j in range(d):
-                acc += X[:, j: j + 1] * Q[:, j][None, :]
-            sims = acc / (mag[:, None] * qmags[None, :])
-            dist = 1.0 - np.maximum(sims, 0.0)
-            if dual_metric:
-                # ((|v|²+|q|²) − 2·dot) then clamp then sqrt — the exact
-                # associativity of the staged Catalyst expression
-                vm2 = mag * mag
-                qm2 = qmags * qmags
-                euc = np.sqrt(
-                    np.maximum(vm2[:, None] + qm2[None, :] - 2.0 * acc, 0.0)
-                )
-            cells = (
-                batch.column(cell_col).to_numpy()
-                if cell_mask_lists is not None
-                else None
-            )
-            lab = (
-                batch.column(label_col).to_numpy(zero_copy_only=False)
-                if label_col is not None
-                else None
-            )
-            if topr is not None:
-                for qi_i in range(nq):
-                    m = _row_mask(
-                        qi_i, n, cells, cell_mask_lists, lab, qlabels
-                    )
-                    if m is None:
-                        topr.add(qi_i, ids, dist[:, qi_i])
-                    else:
-                        rows = np.nonzero(m)[0]
-                        topr.add(qi_i, ids[rows], dist[rows, qi_i])
-                continue
-            if cell_mask_lists is None and lab is None:
-                out_q = np.tile(qids, n)
-                out_id = np.repeat(ids, nq)
-                out_d = dist.ravel()
-                out_e = euc.ravel() if dual_metric else None
-            else:
-                mask = np.empty((n, nq), dtype=bool)
-                for qi in range(nq):
-                    mask[:, qi] = _row_mask(
-                        qi, n, cells, cell_mask_lists, lab, qlabels
-                    )
-                ri, qi = np.nonzero(mask)
-                out_q = qids[qi]
-                out_id = ids[ri]
-                out_d = dist[ri, qi]
-                out_e = euc[ri, qi] if dual_metric else None
-            arrays = [pa.array(out_q), pa.array(out_id), pa.array(out_d)]
-            names = [query_id_col, id_col,
-                     "cos_dist" if dual_metric else "dist"]
-            if dual_metric:
-                arrays.append(pa.array(out_e))
-                names.append("euc_dist")
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-        if topr is not None:
-            out_q, out_id, out_d = topr.emit(qids)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_q), pa.array(out_id), pa.array(out_d)],
-                names=[query_id_col, id_col, "dist"],
-            )
-
-    if dual_metric:
-        schema = (
-            f"{query_id_col} long, {id_col} long,"
-            " cos_dist double, euc_dist double"
-        )
-    else:
-        schema = f"{query_id_col} long, {id_col} long, dist double"
-    return src.mapInArrow(_score, schema=schema)
+    return _pair_kernel(
+        base, queries, _cosine_scorer(vec_col, query_vec_col, dual_metric),
+        id_col, query_id_col,
+        cells_by_query=cells_by_query,
+        cell_col=cell_col,
+        emit_topk=emit_topk,
+        label_col=label_col,
+        qlabel_col=qlabel_col,
+    )
 
 
 # NOTE: an Arrow-kernel variant of the bounded-R rerank rescore (explicit

@@ -28,6 +28,7 @@ MLlib k-means) where cross-engine bit-parity is not a requirement.
 from __future__ import annotations
 
 import hashlib
+from typing import Callable, NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -42,6 +43,7 @@ from toy_vector_db_spark.functions.rounding import rnd
 
 from toy_vector_db_spark.functions import vector as V
 from toy_vector_db_spark.functions.vector import _cached_expr, _sql_ident
+from toy_vector_db_spark.operators import knn as KNN
 
 ROUND = 6
 N_CENTROIDS = 16
@@ -332,31 +334,6 @@ def cached_trained_assign(
     return _ASSIGN_CACHE[key]
 
 
-# (appId, base plan hash, id_col, vec_col) → persisted codes⋈assign frame:
-# the cell-partitioned compressed corpus an IVF-PQ index build writes.
-_CODES_CELLS_CACHE: dict[tuple, DataFrame] = {}
-
-
-def cached_codes_cells(
-    base: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
-    )
-    if key not in _CODES_CELLS_CACHE:
-        codes = pq_codes(base, id_col, vec_col)
-        assign = cached_trained_assign(base, id_col, vec_col)
-        cc = codes.join(assign, id_col).persist()
-        cc.count()
-        _CODES_CELLS_CACHE[key] = cc
-    return _CODES_CELLS_CACHE[key]
-
-
 # (appId, base plan hash, id_col, vec_col) → path of the WRITTEN cell-
 # partitioned codes table (parquet, partitionBy centroid_id) — the actual
 # on-disk index artifact the docstrings describe. Written once per session.
@@ -530,14 +507,7 @@ _PROBE_ROUTING_CACHE: dict[tuple, dict] = {}
 def _collected_probe_routing(
     probes: DataFrame, query_id_col: str
 ) -> dict[int, list]:
-    from toy_vector_db_spark.operators.knn import _input_snapshot
-
-    key = (
-        probes.sparkSession.sparkContext.applicationId,
-        probes.semanticHash(),
-        _input_snapshot(probes),
-        query_id_col,
-    )
+    key = KNN._frame_key(probes, query_id_col)
     if key not in _PROBE_ROUTING_CACHE:
         routing: dict[int, list] = {}
         for r in probes.select(query_id_col, "centroid_id").collect():
@@ -768,8 +738,6 @@ def knn_ivf(
     # only against the queries probing its cell (round 6; the previous
     # form joined probes then evaluated an interpreted fold per pair —
     # ~25 µs/pair vs ~1 µs in the vectorized kernel, bit-identical).
-    from toy_vector_db_spark.operators import knn as KNN
-
     probes = _ivf_probes(queries, cents, nprobe, query_id_col, query_vec_col)
     if KNN.query_batch_count(queries) > KNN.QUERY_BATCH_MAX:
         # GUARD (round 7, verdict item 4): a corpus-sized query frame must
@@ -1016,6 +984,28 @@ def pq_codes(
     return codes
 
 
+def _pq_subspace_d2(X: np.ndarray, b_arr: np.ndarray) -> list:
+    """Per subspace m, the (rows, K) squared distances from each
+    NORMALIZED row of X to every codeword of ``b_arr[m]`` — the numpy
+    core shared by the PQ encode, the ADC LUT kernel and the collected
+    LUTs, BIT-IDENTICAL to the fold form: the magnitude accumulates
+    left-to-right over the dim axis (one rounding per op, no FMA), and
+    np.cumsum over the subspace slice is the same sequential (x−y)² left
+    fold (0.0 + x₁ ≡ x₁) that aggregate(zip_with(...)) and DuckDB's
+    list_sum evaluate."""
+    n, d = X.shape
+    mag = np.zeros(n)
+    for j in range(d):
+        mag += X[:, j] * X[:, j]
+    nv = X / np.sqrt(mag)[:, None]
+    sub = b_arr.shape[2]
+    out = []
+    for m in range(b_arr.shape[0]):
+        diff = nv[:, None, m * sub: (m + 1) * sub] - b_arr[m][None, :, :]
+        out.append(np.cumsum(diff * diff, axis=2)[:, :, -1])
+    return out
+
+
 def encode_codes(
     df: DataFrame,
     books: list,
@@ -1043,7 +1033,6 @@ def encode_codes(
     Asserted against the fold form in tests/test_similarity.py."""
     import pyarrow as pa
 
-    sub = len(books[0][0])
     b_arr = np.array(books)  # (M, K, sub)
     par = df.sparkSession.sparkContext.defaultParallelism
     src = df.repartition(par, id_col).select(
@@ -1056,19 +1045,9 @@ def encode_codes(
                 # a zero-row batch yields a (0, 0) matrix whose d the
                 # subspace slices below would misread — skip it
                 continue
-            ids = batch.column(id_col).to_numpy()
+            cols = {id_col: batch.column(id_col).to_numpy()}
             X = list_col_to_matrix(batch.column("_vd"))
-            n, d = X.shape
-            mag = np.zeros(n)
-            for j in range(d):
-                mag += X[:, j] * X[:, j]
-            mag = np.sqrt(mag)
-            nv = X / mag[:, None]
-            cols = {id_col: ids}
-            for m in range(PQ_M):
-                vm = nv[:, m * sub: (m + 1) * sub]
-                diff = vm[:, None, :] - b_arr[m][None, :, :]
-                dd = np.cumsum(diff * diff, axis=2)[:, :, -1]
+            for m, dd in enumerate(_pq_subspace_d2(X, b_arr)):
                 cols[f"c{m}"] = np.argmin(dd, axis=1).astype(np.int32)
             yield pa.RecordBatch.from_pydict(cols)
 
@@ -1083,13 +1062,12 @@ def _adc_lut_frame(
     books: list,
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    keep_cols: tuple = (),
 ) -> DataFrame:
-    """Classic ADC lookup tables, built on the QUERY side before the
-    broadcast: per query and subspace, the PQ_K codeword distances land
-    in an array column. The |codes|×|queries| hot loop then does M array
-    lookups per row instead of M interpreted PQ_K-element folds — same
-    values bit-for-bit, ~PQ_K× less per-candidate work.
+    """Classic ADC lookup tables, built on the QUERY side: per query and
+    subspace, the PQ_K codeword distances land in an array column. The
+    |codes|×|queries| hot loop then does M array lookups per row instead
+    of M interpreted PQ_K-element folds — same values bit-for-bit, ~PQ_K×
+    less per-candidate work.
 
     Round 6: the LUTs are computed in a vectorized Arrow kernel (the
     pq_codes idiom) instead of generated SQL fold expressions. Already
@@ -1104,16 +1082,11 @@ def _adc_lut_frame(
     (x−y)² left fold over the subspace slice via np.cumsum (0.0 + x₁ ≡
     x₁), exactly the aggregate(zip_with(...)) order — asserted against
     the expression form in tests/test_similarity.py.
-    Shared by knn_pq_adc (flat scan) and knn_ivfpq (cell-pruned scan);
-    ``keep_cols`` pass through untouched (arrow columns are copied
-    by reference).
 
-    Round 10: for BOUNDED query batches both callers now route through
-    ``_pq_pair_adc`` (the _sq_pair_adc idiom — queries in the closure,
-    LUTs built inside the base-side kernel), which removes this frame's
-    query-side Python stage from the serving path entirely; this
-    broadcast-LUT form remains the oversized-batch fallback (it never
-    collects) and the bit-identity reference the kernel is tested
+    Bounded query batches never build this frame: knn_pq_adc and
+    knn_ivfpq score them through the ``_pq_scorer`` (LUTs in the kernel
+    closure). It is the oversized-batch LUT side of both (it never
+    collects) and the bit-identity reference the scorer is tested
     against."""
     import pyarrow as pa
     from pyspark.sql.types import (
@@ -1124,18 +1097,14 @@ def _adc_lut_frame(
     )
 
     b_arr = np.array(books)  # (M, K, sub)
-    m_, _, sub = b_arr.shape
-    keep = list(keep_cols)
     src = queries.select(
-        query_id_col, *keep,
-        F.col(query_vec_col).cast("array<double>").alias("_qv"),
+        query_id_col, F.col(query_vec_col).cast("array<double>").alias("_qv")
     )
-    pass_names = [query_id_col, *keep]
     out_schema = StructType(
         [f for f in src.schema.fields if f.name != "_qv"]
         + [
             StructField(f"_lut{m}", ArrayType(DoubleType(), False), False)
-            for m in range(m_)
+            for m in range(len(b_arr))
         ]
     )
 
@@ -1144,18 +1113,9 @@ def _adc_lut_frame(
             if batch.num_rows == 0:
                 continue
             X = list_col_to_matrix(batch.column("_qv"))
-            n, d = X.shape
-            mag = np.zeros(n)
-            for j in range(d):
-                mag += X[:, j] * X[:, j]
-            mag = np.sqrt(mag)
-            nv = X / mag[:, None]
-            arrays = [batch.column(name) for name in pass_names]
-            names = list(pass_names)
-            for m in range(m_):
-                vm = nv[:, m * sub: (m + 1) * sub]
-                diff = vm[:, None, :] - b_arr[m][None, :, :]
-                dd = np.cumsum(diff * diff, axis=2)[:, :, -1]  # (n, K)
+            arrays = [batch.column(query_id_col)]
+            names = [query_id_col]
+            for m, dd in enumerate(_pq_subspace_d2(X, b_arr)):
                 arrays.append(matrix_to_list_array(dd))
                 names.append(f"_lut{m}")
             yield pa.RecordBatch.from_arrays(arrays, names=names)
@@ -1251,38 +1211,51 @@ def _collected_pq_luts(
     query_id_col: str,
     query_vec_col: str,
 ) -> tuple:
-    from toy_vector_db_spark.operators import knn as KNN
-
     b_arr = np.array(books)  # (M, K, sub)
-    key = (
-        queries.sparkSession.sparkContext.applicationId,
-        queries.semanticHash(),
-        KNN._input_snapshot(queries),
+    key = KNN._frame_key(
+        queries,
         query_id_col,
         query_vec_col,
         b_arr.shape,
         hashlib.sha256(b_arr.tobytes()).digest(),
     )
     if key not in _PQ_LUT_CACHE:
-        qrows = KNN._collected_queries(queries, query_id_col, query_vec_col)
-        qids = np.array([r[0] for r in qrows], dtype=np.int64)
-        X = np.array([r[1] for r in qrows], dtype=np.float64)
-        m_, _, sub = b_arr.shape
-        n_q, d = X.shape
-        # normalization + LUT build: the _adc_lut_frame kernel's exact
-        # op sequence (j-order magnitude accumulation, per-subspace
-        # cumsum-of-squared-diff fold) on the same float64 inputs
-        mag = np.zeros(n_q)
-        for j in range(d):
-            mag += X[:, j] * X[:, j]
-        nv = X / np.sqrt(mag)[:, None]
-        luts = []
-        for m in range(m_):
-            vm = nv[:, m * sub: (m + 1) * sub]
-            diff = vm[:, None, :] - b_arr[m][None, :, :]
-            luts.append(np.cumsum(diff * diff, axis=2)[:, :, -1])  # (n_q, K)
-        _PQ_LUT_CACHE[key] = (qids, luts)
+        qids, X = KNN._query_matrix(
+            KNN._collected_queries(queries, query_id_col, query_vec_col)
+        )
+        # the _adc_lut_frame kernel's op sequence on the same float64
+        # inputs
+        _PQ_LUT_CACHE[key] = (qids, _pq_subspace_d2(X, b_arr))
     return _PQ_LUT_CACHE[key]
+
+
+def _pq_scorer(books: list, query_id_col: str, query_vec_col: str):
+    """PQ ADC as a ``knn._pair_kernel`` scorer: the collected query
+    batch's LUTs (``_collected_pq_luts``) ride in the closure, so the
+    serving plan has no query-side Python stage and no LUT broadcast
+    join (that form cost ~0.75 s of knn_ivfpq's 2.3 s at sf0.1).
+    BIT-IDENTICAL to ``_adc_lut_frame`` ⋈ codes + ``_adc_expr`` (asserted
+    in tests/test_knn_kernel.py): the LUT entries are that kernel's op
+    sequence, and the per-candidate sum accumulates the M lookups in m
+    order from 0.0 — exactly _adc_expr's left fold."""
+
+    def prep(queries, qrows):
+        qids, luts = _collected_pq_luts(
+            queries, books, query_id_col, query_vec_col
+        )
+
+        def score(batch):
+            acc = np.zeros((batch.num_rows, len(qids)))
+            for m, lut in enumerate(luts):
+                acc += lut[:, batch.column(f"c{m}").to_numpy()].T
+            return [acc]
+
+        return qids, score
+
+    return KNN._PairScorer(
+        "pq", tuple(f"c{m}" for m in range(len(books))), query_vec_col,
+        ("ad2",), prep,
+    )
 
 
 def _pq_pair_adc(
@@ -1292,171 +1265,16 @@ def _pq_pair_adc(
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    cells_by_query: dict[int, list] | None = None,
-    cell_col: str = "centroid_id",
-    emit_topk: int | None = None,
-    label_col: str | None = None,
-    qlabel_col: str | None = None,
+    **routing,
 ) -> DataFrame:
-    """(query_id, vec_id, ad2) PQ-ADC pairs as ONE base-side Arrow kernel
-    (round 10, verdict r9 item 6 — the knn_ivfpq-vs-ivfsq serving gap):
-    the collected query batch and its precomputed LUTs ride in the
-    closure (the _sq_pair_adc idiom), so the serving plan has NO
-    query-side Python stage and NO LUT broadcast join. The old
-    _adc_lut_frame→broadcast form cost a distributed Python-worker
-    round-trip per search for trivial work (nq·nprobe LUT rows) —
-    measured at sf0.1 as ~0.75 s of knn_ivfpq's 2.3 s, the entire gap
-    to IVF-SQ, whose query prep is Catalyst-only.
-
-    BIT-IDENTICAL to the broadcast-LUT form (asserted in
-    tests/test_similarity.py): LUT entries are the same numpy
-    j-order-magnitude normalization + per-subspace cumsum fold
-    _adc_lut_frame computes, and the per-candidate sum accumulates the
-    M subspace lookups in m order from 0.0 — exactly _adc_expr's left
-    fold — so every driver hash is unchanged.
-
-    ``cells_by_query`` routes IVF probing inside the kernel (a code row
-    is scored only against queries probing its cell). Callers guard
-    with QUERY_BATCH_MAX before collecting (the pair_scores contract);
-    oversized batches stay on the broadcast-LUT distributed plan.
-
-    ``emit_topk`` (round 11, verdict r10 item 1 — the pair_scores
-    emission bound ported to the ADC kernel): when the caller's next
-    step is a per-query (ad2 asc, id asc) top-R cut with NO intervening
-    row filter, the kernel emits only each query's top R rows PER
-    PARTITION under that same order (knn._TopRAcc accumulates across
-    the partition's Arrow batches — a per-BATCH cut would never bind at
-    R=16384 under 10k-row Arrow batches) — a provable superset of the
-    global top-R (every partition keeps its R best per query, so no
-    true top-R row can be lost), with identical ad2 doubles. Turns the
-    kernel's output from |probed|×|queries| rows into
-    partitions×queries×R: a 128 MB production partition of 9-byte PQ
-    rows holds ~14M codes, so the per-partition bound is ~900× at
-    R=16384 — the 200k study showed unbounded pair emission is the
-    dominant serving cost, linear in the corpus while the answer stays
-    k rows.
-
-    ``label_col``/``qlabel_col`` (round 12, verdict r11 item 2;
-    distributed form round 13): the IDSelector label predicate applied
-    IN-kernel — label attached to the codes frame by the caller, the
-    query's label riding the queries frame as ``qlabel_col`` (collected
-    under the same QUERY_BATCH_MAX contract as the query vectors),
-    equality folded into each query's row mask exactly like cell
-    routing — which is what makes ``emit_topk`` legal on the filtered
-    paths (the round-11 exemption emitted |probed|×|queries| rows there).
-    Bit-identical to the Catalyst join-fused form (label equality inside
-    the pair-producing join, before the top-R window), asserted in
-    tests/test_similarity.py. ``emit_topk`` is dropped (streaming full
-    emission, values unchanged) when the _TopRAcc buffer would exceed
-    knn.EMIT_TOPK_BUDGET_BYTES."""
-    import pyarrow as pa
-
-    from toy_vector_db_spark.operators import knn as KNN
-
-    if (label_col is None) != (qlabel_col is None):
-        raise ValueError(
-            "label_col and qlabel_col must be passed together"
-        )
-    qrows = KNN._collected_queries(queries, query_id_col, query_vec_col)
-    schema = f"{query_id_col} long, {id_col} long, ad2 double"
-    if not qrows:
-        return codes.sparkSession.createDataFrame([], schema)
-    qids, luts = _collected_pq_luts(
-        queries, books, query_id_col, query_vec_col
+    """(query_id, vec_id, ad2) PQ-ADC pairs: ``knn._pair_kernel`` with
+    the ``_pq_scorer``; ``routing`` takes the kernel's cells_by_query /
+    cell_col / emit_topk / label_col / qlabel_col. Callers guard with
+    QUERY_BATCH_MAX (the oversized plan is the broadcast-LUT join)."""
+    return KNN._pair_kernel(
+        codes, queries, _pq_scorer(books, query_id_col, query_vec_col),
+        id_col, query_id_col, **routing,
     )
-    m_ = len(luts)
-    n_q = len(qids)
-    if emit_topk is not None and not KNN.emit_topk_within_budget(
-        n_q, emit_topk
-    ):
-        emit_topk = None  # buffer would not fit: stream full emission
-    cell_mask_lists = (
-        None
-        if cells_by_query is None
-        else [
-            np.array(cells_by_query.get(int(qid), []), dtype=np.int64)
-            for qid in qids
-        ]
-    )
-    qlabels = None
-    if qlabel_col is not None:
-        qmap = KNN._collected_qlabel_map(queries, query_id_col, qlabel_col)
-        qlabels = [qmap.get(int(qid)) for qid in qids]
-    cols = [id_col] + [f"c{m}" for m in range(m_)]
-    if cells_by_query is not None:
-        cols.append(cell_col)
-    if label_col is not None:
-        cols.append(label_col)
-    src = codes.select(*cols)
-
-    def _score(batches):
-        # per-PARTITION top-R accumulation (round 11 — see knn._TopRAcc:
-        # the per-batch cut never binds at R=16384 under 10k Arrow
-        # batches; the partition-level cut bounds emission at
-        # partitions×nq×R regardless of partition size)
-        topr = KNN._TopRAcc(n_q, emit_topk) if emit_topk is not None else None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(id_col).to_numpy()
-            n = len(ids)
-            acc = np.zeros((n, n_q))
-            for m in range(m_):
-                cm = batch.column(f"c{m}").to_numpy()
-                # lut lookup per (row, query), accumulated in m order
-                # from zeros — _adc_expr's 0.0 + lut0[c0] + ... fold
-                acc += luts[m][:, cm].T
-            cells = (
-                batch.column(cell_col).to_numpy()
-                if cell_mask_lists is not None
-                else None
-            )
-            lab = (
-                batch.column(label_col).to_numpy(zero_copy_only=False)
-                if label_col is not None
-                else None
-            )
-            if topr is not None:
-                for qi_i in range(n_q):
-                    m = KNN._row_mask(
-                        qi_i, n, cells, cell_mask_lists, lab, qlabels
-                    )
-                    if m is None:
-                        topr.add(qi_i, ids, acc[:, qi_i])
-                    else:
-                        rows = np.nonzero(m)[0]
-                        topr.add(qi_i, ids[rows], acc[rows, qi_i])
-                continue
-            if cell_mask_lists is None and lab is None:
-                out_q = np.tile(qids, n)
-                out_id = np.repeat(ids, n_q)
-                out_d = acc.ravel()
-            else:
-                mask = np.empty((n, n_q), dtype=bool)
-                for qi in range(n_q):
-                    mask[:, qi] = KNN._row_mask(
-                        qi, n, cells, cell_mask_lists, lab, qlabels
-                    )
-                ri, qi = np.nonzero(mask)
-                out_q = qids[qi]
-                out_id = ids[ri]
-                out_d = acc[ri, qi]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_q),
-                    pa.array(out_id.astype(np.int64)),
-                    pa.array(out_d),
-                ],
-                names=[query_id_col, id_col, "ad2"],
-            )
-        if topr is not None:
-            out_q, out_id, out_d = topr.emit(qids)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_q), pa.array(out_id), pa.array(out_d)],
-                names=[query_id_col, id_col, "ad2"],
-            )
-
-    return src.mapInArrow(_score, schema=schema)
 
 
 def _exact_rerank(
@@ -1523,8 +1341,6 @@ def knn_pq_adc(
     codewords are literals, queries broadcast, one shuffle for the
     per-query top-k. Recall is bounded by quantization error — the trade
     PQ makes for a 64× smaller scan."""
-    from toy_vector_db_spark.operators import knn as KNN
-
     books = trained_pq_codebooks(base, id_col, vec_col)
     codes = pq_codes(base, id_col, vec_col)
     if KNN.query_batch_count(queries) <= KNN.QUERY_BATCH_MAX:
@@ -1582,178 +1398,6 @@ def knn_pq_rerank(
     ).select(query_id_col, id_col)
     return _exact_rerank(
         cand, base, queries, k, id_col, vec_col, query_id_col, query_vec_col
-    )
-
-
-def knn_ivfpq(
-    base: DataFrame,
-    queries: DataFrame,
-    k: int,
-    nprobe: int = N_PROBE,
-    rerank_r: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    codes_cells: DataFrame | None = None,
-    cents: DataFrame | None = None,
-    books: list | None = None,
-    labels: DataFrame | None = None,
-    query_labels: DataFrame | None = None,
-    label_hist: DataFrame | None = None,
-) -> DataFrame:
-    """IVF-PQ (Faiss IVFADC shape) — the canonical 100 TB ANN serving
-    plan, composing the two scale levers this module builds separately:
-
-      1. coarse quantizer: every code row carries its IVF cell id; a query
-         probes only its nprobe nearest cells. At scale the codes table is
-         PARTITIONED BY centroid_id, so the probe join is partition
-         pruning — (C-nprobe)/C of the compressed corpus is never read.
-      2. PQ codes: what IS read is M bytes per vector, scanned with LUT
-         lookups (ADC), not float vectors.
-      3. exact rerank: full-precision vectors fetched for only the R
-         ADC survivors per query.
-
-    Against the flat knn_pq_adc scan this reads nprobe/C of the codes; the
-    recall trade is the probed-cell miss rate (same as knn_ivf). Fully
-    deterministic (trained quantizers) → DuckDB-oracle-able end to end.
-
-    ``cents``/``books``/``codes_cells`` must come from the SAME index
-    build (a mismatched set probes/decodes the wrong quantization — no
-    error, wrong neighbors): by default all three derive from ``base``;
-    pass the frozen-quantizer triple from ``ivfpq_upsert`` for an
-    incrementally-ingested index.
-
-    FILTERED search (round 7, verdict r6 item 6 — the Faiss IDSelector
-    shape): pass ``labels`` (id_col, label) and ``query_labels``
-    (query_id_col, qlabel) to restrict each query's candidates to code
-    rows whose label equals the query's, applied INSIDE the probe path —
-    after the cell join, BEFORE the ADC top-R cut — so the rerank budget
-    is spent entirely on rows that satisfy the predicate (post-filtering
-    an unfiltered ANN result instead collapses recall at selective
-    filters). At 100 TB the label is an attribute column WRITTEN with
-    the codes at build time (this join is the build-time attach), and
-    the filter composes with the tombstone anti-join of the delete leg —
-    both are row predicates on the same compressed scan.
-
-    Round 8 (verdict r7 item 6): pass ``label_hist``
-    (``label_cell_hist(base, labels)`` — the build-time per-label
-    cell-hit histogram) to make probe SELECTION label-aware: only cells
-    containing the query's label are ranked, probed in distance order
-    until the cumulative label-row count reaches the rerank budget
-    (nprobe-cell floor). Replaces the global nprobe_f = min(C,
-    nprobe·n_labels) widening, which saturated to a full probe at
-    fixture scale and over-probes whenever labels correlate with
-    cells."""
-    if (labels is None) != (query_labels is None):
-        raise ValueError(
-            "knn_ivfpq: labels and query_labels must be passed together "
-            "(the filter needs both the stored attribute and the query "
-            "predicate)"
-        )
-    if label_hist is not None and labels is None:
-        raise ValueError(
-            "knn_ivfpq: label_hist requires labels and query_labels — "
-            "histogram-guided probing restricts WHICH cells are ranked, "
-            "but only the row-level label filter keeps non-matching rows "
-            "in those cells out of the result"
-        )
-    if rerank_r is None:
-        rerank_r = _rerank_budget(base, k, id_col)
-    if cents is None:
-        cents = cached_trained_centroids(base, id_col=id_col, vec_col=vec_col)
-    # the cell-keyed compressed corpus: at 100 TB this join is free —
-    # codes are WRITTEN partitioned by centroid_id at index-build time;
-    # the default is the session-persisted in-memory artifact; pass
-    # written_codes_cells(base) for the on-disk partitioned table, where
-    # the probe join below prunes partitions dynamically (DPP)
-    if codes_cells is None:
-        codes_cells = cached_codes_cells(base, id_col, vec_col)
-
-    if books is None:
-        books = trained_pq_codebooks(base, id_col, vec_col)
-    if label_hist is not None:
-        probes = _ivf_probes_labeled(
-            queries, cents, query_labels, label_hist, nprobe,
-            int(rerank_r), query_id_col, query_vec_col,
-        )
-    else:
-        probes = _ivf_probes(
-            queries, cents, nprobe, query_id_col, query_vec_col
-        )
-    from toy_vector_db_spark.operators import knn as KNN
-
-    if KNN.query_batch_count(queries) <= KNN.QUERY_BATCH_MAX:
-        # round 10 (verdict r9 item 6): bounded batches score through
-        # the base-side _pq_pair_adc kernel — probe routing collected
-        # driver-side (the knn_ivf idiom; nq·nprobe ints), queries +
-        # LUTs in the closure. Removes the query-side LUT Python stage
-        # and its broadcast join from the serving plan; bit-identical.
-        cells_by_query = _collected_probe_routing(probes, query_id_col)
-        probed_cells = sorted(
-            {c for cs in cells_by_query.values() for c in cs}
-        )
-        src = codes_cells.where(F.col("centroid_id").isin(probed_cells))
-        q_in, label_name, qlabel_name = queries, None, None
-        if labels is not None:
-            # distributed IDSelector (round 12 in-kernel, round 13
-            # distributed): the label rides the codes frame (a stored
-            # attribute written with the codes at 100 TB — this join is
-            # the build-time attach) and the query's label rides the
-            # queries frame, so the predicate applies INSIDE the kernel
-            # and bounded emission is legal on the filtered path too
-            src, q_in, label_name, qlabel_name = _attach_labels(
-                src, labels, id_col, queries, query_labels, query_id_col
-            )
-        cand = _pq_pair_adc(
-            src, q_in, books, id_col, query_id_col, query_vec_col,
-            cells_by_query=cells_by_query,
-            label_col=label_name,
-            qlabel_col=qlabel_name,
-            emit_topk=int(rerank_r),
-        )
-    else:
-        # oversized batch: the distributed broadcast-LUT plan (never
-        # collects). LUT arrays built directly ON the probes frame
-        # (nprobe rows per query): rebuilding the tiny LUT nprobe×
-        # beats a separate probes⋈luts shuffle join of two
-        # driver-adjacent frames — one less exchange pair per search
-        probe_luts = _adc_lut_frame(
-            probes, books, query_id_col, query_vec_col,
-            keep_cols=("centroid_id",),
-        )
-        src_cells, label_name, qlabel_name = codes_cells, None, None
-        if labels is not None:
-            # distributed IDSelector (round 13, verdict r12 item 1):
-            # label attached to the CODES side before the pair join,
-            # the query's label to the probe-LUT frame — the equality
-            # then fuses into the broadcast pair join, so no unfiltered
-            # pair row ever reaches a shuffle (the round-12 form joined
-            # labels onto the PAIR frame: a |probed|×|queries|-row
-            # shuffle at exactly the >QUERY_BATCH_MAX scale where this
-            # leg engages)
-            src_cells, probe_luts, label_name, qlabel_name = (
-                _attach_labels(
-                    codes_cells, labels, id_col,
-                    probe_luts, query_labels, query_id_col,
-                )
-            )
-        cand = src_cells.join(F.broadcast(probe_luts), "centroid_id")
-        if labels is not None:
-            cand = cand.where(
-                F.col(label_name) == F.col(qlabel_name)
-            ).drop(label_name, qlabel_name)
-        cand = cand.withColumn("ad2", _adc_expr())
-    wr = Window.partitionBy(query_id_col).orderBy(
-        F.col("ad2").asc(), F.col(id_col).asc()
-    )
-    pruned = (
-        cand.withColumn("rr", F.row_number().over(wr))
-        .where(F.col("rr") <= rerank_r)
-        .select(query_id_col, id_col)
-    )
-    return _exact_rerank(
-        pruned, base, queries, k, id_col, vec_col, query_id_col, query_vec_col
     )
 
 
@@ -2101,6 +1745,33 @@ def _sq_deq(codes, mins, maxs):
     )
 
 
+def _sq_scorer():
+    """SQ ADC as a ``knn._pair_kernel`` scorer over the dequantized
+    ``deq`` rows and the collected normalized queries ``qnv`` (normalized
+    by Catalyst, so there is no normalization drift to re-prove; the
+    interpreted fold measured ~10 µs/pair, the kernel ~1 µs).
+    BIT-IDENTICAL to the ``_sq_dist`` fold (asserted in
+    tests/test_knn_kernel.py): ``acc += (x_j − y_j)·(x_j − y_j)`` one
+    dimension at a time in j order from 0.0 — one subtract, one
+    multiply, one add per dim, no FMA, no pairwise summation."""
+
+    def prep(queries, qrows):
+        qids, Q = KNN._query_matrix(qrows)
+
+        def score(batch):
+            D = list_col_to_matrix(batch.column("deq"))
+            n, d = D.shape
+            acc = np.zeros((n, len(qids)))
+            for j in range(d):
+                t = D[:, j: j + 1] - Q[:, j][None, :]
+                acc += t * t
+            return [acc]
+
+        return qids, score
+
+    return KNN._PairScorer("sq", ("deq",), "qnv", ("ad2",), prep)
+
+
 def _sq_pair_adc(
     deq: DataFrame,
     nq: DataFrame,
@@ -2112,69 +1783,27 @@ def _sq_pair_adc(
     label_col: str | None = None,
     qlabel_col: str | None = None,
 ) -> DataFrame:
-    """(query_id, vec_id, ad2) for every (query × dequantized-base) pair
-    — the SQ ADC hot loop as a vectorized Arrow kernel (the pair_scores
-    idiom: the interpreted zip_with/aggregate fold measured ~10 µs/pair,
-    dominating knn_sq_rerank at sf0.1; the kernel is ~1 µs/pair with
-    only 3 scalars emitted per pair).
-
-    BIT-IDENTICAL to the ``_sq_dist`` fold: the kernel accumulates
-    ``acc += (x_j − y_j)·(x_j − y_j)`` one dimension at a time in j
-    order from 0.0 — the same IEEE sequence as aggregate-over-zip_with
-    (one subtract, one multiply, one add per dim; no FMA, no pairwise
-    summation), asserted in tests/test_knn_kernel.py. Requires
-    fixed-dimension vectors (true by construction: deq arrays are
-    SQ_DIM-long). The normalized query batch arrives ALREADY computed
-    by Catalyst (collected, session-cached) so there is no
-    normalization drift to re-prove.
-
-    ``cells_by_query`` routes IVF-SQ probing INSIDE the kernel (the
-    pair_scores pattern): pairs are emitted only where the deq row's
-    ``cell_col`` is in the query's probed-cell list — nprobe/C
-    selectivity applied before any row leaves the kernel.
+    """(query_id, vec_id, ad2) for every (query × dequantized-base) pair:
+    ``knn._pair_kernel`` with the ``_sq_scorer`` (routing, labels and
+    ``emit_topk`` as there).
 
     GUARD: above QUERY_BATCH_MAX query rows this falls back to the
     pure-Catalyst crossJoin form (no driver collect, no closure
-    shipping) — bit-identical values, different physical plan; with
-    ``cells_by_query`` the caller already collected per-query routing,
-    so an oversized batch is the CALLER's bug (knn_ivfsq guards before
-    building the dict — the pair_scores contract).
-
-    ``emit_topk`` (round 11, verdict r10 item 1): per-PARTITION
-    per-query top-R emission under the downstream window's exact
-    (ad2 asc, id asc) order, accumulated across the partition's Arrow
-    batches by knn._TopRAcc — a provable superset of the global top-R
-    with identical ad2 doubles; see _pq_pair_adc. The oversized-batch
-    Catalyst fallback ignores it (that plan's window volume is bounded
-    map-side by WindowGroupLimit), and the kernel drops it (streaming
-    full emission, values unchanged) when the _TopRAcc buffer would
-    exceed knn.EMIT_TOPK_BUDGET_BYTES.
-
-    ``label_col``/``qlabel_col`` (round 12, verdict r11 item 2;
-    distributed form round 13 — see pair_scores): the IDSelector label
-    predicate folded into each query's row mask like cell routing on
-    the kernel path (makes ``emit_topk`` legal on the filtered paths);
-    on the oversized Catalyst fallback the equality references both
-    product sides, so Catalyst folds it into the pair-producing join
-    itself — a selective filter never pays an unfiltered pair row
-    through a shuffle at any nq."""
-    from toy_vector_db_spark.operators import knn
-
-    if (label_col is None) != (qlabel_col is None):
-        raise ValueError(
-            "label_col and qlabel_col must be passed together"
-        )
-    if knn.query_batch_count(nq) > knn.QUERY_BATCH_MAX:
+    shipping) — bit-identical values, different physical plan; the
+    label equality references both product sides, so Catalyst folds it
+    into the pair-producing join. With ``cells_by_query`` the caller
+    already collected per-query routing, so an oversized batch is the
+    CALLER's bug."""
+    KNN._check_label_pair(label_col, qlabel_col)
+    if KNN.query_batch_count(nq) > KNN.QUERY_BATCH_MAX:
         if cells_by_query is not None:
             raise ValueError(
                 "cells_by_query routing requires a bounded query "
-                f"batch (> {knn.QUERY_BATCH_MAX} rows); use the join "
+                f"batch (> {KNN.QUERY_BATCH_MAX} rows); use the join "
                 "form"
             )
         out = deq.crossJoin(nq)
         if label_col is not None:
-            # distributed IDSelector (round 13): becomes the join's
-            # own equality condition under PushPredicateThroughJoin
             out = out.where(F.col(label_col) == F.col(qlabel_col))
         return out.select(
             # cast to the kernel's Arrow schema so the two guard paths
@@ -2183,101 +1812,14 @@ def _sq_pair_adc(
             F.col(id_col).cast("long").alias(id_col),
             _sq_dist("deq", "qnv").alias("ad2"),
         )
-
-    import numpy as np
-    import pyarrow as pa
-
-    qrows = knn._collected_queries(nq, query_id_col, "qnv")
-    schema = f"{query_id_col} long, {id_col} long, ad2 double"
-    if not qrows:
-        # empty query batch → empty pair set, typed
-        return deq.sparkSession.createDataFrame([], schema)
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([r[1] for r in qrows], dtype=np.float64)
-    n_q = len(qrows)
-    if emit_topk is not None and not knn.emit_topk_within_budget(
-        n_q, emit_topk
-    ):
-        emit_topk = None  # buffer would not fit: stream full emission
-    cell_mask_lists = (
-        None
-        if cells_by_query is None
-        else [
-            np.array(cells_by_query.get(int(qid), []), dtype=np.int64)
-            for qid in qids
-        ]
+    return KNN._pair_kernel(
+        deq, nq, _sq_scorer(), id_col, query_id_col,
+        cells_by_query=cells_by_query,
+        cell_col=cell_col,
+        emit_topk=emit_topk,
+        label_col=label_col,
+        qlabel_col=qlabel_col,
     )
-    qlabels = None
-    if qlabel_col is not None:
-        qmap = knn._collected_qlabel_map(nq, query_id_col, qlabel_col)
-        qlabels = [qmap.get(int(qid)) for qid in qids]
-    cols = [id_col, "deq"]
-    if cells_by_query is not None:
-        cols.append(cell_col)
-    if label_col is not None:
-        cols.append(label_col)
-    src = deq.select(*cols)
-
-    def _score(batches):
-        # per-PARTITION top-R accumulation (round 11 — see knn._TopRAcc)
-        topr = knn._TopRAcc(n_q, emit_topk) if emit_topk is not None else None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(id_col).to_numpy()
-            D = list_col_to_matrix(batch.column("deq"))
-            n, d = D.shape
-            acc = np.zeros((n, n_q))
-            for j in range(d):
-                t = D[:, j: j + 1] - Q[:, j][None, :]
-                acc += t * t
-            cells = (
-                batch.column(cell_col).to_numpy()
-                if cell_mask_lists is not None
-                else None
-            )
-            lab = (
-                batch.column(label_col).to_numpy(zero_copy_only=False)
-                if label_col is not None
-                else None
-            )
-            if topr is not None:
-                for qi_i in range(n_q):
-                    m = knn._row_mask(
-                        qi_i, n, cells, cell_mask_lists, lab, qlabels
-                    )
-                    if m is None:
-                        topr.add(qi_i, ids, acc[:, qi_i])
-                    else:
-                        rows = np.nonzero(m)[0]
-                        topr.add(qi_i, ids[rows], acc[rows, qi_i])
-                continue
-            if cell_mask_lists is None and lab is None:
-                out_q = np.tile(qids, n)
-                out_id = np.repeat(ids, n_q)
-                out_d = acc.ravel()
-            else:
-                mask = np.empty((n, n_q), dtype=bool)
-                for qi in range(n_q):
-                    mask[:, qi] = knn._row_mask(
-                        qi, n, cells, cell_mask_lists, lab, qlabels
-                    )
-                ri, qi = np.nonzero(mask)
-                out_q = qids[qi]
-                out_id = ids[ri]
-                out_d = acc[ri, qi]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_q), pa.array(out_id), pa.array(out_d)],
-                names=[query_id_col, id_col, "ad2"],
-            )
-        if topr is not None:
-            out_q, out_id, out_d = topr.emit(qids)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_q), pa.array(out_id), pa.array(out_d)],
-                names=[query_id_col, id_col, "ad2"],
-            )
-
-    return src.mapInArrow(_score, schema=schema)
 
 
 def knn_sq_rerank(
@@ -2560,8 +2102,6 @@ def knn_bq2_rerank(
     2-bit code), exact cosine rerank of the survivors. Same
     labels/query_labels filtered-search hooks and bounds/codes lifecycle
     injection as knn_sq_rerank."""
-    from toy_vector_db_spark.operators import knn as KNN
-
     if (labels is None) != (query_labels is None):
         raise ValueError(
             "knn_bq2_rerank: labels and query_labels must be passed "
@@ -2638,233 +2178,6 @@ def bq2_upsert(
     return existing.unionByName(new_codes), bounds
 
 
-# (appId, plan hash, cols) → persisted cell-keyed BQ2 codes — the IVF-BQ2
-# index artifact, the cached_sq_cells idiom on the 2-bit family
-_BQ2_CELLS_CACHE: dict[tuple, DataFrame] = {}
-
-
-def cached_bq2_cells(
-    base: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, codes, centroid_id) persisted per session — the IVF-BQ2
-    index artifact: 2-bit codes keyed by the SAME trained coarse cell
-    every sibling composition uses (one consistent coarse quantizer per
-    serving stack), i.e. what a 100 TB build WRITES partitioned by
-    centroid_id at 16 B/vector inside each cell directory."""
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
-    )
-    if key not in _BQ2_CELLS_CACHE:
-        bounds = cached_bq2_bounds(base, id_col, vec_col)
-        assign = cached_trained_assign(base, id_col, vec_col)
-        bc = (
-            bq2_code_array(base, bounds, id_col, vec_col)
-            .join(assign, id_col)
-            .persist()
-        )
-        bc.count()
-        _BQ2_CELLS_CACHE[key] = bc
-    return _BQ2_CELLS_CACHE[key]
-
-
-def knn_ivfbq2(
-    base: DataFrame,
-    queries: DataFrame,
-    k: int,
-    nprobe: int = N_PROBE,
-    rerank_r: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    cents: DataFrame | None = None,
-    bounds: DataFrame | None = None,
-    bq2_cells: DataFrame | None = None,
-    labels: DataFrame | None = None,
-    query_labels: DataFrame | None = None,
-    label_hist: DataFrame | None = None,
-) -> DataFrame:
-    """IVF-BQ2 (round 9 — the composition matrix's FOURTH column,
-    IVF×{PQ, SQ, BQ, BQ2} over ONE trained coarse quantizer): the
-    shared coarse probe gates the 2-bit reconstruction-cosine prune at
-    the SHARED rerank budget (BQ2's measured point: no BQ-style
-    deepening needed), then the exact rerank. Candidate scoring is the
-    exact pair kernel routed by ``cells_by_query`` — a base row is
-    scored only against the queries probing its cell — with the
-    probe-join Catalyst fallback above QUERY_BATCH_MAX (the knn_ivf
-    guard: no driver collect on an oversized query frame). 16 B/vector
-    probed bytes: 2× BQ's, ¼ of SQ's, with near-SQ ranking quality
-    (scripts/bq2_study.py).
-
-    FILTERED search: the knn_ivfpq hooks, identically shaped — label
-    equality before the top-R cut, optional histogram-guided probe
-    selection via the shared build-time ``label_hist``. Fully
-    deterministic → DuckDB-oracle-able end to end (trained centroids by
-    the kmeans_chain parity, bounds by exact max selection, candidate
-    cosine by the pair-kernel ≡ SQL-expression parity)."""
-    from toy_vector_db_spark.operators import knn as KNN
-
-    if (labels is None) != (query_labels is None):
-        raise ValueError(
-            "knn_ivfbq2: labels and query_labels must be passed together"
-        )
-    if label_hist is not None and labels is None:
-        raise ValueError(
-            "knn_ivfbq2: label_hist requires labels and query_labels — "
-            "histogram-guided probing restricts WHICH cells are ranked, "
-            "but only the row-level label filter keeps non-matching "
-            "rows in those cells out of the result"
-        )
-    if (bq2_cells is None) != (bounds is None):
-        raise ValueError(
-            "knn_ivfbq2: bq2_cells and bounds must be injected together "
-            "— codes encoded under one bounds row reconstructed against "
-            "another silently mis-decode every distance"
-        )
-    if rerank_r is None:
-        rerank_r = _rerank_budget(base, k, id_col)
-    if cents is None:
-        cents = cached_trained_centroids(base, id_col=id_col, vec_col=vec_col)
-    if bounds is None:
-        bounds = cached_bq2_bounds(base, id_col, vec_col)
-    if bq2_cells is None:
-        bq2_cells = cached_bq2_cells(base, id_col, vec_col)
-    recon = bq2_cells.crossJoin(F.broadcast(bounds)).select(
-        id_col,
-        "centroid_id",
-        _bq2_recon("codes", "mx").alias("recon"),
-    )
-    if label_hist is not None:
-        probes = _ivf_probes_labeled(
-            queries, cents, query_labels, label_hist, nprobe,
-            int(rerank_r), query_id_col, query_vec_col,
-        )
-    else:
-        probes = _ivf_probes(
-            queries, cents, nprobe, query_id_col, query_vec_col
-        )
-    if KNN.query_batch_count(queries) > KNN.QUERY_BATCH_MAX:
-        # no-collect fallback (the knn_ivf guard): probe frame joined on
-        # centroid_id, reconstruction cosine inline; the probed-cell
-        # IN-filter collect is bounded by C, not nq
-        probed_cells = sorted(
-            int(r[0])
-            for r in probes.select("centroid_id").distinct().collect()
-        )
-        src_cells = recon.where(F.col("centroid_id").isin(probed_cells))
-        probes_sel = probes.select(query_id_col, "centroid_id")
-        if labels is not None:
-            # distributed IDSelector (round 13, verdict r12 item 1):
-            # label on the probed-codes side, qlabel on the probe
-            # frame — the equality fuses into the probe join, BEFORE
-            # the query-vector join shuffles anything (the round-12
-            # form shuffled the unfiltered pair frame by id to attach
-            # labels on exactly this >QUERY_BATCH_MAX leg)
-            src_cells, probes_sel, label_name, qlabel_name = (
-                _attach_labels(
-                    src_cells, labels, id_col,
-                    probes_sel, query_labels, query_id_col,
-                )
-            )
-        cand = src_cells.join(probes_sel, "centroid_id")
-        if labels is not None:
-            cand = cand.where(
-                F.col(label_name) == F.col(qlabel_name)
-            ).drop(label_name, qlabel_name)
-        cand = (
-            cand.join(
-                queries.select(query_id_col, query_vec_col), query_id_col
-            )
-            .select(
-                F.col(query_id_col).cast("long").alias(query_id_col),
-                F.col(id_col).cast("long").alias(id_col),
-                V.distance("recon", query_vec_col).alias("dist"),
-            )
-        )
-    else:
-        cells_by_query = _collected_probe_routing(probes, query_id_col)
-        probed_cells = sorted(
-            {c for cs in cells_by_query.values() for c in cs}
-        )
-        src = recon.where(F.col("centroid_id").isin(probed_cells))
-        q_in, label_name, qlabel_name = queries, None, None
-        if labels is not None:
-            # distributed IDSelector (round 12 in-kernel, round 13
-            # distributed) — the knn_ivfpq shape: label attached to the
-            # probed codes frame, the query's label riding the queries
-            # frame
-            src, q_in, label_name, qlabel_name = _attach_labels(
-                src, labels, id_col, queries, query_labels, query_id_col
-            )
-        cand = KNN.pair_scores(
-            src,
-            q_in,
-            id_col=id_col,
-            vec_col="recon",
-            query_id_col=query_id_col,
-            query_vec_col=query_vec_col,
-            cells_by_query=cells_by_query,
-            label_col=label_name,
-            qlabel_col=qlabel_name,
-            emit_topk=int(rerank_r),
-        )
-    wr = Window.partitionBy(query_id_col).orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    pruned = (
-        cand.withColumn("rr", F.row_number().over(wr))
-        .where(F.col("rr") <= rerank_r)
-        .select(query_id_col, id_col)
-    )
-    return _exact_rerank(
-        pruned, base, queries, k, id_col, vec_col, query_id_col, query_vec_col
-    )
-
-
-# (appId, plan hash, cols) → persisted cell-keyed SQ codes — the IVF-SQ
-# index artifact (codes ⋈ coarse-cell assignment), the cached_codes_cells
-# idiom for the fourth family
-_SQ_CELLS_CACHE: dict[tuple, DataFrame] = {}
-
-
-def cached_sq_cells(
-    base: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, codes, centroid_id) persisted per session — the IVF-SQ index
-    artifact: SQ codes keyed by their trained coarse cell, i.e. what a
-    100 TB build WRITES partitioned by centroid_id (64 B/vector inside
-    each cell directory). Derives from the SAME cached trained centroids
-    and frozen bounds the sibling caches use, so a mixed-family serving
-    stack probes one consistent coarse quantizer."""
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
-    )
-    if key not in _SQ_CELLS_CACHE:
-        bounds = cached_sq_bounds(base, id_col, vec_col)
-        # the SAME session-cached assignment cached_codes_cells serves
-        # from — a mixed-family session (bench runs both) computes the
-        # base×C argmin scan once, not per fine quantizer
-        assign = cached_trained_assign(base, id_col, vec_col)
-        sc = (
-            sq_code_array(base, bounds, id_col, vec_col)
-            .join(assign, id_col)
-            .persist()
-        )
-        sc.count()
-        _SQ_CELLS_CACHE[key] = sc
-    return _SQ_CELLS_CACHE[key]
-
-
 def ivfsq_upsert(
     initial: DataFrame,
     batch: DataFrame,
@@ -2904,6 +2217,381 @@ def ivfsq_upsert(
     )
 
 
+# -- IVF over a pluggable fine codec -----------------------------------------
+
+
+class FineCodec(NamedTuple):
+    """What one IVF family adds to the shared coarse probe of
+    ``ivf_search`` — the Faiss IndexIVF split: one inverted file, one probe
+    rule, pluggable per-list scanners.
+
+    * ``name`` — the family tag (``knn_ivf<name>``, the cells-cache key);
+    * ``state(base, id_col, vec_col)`` — the frozen fine-quantizer state
+      trained on ``base`` (PQ codebooks, SQ/BQ2 bounds row; None for BQ);
+    * ``encode(base, state, id_col, vec_col)`` — the per-row code frame
+      that ``_cached_cells`` joins with the coarse assignment;
+    * ``scan(cells, state, id_col)`` — the scan frame (id, centroid_id,
+      payload) over a cell-keyed artifact, decoded against ``state``;
+    * ``kernel(state, queries, qid, qvec)`` — ``(query frame,
+      knn._PairScorer)`` for the bounded Arrow leg, or None when the score
+      is a JVM intrinsic with nothing to vectorize (BQ's bit_count);
+    * ``catalyst(state, queries, qid, qvec)`` — ``(query frame, score
+      Column)`` for the Catalyst probe-join leg, value-identical to the
+      scorer;
+    * ``score_col`` — the candidate score, ranked ascending;
+    * ``rerank_mult`` — the rerank floor R ≥ rerank_mult·k over the shared
+      scale-aware ``_rerank_budget``."""
+
+    name: str
+    state: Callable
+    encode: Callable
+    scan: Callable
+    kernel: Callable | None
+    catalyst: Callable
+    score_col: str
+    rerank_mult: int
+
+
+def _sq_queries(queries: DataFrame, qid: str, qvec: str) -> DataFrame:
+    return queries.select(qid, _normalize(_as_double_sql(qvec)).alias("qnv"))
+
+
+_PQ = FineCodec(
+    "pq",
+    state=trained_pq_codebooks,
+    encode=lambda base, books, i, v: pq_codes(base, i, v),
+    scan=lambda cells, books, i: cells,
+    kernel=lambda books, q, qi, qv: (q, _pq_scorer(books, qi, qv)),
+    catalyst=lambda books, q, qi, qv: (
+        _adc_lut_frame(q, books, qi, qv), _adc_expr()
+    ),
+    score_col="ad2",
+    rerank_mult=RERANK_MULT,
+)
+_SQ = FineCodec(
+    "sq",
+    state=cached_sq_bounds,
+    encode=sq_code_array,
+    scan=lambda cells, bounds, i: cells.crossJoin(F.broadcast(bounds)).select(
+        i, "centroid_id", _sq_deq("codes", "mins", "maxs").alias("deq")
+    ),
+    kernel=lambda bounds, q, qi, qv: (_sq_queries(q, qi, qv), _sq_scorer()),
+    catalyst=lambda bounds, q, qi, qv: (
+        _sq_queries(q, qi, qv), _sq_dist("deq", "qnv")
+    ),
+    score_col="ad2",
+    rerank_mult=RERANK_MULT,
+)
+_BQ2 = FineCodec(
+    "bq2",
+    state=cached_bq2_bounds,
+    encode=bq2_code_array,
+    scan=lambda cells, bounds, i: cells.crossJoin(F.broadcast(bounds)).select(
+        i, "centroid_id", _bq2_recon("codes", "mx").alias("recon")
+    ),
+    kernel=lambda bounds, q, qi, qv: (q, KNN._cosine_scorer("recon", qv)),
+    catalyst=lambda bounds, q, qi, qv: (
+        q.select(qi, qv), V.distance("recon", qv)
+    ),
+    score_col="dist",
+    rerank_mult=RERANK_MULT,
+)
+_BQ = FineCodec(
+    "bq",
+    state=lambda base, i, v: None,
+    encode=lambda base, state, i, v: bq_codes(base, i, v),
+    scan=lambda cells, state, i: cells,
+    kernel=None,
+    catalyst=lambda state, q, qi, qv: (
+        q.select(
+            qi,
+            _bq_pack(qv, 1).alias("q_hi"),
+            _bq_pack(qv, BQ_HALF + 1).alias("q_lo"),
+        ),
+        F.expr("bit_count(b_hi ^ q_hi) + bit_count(b_lo ^ q_lo)"),
+    ),
+    score_col="h",
+    rerank_mult=BQ_RERANK_MULT,
+)
+
+
+# (codec name, appId, base plan hash, id_col, vec_col) → persisted
+# cell-keyed codes (id, codes…, centroid_id): the IVF index artifact a
+# 100 TB build WRITES partitioned by centroid_id. Every family joins the
+# SAME session-cached coarse assignment, so a mixed-family serving stack
+# runs the base×C argmin scan once, not per fine quantizer.
+_CELLS_CACHE: dict[tuple, DataFrame] = {}
+
+
+def _cached_cells(
+    codec: FineCodec,
+    base: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    key = (
+        codec.name,
+        base.sparkSession.sparkContext.applicationId,
+        base.semanticHash(),
+        id_col,
+        vec_col,
+    )
+    if key not in _CELLS_CACHE:
+        state = codec.state(base, id_col, vec_col)
+        assign = cached_trained_assign(base, id_col, vec_col)
+        codes = codec.encode(base, state, id_col, vec_col)
+        cc = codes.join(assign, id_col).persist()
+        cc.count()
+        _CELLS_CACHE[key] = cc
+    return _CELLS_CACHE[key]
+
+
+def cached_codes_cells(
+    base: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """IVF-PQ cell-keyed codes (id, c0..c{M-1}, centroid_id)."""
+    return _cached_cells(_PQ, base, id_col, vec_col)
+
+
+def cached_sq_cells(
+    base: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """IVF-SQ cell-keyed codes (id, codes, centroid_id)."""
+    return _cached_cells(_SQ, base, id_col, vec_col)
+
+
+def _in_cells(probed: list) -> "F.Column":
+    """centroid_id ∈ probed as ONE JVM-parsed IN expression — Column.isin
+    pays py4j round trips per literal; same In predicate, same plan."""
+    if not probed:
+        return F.lit(False)
+    return F.expr(f"centroid_id IN ({', '.join(map(str, probed))})")
+
+
+def _probe_join(
+    codec: FineCodec,
+    scan: DataFrame,
+    state,
+    probes: DataFrame,
+    queries: DataFrame,
+    labels: DataFrame | None,
+    query_labels: DataFrame | None,
+    broadcast: bool,
+    id_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+) -> DataFrame:
+    """The Catalyst candidate leg: probed cells ⋈ probe frame on
+    centroid_id, the label equality fused into that join, then ⋈ the
+    codec's query frame on query_id, scored by its Catalyst expression.
+    ``broadcast`` (BQ, at every batch size): the probe and query frames
+    broadcast into the scan. Otherwise (an oversized batch) nothing is
+    broadcast, and the only driver collect is the DISTINCT probed-cell
+    set — bounded by C, not nq — that prunes the scan."""
+    hint = F.broadcast if broadcast else (lambda df: df)
+    if not broadcast:
+        probed = sorted(
+            int(r[0])
+            for r in probes.select("centroid_id").distinct().collect()
+        )
+        scan = scan.where(_in_cells(probed))
+    probes_sel = probes.select(query_id_col, "centroid_id")
+    if labels is not None:
+        scan, probes_sel, label_name, qlabel_name = _attach_labels(
+            scan, labels, id_col, probes_sel, query_labels, query_id_col
+        )
+    cand = scan.join(hint(probes_sel), "centroid_id")
+    if labels is not None:
+        cand = cand.where(
+            F.col(label_name) == F.col(qlabel_name)
+        ).drop(label_name, qlabel_name)
+    q_frame, score = codec.catalyst(
+        state, queries, query_id_col, query_vec_col
+    )
+    return cand.join(hint(q_frame), query_id_col).select(
+        F.col(query_id_col).cast("long").alias(query_id_col),
+        F.col(id_col).cast("long").alias(id_col),
+        score.alias(codec.score_col),
+    )
+
+
+def ivf_search(
+    codec: FineCodec,
+    base: DataFrame,
+    queries: DataFrame,
+    k: int,
+    nprobe: int = N_PROBE,
+    rerank_r: int | None = None,
+    cents: DataFrame | None = None,
+    cells: DataFrame | None = None,
+    state=None,
+    labels: DataFrame | None = None,
+    query_labels: DataFrame | None = None,
+    label_hist: DataFrame | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+) -> DataFrame:
+    """IVF search over a pluggable fine codec — the one pipeline behind
+    knn_ivfpq / knn_ivfsq / knn_ivfbq2 / knn_ivfbq, the REPOSE shape of
+    distributed top-k (prune partitions locally, keep a local top-R,
+    merge globally):
+
+      1. coarse probe: each query probes its ``nprobe`` nearest trained
+         cells (``_ivf_probes``). On the written cell-partitioned layout
+         that is partition pruning: (C−nprobe)/C of the codes are never
+         read.
+      2. fine scan: only probed cells' code rows are scored, by the
+         codec's score (``codec.score_col``, ascending), and cut to the
+         top R per query — R = ``rerank_r`` or max(codec.rerank_mult·k,
+         ``_rerank_budget``).
+      3. exact rerank: full-precision cosine over the R survivors
+         (``_exact_rerank``), top ``k``.
+
+    Fully deterministic (trained quantizers, lexicographic ties) →
+    DuckDB-oracle-able end to end (oracles_similarity.knn_ivf*_sql).
+
+    BOUNDED vs OVERSIZED: at or below knn.QUERY_BATCH_MAX query rows the
+    probe routing is collected driver-side (nq·nprobe ints, session-
+    memoized), the union of probed cells becomes a literal IN-filter on
+    the scan, and ``knn._pair_kernel`` scores each row only against the
+    queries probing its cell, emitting the per-partition top R. Above
+    it, the Catalyst probe-join leg (``_probe_join``) runs with no query
+    collect and no broadcast of the oversized side — bit-identical
+    values, different physical plan. A codec without a kernel (BQ)
+    serves from the broadcast probe-join form at every batch size.
+
+    FILTERED search (the Faiss IDSelector shape): ``labels`` (id_col,
+    label) and ``query_labels`` (query_id_col, qlabel) come together and
+    restrict each query's candidates to rows whose label equals its own,
+    applied BEFORE the top-R cut so the whole rerank budget lands on
+    qualifying rows. The stored label rides the scan frame and the
+    query's label the query-side frame (``_attach_labels``), so the
+    equality runs inside the kernel's row mask on bounded batches and
+    inside the pair-producing join on the Catalyst leg — no leg
+    shuffles an unfiltered pair frame. ``label_hist``
+    (``cached_label_cell_hist``, the build-time per-label cell
+    histogram) additionally makes probe SELECTION label-aware: only
+    cells holding the query's label are ranked, probed in distance order
+    until their label rows cover R (``_ivf_probes_labeled``, nprobe-cell
+    floor). It requires ``labels``: the histogram restricts which cells
+    are ranked, only the row filter keeps other labels out.
+
+    ARTIFACTS: ``cents`` (coarse centroids), ``cells`` (the cell-keyed
+    codes) and ``state`` (the fine quantizer state that encoded them)
+    must come from the SAME build — a mismatched set probes or decodes
+    the wrong quantization with no error, only wrong neighbors. Each
+    defaults to the session build over ``base``; pass the frozen set an
+    ``*_upsert`` returns for an incrementally ingested index. ``base``
+    always supplies the exact-rerank vectors and the rerank budget."""
+    who = f"knn_ivf{codec.name}"
+    if (labels is None) != (query_labels is None):
+        raise ValueError(
+            f"{who}: labels and query_labels must be passed together "
+            "(the filter needs both the stored attribute and the query "
+            "predicate)"
+        )
+    if label_hist is not None and labels is None:
+        raise ValueError(
+            f"{who}: label_hist requires labels and query_labels — "
+            "histogram-guided probing restricts WHICH cells are ranked, "
+            "but only the row-level label filter keeps non-matching rows "
+            "in those cells out of the result"
+        )
+    if rerank_r is None:
+        rerank_r = max(codec.rerank_mult * k, _rerank_budget(base, k, id_col))
+    if cents is None:
+        cents = cached_trained_centroids(base, id_col=id_col, vec_col=vec_col)
+    if state is None:
+        state = codec.state(base, id_col, vec_col)
+    if cells is None:
+        cells = _cached_cells(codec, base, id_col, vec_col)
+    scan = codec.scan(cells, state, id_col)
+    if label_hist is not None:
+        probes = _ivf_probes_labeled(
+            queries, cents, query_labels, label_hist, nprobe,
+            int(rerank_r), query_id_col, query_vec_col,
+        )
+    else:
+        probes = _ivf_probes(
+            queries, cents, nprobe, query_id_col, query_vec_col
+        )
+    if codec.kernel is None or (
+        KNN.query_batch_count(queries) > KNN.QUERY_BATCH_MAX
+    ):
+        cand = _probe_join(
+            codec, scan, state, probes, queries, labels, query_labels,
+            codec.kernel is None, id_col, query_id_col, query_vec_col,
+        )
+    else:
+        cells_by_query = _collected_probe_routing(probes, query_id_col)
+        probed = sorted({c for cs in cells_by_query.values() for c in cs})
+        src = scan.where(_in_cells(probed))
+        q_in, scorer = codec.kernel(
+            state, queries, query_id_col, query_vec_col
+        )
+        label_name = qlabel_name = None
+        if labels is not None:
+            src, q_in, label_name, qlabel_name = _attach_labels(
+                src, labels, id_col, q_in, query_labels, query_id_col
+            )
+        cand = KNN._pair_kernel(
+            src, q_in, scorer, id_col, query_id_col,
+            cells_by_query=cells_by_query,
+            label_col=label_name,
+            qlabel_col=qlabel_name,
+            emit_topk=int(rerank_r),
+        )
+    wr = Window.partitionBy(query_id_col).orderBy(
+        F.col(codec.score_col).asc(), F.col(id_col).asc()
+    )
+    pruned = (
+        cand.withColumn("rr", F.row_number().over(wr))
+        .where(F.col("rr") <= rerank_r)
+        .select(query_id_col, id_col)
+    )
+    return _exact_rerank(
+        pruned, base, queries, k, id_col, vec_col, query_id_col, query_vec_col
+    )
+
+
+def knn_ivfpq(
+    base: DataFrame,
+    queries: DataFrame,
+    k: int,
+    nprobe: int = N_PROBE,
+    rerank_r: int | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+    codes_cells: DataFrame | None = None,
+    cents: DataFrame | None = None,
+    books: list | None = None,
+    labels: DataFrame | None = None,
+    query_labels: DataFrame | None = None,
+    label_hist: DataFrame | None = None,
+) -> DataFrame:
+    """IVF-PQ (the Faiss IVFADC shape) — ``ivf_search`` over PQ codes:
+    PQ_M bytes per vector (one trained sub-codeword id per subspace),
+    scored by ADC lookups — ``ad2`` = Σ_m lut_m[code_m], the squared
+    euclidean from the normalized query to the code's reconstruction.
+    Rerank: the shared scale-aware budget. ``codes_cells``/``books``
+    default to the session build over ``base``; pass the frozen triple
+    from ``ivfpq_upsert``, or ``written_codes_cells(base)`` for the
+    on-disk cell-partitioned table."""
+    return ivf_search(
+        _PQ, base, queries, k, nprobe, rerank_r, cents, codes_cells, books,
+        labels, query_labels, label_hist,
+        id_col, vec_col, query_id_col, query_vec_col,
+    )
+
+
 def knn_ivfsq(
     base: DataFrame,
     queries: DataFrame,
@@ -2921,183 +2609,61 @@ def knn_ivfsq(
     query_labels: DataFrame | None = None,
     label_hist: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF-SQ (round 8 — the Faiss ``IndexIVFScalarQuantizer`` / IVF_SQ8
-    shape): the coarse-cell probe of knn_ivfpq composed with the SQ8
-    compressed scan instead of PQ codes, completing the quantizer
-    composition matrix (IVF×PQ and IVF×SQ over the same trained coarse
-    quantizer):
-
-      1. coarse probe: nprobe of C trained cells per query — on the
-         written layout, partition pruning; (C−nprobe)/C of the codes
-         never read.
-      2. SQ ADC within probed cells only: 64 B/vector dequantized-
-         midpoint squared-euclidean, routed inside the Arrow kernel
-         (a base row is scored only against queries probing its cell).
-      3. exact rerank of the R survivors.
-
-    vs IVF-PQ: an 8× (not ~10.7×) compressed scan and no codebook
-    training beyond the coarse k-means, with SQ's near-exact ADC
-    ranking — the configuration for deployments that want probe
-    pruning but can't accept PQ's recall floor or its training
-    operational load. ``cents``/``bounds``/``sq_cells`` must come from
-    the same build (default: the session caches, always consistent).
-
-    Fully deterministic → DuckDB-oracle-able end to end (trained
-    centroids via the kmeans_chain parity, bounds by construction, ADC
-    by the _sq_dist fold parity). Oversized query frames fall back to
-    the probe-join Catalyst plan (no driver collect, the knn_ivf
-    guard).
-
-    FILTERED search (the knn_ivfpq hooks, identically shaped): pass
-    ``labels``/``query_labels`` to restrict candidates to label-equal
-    rows BEFORE the ADC top-R cut, and ``label_hist``
-    (``cached_label_cell_hist``) to make probe SELECTION label-aware —
-    cells containing the query's label probed in distance order until
-    the cumulative label-row count covers the rerank budget."""
-    from toy_vector_db_spark.operators import knn as KNN
-
-    if (labels is None) != (query_labels is None):
-        raise ValueError(
-            "knn_ivfsq: labels and query_labels must be passed together"
-        )
-    if label_hist is not None and labels is None:
-        raise ValueError(
-            "knn_ivfsq: label_hist requires labels and query_labels — "
-            "histogram-guided probing restricts WHICH cells are ranked, "
-            "but only the row-level label filter keeps non-matching "
-            "rows in those cells out of the result"
-        )
+    """IVF-SQ (the Faiss IndexIVFScalarQuantizer / IVF_SQ8 shape) —
+    ``ivf_search`` over SQ8 codes: 64 B per vector (one 8-bit code per
+    normalized dim), scored as ``ad2``, the squared euclidean from the
+    normalized query to each code's dequantized bin midpoint. Rerank:
+    the shared scale-aware budget (SQ's near-exact ADC needs no
+    deepening). ``sq_cells`` and ``bounds`` are injected together (the
+    frozen pair from ``ivfsq_upsert``)."""
     if (sq_cells is None) != (bounds is None):
         raise ValueError(
             "knn_ivfsq: sq_cells and bounds must be injected together — "
             "codes encoded under one bounds row dequantized against "
-            "another silently mis-decode every distance (the "
-            "knn_sq_rerank pairing contract)"
+            "another silently mis-decode every distance"
         )
-    if rerank_r is None:
-        rerank_r = _rerank_budget(base, k, id_col)
-    if cents is None:
-        cents = cached_trained_centroids(base, id_col=id_col, vec_col=vec_col)
-    if bounds is None:
-        bounds = cached_sq_bounds(base, id_col, vec_col)
-    if sq_cells is None:
-        sq_cells = cached_sq_cells(base, id_col, vec_col)
-    deq = sq_cells.crossJoin(F.broadcast(bounds)).select(
-        id_col,
-        "centroid_id",
-        _sq_deq("codes", "mins", "maxs").alias("deq"),
-    )
-    nq = queries.select(
-        query_id_col, _normalize(_as_double_sql(query_vec_col)).alias("qnv")
-    )
-    if label_hist is not None:
-        probes = _ivf_probes_labeled(
-            queries, cents, query_labels, label_hist, nprobe,
-            int(rerank_r), query_id_col, query_vec_col,
-        )
-    else:
-        probes = _ivf_probes(
-            queries, cents, nprobe, query_id_col, query_vec_col
-        )
-    if KNN.query_batch_count(queries) > KNN.QUERY_BATCH_MAX:
-        # no-collect fallback (the knn_ivf guard): probe frame joined on
-        # centroid_id, ADC inline; the DISTINCT probed-cell IN-filter is
-        # bounded by C, not nq, so that collect stays scalar
-        probed_cells = sorted(
-            int(r[0])
-            for r in probes.select("centroid_id").distinct().collect()
-        )
-        src_cells = deq.where(F.col("centroid_id").isin(probed_cells))
-        probes_sel = probes.select(query_id_col, "centroid_id")
-        if labels is not None:
-            # distributed IDSelector (round 13, verdict r12 item 1):
-            # label on the probed-codes side, qlabel on the probe
-            # frame — equality fused into the probe join, before the
-            # query join shuffles anything
-            src_cells, probes_sel, label_name, qlabel_name = (
-                _attach_labels(
-                    src_cells, labels, id_col,
-                    probes_sel, query_labels, query_id_col,
-                )
-            )
-        cand = src_cells.join(probes_sel, "centroid_id")
-        if labels is not None:
-            cand = cand.where(
-                F.col(label_name) == F.col(qlabel_name)
-            ).drop(label_name, qlabel_name)
-        cand = (
-            cand.join(nq, query_id_col)
-            .select(
-                F.col(query_id_col).cast("long").alias(query_id_col),
-                F.col(id_col).cast("long").alias(id_col),
-                _sq_dist("deq", "qnv").alias("ad2"),
-            )
-        )
-    else:
-        cells_by_query = _collected_probe_routing(probes, query_id_col)
-        probed_cells = sorted(
-            {c for cs in cells_by_query.values() for c in cs}
-        )
-        src = deq.where(F.col("centroid_id").isin(probed_cells))
-        q_in, label_name, qlabel_name = nq, None, None
-        if labels is not None:
-            # distributed IDSelector (round 12 in-kernel, round 13
-            # distributed) — the knn_ivfpq shape
-            src, q_in, label_name, qlabel_name = _attach_labels(
-                src, labels, id_col, nq, query_labels, query_id_col
-            )
-        cand = _sq_pair_adc(
-            src,
-            q_in,
-            id_col,
-            query_id_col,
-            cells_by_query=cells_by_query,
-            label_col=label_name,
-            qlabel_col=qlabel_name,
-            emit_topk=int(rerank_r),
-        )
-    wr = Window.partitionBy(query_id_col).orderBy(
-        F.col("ad2").asc(), F.col(id_col).asc()
-    )
-    pruned = (
-        cand.withColumn("rr", F.row_number().over(wr))
-        .where(F.col("rr") <= rerank_r)
-        .select(query_id_col, id_col)
-    )
-    return _exact_rerank(
-        pruned, base, queries, k, id_col, vec_col, query_id_col, query_vec_col
+    return ivf_search(
+        _SQ, base, queries, k, nprobe, rerank_r, cents, sq_cells, bounds,
+        labels, query_labels, label_hist,
+        id_col, vec_col, query_id_col, query_vec_col,
     )
 
 
-# (appId, plan hash, cols) → persisted cell-keyed BQ code frame
-_BQ_CELLS_CACHE: dict[tuple, DataFrame] = {}
-
-
-def cached_bq_cells(
+def knn_ivfbq2(
     base: DataFrame,
+    queries: DataFrame,
+    k: int,
+    nprobe: int = N_PROBE,
+    rerank_r: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+    cents: DataFrame | None = None,
+    bounds: DataFrame | None = None,
+    bq2_cells: DataFrame | None = None,
+    labels: DataFrame | None = None,
+    query_labels: DataFrame | None = None,
+    label_hist: DataFrame | None = None,
 ) -> DataFrame:
-    """(id, b_hi, b_lo, centroid_id) persisted per session — the IVF-BQ
-    index artifact: sign-bit codes keyed by their trained coarse cell,
-    i.e. what a 100 TB build WRITES partitioned by centroid_id (8
-    B/vector inside each cell directory — the smallest cell payload of
-    any composition). BQ has no fine training, so the artifact derives
-    from the shared session-cached assignment alone: a mixed-family
-    serving stack computes the base×C argmin scan ONCE for IVF-PQ,
-    IVF-SQ, and IVF-BQ together."""
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
+    """IVF-BQ2 — ``ivf_search`` over 2-bit sign+magnitude codes: 16 B
+    per vector (2× BQ's, ¼ of SQ's), scored as ``dist``, the clamped
+    cosine between the query and each code's reconstruction (the exact
+    pair kernel, bit-identical to the oracle's cosine expression).
+    Rerank: the shared scale-aware budget (BQ2's measured point: no
+    BQ-style deepening, scripts/bq2_study.py). ``bq2_cells`` and
+    ``bounds`` are injected together."""
+    if (bq2_cells is None) != (bounds is None):
+        raise ValueError(
+            "knn_ivfbq2: bq2_cells and bounds must be injected together "
+            "— codes encoded under one bounds row reconstructed against "
+            "another silently mis-decode every distance"
+        )
+    return ivf_search(
+        _BQ2, base, queries, k, nprobe, rerank_r, cents, bq2_cells, bounds,
+        labels, query_labels, label_hist,
+        id_col, vec_col, query_id_col, query_vec_col,
     )
-    if key not in _BQ_CELLS_CACHE:
-        assign = cached_trained_assign(base, id_col, vec_col)
-        bc = bq_codes(base, id_col, vec_col).join(assign, id_col).persist()
-        bc.count()
-        _BQ_CELLS_CACHE[key] = bc
-    return _BQ_CELLS_CACHE[key]
 
 
 def knn_ivfbq(
@@ -3116,95 +2682,19 @@ def knn_ivfbq(
     query_labels: DataFrame | None = None,
     label_hist: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF-BQ (round 8 — completing the quantizer composition matrix:
-    IVF×{PQ, SQ, BQ} over ONE trained coarse quantizer): the coarse-cell
-    probe of knn_ivfpq gating the sign-bit Hamming prune of
-    knn_bq_rerank — candidates exist only where a code row's cell is
-    probed by the query — then exact cosine rerank at BQ's DEEPER
-    constant-cost floor (BQ_RERANK_MULT·k; the probe already cut the
-    scan, and BQ's 8 B/vector Hamming affords the 2× rerank that buys
-    its recall back).
-
-    Unlike the PQ/SQ compositions this one is PURE CATALYST end to end:
-    `bit_count(xor)` is a JVM intrinsic, so the probed scan needs no
-    Arrow kernel and no driver-side probe collection — the bounded probe
-    frame (nq·nprobe rows) broadcasts into the cell join, the tiny query
-    codes broadcast behind it, and the only exchange is the per-query
-    top-R window every sibling pays. At 100 TB the cell-partitioned
-    layout (cached_bq_cells) prunes (C−nprobe)/C of an already-8 B/row
-    scan — the cheapest probed bytes of the three compositions; the
-    trade is BQ's weaker ranking, absorbed by the deeper rerank exactly
-    as in the flat key.
-
-    ``cents``/``bq_cells`` must come from the same build (default: the
-    session caches, always consistent). FILTERED search: the knn_ivfpq
-    hooks, identically shaped — ``labels``/``query_labels`` restrict
-    candidates to label-equal rows BEFORE the Hamming top-R cut, and
-    ``label_hist`` makes probe SELECTION label-aware (the shared
-    build-time histogram: filtering is a property of the partitioner,
-    not the fine quantizer). Fully deterministic (integer Hamming,
-    lexicographic ties) → DuckDB-oracle-able end to end."""
-    if (labels is None) != (query_labels is None):
-        raise ValueError(
-            "knn_ivfbq: labels and query_labels must be passed together"
-        )
-    if label_hist is not None and labels is None:
-        raise ValueError(
-            "knn_ivfbq: label_hist requires labels and query_labels — "
-            "histogram-guided probing restricts WHICH cells are ranked, "
-            "but only the row-level label filter keeps non-matching "
-            "rows in those cells out of the result"
-        )
-    if rerank_r is None:
-        rerank_r = max(BQ_RERANK_MULT * k, _rerank_budget(base, k, id_col))
-    if cents is None:
-        cents = cached_trained_centroids(base, id_col=id_col, vec_col=vec_col)
-    if bq_cells is None:
-        bq_cells = cached_bq_cells(base, id_col, vec_col)
-    qcodes = queries.select(
-        query_id_col,
-        _bq_pack(query_vec_col, 1).alias("q_hi"),
-        _bq_pack(query_vec_col, BQ_HALF + 1).alias("q_lo"),
-    )
-    if label_hist is not None:
-        probes = _ivf_probes_labeled(
-            queries, cents, query_labels, label_hist, nprobe,
-            int(rerank_r), query_id_col, query_vec_col,
-        )
-    else:
-        probes = _ivf_probes(
-            queries, cents, nprobe, query_id_col, query_vec_col
-        )
-    probes_sel = probes.select(query_id_col, "centroid_id")
-    src_cells = bq_cells
-    if labels is not None:
-        # distributed IDSelector (round 13, verdict r12 item 1): label
-        # on the cell-keyed codes side, qlabel on the probe frame — the
-        # equality fuses into the broadcast probe join, so a selective
-        # filter never pays an unfiltered pair row through a shuffle
-        # (the round-12 form joined labels onto the PAIR frame by id)
-        src_cells, probes_sel, label_name, qlabel_name = _attach_labels(
-            bq_cells, labels, id_col,
-            probes_sel, query_labels, query_id_col,
-        )
-    cand = src_cells.join(F.broadcast(probes_sel), "centroid_id")
-    if labels is not None:
-        cand = cand.where(
-            F.col(label_name) == F.col(qlabel_name)
-        ).drop(label_name, qlabel_name)
-    cand = cand.join(F.broadcast(qcodes), query_id_col).withColumn(
-        "h", F.expr("bit_count(b_hi ^ q_hi) + bit_count(b_lo ^ q_lo)")
-    )
-    wr = Window.partitionBy(query_id_col).orderBy(
-        F.col("h").asc(), F.col(id_col).asc()
-    )
-    pruned = (
-        cand.withColumn("rr", F.row_number().over(wr))
-        .where(F.col("rr") <= rerank_r)
-        .select(query_id_col, id_col)
-    )
-    return _exact_rerank(
-        pruned, base, queries, k, id_col, vec_col, query_id_col, query_vec_col
+    """IVF-BQ — ``ivf_search`` over sign-bit codes: 8 B per vector (two
+    BIGINT halves, the smallest cell payload of any family), scored as
+    ``h``, the Hamming distance bit_count(xor) to the query's sign bits —
+    a JVM intrinsic, so this family is pure Catalyst at every batch size
+    (no Arrow kernel, no driver-side probe collect). Rerank: BQ's deeper
+    constant-cost floor, R ≥ BQ_RERANK_MULT·k — the probe already cut
+    the scan, and the 8 B/vector Hamming affords the 2× rerank that buys
+    back its weaker ranking. BQ needs no fine training, so ``bq_cells``
+    alone is the injected artifact."""
+    return ivf_search(
+        _BQ, base, queries, k, nprobe, rerank_r, cents, bq_cells, None,
+        labels, query_labels, label_hist,
+        id_col, vec_col, query_id_col, query_vec_col,
     )
 
 

@@ -1788,11 +1788,11 @@ def q_ivfpq_partitioned_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     table written as parquet partitioned by centroid_id, with the probe
     set pruning the scan so it physically skips unprobed cell
     directories — THE mechanism the 100 TB serving story rests on
-    (storage-layout pruning, not an in-memory cache). Round 10: with a
-    bounded query batch the probe set is collected before planning (the
-    _pq_pair_adc routing), so the pruning is STATIC PartitionFilters —
-    earlier than the dynamic pruning the probe-join plan produced at
-    runtime, which the oversized-batch path retains. Same oracle as
+    (storage-layout pruning, not an in-memory cache). The probed cells
+    are collected before planning (the routing on a bounded batch, the
+    DISTINCT cell set on an oversized one — similarity.ivf_search), so
+    the pruning is STATIC PartitionFilters, earlier than the dynamic
+    pruning a bare probe join gets at runtime. Same oracle as
     knn_ivfpq: identical results, only the physical source differs.
     Pruning presence is asserted on the executed plan in
     tests/test_similarity.py."""
