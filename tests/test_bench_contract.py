@@ -56,6 +56,19 @@ def test_one_pair_kernel_owns_the_emission_loop():
         f = node.func
         return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
 
+    for where, node in _calls_by_outer_function():
+        if called(node) in owners:
+            owners[called(node)].add(where)
+    assert owners == {
+        "_TopRAcc": {"knn.py:_pair_kernel"},
+        "_row_mask": {"knn.py:_pair_kernel"},
+    }, owners
+
+
+def _calls_by_outer_function():
+    """(file:function, call node) for every call in the package, each
+    attributed to its outermost enclosing function or method (a nested
+    closure counts for the function that builds it)."""
     for py in PKG.rglob("*.py"):
         tree = ast.parse(py.read_text())
         tops = []
@@ -71,12 +84,29 @@ def test_one_pair_kernel_owns_the_emission_loop():
             if not isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 continue
             for node in ast.walk(top):
-                if isinstance(node, ast.Call) and called(node) in owners:
-                    owners[called(node)].add(f"{py.name}:{name}")
-    assert owners == {
-        "_TopRAcc": {"knn.py:_pair_kernel"},
-        "_row_mask": {"knn.py:_pair_kernel"},
-    }, owners
+                if isinstance(node, ast.Call):
+                    yield f"{py.name}:{name}", node
+
+
+def test_one_hnsw_search_kernel():
+    """LocalHNSW.search (Algorithm 5) has exactly ONE caller outside
+    the class: the per-shard loop of the packed-graph search kernel
+    (hnsw._prebuilt_search). Fused, routed, filtered and tombstone
+    search all feed that kernel; a second caller is a re-forked copy of
+    the per-shard search loop. Calls on the ``re`` module are not graph
+    searches."""
+    callers = [
+        where
+        for where, node in _calls_by_outer_function()
+        if isinstance(node.func, ast.Attribute)
+        and node.func.attr == "search"
+        and not where.startswith("hnsw.py:LocalHNSW.")
+        and not (
+            isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "re"
+        )
+    ]
+    assert callers == ["hnsw.py:_prebuilt_search"], callers
 
 
 def test_snapshot_restore_drops_only_new_entries():

@@ -56,19 +56,60 @@ def test_graph_invariants(split):
     edges.unpersist()
 
 
-def test_prebuilt_search_equals_fused(split):
-    """Searching the reconstructed (stored-edge) graph returns exactly what
-    the fused build+search path returns — the index cache can't change
-    results, only skip rebuild cost."""
+def test_reconstruction_matches_insert_built_graph():
+    """Every search runs on a graph REBUILT from stored edge rows, so
+    the rebuild must be the insert-built graph. Spark-free, two checks:
+    (1) _graph_shell + _csr_from_edges over a graph's edge rows returns
+    identical search() lists — distances, ids, order — to the insert-
+    built LocalHNSW for random queries at narrow, default and exhaustive
+    ef; (2) the ingest's append reconstruction (_dict_graph over the old
+    ids' rows, then insert of the new tail) gives the scratch build of
+    all ids edge for edge."""
+    for n_old, n_new in ((300, 40), (500, 1), (64, 64)):
+        rng = np.random.default_rng(n_old + n_new)
+        n = n_old + n_new
+        vecs = rng.normal(size=(n, 16))
+        ids = np.sort(rng.choice(10 * n, size=n, replace=False))
+        levels = [hnsw.deterministic_level(int(i)) for i in ids]
+        scratch = hnsw.LocalHNSW(vecs)
+        scratch.build(levels)
+        rows = hnsw._edge_rows(0, ids, scratch)
+
+        served = hnsw._graph_shell(ids, vecs)
+        served.csr = hnsw._csr_from_edges(ids, rows)
+        for ef in (10, 100, n):
+            for q in rng.normal(size=(50, 16)):
+                assert served.search(q, ef) == scratch.search(q, ef), (n, ef)
+
+        old = hnsw.LocalHNSW(vecs[:n_old])
+        old.build(levels[:n_old])
+        grown = hnsw._dict_graph(
+            ids[:n_old], vecs, hnsw._edge_rows(0, ids[:n_old], old)
+        )
+        for local in range(n_old, n):
+            grown.insert(local, levels[local])
+        got = hnsw._edge_rows(0, ids, grown)
+        assert sorted(got.itertuples(index=False)) == sorted(
+            rows.itertuples(index=False)
+        ), (n_old, n_new)
+
+
+def test_fused_search_leaves_nothing_behind(spark, split):
+    """knn_hnsw is build-then-prebuilt over an UNCACHED pack: a call
+    adds no index or packed-edge cache entry and persists no RDD."""
     base, qs = split
-    fused = hnsw.knn_hnsw(base, qs, 10, num_partitions=8)
-    parted, edges = hnsw.hnsw_index(base, num_partitions=8)
-    pre = hnsw.knn_hnsw_prebuilt(parted, edges, qs, 10)
-    a = sorted(fused.collect(), key=lambda r: (r.query_id, r.rank))
-    b = sorted(pre.collect(), key=lambda r: (r.query_id, r.rank))
-    assert a == b
-    parted.unpersist()
-    edges.unpersist()
+    base.count(), qs.count()  # materialize the fixture's own caches
+
+    def state():
+        return (
+            {k: id(v) for k, v in hnsw._INDEX_CACHE.items()},
+            {k: id(v) for k, v in hnsw._PACKED_EDGE_CACHE.items()},
+            spark.sparkContext._jsc.getPersistentRDDs().size(),
+        )
+
+    before = state()
+    assert hnsw.knn_hnsw(base, qs, 10, num_partitions=4).collect()
+    assert state() == before
 
 
 def test_shard_topk_emission_bit_identical(split):
@@ -148,29 +189,17 @@ def test_packed_index_guards_mismatched_artifacts(spark, embeddings, split):
     post-compaction cells with pre-compaction pack) must raise the
     consistency handshake, not silently walk local indices into the
     wrong rows."""
-    import pytest
-
     base, qs = split
     parted, edges = hnsw.cached_index(base, "#pack_guard", 4)
     # a packed frame built against a DIFFERENT vector set (one row
     # dropped) — fingerprints cannot match
     parted_minus = parted.where(F.col("vec_id") != 0)
-    bad_packed = hnsw.pack_index(parted_minus, 
-        edges.where(F.col("src") != 0).where(F.col("dst") != 0))
-    routed = hnsw._replicate_queries(
-        qs, parted.select("part").distinct(), "query_id", "query_vec"
+    bad_packed = hnsw.pack_index(
+        parted_minus, edges.where(F.col("src") != 0).where(F.col("dst") != 0)
     )
-    # bypass the cache to force the mismatched pair together
-    import toy_vector_db_spark.operators.hnsw as H
-    key_sentinel = object()
-    orig = H.cached_packed_index
-    try:
-        H.cached_packed_index = lambda p, e, id_col="vec_id": bad_packed
-        with pytest.raises(Exception, match="packed index does not match"):
-            H._prebuilt_search(
-                parted, edges, routed, 5, 100,
-                "vec_id", "embedding", "query_id", "query_vec",
-            ).collect()
-    finally:
-        H.cached_packed_index = orig
-    assert key_sentinel is not None
+    routed = hnsw._replicate_queries(qs, parted, "query_id", "query_vec")
+    with pytest.raises(Exception, match="packed index does not match"):
+        hnsw._prebuilt_search(
+            parted, bad_packed, routed, 5, 100,
+            "vec_id", "embedding", "query_id", "query_vec",
+        ).collect()

@@ -31,6 +31,14 @@ dataflow, so it cannot be a DataFrame expression. The scale-out design:
     candidates per shard; a global window top-k with EXACT distances reranks
     (same rerank shape as the reference's :317-326).
 
+ONE search kernel (``_prebuilt_search``) serves every search: it walks
+graphs rebuilt from CSR-packed edge rows (``pack_index``). A prebuilt
+index feeds it the session-cached pack; the fused ``knn_hnsw`` /
+``knn_hnsw_routed`` build the edges lazily and feed it an uncached pack,
+persisting nothing. The rebuilt graph searches exactly like the
+insert-built one — pinned without Spark by
+tests/test_hnsw.py::test_reconstruction_matches_insert_built_graph.
+
 At 100 TB: P grows with the corpus so each shard stays in one executor's
 memory; search cost is P × (ef·log n_shard) distance evals instead of a full
 scan — the IVF routing operator (operators/similarity.py) further prunes the
@@ -44,7 +52,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 # Reference hyperparameters (src/hnsw.rs:45-50)
@@ -320,34 +328,41 @@ def _edges_from_parted(
         vecs = np.stack(pdf[vec_col].to_numpy())
         idx = LocalHNSW(vecs)
         idx.build([deterministic_level(int(i)) for i in ids])
-        part = int(pdf["part"].iloc[0])
-        rows = [
-            (part, lc, int(ids[src]), pos, int(ids[dst]))
-            for lc, adj in enumerate(idx.neighbors)
-            for src, dsts in adj.items()
-            for pos, dst in enumerate(dsts)
-        ]
-        return pd.DataFrame(
-            rows, columns=["part", "layer", "src", "pos", "dst"]
-        )
+        return _edge_rows(int(pdf["part"].iloc[0]), ids, idx)
 
     return parted.groupBy("part").applyInPandas(
         _build, schema="part int, layer int, src long, pos int, dst long"
     )
 
 
+def _edge_rows(part: int, ids: np.ndarray, idx: LocalHNSW) -> pd.DataFrame:
+    """A shard graph's adjacency as stored edge rows (part, layer, src,
+    pos, dst) with global ids — the row-per-edge format every
+    reconstruction reads back. Shared by the build and the ingest."""
+    return pd.DataFrame(
+        [
+            (part, lc, int(ids[src]), pos, int(ids[dst]))
+            for lc, adj in enumerate(idx.neighbors)
+            for src, dsts in adj.items()
+            for pos, dst in enumerate(dsts)
+        ],
+        columns=["part", "layer", "src", "pos", "dst"],
+    )
+
+
 def _graph_shell(ids: np.ndarray, vecs: np.ndarray) -> LocalHNSW:
     """A LocalHNSW with levels/entry-point replayed from the
     deterministic per-id hash (insert's running-max rule over id order)
-    but NO adjacency yet — the shared first half of every
-    reconstruction path (serving rebuilds adjacency from packed CSR rows
-    in _prebuilt_search; _upsert_parted._ingest keeps a mutable dict
-    graph because its append path must insert afterward). Levels are
-    RE-DERIVED from the hash, never from the edge list: isolated
-    high-layer nodes emit no edges. Reconstruction parity with the
-    insert-built graph — neighbor order, beam traversal, distances,
-    tie-breaks — is asserted in tests/test_hnsw.py; see _csr_from_edges
-    for the order guarantees."""
+    but NO adjacency yet — the shared first half of both
+    reconstructions: serving fills ``csr`` from packed rows
+    (_prebuilt_search), the ingest fills mutable dicts (_dict_graph).
+    ``vecs`` may extend past ``ids``: the ingest's new tail rows, which
+    it inserts afterward. Levels are RE-DERIVED from the hash, never
+    from the edge list: isolated high-layer nodes emit no edges. That
+    the rebuilt graph searches exactly like the insert-built one —
+    neighbor order, beam traversal, distances, tie-breaks — is pinned
+    by tests/test_hnsw.py::test_reconstruction_matches_insert_built_graph;
+    see _csr_from_edges for the order guarantees."""
     idx = LocalHNSW(vecs)
     levels = [deterministic_level(int(i)) for i in ids]
     top, ep = -1, None
@@ -402,6 +417,26 @@ def _csr_from_edges(
         np.cumsum(counts, out=indptr[1:])
         out.append((indptr, loc_dst[m]))
     return out
+
+
+def _dict_graph(
+    ids: np.ndarray, vecs: np.ndarray, edge_pdf: pd.DataFrame
+) -> LocalHNSW:
+    """The stored graph over ``ids`` as a MUTABLE LocalHNSW that insert
+    can continue (the ingest's append case): _graph_shell plus dict
+    adjacency whose entries are slices of the _csr_from_edges arrays —
+    safe to share because insert replaces entries, never mutates them.
+    Nodes without edges get no entry, which every reader treats like an
+    empty one."""
+    idx = _graph_shell(ids, vecs)
+    for lc, csr in enumerate(_csr_from_edges(ids, edge_pdf)):
+        if csr is not None:
+            indptr, indices = csr
+            idx.neighbors[lc] = {
+                s: indices[indptr[s]: indptr[s + 1]]
+                for s in np.flatnonzero(np.diff(indptr)).tolist()
+            }
+    return idx
 
 
 def _ids_fingerprint(ids: np.ndarray) -> bytes:
@@ -464,33 +499,44 @@ def cached_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
+    return _session_index(
+        base, (cache_key, num_partitions),
+        lambda: hnsw_index(base, num_partitions, id_col, vec_col),
+    )
+
+
+def _session_index(df: DataFrame, key: tuple, build):
+    """The session memo of every built index: ``build()`` runs once per
+    (application, ``key``, input-file snapshot of ``df``) — the snapshot
+    keeps a file-backed input rewritten in place from serving the index
+    built before the rewrite."""
     from toy_vector_db_spark.operators import knn
 
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        cache_key,
-        num_partitions,
-        knn._input_snapshot(base),
+    full = (
+        df.sparkSession.sparkContext.applicationId,
+        *key,
+        knn._input_snapshot(df),
     )
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = hnsw_index(base, num_partitions, id_col, vec_col)
-    return _INDEX_CACHE[key]
+    if full not in _INDEX_CACHE:
+        _INDEX_CACHE[full] = build()
+    return _INDEX_CACHE[full]
 
 
 def _replicate_queries(
     queries: DataFrame,
-    parts: DataFrame,
+    parted: DataFrame,
     query_id_col: str,
     query_vec_col: str,
 ) -> DataFrame:
-    """Fan each query out to every shard id WITHOUT driver-side collection:
-    crossJoin with the (tiny, broadcast) part-id table. The query side stays
-    a distributed DataFrame end-to-end — |Q|×P rows flow through the cogroup
-    exchange, which is the fan-out inherent to searching all shards, spread
-    over executors instead of serialized into every task closure."""
+    """Fan each query out to every shard of ``parted`` WITHOUT driver-side
+    collection: crossJoin with the (tiny, broadcast) distinct part-id
+    table. The query side stays a distributed DataFrame end-to-end —
+    |Q|×P rows flow through the cogroup exchange, which is the fan-out
+    inherent to searching all shards, spread over executors instead of
+    serialized into every task closure."""
     return (
         queries.select(query_id_col, query_vec_col)
-        .crossJoin(F.broadcast(parts))
+        .crossJoin(F.broadcast(parted.select("part").distinct()))
     )
 
 
@@ -651,7 +697,7 @@ def _incremental_pack(
 
 def _prebuilt_search(
     parted: DataFrame,
-    edges: DataFrame,
+    packed: DataFrame,
     routed_queries: DataFrame,
     k: int,
     ef: int,
@@ -661,22 +707,32 @@ def _prebuilt_search(
     query_vec_col: str,
     emit: int | None = None,
 ) -> DataFrame:
-    """Shared search core over a PREBUILT index: cogroup each shard's
-    vectors with its CSR-PACKED edge row AND the queries routed to it,
-    rebuild the graph via np.frombuffer (no insert cost, no per-edge
-    work, no per-edge shipping), beam-search every query, global exact
-    rerank.
+    """THE HNSW search kernel (Algorithm 5 per shard, then one global
+    top-k — REPOSE's local-top-k-then-merge shape): cogroup each shard's
+    vectors with its CSR-PACKED edge row (``pack_index``) AND the
+    queries routed to it, rebuild the graph via np.frombuffer (no insert
+    cost, no per-edge work, no per-edge shipping), beam-search every
+    query, global exact rerank.
 
     ``routed_queries`` is any distributed (part, query_id, query_vec)
-    frame — full fan-out for hash shards, nprobe cells for IVF routing.
-    Cogroup takes exactly two sides, so the packed edge row and the
-    routed query set ride in ONE tagged auxiliary frame (packed rows
-    carry null query columns and vice versa) — nothing is collected to
-    the driver. The row-per-edge ``edges`` frame is packed once per
-    (parted, edges) pair per session (cached_packed_index); round 10
+    frame — full fan-out for hash shards, nprobe cells for IVF routing,
+    one label graph for filtered search. Cogroup takes exactly two
+    sides, so the packed edge row and the routed query set ride in ONE
+    tagged auxiliary frame (packed rows carry null query columns and
+    vice versa) — nothing is collected to the driver. Prebuilt callers
+    pass the session-cached pack (cached_packed_index); round 10
     shipped and dict-reconstructed all |edges| rows on EVERY query
-    batch, measured as the dominant routed-serving term at 200k."""
-    packed = cached_packed_index(parted, edges, id_col)
+    batch, measured as the dominant routed-serving term at 200k.
+
+    ``emit`` (default k) = candidates emitted per (query, shard).
+    Callers that re-score and re-rank the emission downstream
+    (knn_hnsw_exhaustive) pass a larger emit so the FINAL top-k
+    membership is decided by the Catalyst fold-form distance, not by
+    the kernel's numpy float64 ordering (the two are ulp-close; a
+    boundary swap would otherwise change the set). With emit set and
+    ef >= shard size the kernel also appends any graph-unreachable
+    points (pruning can in principle disconnect layer 0), making the
+    degenerate ef=n configuration provably exhaustive."""
     null_bin = [
         F.lit(None).cast("binary").alias(f"l{kk}_{w}")
         for kk in range(L)
@@ -699,16 +755,13 @@ def _prebuilt_search(
     ).unionByName(q_tagged)
 
     def _search(vec_pdf: pd.DataFrame, aux_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {query_id_col: pd.Series(dtype="int64"),
-             id_col: pd.Series(dtype="int64"),
-             "dist": pd.Series(dtype="float64")}
-        )
-        if vec_pdf.empty:
-            return empty
         q_pdf = aux_pdf[aux_pdf["qid"].notna()]
-        if q_pdf.empty:
-            return empty
+        if vec_pdf.empty or q_pdf.empty:
+            return pd.DataFrame(
+                {query_id_col: pd.Series(dtype="int64"),
+                 id_col: pd.Series(dtype="int64"),
+                 "dist": pd.Series(dtype="float64")}
+            )
         vec_pdf = vec_pdf.sort_values(id_col, ignore_index=True)
         ids = vec_pdf[id_col].to_numpy()
         vecs = np.stack(vec_pdf[vec_col].to_numpy())
@@ -748,13 +801,12 @@ def _prebuilt_search(
             # np.array (not asarray): a float64 qvec arrives as a zero-copy
             # view of the Arrow buffer at arbitrary alignment, and BLAS
             # dgemv rounds differently on misaligned input — the fresh
-            # aligned copy keeps distances bit-identical to the fused path
+            # aligned copy keeps distances independent of buffer layout
             qa = np.array(qv, dtype=np.float64)
             res = idx.search(qa, ef)
             if emit is not None and ef >= n_local and len(res) < n_local:
                 # disconnected layer 0: append unreachable points so the
-                # exhaustive configuration stays provably exact (same
-                # guard as the fused kernel in knn_hnsw)
+                # exhaustive configuration stays provably exact
                 got = {local for _, local in res}
                 missing = [i for i in range(n_local) if i not in got]
                 dm = idx._dist(qa, missing)
@@ -774,8 +826,15 @@ def _prebuilt_search(
             _search, schema=f"{query_id_col} long, {id_col} long, dist double"
         )
     )
-    from pyspark.sql import Window
+    return _window_topk(cands, k, id_col, query_id_col)
 
+
+def _window_topk(
+    cands: DataFrame, k: int, id_col: str, query_id_col: str
+) -> DataFrame:
+    """The one global top-k: each query's k nearest candidates by exact
+    distance, ties by id (the reference's rerank, src/hnsw.rs:317-326).
+    Shards are disjoint, so no candidate needs dedup before ranking."""
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("dist").asc(), F.col(id_col).asc()
     )
@@ -798,19 +857,14 @@ def knn_hnsw_prebuilt(
     query_vec_col: str = "query_vec",
     emit: int | None = None,
 ) -> DataFrame:
-    """H10 search over a PREBUILT hash-sharded index. Bit-identical results
-    to the fused ``knn_hnsw`` (same graph, same search) — asserted in
-    tests. Queries fan out to all shards as a distributed frame. ``emit``
-    widens the per-shard emission for callers that re-score downstream
-    (the exhaustive degenerate), exactly as in the fused path."""
-    routed = _replicate_queries(
-        queries,
-        parted.select("part").distinct(),
-        query_id_col,
-        query_vec_col,
-    )
+    """H10 search over a PREBUILT hash-sharded index: queries fan out to
+    all shards as a distributed frame and the search kernel walks the
+    session-cached pack of (parted, edges). ``emit`` widens the
+    per-shard emission for callers that re-score downstream (the
+    exhaustive degenerate; see _prebuilt_search)."""
+    routed = _replicate_queries(queries, parted, query_id_col, query_vec_col)
     return _prebuilt_search(
-        parted, edges, routed, k, ef,
+        parted, cached_packed_index(parted, edges, id_col), routed, k, ef,
         id_col, vec_col, query_id_col, query_vec_col,
         emit=emit,
     )
@@ -828,88 +882,19 @@ def knn_hnsw(
     query_vec_col: str = "query_vec",
     emit: int | None = None,
 ) -> DataFrame:
-    """H10 top-k ANN: build each shard's graph and beam-search all queries
-    against it in ONE cogroup applyInPandas pass (build+search fused, like
-    the reference's single-process run), then global exact rerank via window
-    top-k over the ≤ k·P candidates per query (each shard emits only its
-    local top-k — the global top-k is provably inside that union).
-
-    The query side stays a distributed DataFrame: queries are fanned out to
-    every shard id via a broadcast crossJoin and arrive through the cogroup
-    exchange — no driver-side collection, no per-task closure shipping
-    (round-1 scale fix; the routed variant below prunes this fan-out).
-
-    ``emit`` (default k) = candidates emitted per (query, shard). Callers
-    that re-score and re-rank the emission downstream (knn_hnsw_exhaustive)
-    pass a larger emit so the FINAL top-k membership is decided by the
-    Catalyst fold-form distance, not by the kernel's numpy float64 ordering
-    (the two are ulp-close; a boundary swap would otherwise change the set).
-    When ef >= shard size the kernel also appends any graph-unreachable
-    points (pruning can in principle disconnect layer 0), making the
-    degenerate ef=n configuration provably exhaustive."""
-    spark = base.sparkSession
-    part_ids = spark.range(num_partitions).select(
-        F.col("id").cast("int").alias("part")
-    )
-    q_repl = _replicate_queries(queries, part_ids, query_id_col, query_vec_col)
-
-    def _search(pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty or q_pdf.empty:
-            return pd.DataFrame(
-                {query_id_col: pd.Series(dtype="int64"),
-                 id_col: pd.Series(dtype="int64"),
-                 "dist": pd.Series(dtype="float64")}
-            )
-        pdf = pdf.sort_values(id_col, ignore_index=True)
-        ids = pdf[id_col].to_numpy()
-        vecs = np.stack(pdf[vec_col].to_numpy())
-        idx = LocalHNSW(vecs)
-        idx.build([deterministic_level(int(i)) for i in ids])
-        n_local = len(ids)
-        m_emit = k if emit is None else emit
-        out_q, out_id, out_d = [], [], []
-        for qid, qv in zip(
-            q_pdf[query_id_col].to_numpy(), q_pdf[query_vec_col].to_numpy()
-        ):
-            # per-shard top-k emission (see _prebuilt_search): bit-identical
-            # to emitting all ef candidates, ef/k× smaller rerank exchange
-            qa = np.array(qv, dtype=np.float64)  # aligned copy (see _prebuilt_search)
-            res = idx.search(qa, ef)
-            if emit is not None and ef >= n_local and len(res) < n_local:
-                # disconnected layer 0: append unreachable points so the
-                # exhaustive configuration stays provably exact
-                got = {local for _, local in res}
-                missing = [i for i in range(n_local) if i not in got]
-                dm = idx._dist(qa, missing)
-                res = sorted(res + list(zip(dm.tolist(), missing)))
-            for d, local in res[:m_emit]:
-                out_q.append(int(qid))
-                out_id.append(int(ids[local]))
-                out_d.append(float(d))
-        return pd.DataFrame(
-            {query_id_col: out_q, id_col: out_id, "dist": out_d}
-        )
-
+    """H10 top-k ANN in one call: build-then-prebuilt. The shard graphs
+    are built lazily exactly as ``build_edges`` builds them, packed
+    UNCACHED, and searched by the one kernel (_prebuilt_search) with the
+    queries fanned out to every shard, then the global exact rerank over
+    the ≤ k·P candidates per query. Persists nothing and adds no session
+    cache entry; ``emit`` as in knn_hnsw_prebuilt."""
     parted = _with_part(base.select(id_col, vec_col), num_partitions, id_col)
-    cands = (
-        parted.groupBy("part")
-        .cogroup(q_repl.groupBy("part"))
-        .applyInPandas(
-            _search, schema=f"{query_id_col} long, {id_col} long, dist double"
-        )
-    )
-    # global rerank on exact distance (same as reference :317-326); dedup in
-    # case a point surfaced from multiple shards is impossible (shards are
-    # disjoint), so rank directly.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "dist", "rank")
+    edges = _edges_from_parted(parted, id_col, vec_col)
+    routed = _replicate_queries(queries, parted, query_id_col, query_vec_col)
+    return _prebuilt_search(
+        parted, pack_index(parted, edges, id_col), routed, k, ef,
+        id_col, vec_col, query_id_col, query_vec_col,
+        emit=emit,
     )
 
 
@@ -925,80 +910,70 @@ def knn_hnsw_routed(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
 ) -> DataFrame:
-    """The full 100 TB composition: IVF routing × per-cell HNSW graphs.
-
-    Base vectors are sharded by their IVF cell (operators/similarity.py)
-    instead of id hash; each query is routed to only its nprobe nearest
-    cells. The per-cell graph search runs in a COGROUP applyInPandas —
-    (cell base vectors) × (queries routed to that cell) — so a query's work
-    touches nprobe shards instead of all P. Recall is bounded by the
-    routing (cells containing the true neighbors), the same trade as
+    """The full 100 TB composition in one call: IVF routing × per-cell
+    HNSW graphs, build-then-prebuilt keyed by cell. Base vectors are
+    sharded by their trained IVF cell instead of id hash, each cell's
+    graph is built lazily and packed UNCACHED, and each query searches
+    only its nprobe nearest cells (_probed_cells). Recall is bounded by
+    the routing (cells containing the true neighbors), the same trade as
     knn_ivf, but search inside a probed cell is sublinear via the graph.
-    """
-    from pyspark.sql import Window
-
+    Checked against a numpy reference that shares no code with it
+    (tests/test_hnsw_routed.py)."""
     from toy_vector_db_spark.operators import similarity
-
-    if nprobe is None:
-        nprobe = similarity_nprobe()
 
     cents = similarity.cached_trained_centroids(
         base, n_centroids, id_col=id_col, vec_col=vec_col
     )
-    assign = similarity.ivf_assign(base, cents, id_col, vec_col).select(
+    cells = _cell_parted(base, cents, id_col, vec_col)
+    edges = _edges_from_parted(cells, id_col, vec_col)
+    routed = _probed_cells(queries, cents, nprobe, query_id_col, query_vec_col)
+    return _prebuilt_search(
+        cells, pack_index(cells, edges, id_col), routed, k, ef,
+        id_col, vec_col, query_id_col, query_vec_col,
+    )
+
+
+def _cell_parted(
+    base: DataFrame, cents: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """Lazy (id, vec, part) with part = the row's nearest centroid — the
+    cell-keyed shard assignment of every routed build and ingest."""
+    from toy_vector_db_spark.operators import similarity
+
+    vecs = base.select(id_col, vec_col)
+    assign = similarity.ivf_assign(vecs, cents, id_col, vec_col).select(
         id_col, "centroid_id"
     )
-    base_c = base.select(id_col, vec_col).join(assign, id_col)
+    return (
+        vecs.join(assign, id_col)
+        .withColumn("part", F.col("centroid_id").cast("int"))
+        .select(id_col, vec_col, "part")
+    )
 
-    # zero-shuffle routing via _ivf_probes (round 15 — see
-    # knn_hnsw_routed_prebuilt); alias the routing key on the query
-    # side: both frames share the cents lineage and Spark flags the
-    # cogroup keys as an ambiguous self-join
-    probes = similarity._ivf_probes(
+
+def _probed_cells(
+    queries: DataFrame, cents: DataFrame, nprobe: int | None,
+    query_id_col: str, query_vec_col: str,
+) -> DataFrame:
+    """(query_id, query_vec, part): each query once per its nprobe
+    nearest cells — the routed-query side of the search kernel.
+    Zero-shuffle routing (round 15, guide §2.4) through the IVF
+    family's _ivf_probes — the collapsed array-of-structs broadcast +
+    per-row array_sort/slice, proven rank-equivalent to the previous
+    crossJoin + row_number window in round 6 (same qd doubles; same
+    (qd, centroid_id) tie-break). The window form shuffled nq×C scored
+    rows through an exchange on EVERY serve; probing is now pure
+    map-side projection feeding the cogroup."""
+    from toy_vector_db_spark.operators import similarity
+
+    if nprobe is None:
+        nprobe = similarity_nprobe()
+    return similarity._ivf_probes(
         queries, cents, nprobe, query_id_col, query_vec_col
     ).select(
-        query_id_col, query_vec_col, F.col("centroid_id").alias("cell")
-    )
-
-    def _search_cell(base_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
-        if base_pdf.empty or q_pdf.empty:
-            return pd.DataFrame(
-                {query_id_col: pd.Series(dtype="int64"),
-                 id_col: pd.Series(dtype="int64"),
-                 "dist": pd.Series(dtype="float64")}
-            )
-        base_pdf = base_pdf.sort_values(id_col, ignore_index=True)
-        ids = base_pdf[id_col].to_numpy()
-        vecs = np.stack(base_pdf[vec_col].to_numpy())
-        idx = LocalHNSW(vecs)
-        idx.build([deterministic_level(int(i)) for i in ids])
-        out_q, out_id, out_d = [], [], []
-        for qid, qv in zip(
-            q_pdf[query_id_col].to_numpy(),
-            q_pdf[query_vec_col].to_numpy(),
-        ):
-            # per-cell top-k emission (see _prebuilt_search): bit-identical
-            # to emitting all ef candidates, ef/k× smaller rerank exchange
-            for d, local in idx.search(np.array(qv, dtype=np.float64), ef)[:k]:
-                out_q.append(int(qid))
-                out_id.append(int(ids[local]))
-                out_d.append(float(d))
-        return pd.DataFrame({query_id_col: out_q, id_col: out_id, "dist": out_d})
-
-    cands = (
-        base_c.groupBy("centroid_id")
-        .cogroup(probes.groupBy("cell"))
-        .applyInPandas(
-            _search_cell, schema=f"{query_id_col} long, {id_col} long, dist double"
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "dist", "rank")
+        query_id_col,
+        query_vec_col,
+        F.col("centroid_id").cast("int").alias("part"),
     )
 
 
@@ -1018,18 +993,12 @@ def routed_index(
     cents = similarity.cached_trained_centroids(
         base, n_centroids, id_col=id_col, vec_col=vec_col
     ).persist()
-    assign = similarity.ivf_assign(base, cents, id_col, vec_col).select(
-        id_col, "centroid_id"
-    )
     # persisted hash-partitioned on the cell key (round 15, guide §2.4
     # — see hnsw_index): the per-cell edge build, the pack cogroup and
     # every routed serving cogroup reuse this layout instead of
     # re-shuffling the vector table per call
     cells = (
-        base.select(id_col, vec_col)
-        .join(assign, id_col)
-        .withColumn("part", F.col("centroid_id").cast("int"))
-        .select(id_col, vec_col, "part")
+        _cell_parted(base, cents, id_col, vec_col)
         .repartition(base.sparkSession.sparkContext.defaultParallelism, "part")
         .persist()
     )
@@ -1045,18 +1014,10 @@ def cached_routed_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    from toy_vector_db_spark.operators import knn
-
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        "routed",
-        cache_key,
-        n_centroids,
-        knn._input_snapshot(base),
+    return _session_index(
+        base, ("routed", cache_key, n_centroids),
+        lambda: routed_index(base, n_centroids, id_col, vec_col),
     )
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = routed_index(base, n_centroids, id_col, vec_col)
-    return _INDEX_CACHE[key]
 
 
 def knn_hnsw_routed_prebuilt(
@@ -1074,33 +1035,12 @@ def knn_hnsw_routed_prebuilt(
     emit: int | None = None,
 ) -> DataFrame:
     """IVF-routed search over a PREBUILT per-cell graph: route each query to
-    its nprobe nearest centroids (broadcast the tiny centroid table), then
-    reconstruct + beam-search only the probed cells via the shared cogroup
-    core. Build cost is paid once (``routed_index``), not per invocation
-    (round-1 fix: the fused path rebuilt every cell graph every run).
-    Bit-identical to the fused ``knn_hnsw_routed`` — asserted in tests."""
-    from toy_vector_db_spark.operators import similarity
-
-    if nprobe is None:
-        nprobe = similarity_nprobe()
-
-    # zero-shuffle routing (round 15, guide §2.4): route through the
-    # IVF family's _ivf_probes — the collapsed array-of-structs
-    # broadcast + per-row array_sort/slice, proven rank-equivalent to
-    # the previous crossJoin + row_number window in round 6 (same qd
-    # doubles: identical dot/magnitude folds in identical order; same
-    # (qd, centroid_id) lexicographic tie-break). The window form
-    # shuffled nq×C scored rows through an exchange on EVERY serve;
-    # probing is now pure map-side projection feeding the cogroup.
-    routed = similarity._ivf_probes(
-        queries, cents, nprobe, query_id_col, query_vec_col
-    ).select(
-        query_id_col,
-        query_vec_col,
-        F.col("centroid_id").cast("int").alias("part"),
-    )
+    its nprobe nearest centroids, then beam-search only the probed cells
+    of the session-cached pack. Build cost is paid once
+    (``routed_index``), not per invocation."""
+    routed = _probed_cells(queries, cents, nprobe, query_id_col, query_vec_col)
     return _prebuilt_search(
-        cells, edges, routed, k, ef,
+        cells, cached_packed_index(cells, edges, id_col), routed, k, ef,
         id_col, vec_col, query_id_col, query_vec_col,
         emit=emit,
     )
@@ -1127,17 +1067,7 @@ def hnsw_routed_upsert(
     centroids (tests/test_hnsw_lifecycle.py). Same append-only id
     contract, checked. Returns (cells', edges') in ``routed_index``
     shape — every routed search entry point works unchanged."""
-    from toy_vector_db_spark.operators import similarity
-
-    assign = similarity.ivf_assign(
-        batch.select(id_col, vec_col), cents, id_col, vec_col
-    ).select(id_col, "centroid_id")
-    batch_p = (
-        batch.select(id_col, vec_col)
-        .join(assign, id_col)
-        .withColumn("part", F.col("centroid_id").cast("int"))
-        .select(id_col, vec_col, "part")
-    )
+    batch_p = _cell_parted(batch, cents, id_col, vec_col)
     return _upsert_parted(cells, edges, batch_p, id_col, vec_col)
 
 
@@ -1215,18 +1145,12 @@ def cached_routed_compact(
     compacted index (deleted rows resurfacing with no error)."""
     from toy_vector_db_spark.operators import knn
 
-    key = (
-        cells.sparkSession.sparkContext.applicationId,
-        "routed_compact",
-        cache_key,
-        cells.semanticHash(),
-        tombstones.semanticHash(),
-        knn._input_snapshot(cells),
-        knn._input_snapshot(tombstones),
+    return _session_index(
+        tombstones,
+        ("routed_compact", cache_key, cells.semanticHash(),
+         tombstones.semanticHash(), knn._input_snapshot(cells)),
+        lambda: routed_compact(cells, tombstones),
     )
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = routed_compact(cells, tombstones)
-    return _INDEX_CACHE[key]
 
 
 def _valid_int_label(label_col: str):
@@ -1337,18 +1261,10 @@ def cached_labeled_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
-    from toy_vector_db_spark.operators import knn
-
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        "labeled",
-        cache_key,
-        label_col,
-        knn._input_snapshot(base),
+    return _session_index(
+        base, ("labeled", cache_key, label_col),
+        lambda: labeled_index(base, label_col, id_col, vec_col),
     )
-    if key not in _INDEX_CACHE:
-        _INDEX_CACHE[key] = labeled_index(base, label_col, id_col, vec_col)
-    return _INDEX_CACHE[key]
 
 
 def knn_hnsw_filtered(
@@ -1382,7 +1298,7 @@ def knn_hnsw_filtered(
         ).alias("part"),
     )
     return _prebuilt_search(
-        parted, edges, routed, k, ef,
+        parted, cached_packed_index(parted, edges, id_col), routed, k, ef,
         id_col, vec_col, query_id_col, query_vec_col,
         emit=emit,
     )
@@ -1546,10 +1462,8 @@ def _upsert_parted(
         ids = vec_pdf[id_col].to_numpy()
         vecs = np.stack(vec_pdf[vec_col].to_numpy())
         is_new = vec_pdf["_is_new"].to_numpy()
-        part = int(vec_pdf["part"].iloc[0])
         old_ids = ids[~is_new]
         new_ids = ids[is_new]
-        levels = [deterministic_level(int(i)) for i in ids]
         if (
             len(old_ids) == 0
             or edge_pdf.empty
@@ -1557,44 +1471,17 @@ def _upsert_parted(
         ):
             # interleaved ids (or an empty prior shard): scratch rebuild
             # of this shard — still O(shard), never O(corpus)
-            idx = LocalHNSW(vecs)
-            idx.build(levels)
+            idx, start = LocalHNSW(vecs), 0
         else:
             # append case: old ids occupy the first len(old_ids) local
-            # offsets of the id-sorted union, so the stored edge list maps
-            # onto the union matrix unchanged; ep/top replay the running-
-            # max rule over the OLD insertion sequence only, then the new
-            # ids run Algorithm 1 in id order — the exact tail of the
-            # scratch build.
-            idx = LocalHNSW(vecs)
-            top, ep = -1, None
-            for i in range(len(old_ids)):
-                if levels[i] > top:
-                    top, ep = levels[i], i
-            idx.top_layer, idx.ep = top, ep
-            id2loc = {int(g): i for i, g in enumerate(ids)}
-            e = edge_pdf.sort_values(["layer", "src", "pos"])
-            tmp: dict[tuple[int, int], list[int]] = {}
-            for layer, src, dst in zip(
-                e["layer"].to_numpy(), e["src"].to_numpy(),
-                e["dst"].to_numpy(),
-            ):
-                tmp.setdefault(
-                    (int(layer), id2loc[int(src)]), []
-                ).append(id2loc[int(dst)])
-            # adjacency entries are int64 arrays (round 13): build the
-            # per-(layer, src) lists once, convert once
-            for (layer, src), lst in tmp.items():
-                idx.neighbors[layer][src] = np.asarray(lst, dtype=np.int64)
-            for local in range(len(old_ids), len(ids)):
-                idx.insert(local, levels[local])
-        rows = [
-            (part, lc, int(ids[src]), pos, int(ids[dst]))
-            for lc, adj in enumerate(idx.neighbors)
-            for src, dsts in adj.items()
-            for pos, dst in enumerate(dsts)
-        ]
-        return pd.DataFrame(rows, columns=cols)
+            # offsets of the id-sorted union, so the stored graph maps
+            # onto the union matrix unchanged; the new ids then run
+            # Algorithm 1 in id order — the exact tail of the scratch
+            # build.
+            idx, start = _dict_graph(old_ids, vecs, edge_pdf), len(old_ids)
+        for local in range(start, len(ids)):
+            idx.insert(local, deterministic_level(int(ids[local])))
+        return _edge_rows(int(vec_pdf["part"].iloc[0]), ids, idx)
 
     ingested = (
         touched_vecs.groupBy("part")
@@ -1680,20 +1567,10 @@ def _tombstone_filtered_topk(
     """Shared delete-leg tail for both graph families: broadcast
     anti-join the tombstones out of the (widened) candidate stream,
     then re-rank to the final top-k."""
-    from pyspark.sql import Window
-
     live = cand.join(
         F.broadcast(tombstones.select(id_col)), id_col, "left_anti"
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        live.drop("rank")
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "dist", "rank")
-    )
+    return _window_topk(live.drop("rank"), k, id_col, query_id_col)
 
 
 class HNSWIndex:

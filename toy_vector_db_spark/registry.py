@@ -627,8 +627,10 @@ def q_hnsw_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("knn_hnsw")
 def q_knn_hnsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H10 ANN top-10 per query: per-shard beam search over the prebuilt
-    (session-cached) graph + global exact rerank. Bit-identical to the fused
-    build+search path (tests/test_hnsw.py pins the equality)."""
+    (session-cached) graph + global exact rerank. The fused knn_hnsw runs
+    the same kernel over an uncached pack; the rebuilt graph searches
+    exactly like the insert-built one (pinned without Spark by
+    tests/test_hnsw.py::test_reconstruction_matches_insert_built_graph)."""
     base, qs = _split(spark, sf_dir)
     parted, edges = hnsw.cached_index(base, sf_dir, HNSW_PARTITIONS)
     return hnsw.knn_hnsw_prebuilt(parted, edges, qs, K)
@@ -707,10 +709,11 @@ def q_knn_hnsw_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     can no longer change the emitted set (round-3 advice). The kernel also
     appends graph-unreachable points when ef >= n, so a pruned-away
     layer-0 component can't silently drop true neighbors. Round 5: runs
-    over the session-cached PREBUILT 1-shard graph (bit-identical to the
-    fused path, pinned in tests) — rebuilding the graph per invocation
-    charged an EF_CONSTRUCTION=200 insert pass per call to what is a
-    search-correctness gate."""
+    over the session-cached PREBUILT 1-shard graph (searches exactly like
+    the insert-built graph, pinned by the numpy reconstruction test
+    test_reconstruction_matches_insert_built_graph) — rebuilding the
+    graph per invocation charged an EF_CONSTRUCTION=200 insert pass per
+    call to what is a search-correctness gate."""
     base, qs = _split(spark, sf_dir)
     n_base = base.count()
     parted, edges = hnsw.cached_index(base, f"{sf_dir}#exhaustive", 1)
@@ -1271,9 +1274,12 @@ def q_knn_hnsw_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-routed per-cell HNSW (cogroup applyInPandas): the composed 100 TB
     search path — each query touches nprobe cells, graph search within.
     Searches the PREBUILT session-cached per-cell graph (build paid once,
-    like hnsw_build/knn_hnsw); bit-identical to the fused build-per-call
-    path (tests/test_hnsw_routed.py pins the equality).
-    Rows-only; recall gate in tests."""
+    like hnsw_build/knn_hnsw) through the same routing and kernel as the
+    fused knn_hnsw_routed. Rows-only; tests/test_hnsw_routed.py checks
+    it against a numpy reference that shares no code with it (probed
+    cells, exact distances, exact in-cell top-10 at ef=500, recall gate),
+    and test_reconstruction_matches_insert_built_graph pins the rebuilt
+    graph."""
     base, qs = _split(spark, sf_dir)
     cells, edges, cents = hnsw.cached_routed_index(base, sf_dir)
     return hnsw.knn_hnsw_routed_prebuilt(cells, edges, cents, qs, K)
