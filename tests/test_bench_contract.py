@@ -65,6 +65,25 @@ def test_one_pair_kernel_owns_the_emission_loop():
     }, owners
 
 
+def test_one_compressed_search_tail():
+    """Every flat and IVF compressed-index search (PQ, SQ, BQ, BQ2) runs
+    ONE pipeline over a FineCodec record: inside similarity.py the exact
+    rerank (_exact_rerank) has one calling function, the shared tail
+    (_codec_search), and the Arrow pair kernel (knn._pair_kernel) has
+    one, the shared candidate step (_candidates). A second caller is a
+    re-forked copy of the pipeline."""
+    callers: dict[str, set[str]] = {"_exact_rerank": set(), "_pair_kernel": set()}
+    for where, node in _calls_by_outer_function():
+        f = node.func
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        if where.startswith("similarity.py:") and name in callers:
+            callers[name].add(where)
+    assert callers == {
+        "_exact_rerank": {"similarity.py:_codec_search"},
+        "_pair_kernel": {"similarity.py:_candidates"},
+    }, callers
+
+
 def _calls_by_outer_function():
     """(file:function, call node) for every call in the package, each
     attributed to its outermost enclosing function or method (a nested

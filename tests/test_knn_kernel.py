@@ -123,17 +123,9 @@ def test_sq_adc_kernel_equals_fold_form(spark, embeddings):
     bounds = similarity.cached_sq_bounds(base)
     codes = similarity.sq_code_array(base, bounds)
     deq = codes.crossJoin(F.broadcast(bounds)).select(
-        "vec_id",
-        similarity._sq_deq(
-            F.col("codes"), F.col("mins"), F.col("maxs")
-        ).alias("deq"),
+        "vec_id", similarity._sq_deq("codes", "mins", "maxs").alias("deq")
     )
-    nq = qs.select(
-        "query_id",
-        similarity._normalize(
-            similarity._as_double("query_vec")
-        ).alias("qnv"),
-    )
+    nq = similarity._sq_queries(qs, "query_id", "query_vec")
     fold = {
         (r["query_id"], r["vec_id"]): r["ad2"]
         for r in deq.crossJoin(F.broadcast(nq)).select(
@@ -144,14 +136,14 @@ def test_sq_adc_kernel_equals_fold_form(spark, embeddings):
     }
     kern = {
         (r["query_id"], r["vec_id"]): r["ad2"]
-        for r in similarity._sq_pair_adc(deq, nq).collect()
+        for r in knn._pair_kernel(deq, nq, similarity._sq_scorer()).collect()
     }
     assert fold == kern  # exact float equality, full pair set
 
 
 def test_pq_pair_adc_kernel_equals_lut_broadcast_form(spark, embeddings):
-    """Round 10: the base-side PQ ADC kernel (_pq_pair_adc — queries +
-    driver-built LUTs in the closure) must produce the SAME ad2 doubles
+    """Round 10: the base-side PQ ADC kernel (knn._pair_kernel with the
+    _pq_scorer — queries + driver-built LUTs in the closure) must produce the SAME ad2 doubles
     bit-for-bit as the broadcast-LUT form it replaced on the serving
     path (_adc_lut_frame ⋈ codes + _adc_expr), on the FULL pair set and
     with cell routing."""
@@ -161,9 +153,10 @@ def test_pq_pair_adc_kernel_equals_lut_broadcast_form(spark, embeddings):
     base = base.select("vec_id", "embedding")
     books = similarity.trained_pq_codebooks(base)
     codes = similarity.pq_codes(base)
+    scorer = similarity._pq_scorer(books, "query_id", "query_vec")
     kern = {
         (r["query_id"], r["vec_id"]): r["ad2"]
-        for r in similarity._pq_pair_adc(codes, qs, books).collect()
+        for r in knn._pair_kernel(codes, qs, scorer).collect()
     }
     luts = similarity._adc_lut_frame(qs, books)
     ref = {
@@ -190,8 +183,8 @@ def test_pq_pair_adc_kernel_equals_lut_broadcast_form(spark, embeddings):
     }
     routed = {
         (r["query_id"], r["vec_id"]): r["ad2"]
-        for r in similarity._pq_pair_adc(
-            cc, qs, books, cells_by_query=routing
+        for r in knn._pair_kernel(
+            cc, qs, scorer, cells_by_query=routing
         ).collect()
     }
     cell_of = {r["vec_id"]: r["centroid_id"] for r in cc.collect()}

@@ -542,6 +542,51 @@ def test_filtered_oversized_leg_never_shuffles_pair_frame(
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
+def test_oversized_codec_legs_hoist_magnitudes_and_keep_luts_local(
+    spark, sf_dir, monkeypatch
+):
+    """With QUERY_BATCH_MAX = 0 every kernel codec serves from its
+    Catalyst leg (similarity._candidates). BQ2's pair projection — flat
+    (knn_bq2_rerank) and IVF (knn_ivfbq2) alike — must score with the
+    per-row magnitudes hoisted (_v_mag · _q_mag), not re-fold both
+    SQRT(aggregate(…)) magnitudes for every pair; and the flat PQ leg
+    (knn_pq_adc) must not broadcast its query-sized LUT frame."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from toy_vector_db_spark.operators import knn, similarity
+    from toy_vector_db_spark.sources.ndjson import split_count
+
+    emb = registry.table(spark, sf_dir, "embeddings")
+    cut = split_count(emb.count(), 0.95)
+    base = emb.where(F.col("vec_id") < cut).select("vec_id", "embedding")
+    qs = emb.where(F.col("vec_id") >= cut).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+    )
+
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 0)
+    for name, df in [
+        ("bq2", similarity.knn_bq2_rerank(base, qs, 10)),
+        ("ivfbq2", similarity.knn_ivfbq2(base, qs, 10)),
+    ]:
+        pair = [
+            ln for ln in optimized(df).splitlines()
+            if "Project [" in ln and " AS dist#" in ln and "recon#" in ln
+        ]
+        assert pair, f"{name}: no pair projection scoring recon"
+        for ln in pair:
+            assert re.search(r"_v_mag#\d+ \* _q_mag#\d+", ln), (name, ln)
+            assert "SQRT" not in ln, (name, ln)
+    adc = optimized(similarity.knn_pq_adc(base, qs, 10))
+    assert "Join Cross" in adc
+    assert "strategy=broadcast" not in adc, adc
+
+
 def test_bq_hamming_partial_topk_before_exchange(plans):
     """BQ (1-bit) needs no kernel-side emission bound: its Hamming scan
     is pure Catalyst, and the rank<=R cut must compile to a map-side

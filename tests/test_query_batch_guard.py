@@ -216,8 +216,9 @@ def test_fallback_values_match_kernel_sq_adc(spark, embeddings, monkeypatch):
 
 def test_fallback_values_match_kernel_pq_adc(spark, embeddings, monkeypatch):
     """Round 10 (verdict r9 item 6): knn_pq_adc's bounded-batch path is
-    the base-side _pq_pair_adc kernel (queries + LUTs in the closure);
-    the oversized fallback is the broadcast-LUT crossJoin plan. Force
+    the base-side pair kernel with the _pq_scorer (queries + LUTs in the
+    closure); the oversized fallback is the LUT-frame crossJoin plan
+    (no broadcast of the query-sized side). Force
     the fallback on the fixture batch and assert bit-identical output —
     the driver-hash invariance argument."""
     from toy_vector_db_spark.operators import similarity

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from toy_vector_db_spark.operators import evaluation, knn, similarity
 from toy_vector_db_spark.sources.ndjson import split_count
+from toy_vector_db_spark.streaming import ingest
 
 
 def test_ivf_recall_vs_exact(spark, embeddings):
@@ -271,40 +272,112 @@ def test_ann_recall_at_10x_scale(spark):
     assert ivfsq >= 0.90, f"IVF-SQ recall@10 at 10x = {ivfsq}"
 
 
-def test_ivfpq_upsert_equals_frozen_rebuild(spark, embeddings):
-    """The incremental-ingest contract (round 6): an index built as
-    initial-build + micro-batch upsert under FROZEN quantizers must be
-    row-identical to an index encoded from scratch over the full corpus
-    under the SAME frozen quantizers — and search over it must return
-    identical neighbors. This is what makes batch ingest deterministic
-    (and oracle-able) without any retrain/rewrite."""
-    n = embeddings.count()
-    cut = split_count(n, 0.95)
-    base = embeddings.where(F.col("vec_id") < cut)
+# name → (upsert, encoder under a given state, state trainer, search
+# over an injected artifact + its frozen state)
+_UPSERTS = {
+    "ivfpq": (
+        similarity.ivfpq_upsert,
+        similarity.encode_codes,
+        similarity.trained_pq_codebooks,
+        lambda base, qs, codes, cents, state: similarity.knn_ivfpq(
+            base, qs, 10, codes_cells=codes, cents=cents, books=state
+        ),
+    ),
+    "ivfsq": (
+        similarity.ivfsq_upsert,
+        similarity.sq_code_array,
+        similarity.sq_bounds,
+        lambda base, qs, codes, cents, state: similarity.knn_ivfsq(
+            base, qs, 10, cents=cents, bounds=state, sq_cells=codes
+        ),
+    ),
+    "sq": (
+        similarity.sq_upsert,
+        similarity.sq_code_array,
+        similarity.sq_bounds,
+        lambda base, qs, codes, cents, state: similarity.knn_sq_rerank(
+            base, qs, 10, bounds=state, codes=codes
+        ),
+    ),
+    "bq2": (
+        similarity.bq2_upsert,
+        similarity.bq2_code_array,
+        similarity.bq2_bounds,
+        lambda base, qs, codes, cents, state: similarity.knn_bq2_rerank(
+            base, qs, 10, bounds=state, codes=codes
+        ),
+    ),
+}
+
+
+def _sorted_rows(df, cols):
+    return sorted(
+        tuple(list(x) if isinstance(x, list) else x for x in r)
+        for r in df.select(*cols).collect()
+    )
+
+
+def _check_upsert_equals_frozen_rebuild(embeddings, name):
+    """The incremental-ingest contract, one rule for every codec (round
+    6 IVF-PQ, round 8 SQ and IVF-SQ, round 9 BQ2): an index built as
+    initial-build + micro-batch upsert under FROZEN quantizer state (and,
+    for IVF, frozen centroids) must be row-identical to the full corpus
+    encoded (and assigned) from scratch under the SAME frozen state —
+    and search over the two must return identical neighbors. This is
+    what makes batch ingest deterministic (and oracle-able) without any
+    retrain/rewrite. The frozen state must differ from the full
+    corpus's (else the test is vacuous), and SQ codes of batch values
+    outside the frozen range saturate to 0/255, never overflow."""
+    upsert, encode, train, search = _UPSERTS[name]
+    cut = split_count(embeddings.count(), 0.95)
+    base = embeddings.where(F.col("vec_id") < cut).select(
+        "vec_id", "embedding"
+    )
     qs = embeddings.where(F.col("vec_id") >= cut).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     init_cut = split_count(cut, 0.75)
     initial = base.where(F.col("vec_id") < init_cut)
     batch = base.where(F.col("vec_id") >= init_cut)
-    cc, cents, books = similarity.ivfpq_upsert(initial, batch)
+    out = upsert(initial, batch)
+    codes, state = out[0], out[-1]
+    cents = out[1] if name.startswith("ivf") else None
 
-    # from-scratch encode of the FULL corpus under the same frozen books
-    rebuild = similarity.encode_codes(base, books).join(
-        similarity.ivf_assign(base, cents).select("vec_id", "centroid_id"),
-        "vec_id",
-    ).select(*cc.columns)
-    assert cc.exceptAll(rebuild).count() == 0
-    assert rebuild.exceptAll(cc).count() == 0
+    rebuild = encode(base, state)
+    if cents is not None:
+        rebuild = rebuild.join(
+            similarity.ivf_assign(base, cents).select("vec_id", "centroid_id"),
+            "vec_id",
+        )
+    got = _sorted_rows(codes, rebuild.columns)
+    assert got == _sorted_rows(rebuild, rebuild.columns)
+    if "sq" in name:
+        assert all(0 <= c <= 255 for row in got for c in row[1])
+    fresh = train(base)
+    assert (state if isinstance(state, list) else state.collect()) != (
+        fresh if isinstance(fresh, list) else fresh.collect()
+    )
 
-    up = similarity.knn_ivfpq(
-        base, qs, 10, codes_cells=cc, cents=cents, books=books
-    )
-    scratch = similarity.knn_ivfpq(
-        base, qs, 10, codes_cells=rebuild, cents=cents, books=books
-    )
+    up = search(base, qs, codes, cents, state)
+    scratch = search(base, qs, rebuild, cents, state)
     assert up.exceptAll(scratch).count() == 0
     assert scratch.exceptAll(up).count() == 0
+
+
+def test_ivfpq_upsert_equals_frozen_rebuild(spark, embeddings):
+    _check_upsert_equals_frozen_rebuild(embeddings, "ivfpq")
+
+
+def test_ivfsq_upsert_equals_frozen_rebuild(spark, embeddings):
+    _check_upsert_equals_frozen_rebuild(embeddings, "ivfsq")
+
+
+def test_sq_upsert_equals_frozen_rebuild(spark, embeddings):
+    _check_upsert_equals_frozen_rebuild(embeddings, "sq")
+
+
+def test_bq2_upsert_equals_frozen_rebuild(spark, embeddings):
+    _check_upsert_equals_frozen_rebuild(embeddings, "bq2")
 
 
 def test_ivfpq_delete_tombstones(spark, embeddings):
@@ -339,56 +412,69 @@ def test_ivfpq_delete_tombstones(spark, embeddings):
             assert r["dist"] == full[key]
 
 
-def test_streaming_ingest_equals_batch_upsert(spark, sf_dir):
-    """The streaming micro-batch ingest (readStream → foreachBatch →
-    append) must produce a cell-keyed codes table ROW-IDENTICAL to the
-    batch upsert under the same frozen quantizers — batch boundaries
-    only partition the work (per-row assign/encode is deterministic), so
-    the continuous-ingest path inherits the batch path's oracle."""
-    from toy_vector_db_spark import registry as R
-    from toy_vector_db_spark.streaming import ingest
+# name → (batch upsert, streaming drain under the upsert's frozen
+# state, the existing artifact the drained rows append to)
+_STREAMS = {
+    "ivfpq": (
+        similarity.ivfpq_upsert,
+        lambda spark, sf, lo, hi, out: ingest.stream_ingest_codes(
+            spark, sf, lo, hi, out[1], out[2]
+        ),
+        lambda initial, out: similarity.cached_codes_cells(initial),
+    ),
+    "sq": (
+        similarity.sq_upsert,
+        lambda spark, sf, lo, hi, out: ingest.stream_ingest_sq_codes(
+            spark, sf, lo, hi, out[1]
+        ),
+        lambda initial, out: similarity.sq_code_array(initial, out[1]),
+    ),
+    "bq2": (
+        similarity.bq2_upsert,
+        lambda spark, sf, lo, hi, out: ingest.stream_ingest_bq2_codes(
+            spark, sf, lo, hi, out[1]
+        ),
+        lambda initial, out: similarity.bq2_code_array(initial, out[1]),
+    ),
+}
 
+
+def _check_streaming_equals_batch_upsert(spark, sf_dir, name):
+    """The streaming micro-batch ingest (readStream → foreachBatch →
+    append) must produce an index artifact ROW-IDENTICAL to the batch
+    upsert under the same frozen quantizer state, for every codec
+    (IVF-PQ round 6, SQ8 round 8, BQ2 round 9) — batch boundaries only
+    partition the work (per-row assign/encode is deterministic), so the
+    continuous-ingest path inherits the batch path's oracle."""
+    from toy_vector_db_spark import registry as R
+
+    upsert, drain, existing = _STREAMS[name]
     base, _qs = R._split(spark, sf_dir)
     n = R._emb_count(spark, sf_dir)
     cut = split_count(n, R.SPLIT_RATIO)
     init_cut = split_count(cut, R.UPSERT_RATIO)
     initial = base.where(F.col("vec_id") < init_cut)
     batch = base.where(F.col("vec_id") >= init_cut)
-    cc_batch, cents, books = similarity.ivfpq_upsert(initial, batch)
-    streamed = ingest.stream_ingest_codes(
-        spark, sf_dir, init_cut, cut, cents, books
-    )
-    cc_stream = similarity.cached_codes_cells(initial).unionByName(
+    out = upsert(initial, batch)
+    streamed = drain(spark, sf_dir, init_cut, cut, out)
+    cc_batch = out[0]
+    cc_stream = existing(initial, out).unionByName(
         streamed.select(*cc_batch.columns)
     )
     assert cc_stream.exceptAll(cc_batch).count() == 0
     assert cc_batch.exceptAll(cc_stream).count() == 0
 
 
-def test_streaming_sq_ingest_equals_batch_upsert(spark, sf_dir):
-    """The SQ8 streaming twin (round 8): draining the arriving slice
-    through readStream → foreachBatch under the frozen bounds must
-    produce a code set ROW-IDENTICAL to the batch sq_upsert — per-row
-    encode means batch boundaries only partition the work, so the
-    continuous path inherits sq_upsert_search's oracle."""
-    from toy_vector_db_spark import registry as R
-    from toy_vector_db_spark.streaming import ingest
+def test_streaming_ingest_equals_batch_upsert(spark, sf_dir):
+    _check_streaming_equals_batch_upsert(spark, sf_dir, "ivfpq")
 
-    base, _qs = R._split(spark, sf_dir)
-    n = R._emb_count(spark, sf_dir)
-    cut = split_count(n, R.SPLIT_RATIO)
-    init_cut = split_count(cut, R.UPSERT_RATIO)
-    initial = base.where(F.col("vec_id") < init_cut)
-    batch = base.where(F.col("vec_id") >= init_cut)
-    codes_batch, bounds = similarity.sq_upsert(initial, batch)
-    streamed = ingest.stream_ingest_sq_codes(
-        spark, sf_dir, init_cut, cut, bounds
-    )
-    codes_stream = similarity.sq_code_array(initial, bounds).unionByName(
-        streamed.select(*codes_batch.columns)
-    )
-    assert codes_stream.exceptAll(codes_batch).count() == 0
-    assert codes_batch.exceptAll(codes_stream).count() == 0
+
+def test_streaming_sq_ingest_equals_batch_upsert(spark, sf_dir):
+    _check_streaming_equals_batch_upsert(spark, sf_dir, "sq")
+
+
+def test_streaming_bq2_ingest_equals_batch_upsert(spark, sf_dir):
+    _check_streaming_equals_batch_upsert(spark, sf_dir, "bq2")
 
 
 def test_adc_lut_kernel_equals_fold_form(spark, embeddings):
@@ -1006,40 +1092,6 @@ def test_sq_filtered_predicate_and_recall(spark, embeddings):
     assert rec >= (0.95 if small else 0.90), f"filtered SQ recall = {rec}"
 
 
-def test_sq_upsert_equals_frozen_rebuild(spark, embeddings):
-    """SQ lifecycle (round 8): frozen-bounds append must be ROW-IDENTICAL
-    to encoding the full corpus under the same frozen bounds — the
-    per-row-expression argument that makes sq_upsert_search's oracle
-    (min/max scan bounded to the initial slice) valid. Also pins the
-    saturation contract: batch values outside the frozen range clamp to
-    0/255, never error or overflow the byte range."""
-    cut = split_count(embeddings.count(), 0.95)
-    base = embeddings.where(F.col("vec_id") < cut).select(
-        "vec_id", "embedding"
-    )
-    init_cut = split_count(cut, 0.75)
-    initial = base.where(F.col("vec_id") < init_cut)
-    batch = base.where(F.col("vec_id") >= init_cut)
-    codes, bounds = similarity.sq_upsert(initial, batch)
-    rebuild = similarity.sq_code_array(base, bounds)
-    got = sorted(
-        (r["vec_id"], list(r["codes"])) for r in codes.collect()
-    )
-    want = sorted(
-        (r["vec_id"], list(r["codes"])) for r in rebuild.collect()
-    )
-    assert got == want
-    assert all(0 <= c <= 255 for _, cs in got for c in cs)
-    # the frozen bounds really are the initial slice's, not the union's:
-    # at least one batch dimension must saturate or the test is vacuous
-    # on a fixture where the batch extends the range
-    full_bounds = similarity.sq_bounds(base).first()
-    init_bounds = bounds.first()
-    assert list(init_bounds["mins"]) != list(full_bounds["mins"]) or list(
-        init_bounds["maxs"]
-    ) != list(full_bounds["maxs"])
-
-
 def test_sq_delete_excludes_tombstones_and_equals_compaction(
     spark, embeddings
 ):
@@ -1116,35 +1168,6 @@ def test_ivfsq_recall(spark, embeddings):
     )
     small = base.count() <= 1000
     assert rec >= (0.75 if small else 0.70), f"IVF-SQ recall@10 = {rec}"
-
-
-def test_ivfsq_upsert_equals_frozen_rebuild(spark, embeddings):
-    """IVF-SQ lifecycle (round 8): frozen-quantizer append (coarse
-    centroids AND bounds frozen on the initial slice) must be
-    ROW-IDENTICAL to assigning + encoding the full corpus under the
-    same frozen pair — the per-row argument that validates the upsert
-    oracle's doubly-bounded training."""
-    cut = split_count(embeddings.count(), 0.95)
-    base = embeddings.where(F.col("vec_id") < cut).select(
-        "vec_id", "embedding"
-    )
-    init_cut = split_count(cut, 0.75)
-    initial = base.where(F.col("vec_id") < init_cut)
-    batch = base.where(F.col("vec_id") >= init_cut)
-    sq_cells, cents, bounds = similarity.ivfsq_upsert(initial, batch)
-    rebuild = similarity.sq_code_array(base, bounds).join(
-        similarity.ivf_assign(base, cents).select("vec_id", "centroid_id"),
-        "vec_id",
-    )
-    got = sorted(
-        (r["vec_id"], r["centroid_id"], list(r["codes"]))
-        for r in sq_cells.collect()
-    )
-    want = sorted(
-        (r["vec_id"], r["centroid_id"], list(r["codes"]))
-        for r in rebuild.collect()
-    )
-    assert got == want
 
 
 def test_ivfsq_delete_excludes_tombstones_and_equals_compaction(
@@ -1408,6 +1431,13 @@ def _adc_splits(embeddings):
     return base, qs
 
 
+def _pq_pairs(codes, qs, books, **routing):
+    """(query_id, vec_id, ad2) PQ-ADC pairs: the pair kernel with the
+    codec scorer, as the flat and IVF PQ candidate steps run it."""
+    scorer = similarity._pq_scorer(books, "query_id", "query_vec")
+    return knn._pair_kernel(codes, qs, scorer, **routing)
+
+
 def _window_topr(cand, score_col, r):
     from pyspark.sql import Window
 
@@ -1426,7 +1456,8 @@ def _window_topr(cand, score_col, r):
 
 
 def test_pq_adc_emit_topk_bounded_emission_is_lossless(spark, embeddings):
-    """Round 11 (verdict r10 item 1): _pq_pair_adc(emit_topk=R) keeps
+    """Round 11 (verdict r10 item 1): the PQ pair kernel with
+    emit_topk=R keeps
     each query's per-batch top-R under the window's exact
     (ad2 asc, id asc) order — a provable superset of the global top-R
     with identical ad2 doubles. Stress MULTI-BATCH (base repartitioned
@@ -1436,8 +1467,8 @@ def test_pq_adc_emit_topk_bounded_emission_is_lossless(spark, embeddings):
     books = similarity.trained_pq_codebooks(base)
     codes = similarity.pq_codes(base).repartition(16)
     r = 12
-    full = similarity._pq_pair_adc(codes, qs, books)
-    capped = similarity._pq_pair_adc(codes, qs, books, emit_topk=r)
+    full = _pq_pairs(codes, qs, books)
+    capped = _pq_pairs(codes, qs, books, emit_topk=r)
     assert _window_topr(capped, "ad2", r) == _window_topr(full, "ad2", r)
     n_q = qs.count()
     emitted = capped.count()
@@ -1462,36 +1493,28 @@ def test_pq_adc_emit_topk_routed_matches_unrouted_window(spark, embeddings):
     probed = sorted({c for cs in routing.values() for c in cs})
     src = cc.where(F.col("centroid_id").isin(probed)).repartition(16)
     r = 12
-    capped = similarity._pq_pair_adc(
-        src, qs, books, cells_by_query=routing, emit_topk=r
-    )
-    full = similarity._pq_pair_adc(src, qs, books, cells_by_query=routing)
+    capped = _pq_pairs(src, qs, books, cells_by_query=routing, emit_topk=r)
+    full = _pq_pairs(src, qs, books, cells_by_query=routing)
     assert _window_topr(capped, "ad2", r) == _window_topr(full, "ad2", r)
     assert capped.count() <= full.count()
 
 
 def test_sq_adc_emit_topk_bounded_emission_is_lossless(spark, embeddings):
-    """Round 11 (verdict r10 item 1): _sq_pair_adc(emit_topk=R), plain
+    """Round 11 (verdict r10 item 1): the SQ pair kernel with
+    emit_topk=R, plain
     and cell-routed, is lossless under the downstream (ad2, id) window
     and bounded per batch."""
     base, qs = _adc_splits(embeddings)
     bounds = similarity.cached_sq_bounds(base)
     codes = similarity.sq_code_array(base, bounds)
     deq = codes.crossJoin(F.broadcast(bounds)).select(
-        "vec_id",
-        similarity._sq_deq(
-            F.col("codes"), F.col("mins"), F.col("maxs")
-        ).alias("deq"),
+        "vec_id", similarity._sq_deq("codes", "mins", "maxs").alias("deq")
     ).repartition(16)
-    nq = qs.select(
-        "query_id",
-        similarity._normalize(
-            similarity._as_double("query_vec")
-        ).alias("qnv"),
-    )
+    nq = similarity._sq_queries(qs, "query_id", "query_vec")
+    scorer = similarity._sq_scorer()
     r = 12
-    full = similarity._sq_pair_adc(deq, nq)
-    capped = similarity._sq_pair_adc(deq, nq, emit_topk=r)
+    full = knn._pair_kernel(deq, nq, scorer)
+    capped = knn._pair_kernel(deq, nq, scorer, emit_topk=r)
     assert _window_topr(capped, "ad2", r) == _window_topr(full, "ad2", r)
     n_q = qs.count()
     emitted = capped.count()
@@ -1504,9 +1527,7 @@ def test_sq_adc_emit_topk_bounded_emission_is_lossless(spark, embeddings):
     deqc = sq_cells.crossJoin(F.broadcast(bounds)).select(
         "vec_id",
         "centroid_id",
-        similarity._sq_deq(
-            F.col("codes"), F.col("mins"), F.col("maxs")
-        ).alias("deq"),
+        similarity._sq_deq("codes", "mins", "maxs").alias("deq"),
     ).repartition(16)
     probes = similarity._ivf_probes(qs, cents, similarity.N_PROBE)
     routing: dict[int, list] = {}
@@ -1514,10 +1535,10 @@ def test_sq_adc_emit_topk_bounded_emission_is_lossless(spark, embeddings):
         routing.setdefault(int(row["query_id"]), []).append(
             int(row["centroid_id"])
         )
-    capped_r = similarity._sq_pair_adc(
-        deqc, nq, cells_by_query=routing, emit_topk=r
+    capped_r = knn._pair_kernel(
+        deqc, nq, scorer, cells_by_query=routing, emit_topk=r
     )
-    full_r = similarity._sq_pair_adc(deqc, nq, cells_by_query=routing)
+    full_r = knn._pair_kernel(deqc, nq, scorer, cells_by_query=routing)
     assert _window_topr(capped_r, "ad2", r) == _window_topr(full_r, "ad2", r)
     assert capped_r.count() <= full_r.count()
 
@@ -1561,10 +1582,10 @@ def test_adc_emission_is_per_partition_exact(spark, embeddings):
     n_rows = codes.count()
     n_q = qs.count()
     r = 7
-    capped = similarity._pq_pair_adc(codes, qs, books, emit_topk=r)
+    capped = _pq_pairs(codes, qs, books, emit_topk=r)
     # 2 partitions, each larger than r → exactly 2·r rows per query
     assert capped.count() == 2 * r * n_q
     # and still lossless under the downstream window
-    full = similarity._pq_pair_adc(codes, qs, books)
+    full = _pq_pairs(codes, qs, books)
     assert _window_topr(capped, "ad2", r) == _window_topr(full, "ad2", r)
     assert n_rows > 2 * r  # the bound actually binds

@@ -40,17 +40,14 @@ def _cache_dicts() -> list[dict]:
         similarity._SAMPLE_CACHE,
         similarity._TRAINED_CACHE,
         similarity._ASSIGN_CACHE,
-        similarity._CELLS_CACHE,
         similarity._WRITTEN_INDEX_CACHE,
         similarity._COUNT_CACHE,
         similarity._CELL_VECTORS_CACHE,
         similarity._PQ_BOOKS_CACHE,
-        similarity._CODES_CACHE,
+        similarity._CODEC_CACHE,
         similarity._LABEL_HIST_CACHE,
         similarity._PROBE_ROUTING_CACHE,
         similarity._PQ_LUT_CACHE,
-        similarity._SQ_BOUNDS_CACHE,
-        similarity._BQ2_BOUNDS_CACHE,
         dedup._PAIRS_CACHE,
         dedup._SEM_BCAST_CACHE,
         hnsw._INDEX_CACHE,

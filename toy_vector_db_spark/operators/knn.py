@@ -730,8 +730,8 @@ def pair_scores(
 # R·|queries| ≈ 19k pairs, the extra Python hop breaks the whole-stage
 # pipeline into the top-k window for no vectorization payoff. The kernel
 # path is therefore reserved for |base|×|queries| products (pair_scores),
-# where it wins 10-25×; the rerank legs keep the expression form
-# (similarity.knn_pq_rerank / knn_ivfpq).
+# where it wins 10-25×; the rerank leg keeps the expression form
+# (similarity._exact_rerank).
 
 
 def argmin_dist(

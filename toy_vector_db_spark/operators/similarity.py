@@ -118,6 +118,16 @@ KMEANS_ITERS = 3
 TRAIN_SAMPLE = 4096
 
 
+def _base_key(base: DataFrame, *extra) -> tuple:
+    """(appId, plan hash, *extra): the memo key of every per-base session
+    cache in this module."""
+    return (
+        base.sparkSession.sparkContext.applicationId,
+        base.semanticHash(),
+        *extra,
+    )
+
+
 # (appId, base plan hash, id_col, vec_col) → the collected training sample.
 # IVF training and PQ training share the same sample; without the cache
 # each trainer re-ran the scan+orderBy+collect job (~1 s of per-session
@@ -134,12 +144,7 @@ def _train_sample(
     codebook collect the round-2 verdict blessed. At 100 TB everything
     that scales with the corpus (assignment, search, encoding) stays
     distributed; only this fixed-size sample ever reaches the driver."""
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
-    )
+    key = _base_key(base, id_col, vec_col)
     if key not in _SAMPLE_CACHE:
         _SAMPLE_CACHE[key] = [
             (int(r[0]), [float(x) for x in r[1]])
@@ -243,14 +248,7 @@ def cached_trained_centroids(
     vec_col: str = "embedding",
 ) -> DataFrame:
     spark = base.sparkSession
-    key = (
-        spark.sparkContext.applicationId,
-        base.semanticHash(),
-        n,
-        iters,
-        id_col,
-        vec_col,
-    )
+    key = _base_key(base, n, iters, id_col, vec_col)
     if key not in _TRAINED_CACHE:
         rows = (
             trained_centroids(base, n, iters, id_col, vec_col)
@@ -309,7 +307,7 @@ def ivf_assign(base: DataFrame, cents: DataFrame,
 # artifact — at 100 TB it is the partition-key column WRITTEN with the
 # codes at build time — so recomputing the base×C argmin on every search
 # would charge a build cost to the query path. Same session-cache pattern
-# as _CODES_CACHE.
+# as _CODEC_CACHE.
 _ASSIGN_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -318,12 +316,7 @@ def cached_trained_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
-    )
+    key = _base_key(base, id_col, vec_col)
     if key not in _ASSIGN_CACHE:
         cents = cached_trained_centroids(base, id_col=id_col, vec_col=vec_col)
         a = ivf_assign(base, cents, id_col, vec_col).select(
@@ -359,12 +352,7 @@ def written_codes_cells(
     from toy_vector_db_spark.sources.fixtures import FIXTURE_DIR
 
     spark = base.sparkSession
-    key = (
-        spark.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
-    )
+    key = _base_key(base, id_col, vec_col)
     if key not in _WRITTEN_INDEX_CACHE:
         # path derives from the CONTENT key (plan hash + column names,
         # NOT the app id): the codes are deterministic for a given plan,
@@ -418,11 +406,7 @@ def _rerank_budget(base: DataFrame, k: int, id_col: str = "vec_id") -> int:
     in both engines; the oracle computes the identical budget via a
     count(*) scalar subquery with LEAST/GREATEST
     (oracles_similarity.rerank_budget_sql)."""
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-    )
+    key = _base_key(base, id_col)
     if key not in _COUNT_CACHE:
         _COUNT_CACHE[key] = base.count()
     n = _COUNT_CACHE[key]
@@ -529,13 +513,7 @@ def cached_label_cell_hist(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        labels.semanticHash(),
-        id_col,
-        vec_col,
-    )
+    key = _base_key(base, labels.semanticHash(), id_col, vec_col)
     if key not in _LABEL_HIST_CACHE:
         h = label_cell_hist(base, labels, id_col, vec_col).persist()
         h.count()
@@ -645,12 +623,7 @@ def cached_cell_vectors(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
-    )
+    key = _base_key(base, id_col, vec_col)
     if key not in _CELL_VECTORS_CACHE:
         # build the serving table in ONE materializing job (round 15):
         # the previous shape first persisted+counted the bare assignment
@@ -673,12 +646,7 @@ def cached_cell_vectors(
         )
         cv.count()
         _CELL_VECTORS_CACHE[key] = cv
-        akey = (
-            base.sparkSession.sparkContext.applicationId,
-            base.semanticHash(),
-            id_col,
-            vec_col,
-        )
+        akey = _base_key(base, id_col, vec_col)
         if akey not in _ASSIGN_CACHE:
             _ASSIGN_CACHE[akey] = cv.select(id_col, "centroid_id")
     return _CELL_VECTORS_CACHE[key]
@@ -752,9 +720,9 @@ def knn_ivf(
             int(r[0])
             for r in probes.select("centroid_id").distinct().collect()
         )
-        joined = cell_vectors.where(
-            F.col("centroid_id").isin(probed_cells)
-        ).join(probes, "centroid_id")
+        joined = cell_vectors.where(_in_cells(probed_cells)).join(
+            probes, "centroid_id"
+        )
         sim = F.greatest(
             F.lit(0.0),
             V.dot(vec_col, query_vec_col)
@@ -770,7 +738,7 @@ def knn_ivf(
         )
 
         scored = KNN.pair_scores(
-            cell_vectors.where(F.col("centroid_id").isin(probed_cells)),
+            cell_vectors.where(_in_cells(probed_cells)),
             queries.select(query_id_col, query_vec_col),
             id_col, vec_col, query_id_col, query_vec_col,
             cells_by_query=cells_by_query,
@@ -804,33 +772,19 @@ PQ_M = 8  # subspaces (round 6: 4 → 8, see the knob comment at the top)
 PQ_K = 256
 
 
-def _normalize(v) -> "F.Column":
-    """v / ‖v‖ as an expression — after this, squared euclidean is
+def _normalize(v: str) -> "F.Column":
+    """v / ‖v‖ as an expression over the SQL fragment ``v`` (e.g.
+    ``_as_double_sql(col)``) — after this, squared euclidean is
     2 − 2·cos: rank-equivalent to cosine distance, which is what makes
     euclidean PQ-ADC a valid index for the engine's cosine metric.
 
     The magnitude rides in via array_repeat, which evaluates its argument
     ONCE per row — a `transform(v, x / mag)` lambda would re-evaluate the
     whole magnitude fold for every element (interpreted HOFs get no
-    subexpression elimination).
-
-    str args (a SQL fragment, e.g. ``_as_double_sql(col)``) take the
-    memoized one-py4j-call F.expr path (round 14 — the three Python
-    lambdas here cost ~60 py4j round-trips per serving call); the SQL
-    text mirrors the Column form term by term, results bit-identical
-    (tests pin both forms)."""
-    if isinstance(v, str):
-        return _cached_expr(("norm", v), _normalize_sql(v))
-    mag = F.sqrt(
-        F.aggregate(
-            F.zip_with(v, v, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + F.coalesce(x, F.lit(0.0)),
-        )
-    )
-    return F.zip_with(
-        v, F.array_repeat(mag, F.size(v)), lambda x, m: x / m
-    )
+    subexpression elimination). One memoized F.expr parse per fragment
+    (round 14: the Python-lambda form cost ~60 py4j round-trips per
+    serving call)."""
+    return _cached_expr(("norm", v), _normalize_sql(v))
 
 
 def _normalize_sql(v: str) -> str:
@@ -842,9 +796,12 @@ def _normalize_sql(v: str) -> str:
 
 
 def _as_double_sql(vec_col: str) -> str:
-    """SQL-fragment twin of _as_double for the memoized F.expr paths.
-    The caller-supplied name is backtick-quoted when it is not a plain
-    identifier (advice r14), matching F.col's binding."""
+    """array<float> → array<double> BEFORE any arithmetic — the SQ
+    family's cross-engine bit-parity hinges on every product being a
+    double×double (DuckDB's ::DOUBLE[] cast happens first; a float32
+    product differs in the last bits). The caller-supplied name is
+    backtick-quoted when it is not a plain identifier (advice r14),
+    matching F.col's binding."""
     return f"CAST({_sql_ident(vec_col)} AS ARRAY<DOUBLE>)"
 
 
@@ -878,7 +835,6 @@ def _sq_dist(a, b) -> "F.Column":
     )
 
 
-# (appId, plan hash) → persisted normalized-vector frame. Normalization is
 # (appId, plan hash, cols) → trained per-subspace PQ codebooks
 _PQ_BOOKS_CACHE: dict[tuple, list] = {}
 
@@ -902,12 +858,7 @@ def trained_pq_codebooks(
     means fold in id order, argmin ties to the smallest codeword id —
     every op bit-identical to the old Catalyst fold form and to the
     DuckDB kmeans_chain oracle (asserted in tests at every SF)."""
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
-    )
+    key = _base_key(base, id_col, vec_col)
     if key in _PQ_BOOKS_CACHE:
         return _PQ_BOOKS_CACHE[key]
     rows = _train_sample(base, id_col, vec_col)
@@ -953,7 +904,24 @@ def trained_pq_codebooks(
     return books
 
 
-_CODES_CACHE: dict[tuple, DataFrame] = {}
+# (artifact tag, appId, base plan hash, id_col, vec_col) → a persisted
+# per-base codec artifact: the flat PQ codes, a fine quantizer's state
+# row (SQ / BQ2 bounds) or an IVF family's cell-keyed codes. One memo for
+# every codec, registered in caches._cache_dicts.
+_CODEC_CACHE: dict[tuple, DataFrame] = {}
+
+
+def _persisted(
+    tag: str, build: Callable, base: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """``build(base, id_col, vec_col)`` persisted and materialized NOW
+    (the caller is the build step), once per session per base plan."""
+    key = (tag, *_base_key(base, id_col, vec_col))
+    if key not in _CODEC_CACHE:
+        df = build(base, id_col, vec_col).persist()
+        df.count()
+        _CODEC_CACHE[key] = df
+    return _CODEC_CACHE[key]
 
 
 def pq_codes(
@@ -969,19 +937,22 @@ def pq_codes(
     the fold-form expression the DuckDB oracle evaluates. The codes
     frame persists per session: it IS the index artifact (a parquet
     index table at 100 TB), and every ADC search scans it."""
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
+    return _persisted(
+        "pq_codes",
+        lambda b, i, v: encode_codes(b, trained_pq_codebooks(b, i, v), i, v),
+        base, id_col, vec_col,
     )
-    if key in _CODES_CACHE:
-        return _CODES_CACHE[key]
-    books = trained_pq_codebooks(base, id_col, vec_col)
-    codes = encode_codes(base, books, id_col, vec_col).persist()
-    codes.count()
-    _CODES_CACHE[key] = codes
-    return codes
+
+
+def _pq_encode(
+    base: DataFrame, books: list, id_col: str, vec_col: str
+) -> DataFrame:
+    """The PQ codes of ``base`` under ``books``: the persisted
+    ``pq_codes`` artifact when ``books`` are base's own session-trained
+    codebooks, a fresh encode otherwise (a batch under frozen books)."""
+    if books is _PQ_BOOKS_CACHE.get(_base_key(base, id_col, vec_col)):
+        return pq_codes(base, id_col, vec_col)
+    return encode_codes(base, books, id_col, vec_col)
 
 
 def _pq_subspace_d2(X: np.ndarray, b_arr: np.ndarray) -> list:
@@ -1258,25 +1229,6 @@ def _pq_scorer(books: list, query_id_col: str, query_vec_col: str):
     )
 
 
-def _pq_pair_adc(
-    codes: DataFrame,
-    queries: DataFrame,
-    books: list,
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    **routing,
-) -> DataFrame:
-    """(query_id, vec_id, ad2) PQ-ADC pairs: ``knn._pair_kernel`` with
-    the ``_pq_scorer``; ``routing`` takes the kernel's cells_by_query /
-    cell_col / emit_topk / label_col / qlabel_col. Callers guard with
-    QUERY_BATCH_MAX (the oversized plan is the broadcast-LUT join)."""
-    return KNN._pair_kernel(
-        codes, queries, _pq_scorer(books, query_id_col, query_vec_col),
-        id_col, query_id_col, **routing,
-    )
-
-
 def _exact_rerank(
     pruned: DataFrame,
     base: DataFrame,
@@ -1289,7 +1241,7 @@ def _exact_rerank(
 ) -> DataFrame:
     """The shared exact-cosine rescore + top-k over a BOUNDED
     (query_id, id) candidate list — the final leg of every
-    compressed-index pipeline here (PQ rerank, IVF-PQ, BQ rerank):
+    compressed-index search (``_codec_search``, flat and IVF alike):
     id-join point-fetch of the full-precision vectors, broadcast query
     join, inline clamped-cosine fold, per-query top-k window.
     Deliberately the EXPRESSION form, not the Arrow kernel: with only
@@ -1337,26 +1289,16 @@ def knn_pq_adc(
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: approx dist²(q, v) =
     Σ_m dist²(sub_m(q), codeword[code_m(v)]). The base side is only its
-    codes (M bytes/vector — the compressed corpus is what scans at 100 TB);
-    codewords are literals, queries broadcast, one shuffle for the
-    per-query top-k. Recall is bounded by quantization error — the trade
-    PQ makes for a 64× smaller scan."""
+    codes (M bytes/vector — the compressed corpus is what scans at 100 TB;
+    the persisted ``pq_codes`` artifact). This is the flat PQ candidate
+    step (``_candidates`` over ``_PQ``, top ``k`` per query), then its
+    rounded ``approx_dist2`` window. Recall is bounded by quantization
+    error — the trade PQ makes for a 64× smaller scan."""
     books = trained_pq_codebooks(base, id_col, vec_col)
-    codes = pq_codes(base, id_col, vec_col)
-    if KNN.query_batch_count(queries) <= KNN.QUERY_BATCH_MAX:
-        # base-side kernel, queries + LUTs in the closure (round 10):
-        # no query-side Python stage, no LUT broadcast — bit-identical.
-        # emit_topk: the next step is the per-query (ad2, id) top-k
-        # window → per-PARTITION bounded emission via knn._TopRAcc
-        cand = _pq_pair_adc(
-            codes, queries, books, id_col, query_id_col, query_vec_col,
-            emit_topk=k,
-        )
-    else:
-        q_n = _adc_lut_frame(queries, books, query_id_col, query_vec_col)
-        cand = codes.crossJoin(F.broadcast(q_n)).withColumn(
-            "ad2", _adc_expr()
-        )
+    cand = _candidates(
+        _PQ, pq_codes(base, id_col, vec_col), books, queries, k,
+        None, None, None, id_col, query_id_col, query_vec_col,
+    )
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("ad2").asc(), F.col(id_col).asc()
     )
@@ -1390,14 +1332,12 @@ def knn_pq_rerank(
     fixed the decay structurally with PQ_M=8 × PQ_K=64 codebooks plus the
     fraction-floored R — measured 0.98 (sf0.001) / 0.91 (sf0.1), gated in
     tests at both scales; round 8 raised PQ_K to 256 (0.966 at FIXED
-    R=160 — the constant-cost configuration)."""
-    if rerank_r is None:
-        rerank_r = _rerank_budget(base, k, id_col)
-    cand = knn_pq_adc(
-        base, queries, rerank_r, id_col, vec_col, query_id_col, query_vec_col
-    ).select(query_id_col, id_col)
-    return _exact_rerank(
-        cand, base, queries, k, id_col, vec_col, query_id_col, query_vec_col
+    R=160 — the constant-cost configuration). ``_codec_search`` over
+    ``_PQ`` with no probe: the knn_pq_adc candidate step at top R, then
+    ``_exact_rerank``."""
+    return _codec_search(
+        _PQ, base, queries, k, rerank_r, None, None, None, None,
+        id_col, vec_col, query_id_col, query_vec_col,
     )
 
 
@@ -1426,16 +1366,8 @@ def ivfpq_upsert(
     Returns ``(codes_cells, cents, books)`` — the consistent triple to
     hand to ``knn_ivfpq``. The existing artifact is the session-cached
     build over ``initial`` (cached_codes_cells — what a prior build
-    wrote); only ``batch`` is encoded fresh."""
-    cents = cached_trained_centroids(initial, id_col=id_col, vec_col=vec_col)
-    books = trained_pq_codebooks(initial, id_col, vec_col)
-    existing = cached_codes_cells(initial, id_col, vec_col)
-    new_codes = encode_codes(batch, books, id_col, vec_col)
-    new_assign = ivf_assign(batch, cents, id_col, vec_col).select(
-        id_col, "centroid_id"
-    )
-    new_cells = new_codes.join(new_assign, id_col).select(*existing.columns)
-    return existing.unionByName(new_cells), cents, books
+    wrote); only ``batch`` is encoded fresh (``_upsert``)."""
+    return _upsert(_PQ, initial, batch, True, id_col, vec_col)
 
 
 # -- Binary quantization (BQ) ------------------------------------------------
@@ -1443,23 +1375,17 @@ def ivfpq_upsert(
 BQ_HALF = 32  # dims packed per 64-bit half (2 halves cover the 64 dims)
 
 
-def _bq_pack(v, start: int) -> "F.Column":
-    """Sign bits of ``BQ_HALF`` consecutive dims packed into one BIGINT
-    (MSB = first dim): a left fold acc·2 + [x > 0]. Two halves per
-    64-dim vector keep every intermediate < 2³², far from BIGINT
-    overflow (DuckDB errors on overflow rather than wrapping, so a
+def _bq_pack(v: str, start: int) -> "F.Column":
+    """Sign bits of ``BQ_HALF`` consecutive dims of column ``v`` packed
+    into one BIGINT (MSB = first dim): a left fold acc·2 + [x > 0]. Two
+    halves per 64-dim vector keep every intermediate < 2³², far from
+    BIGINT overflow (DuckDB errors on overflow rather than wrapping, so a
     single 64-bit pack would be engine-divergent at bit 63)."""
-    if isinstance(v, str):
-        return _cached_expr(
-            ("bqpack", v, start),
-            f"aggregate(slice({_sql_ident(v)}, {start}, {BQ_HALF}), "
-            "CAST(0 AS BIGINT), (acc, x) -> acc * 2 + "
-            "(CASE WHEN x > 0 THEN 1 ELSE 0 END))",
-        )
-    return F.aggregate(
-        F.slice(v, start, BQ_HALF),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc * 2 + F.when(x > 0, 1).otherwise(0),
+    return _cached_expr(
+        ("bqpack", v, start),
+        f"aggregate(slice({_sql_ident(v)}, {start}, {BQ_HALF}), "
+        "CAST(0 AS BIGINT), (acc, x) -> acc * 2 + "
+        "(CASE WHEN x > 0 THEN 1 ELSE 0 END))",
     )
 
 
@@ -1514,67 +1440,17 @@ def knn_bq_rerank(
     budget lands on qualifying rows. BQ has no cells, so no probe
     widening is needed — the full-corpus Hamming scan simply re-targets
     its R budget; this makes BQ the structurally simplest filtered
-    family (the 8 B/vector scan cost is unchanged by the filter)."""
-    if (labels is None) != (query_labels is None):
-        raise ValueError(
-            "knn_bq_rerank: labels and query_labels must be passed "
-            "together"
-        )
-    if rerank_r is None:
-        rerank_r = max(
-            BQ_RERANK_MULT * k, _rerank_budget(base, k, id_col)
-        )
-    codes = bq_codes(base, id_col, vec_col)
-    qcodes = queries.select(
-        query_id_col,
-        _bq_pack(query_vec_col, 1).alias("q_hi"),
-        _bq_pack(query_vec_col, BQ_HALF + 1).alias("q_lo"),
-    )
-    ham = F.expr("bit_count(b_hi ^ q_hi) + bit_count(b_lo ^ q_lo)")
-    if labels is not None:
-        # distributed IDSelector (round 13, verdict r12 item 1): label
-        # on the codes side, qlabel on the query-codes side, so the
-        # equality becomes the broadcast pair join's own key — the
-        # round-12 form joined labels onto the PAIR frame, a
-        # |corpus|×|queries|-row shuffle on a selective filter
-        codes, qcodes, label_name, qlabel_name = _attach_labels(
-            codes, labels, id_col, qcodes, query_labels, query_id_col
-        )
-        cand = (
-            codes.crossJoin(F.broadcast(qcodes))
-            .where(F.col(label_name) == F.col(qlabel_name))
-            .drop(label_name, qlabel_name)
-            .withColumn("h", ham)
-        )
-    else:
-        cand = codes.crossJoin(F.broadcast(qcodes)).withColumn("h", ham)
-    wr = Window.partitionBy(query_id_col).orderBy(
-        F.col("h").asc(), F.col(id_col).asc()
-    )
-    pruned = (
-        cand.withColumn("rr", F.row_number().over(wr))
-        .where(F.col("rr") <= rerank_r)
-        .select(query_id_col, id_col)
-    )
-    return _exact_rerank(
-        pruned, base, queries, k, id_col, vec_col, query_id_col, query_vec_col
+    family (the 8 B/vector scan cost is unchanged by the filter).
+    ``_codec_search`` over ``_BQ`` with no probe; the Hamming score is a
+    JVM intrinsic, so the query codes broadcast at every batch size."""
+    return _codec_search(
+        _BQ, base, queries, k, rerank_r, None, None, labels, query_labels,
+        id_col, vec_col, query_id_col, query_vec_col,
     )
 
 
 SQ_DIM = 64  # fixture embedding dim (constant across SFs, see TESTDATA.md)
 SQ_LEVELS = 255  # 8-bit codes: quantized values land in 0..255
-
-
-def _as_double(vec_col: str) -> "F.Column":
-    """array<float> → array<double> BEFORE any arithmetic — the SQ
-    family's cross-engine bit-parity hinges on every product being a
-    double×double (DuckDB's ::DOUBLE[] cast happens first; a float32
-    product differs in the last bits)."""
-    return F.col(vec_col).cast("array<double>")
-
-
-# (appId, plan hash, cols) → persisted one-row per-dim bounds frame
-_SQ_BOUNDS_CACHE: dict[tuple, DataFrame] = {}
 
 
 def sq_bounds(
@@ -1622,19 +1498,8 @@ def cached_sq_bounds(
 ) -> DataFrame:
     """Session-cached persisted bounds row (the trained_centroids idiom):
     the one-pass min/max scan runs once per distinct base plan per
-    session; every serving call reuses the persisted one-row frame.
-    Registered in caches.py for bench snapshot/rollback."""
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
-    )
-    if key not in _SQ_BOUNDS_CACHE:
-        b = sq_bounds(base, id_col, vec_col).persist()
-        b.count()  # materialize NOW — the caller is the build step
-        _SQ_BOUNDS_CACHE[key] = b
-    return _SQ_BOUNDS_CACHE[key]
+    session; every serving call reuses the persisted one-row frame."""
+    return _persisted("sq_bounds", sq_bounds, base, id_col, vec_col)
 
 
 def _sq_code_expr(x, mn, mx):
@@ -1718,30 +1583,17 @@ def sq_codes(
     )
 
 
-def _sq_deq(codes, mins, maxs):
+def _sq_deq(codes: str, mins: str, maxs: str) -> "F.Column":
     """Dequantized reconstruction x̂ = mn + (code + 0.5)·(mx − mn)/255 —
     the bin midpoint, the standard SQ decode (half-bin centering halves
-    the worst-case reconstruction error vs the left edge). str args
-    (plain column names — arrays_zip names its struct fields after
-    them) take the memoized F.expr path."""
-    if (
-        isinstance(codes, str)
-        and isinstance(mins, str)
-        and isinstance(maxs, str)
-    ):
-        return _cached_expr(
-            ("sqdeq", codes, mins, maxs),
-            f"transform(arrays_zip({codes}, {mins}, {maxs}), "
-            f"r -> r.{mins} + (CAST(r.{codes} AS DOUBLE) + 0.5D) "
-            f"* (r.{maxs} - r.{mins}) / {float(SQ_LEVELS)!r}D)",
-        )
-    z = F.arrays_zip(codes, mins, maxs)
-    return F.transform(
-        z,
-        lambda r: r["mins"]
-        + (r["codes"].cast("double") + F.lit(0.5))
-        * (r["maxs"] - r["mins"])
-        / F.lit(float(SQ_LEVELS)),
+    the worst-case reconstruction error vs the left edge). Args are plain
+    column names (arrays_zip names its struct fields after them); one
+    memoized F.expr parse."""
+    return _cached_expr(
+        ("sqdeq", codes, mins, maxs),
+        f"transform(arrays_zip({codes}, {mins}, {maxs}), "
+        f"r -> r.{mins} + (CAST(r.{codes} AS DOUBLE) + 0.5D) "
+        f"* (r.{maxs} - r.{mins}) / {float(SQ_LEVELS)!r}D)",
     )
 
 
@@ -1770,56 +1622,6 @@ def _sq_scorer():
         return qids, score
 
     return KNN._PairScorer("sq", ("deq",), "qnv", ("ad2",), prep)
-
-
-def _sq_pair_adc(
-    deq: DataFrame,
-    nq: DataFrame,
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    cells_by_query: dict[int, list] | None = None,
-    cell_col: str = "centroid_id",
-    emit_topk: int | None = None,
-    label_col: str | None = None,
-    qlabel_col: str | None = None,
-) -> DataFrame:
-    """(query_id, vec_id, ad2) for every (query × dequantized-base) pair:
-    ``knn._pair_kernel`` with the ``_sq_scorer`` (routing, labels and
-    ``emit_topk`` as there).
-
-    GUARD: above QUERY_BATCH_MAX query rows this falls back to the
-    pure-Catalyst crossJoin form (no driver collect, no closure
-    shipping) — bit-identical values, different physical plan; the
-    label equality references both product sides, so Catalyst folds it
-    into the pair-producing join. With ``cells_by_query`` the caller
-    already collected per-query routing, so an oversized batch is the
-    CALLER's bug."""
-    KNN._check_label_pair(label_col, qlabel_col)
-    if KNN.query_batch_count(nq) > KNN.QUERY_BATCH_MAX:
-        if cells_by_query is not None:
-            raise ValueError(
-                "cells_by_query routing requires a bounded query "
-                f"batch (> {KNN.QUERY_BATCH_MAX} rows); use the join "
-                "form"
-            )
-        out = deq.crossJoin(nq)
-        if label_col is not None:
-            out = out.where(F.col(label_col) == F.col(qlabel_col))
-        return out.select(
-            # cast to the kernel's Arrow schema so the two guard paths
-            # return identical dtypes (the pair_scores fallback contract)
-            F.col(query_id_col).cast("long").alias(query_id_col),
-            F.col(id_col).cast("long").alias(id_col),
-            _sq_dist("deq", "qnv").alias("ad2"),
-        )
-    return KNN._pair_kernel(
-        deq, nq, _sq_scorer(), id_col, query_id_col,
-        cells_by_query=cells_by_query,
-        cell_col=cell_col,
-        emit_topk=emit_topk,
-        label_col=label_col,
-        qlabel_col=qlabel_col,
-    )
 
 
 def knn_sq_rerank(
@@ -1867,60 +1669,11 @@ def knn_sq_rerank(
     Fully deterministic → DuckDB-oracle-able end to end: bounds are
     exact selections, codes are clamped IEEE-double arithmetic in
     matched op order, and the ADC fold reuses the established
-    _sq_dist ≡ list_sum parity."""
-    if (labels is None) != (query_labels is None):
-        raise ValueError(
-            "knn_sq_rerank: labels and query_labels must be passed "
-            "together"
-        )
-    if codes is not None and bounds is None:
-        raise ValueError(
-            "knn_sq_rerank: injected codes require their matching "
-            "bounds — dequantizing against freshly computed full-base "
-            "bounds would silently mis-decode frozen-bounds artifacts"
-        )
-    if rerank_r is None:
-        rerank_r = _rerank_budget(base, k, id_col)
-    if bounds is None:
-        bounds = cached_sq_bounds(base, id_col, vec_col)
-    if codes is None:
-        codes = sq_code_array(base, bounds, id_col, vec_col)
-    deq = codes.crossJoin(F.broadcast(bounds)).select(
-        id_col,
-        _sq_deq("codes", "mins", "maxs").alias("deq"),
-    )
-    nq = queries.select(
-        query_id_col, _normalize(_as_double_sql(query_vec_col)).alias("qnv")
-    )
-    # distributed IDSelector (round 12 in-kernel, round 13 distributed —
-    # verdict r12 item 1): label attached to the dequantized codes
-    # frame, the query's label riding the normalized query frame — the
-    # kernel folds the equality into each query's row mask on bounded
-    # batches (bounded emission stays legal), and its oversized Catalyst
-    # fallback fuses it into the pair-producing join, so no leg ever
-    # shuffles an unfiltered pair frame at any query count
-    src, q_in, label_name, qlabel_name = deq, nq, None, None
-    if labels is not None:
-        src, q_in, label_name, qlabel_name = _attach_labels(
-            deq, labels, id_col, nq, query_labels, query_id_col
-        )
-    cand = _sq_pair_adc(
-        src, q_in, id_col, query_id_col,
-        label_col=label_name,
-        qlabel_col=qlabel_name,
-        # per-PARTITION bounded emission (knn._TopRAcc) on every path
-        emit_topk=int(rerank_r),
-    )
-    wr = Window.partitionBy(query_id_col).orderBy(
-        F.col("ad2").asc(), F.col(id_col).asc()
-    )
-    pruned = (
-        cand.withColumn("rr", F.row_number().over(wr))
-        .where(F.col("rr") <= rerank_r)
-        .select(query_id_col, id_col)
-    )
-    return _exact_rerank(
-        pruned, base, queries, k, id_col, vec_col, query_id_col, query_vec_col
+    _sq_dist ≡ list_sum parity. ``_codec_search`` over ``_SQ`` with no
+    probe."""
+    return _codec_search(
+        _SQ, base, queries, k, rerank_r, bounds, codes, labels,
+        query_labels, id_col, vec_col, query_id_col, query_vec_col,
     )
 
 
@@ -1947,10 +1700,8 @@ def sq_upsert(
     simply bounds the min/max scan to the initial slice).
 
     Returns ``(codes, bounds)`` to hand to ``knn_sq_rerank``."""
-    bounds = cached_sq_bounds(initial, id_col, vec_col)
-    existing = sq_code_array(initial, bounds, id_col, vec_col)
-    new_codes = sq_code_array(batch, bounds, id_col, vec_col)
-    return existing.unionByName(new_codes), bounds
+    codes, _, bounds = _upsert(_SQ, initial, batch, False, id_col, vec_col)
+    return codes, bounds
 
 
 # --- BQ2: 2-bit sign+magnitude binary quantization (round 9) ---------------
@@ -1965,10 +1716,6 @@ def sq_upsert(
 # is in oracle lockstep (oracles_similarity.knn_bq2_rerank_sql).
 BQ2_HI = 0.75  # reconstruction levels, fractions of the per-dim max |nv|
 BQ2_LO = 0.25
-
-
-# (appId, plan hash, cols) → persisted one-row per-dim |nv| max frame
-_BQ2_BOUNDS_CACHE: dict[tuple, DataFrame] = {}
 
 
 def bq2_bounds(
@@ -1998,18 +1745,8 @@ def cached_bq2_bounds(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Session-cached persisted BQ2 bounds row (the cached_sq_bounds
-    idiom); registered in caches.py for bench snapshot/rollback."""
-    key = (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
-    )
-    if key not in _BQ2_BOUNDS_CACHE:
-        b = bq2_bounds(base, id_col, vec_col).persist()
-        b.count()
-        _BQ2_BOUNDS_CACHE[key] = b
-    return _BQ2_BOUNDS_CACHE[key]
+    idiom)."""
+    return _persisted("bq2_bounds", bq2_bounds, base, id_col, vec_col)
 
 
 def bq2_code_array(
@@ -2054,29 +1791,18 @@ def bq2_codes(
     ).select(id_col, F.col("dim").cast("int").alias("dim"), "code")
 
 
-def _bq2_recon(codes, mx) -> "F.Column":
+def _bq2_recon(codes: str, mx: str) -> "F.Column":
     """Reconstruction x̂_d = sign · level: sign from the high bit
     (c ≥ 2 → +1), level = (BQ2_HI if the magnitude bit is set else
     BQ2_LO)·mx_d. Every op is IEEE double arithmetic in a fixed order,
-    mirrored exactly by the oracle SQL."""
-    if isinstance(codes, str) and isinstance(mx, str):
-        return _cached_expr(
-            ("bq2recon", codes, mx),
-            f"transform(arrays_zip({codes}, {mx}), "
-            f"r -> (CASE WHEN r.{codes} >= 2 THEN 1.0D ELSE -1.0D END) "
-            f"* ((CASE WHEN r.{codes} % 2 = 1 THEN {float(BQ2_HI)!r}D "
-            f"ELSE {float(BQ2_LO)!r}D END) * r.{mx}))",
-        )
-    z = F.arrays_zip(codes, mx)
-    return F.transform(
-        z,
-        lambda r: F.when(r["codes"] >= 2, F.lit(1.0)).otherwise(F.lit(-1.0))
-        * (
-            F.when(r["codes"] % 2 == 1, F.lit(BQ2_HI)).otherwise(
-                F.lit(BQ2_LO)
-            )
-            * r["mx"]
-        ),
+    mirrored exactly by the oracle SQL. Args are plain column names; one
+    memoized F.expr parse."""
+    return _cached_expr(
+        ("bq2recon", codes, mx),
+        f"transform(arrays_zip({codes}, {mx}), "
+        f"r -> (CASE WHEN r.{codes} >= 2 THEN 1.0D ELSE -1.0D END) "
+        f"* ((CASE WHEN r.{codes} % 2 = 1 THEN {float(BQ2_HI)!r}D "
+        f"ELSE {float(BQ2_LO)!r}D END) * r.{mx}))",
     )
 
 
@@ -2101,55 +1827,11 @@ def knn_bq2_rerank(
     budget (no BQ_RERANK_MULT deepening — the measured point of the
     2-bit code), exact cosine rerank of the survivors. Same
     labels/query_labels filtered-search hooks and bounds/codes lifecycle
-    injection as knn_sq_rerank."""
-    if (labels is None) != (query_labels is None):
-        raise ValueError(
-            "knn_bq2_rerank: labels and query_labels must be passed "
-            "together"
-        )
-    if codes is not None and bounds is None:
-        raise ValueError(
-            "knn_bq2_rerank: injected codes require their matching "
-            "bounds (frozen-bounds artifacts decode against the bounds "
-            "that encoded them)"
-        )
-    if rerank_r is None:
-        rerank_r = _rerank_budget(base, k, id_col)
-    if bounds is None:
-        bounds = cached_bq2_bounds(base, id_col, vec_col)
-    if codes is None:
-        codes = bq2_code_array(base, bounds, id_col, vec_col)
-    recon = codes.crossJoin(F.broadcast(bounds)).select(
-        id_col, _bq2_recon("codes", "mx").alias("recon")
-    )
-    # distributed IDSelector (round 12 in-kernel, round 13 distributed —
-    # verdict r12 item 1) — the knn_sq_rerank shape: pair_scores folds
-    # the equality into the row mask on bounded batches and into the
-    # pair-producing join on its oversized Catalyst fallback
-    src, q_in, label_name, qlabel_name = recon, queries, None, None
-    if labels is not None:
-        src, q_in, label_name, qlabel_name = _attach_labels(
-            recon, labels, id_col, queries, query_labels, query_id_col
-        )
-    cand = KNN.pair_scores(
-        src, q_in,
-        id_col=id_col, vec_col="recon",
-        query_id_col=query_id_col, query_vec_col=query_vec_col,
-        label_col=label_name,
-        qlabel_col=qlabel_name,
-        # per-PARTITION bounded emission (knn._TopRAcc) on every path
-        emit_topk=int(rerank_r),
-    )
-    wr = Window.partitionBy(query_id_col).orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    pruned = (
-        cand.withColumn("rr", F.row_number().over(wr))
-        .where(F.col("rr") <= rerank_r)
-        .select(query_id_col, id_col)
-    )
-    return _exact_rerank(
-        pruned, base, queries, k, id_col, vec_col, query_id_col, query_vec_col
+    injection as knn_sq_rerank. ``_codec_search`` over ``_BQ2`` with no
+    probe."""
+    return _codec_search(
+        _BQ2, base, queries, k, rerank_r, bounds, codes, labels,
+        query_labels, id_col, vec_col, query_id_col, query_vec_col,
     )
 
 
@@ -2172,10 +1854,8 @@ def bq2_upsert(
     bounds — search stays DuckDB-oracle-able (the oracle bounds the max
     scan to the initial slice). Returns ``(codes, bounds)`` for
     ``knn_bq2_rerank``."""
-    bounds = cached_bq2_bounds(initial, id_col, vec_col)
-    existing = bq2_code_array(initial, bounds, id_col, vec_col)
-    new_codes = bq2_code_array(batch, bounds, id_col, vec_col)
-    return existing.unionByName(new_codes), bounds
+    codes, _, bounds = _upsert(_BQ2, initial, batch, False, id_col, vec_col)
+    return codes, bounds
 
 
 def ivfsq_upsert(
@@ -2197,47 +1877,34 @@ def ivfsq_upsert(
 
     Returns ``(sq_cells, cents, bounds)`` — the consistent triple for
     ``knn_ivfsq``."""
-    cents = cached_trained_centroids(initial, id_col=id_col, vec_col=vec_col)
-    bounds = cached_sq_bounds(initial, id_col, vec_col)
-    # the existing side IS the session-cached build artifact (same
-    # frozen bounds, same cached assignment) — scan the persisted
-    # InMemoryTable instead of re-encoding the initial slice per action
-    # (the ivfpq_upsert / cached_codes_cells pattern)
-    existing = cached_sq_cells(initial, id_col, vec_col)
-    assign_b = ivf_assign(batch, cents, id_col, vec_col).select(
-        id_col, "centroid_id"
-    )
-    new_cells = sq_code_array(batch, bounds, id_col, vec_col).join(
-        assign_b, id_col
-    )
-    return (
-        existing.unionByName(new_cells.select(*existing.columns)),
-        cents,
-        bounds,
-    )
+    return _upsert(_SQ, initial, batch, True, id_col, vec_col)
 
 
-# -- IVF over a pluggable fine codec -----------------------------------------
+# -- One pipeline over a pluggable fine codec --------------------------------
 
 
 class FineCodec(NamedTuple):
-    """What one IVF family adds to the shared coarse probe of
-    ``ivf_search`` — the Faiss IndexIVF split: one inverted file, one probe
-    rule, pluggable per-list scanners.
+    """What one compressed-index family adds to the shared pipeline — the
+    Faiss IndexIVF split (one inverted file, one probe rule, pluggable
+    per-list scanners), extended to the flat scan, the upsert and the
+    streaming drain: one record gives a family ``ivf_search``, flat
+    search (``_codec_search`` with no probe), ``_upsert`` and
+    ``streaming.ingest``'s drain.
 
-    * ``name`` — the family tag (``knn_ivf<name>``, the cells-cache key);
+    * ``name`` — the family tag (``knn_ivf<name>``, the cells-cache key,
+      the streaming sink directory);
     * ``state(base, id_col, vec_col)`` — the frozen fine-quantizer state
       trained on ``base`` (PQ codebooks, SQ/BQ2 bounds row; None for BQ);
     * ``encode(base, state, id_col, vec_col)`` — the per-row code frame
-      that ``_cached_cells`` joins with the coarse assignment;
-    * ``scan(cells, state, id_col)`` — the scan frame (id, centroid_id,
-      payload) over a cell-keyed artifact, decoded against ``state``;
+      (id, codes…) of ``base`` under ``state``;
+    * ``scan(codes, state)`` — the scan frame (id[, centroid_id],
+      payload) over a flat or cell-keyed artifact, decoded against
+      ``state``;
     * ``kernel(state, queries, qid, qvec)`` — ``(query frame,
       knn._PairScorer)`` for the bounded Arrow leg, or None when the score
       is a JVM intrinsic with nothing to vectorize (BQ's bit_count);
     * ``catalyst(state, queries, qid, qvec)`` — ``(query frame, score
-      Column)`` for the Catalyst probe-join leg, value-identical to the
-      scorer;
+      Column)`` for the Catalyst leg, value-identical to the scorer;
     * ``score_col`` — the candidate score, ranked ascending;
     * ``rerank_mult`` — the rerank floor R ≥ rerank_mult·k over the shared
       scale-aware ``_rerank_budget``."""
@@ -2256,11 +1923,37 @@ def _sq_queries(queries: DataFrame, qid: str, qvec: str) -> DataFrame:
     return queries.select(qid, _normalize(_as_double_sql(qvec)).alias("qnv"))
 
 
+def _decoded(
+    codes: DataFrame, state: DataFrame, col: "F.Column", name: str
+) -> DataFrame:
+    """Scan frame of a decoding codec: every artifact column but
+    ``codes`` (the id, and centroid_id on a cell-keyed artifact), then
+    ``col`` — decoded against the broadcast one-row ``state`` — as
+    ``name``."""
+    keep = [c for c in codes.columns if c != "codes"]
+    return codes.crossJoin(F.broadcast(state)).select(*keep, col.alias(name))
+
+
+def _bq2_catalyst(bounds, q: DataFrame, qi: str, qv: str) -> tuple:
+    """BQ2's Catalyst score, the clamped cosine to the reconstruction,
+    with both magnitudes hoisted: ``_v_mag`` rides the scan frame and
+    ``_q_mag`` the query frame, so each folds once per row instead of
+    once per pair (the knn._scored_product form, same values)."""
+    sim = F.greatest(
+        F.lit(0.0),
+        V.dot("recon", qv) / (F.col("_v_mag") * F.col("_q_mag")),
+    )
+    return (
+        q.select(qi, qv, V.magnitude(qv).alias("_q_mag")),
+        F.lit(1.0) - sim,
+    )
+
+
 _PQ = FineCodec(
     "pq",
     state=trained_pq_codebooks,
-    encode=lambda base, books, i, v: pq_codes(base, i, v),
-    scan=lambda cells, books, i: cells,
+    encode=_pq_encode,
+    scan=lambda codes, books: codes,
     kernel=lambda books, q, qi, qv: (q, _pq_scorer(books, qi, qv)),
     catalyst=lambda books, q, qi, qv: (
         _adc_lut_frame(q, books, qi, qv), _adc_expr()
@@ -2272,8 +1965,8 @@ _SQ = FineCodec(
     "sq",
     state=cached_sq_bounds,
     encode=sq_code_array,
-    scan=lambda cells, bounds, i: cells.crossJoin(F.broadcast(bounds)).select(
-        i, "centroid_id", _sq_deq("codes", "mins", "maxs").alias("deq")
+    scan=lambda codes, bounds: _decoded(
+        codes, bounds, _sq_deq("codes", "mins", "maxs"), "deq"
     ),
     kernel=lambda bounds, q, qi, qv: (_sq_queries(q, qi, qv), _sq_scorer()),
     catalyst=lambda bounds, q, qi, qv: (
@@ -2286,13 +1979,11 @@ _BQ2 = FineCodec(
     "bq2",
     state=cached_bq2_bounds,
     encode=bq2_code_array,
-    scan=lambda cells, bounds, i: cells.crossJoin(F.broadcast(bounds)).select(
-        i, "centroid_id", _bq2_recon("codes", "mx").alias("recon")
-    ),
+    scan=lambda codes, bounds: _decoded(
+        codes, bounds, _bq2_recon("codes", "mx"), "recon"
+    ).withColumn("_v_mag", V.magnitude("recon")),
     kernel=lambda bounds, q, qi, qv: (q, KNN._cosine_scorer("recon", qv)),
-    catalyst=lambda bounds, q, qi, qv: (
-        q.select(qi, qv), V.distance("recon", qv)
-    ),
+    catalyst=_bq2_catalyst,
     score_col="dist",
     rerank_mult=RERANK_MULT,
 )
@@ -2300,7 +1991,7 @@ _BQ = FineCodec(
     "bq",
     state=lambda base, i, v: None,
     encode=lambda base, state, i, v: bq_codes(base, i, v),
-    scan=lambda cells, state, i: cells,
+    scan=lambda codes, state: codes,
     kernel=None,
     catalyst=lambda state, q, qi, qv: (
         q.select(
@@ -2315,35 +2006,24 @@ _BQ = FineCodec(
 )
 
 
-# (codec name, appId, base plan hash, id_col, vec_col) → persisted
-# cell-keyed codes (id, codes…, centroid_id): the IVF index artifact a
-# 100 TB build WRITES partitioned by centroid_id. Every family joins the
-# SAME session-cached coarse assignment, so a mixed-family serving stack
-# runs the base×C argmin scan once, not per fine quantizer.
-_CELLS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _cached_cells(
     codec: FineCodec,
     base: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    key = (
-        codec.name,
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        id_col,
-        vec_col,
-    )
-    if key not in _CELLS_CACHE:
-        state = codec.state(base, id_col, vec_col)
-        assign = cached_trained_assign(base, id_col, vec_col)
-        codes = codec.encode(base, state, id_col, vec_col)
-        cc = codes.join(assign, id_col).persist()
-        cc.count()
-        _CELLS_CACHE[key] = cc
-    return _CELLS_CACHE[key]
+    """Persisted cell-keyed codes (id, codes…, centroid_id): the IVF
+    index artifact a 100 TB build WRITES partitioned by centroid_id.
+    Every family joins the SAME session-cached coarse assignment, so a
+    mixed-family serving stack runs the base×C argmin scan once, not per
+    fine quantizer."""
+
+    def build(b, i, v):
+        state = codec.state(b, i, v)
+        assign = cached_trained_assign(b, i, v)
+        return codec.encode(b, state, i, v).join(assign, i)
+
+    return _persisted(f"ivf{codec.name}_cells", build, base, id_col, vec_col)
 
 
 def cached_codes_cells(
@@ -2372,50 +2052,244 @@ def _in_cells(probed: list) -> "F.Column":
     return F.expr(f"centroid_id IN ({', '.join(map(str, probed))})")
 
 
-def _probe_join(
+def _encode_batch(
+    codec: FineCodec,
+    batch: DataFrame,
+    state,
+    cents: DataFrame | None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """One ingest batch as rows to append to an index artifact: encoded
+    under the frozen ``state`` and, for an IVF index (``cents`` given),
+    assigned to a cell under the frozen centroids. The batch upserts and
+    the streaming drain both run it."""
+    codes = codec.encode(batch, state, id_col, vec_col)
+    if cents is None:
+        return codes
+    assign = ivf_assign(batch, cents, id_col, vec_col)
+    return codes.join(assign.select(id_col, "centroid_id"), id_col)
+
+
+def _upsert(
+    codec: FineCodec,
+    initial: DataFrame,
+    batch: DataFrame,
+    ivf: bool,
+    id_col: str,
+    vec_col: str,
+) -> tuple:
+    """The one upsert rule (the Faiss add-after-train contract): the
+    quantizer state of the initial build — and, for an IVF index, its
+    coarse centroids — freeze; ``batch`` is only encoded (and assigned)
+    under them, and its rows UNION onto the existing artifact — appended
+    files at 100 TB, nothing retrained or rewritten. Per-row
+    encode/assign makes the result row-identical to a frozen-state
+    rebuild of the union, which is what keeps search over it
+    DuckDB-oracle-able. The existing side of an IVF index is the
+    session-cached cell artifact (what a prior build wrote); a flat one
+    is ``initial`` encoded under the frozen state.
+
+    Returns ``(codes, cents, state)``; ``cents`` is None when flat."""
+    cents = (
+        cached_trained_centroids(initial, id_col=id_col, vec_col=vec_col)
+        if ivf else None
+    )
+    state = codec.state(initial, id_col, vec_col)
+    existing = (
+        _cached_cells(codec, initial, id_col, vec_col)
+        if ivf else codec.encode(initial, state, id_col, vec_col)
+    )
+    new = _encode_batch(codec, batch, state, cents, id_col, vec_col)
+    return existing.unionByName(new.select(*existing.columns)), cents, state
+
+
+def _candidates(
     codec: FineCodec,
     scan: DataFrame,
     state,
-    probes: DataFrame,
     queries: DataFrame,
+    r: int,
+    probes: DataFrame | None,
     labels: DataFrame | None,
     query_labels: DataFrame | None,
-    broadcast: bool,
     id_col: str,
     query_id_col: str,
     query_vec_col: str,
 ) -> DataFrame:
-    """The Catalyst candidate leg: probed cells ⋈ probe frame on
-    centroid_id, the label equality fused into that join, then ⋈ the
-    codec's query frame on query_id, scored by its Catalyst expression.
-    ``broadcast`` (BQ, at every batch size): the probe and query frames
-    broadcast into the scan. Otherwise (an oversized batch) nothing is
-    broadcast, and the only driver collect is the DISTINCT probed-cell
-    set — bounded by C, not nq — that prunes the scan."""
-    hint = F.broadcast if broadcast else (lambda df: df)
-    if not broadcast:
-        probed = sorted(
-            int(r[0])
-            for r in probes.select("centroid_id").distinct().collect()
+    """(query_id, id, codec.score_col) candidate pairs for a per-query
+    top-``r`` cut — the fine-scan step of every compressed-index search.
+    ``probes`` (IVF) restricts each query to its probed cells; None (a
+    flat scan) scores every row of ``scan``.
+
+    BOUNDED (≤ knn.QUERY_BATCH_MAX query rows, codec with a kernel):
+    ``knn._pair_kernel`` with the codec's scorer, emitting each
+    partition's top ``r`` per query. The IVF probe routing is collected
+    driver-side (nq·nprobe ints, session-memoized): the union of probed
+    cells becomes a literal IN-filter on the scan and each row is scored
+    only against the queries probing its cell.
+
+    CATALYST (an oversized batch, or a codec without a kernel): the
+    codec's score expression over scan ⋈ query frame — through the probe
+    frame on centroid_id for IVF, a cross product when flat — with no
+    query collect. The query side broadcasts only when the codec has no
+    kernel (BQ, at every batch size); otherwise nothing is broadcast,
+    and IVF's only driver collect is the DISTINCT probed-cell set —
+    bounded by C, not nq — that prunes the scan. Bit-identical values,
+    different physical plan.
+
+    ``labels``/``query_labels`` (the IDSelector): the stored label rides
+    the scan, the query's label the query-side frame (``_attach_labels``),
+    so the equality runs inside the kernel's row mask or the
+    pair-producing join — no leg shuffles an unfiltered pair frame."""
+    label_name = qlabel_name = None
+    if codec.kernel is not None and (
+        KNN.query_batch_count(queries) <= KNN.QUERY_BATCH_MAX
+    ):
+        cells_by_query = None
+        if probes is not None:
+            cells_by_query = _collected_probe_routing(probes, query_id_col)
+            probed = sorted({c for cs in cells_by_query.values() for c in cs})
+            scan = scan.where(_in_cells(probed))
+        q_in, scorer = codec.kernel(
+            state, queries, query_id_col, query_vec_col
         )
-        scan = scan.where(_in_cells(probed))
-    probes_sel = probes.select(query_id_col, "centroid_id")
+        if labels is not None:
+            scan, q_in, label_name, qlabel_name = _attach_labels(
+                scan, labels, id_col, q_in, query_labels, query_id_col
+            )
+        return KNN._pair_kernel(
+            scan, q_in, scorer, id_col, query_id_col,
+            cells_by_query=cells_by_query,
+            label_col=label_name,
+            qlabel_col=qlabel_name,
+            emit_topk=int(r),
+        )
+    hint = F.broadcast if codec.kernel is None else (lambda df: df)
+    q_frame, score = codec.catalyst(
+        state, queries, query_id_col, query_vec_col
+    )
+    side = q_frame
+    if probes is not None:
+        side = probes.select(query_id_col, "centroid_id")
+        if codec.kernel is not None:
+            probed = sorted(
+                int(row[0])
+                for row in probes.select("centroid_id").distinct().collect()
+            )
+            scan = scan.where(_in_cells(probed))
     if labels is not None:
-        scan, probes_sel, label_name, qlabel_name = _attach_labels(
-            scan, labels, id_col, probes_sel, query_labels, query_id_col
+        scan, side, label_name, qlabel_name = _attach_labels(
+            scan, labels, id_col, side, query_labels, query_id_col
         )
-    cand = scan.join(hint(probes_sel), "centroid_id")
+    if probes is None:
+        cand = scan.crossJoin(hint(side))
+    else:
+        cand = scan.join(hint(side), "centroid_id")
     if labels is not None:
         cand = cand.where(
             F.col(label_name) == F.col(qlabel_name)
         ).drop(label_name, qlabel_name)
-    q_frame, score = codec.catalyst(
-        state, queries, query_id_col, query_vec_col
-    )
-    return cand.join(hint(q_frame), query_id_col).select(
+    if probes is not None:
+        cand = cand.join(hint(q_frame), query_id_col)
+    return cand.select(
         F.col(query_id_col).cast("long").alias(query_id_col),
         F.col(id_col).cast("long").alias(id_col),
         score.alias(codec.score_col),
+    )
+
+
+def _codec_search(
+    codec: FineCodec,
+    base: DataFrame,
+    queries: DataFrame,
+    k: int,
+    rerank_r: int | None,
+    state,
+    codes: DataFrame | None,
+    labels: DataFrame | None,
+    query_labels: DataFrame | None,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+    ivf: bool = False,
+    cents: DataFrame | None = None,
+    nprobe: int = N_PROBE,
+    label_hist: DataFrame | None = None,
+) -> DataFrame:
+    """The one compressed-index search — REPOSE's distributed top-k
+    (prune partitions, keep a local top-R, merge, rerank exactly):
+
+      1. coarse probe (``ivf``): each query probes its ``nprobe``
+         nearest cells of ``cents`` (default: the session-trained
+         centroids of ``base``; ``_ivf_probes``), or with
+         ``label_hist`` the cells holding its label
+         (``_ivf_probes_labeled``). A flat search skips it.
+      2. fine scan: the codec scores ``codes`` (default: the session
+         build over ``base``) and keeps the top R per query
+         (``_candidates``, then one (score, id) window) — R =
+         ``rerank_r`` or max(codec.rerank_mult·k, ``_rerank_budget``).
+      3. exact rerank: full-precision cosine over the R survivors
+         (``_exact_rerank``), top ``k``.
+
+    ``state`` is the quantizer state that encoded ``codes``; injected
+    flat codes must come with it."""
+    who = f"knn_ivf{codec.name}" if ivf else f"knn_{codec.name}_rerank"
+    if (labels is None) != (query_labels is None):
+        raise ValueError(
+            f"{who}: labels and query_labels must be passed together "
+            "(the filter needs both the stored attribute and the query "
+            "predicate)"
+        )
+    if label_hist is not None and labels is None:
+        raise ValueError(
+            f"{who}: label_hist requires labels and query_labels — "
+            "histogram-guided probing restricts WHICH cells are ranked, "
+            "but only the row-level label filter keeps non-matching rows "
+            "in those cells out of the result"
+        )
+    if not ivf and codes is not None and state is None:
+        raise ValueError(
+            f"{who}: injected codes require the quantizer state that "
+            "encoded them — decoding a frozen-state artifact against "
+            "state trained on the full base silently mis-decodes it"
+        )
+    if rerank_r is None:
+        rerank_r = max(codec.rerank_mult * k, _rerank_budget(base, k, id_col))
+    if ivf and cents is None:
+        cents = cached_trained_centroids(base, id_col=id_col, vec_col=vec_col)
+    if state is None:
+        state = codec.state(base, id_col, vec_col)
+    if codes is None:
+        codes = (
+            _cached_cells(codec, base, id_col, vec_col)
+            if ivf else codec.encode(base, state, id_col, vec_col)
+        )
+    probes = None
+    if label_hist is not None:
+        probes = _ivf_probes_labeled(
+            queries, cents, query_labels, label_hist, nprobe,
+            int(rerank_r), query_id_col, query_vec_col,
+        )
+    elif ivf:
+        probes = _ivf_probes(
+            queries, cents, nprobe, query_id_col, query_vec_col
+        )
+    cand = _candidates(
+        codec, codec.scan(codes, state), state, queries, rerank_r, probes,
+        labels, query_labels, id_col, query_id_col, query_vec_col,
+    )
+    wr = Window.partitionBy(query_id_col).orderBy(
+        F.col(codec.score_col).asc(), F.col(id_col).asc()
+    )
+    pruned = (
+        cand.withColumn("rr", F.row_number().over(wr))
+        .where(F.col("rr") <= rerank_r)
+        .select(query_id_col, id_col)
+    )
+    return _exact_rerank(
+        pruned, base, queries, k, id_col, vec_col, query_id_col, query_vec_col
     )
 
 
@@ -2438,49 +2312,29 @@ def ivf_search(
     query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """IVF search over a pluggable fine codec — the one pipeline behind
-    knn_ivfpq / knn_ivfsq / knn_ivfbq2 / knn_ivfbq, the REPOSE shape of
-    distributed top-k (prune partitions locally, keep a local top-R,
-    merge globally):
+    knn_ivfpq / knn_ivfsq / knn_ivfbq2 / knn_ivfbq: ``_codec_search``
+    with the coarse probe. Each query probes its ``nprobe`` nearest
+    trained cells; on the written cell-partitioned layout that is
+    partition pruning, (C−nprobe)/C of the codes are never read. Only
+    probed cells' code rows are scored and cut to the top R per query,
+    then reranked exactly. Fully deterministic (trained quantizers,
+    lexicographic ties) → DuckDB-oracle-able end to end
+    (oracles_similarity.knn_ivf*_sql).
 
-      1. coarse probe: each query probes its ``nprobe`` nearest trained
-         cells (``_ivf_probes``). On the written cell-partitioned layout
-         that is partition pruning: (C−nprobe)/C of the codes are never
-         read.
-      2. fine scan: only probed cells' code rows are scored, by the
-         codec's score (``codec.score_col``, ascending), and cut to the
-         top R per query — R = ``rerank_r`` or max(codec.rerank_mult·k,
-         ``_rerank_budget``).
-      3. exact rerank: full-precision cosine over the R survivors
-         (``_exact_rerank``), top ``k``.
-
-    Fully deterministic (trained quantizers, lexicographic ties) →
-    DuckDB-oracle-able end to end (oracles_similarity.knn_ivf*_sql).
-
-    BOUNDED vs OVERSIZED: at or below knn.QUERY_BATCH_MAX query rows the
-    probe routing is collected driver-side (nq·nprobe ints, session-
-    memoized), the union of probed cells becomes a literal IN-filter on
-    the scan, and ``knn._pair_kernel`` scores each row only against the
-    queries probing its cell, emitting the per-partition top R. Above
-    it, the Catalyst probe-join leg (``_probe_join``) runs with no query
-    collect and no broadcast of the oversized side — bit-identical
-    values, different physical plan. A codec without a kernel (BQ)
-    serves from the broadcast probe-join form at every batch size.
+    BOUNDED vs OVERSIZED query batches and the codec without a kernel
+    (BQ) are the two legs of ``_candidates``.
 
     FILTERED search (the Faiss IDSelector shape): ``labels`` (id_col,
     label) and ``query_labels`` (query_id_col, qlabel) come together and
     restrict each query's candidates to rows whose label equals its own,
     applied BEFORE the top-R cut so the whole rerank budget lands on
-    qualifying rows. The stored label rides the scan frame and the
-    query's label the query-side frame (``_attach_labels``), so the
-    equality runs inside the kernel's row mask on bounded batches and
-    inside the pair-producing join on the Catalyst leg — no leg
-    shuffles an unfiltered pair frame. ``label_hist``
-    (``cached_label_cell_hist``, the build-time per-label cell
-    histogram) additionally makes probe SELECTION label-aware: only
-    cells holding the query's label are ranked, probed in distance order
-    until their label rows cover R (``_ivf_probes_labeled``, nprobe-cell
-    floor). It requires ``labels``: the histogram restricts which cells
-    are ranked, only the row filter keeps other labels out.
+    qualifying rows. ``label_hist`` (``cached_label_cell_hist``, the
+    build-time per-label cell histogram) additionally makes probe
+    SELECTION label-aware: only cells holding the query's label are
+    ranked, probed in distance order until their label rows cover R
+    (``_ivf_probes_labeled``, nprobe-cell floor). It requires ``labels``:
+    the histogram restricts which cells are ranked, only the row filter
+    keeps other labels out.
 
     ARTIFACTS: ``cents`` (coarse centroids), ``cells`` (the cell-keyed
     codes) and ``state`` (the fine quantizer state that encoded them)
@@ -2489,74 +2343,10 @@ def ivf_search(
     defaults to the session build over ``base``; pass the frozen set an
     ``*_upsert`` returns for an incrementally ingested index. ``base``
     always supplies the exact-rerank vectors and the rerank budget."""
-    who = f"knn_ivf{codec.name}"
-    if (labels is None) != (query_labels is None):
-        raise ValueError(
-            f"{who}: labels and query_labels must be passed together "
-            "(the filter needs both the stored attribute and the query "
-            "predicate)"
-        )
-    if label_hist is not None and labels is None:
-        raise ValueError(
-            f"{who}: label_hist requires labels and query_labels — "
-            "histogram-guided probing restricts WHICH cells are ranked, "
-            "but only the row-level label filter keeps non-matching rows "
-            "in those cells out of the result"
-        )
-    if rerank_r is None:
-        rerank_r = max(codec.rerank_mult * k, _rerank_budget(base, k, id_col))
-    if cents is None:
-        cents = cached_trained_centroids(base, id_col=id_col, vec_col=vec_col)
-    if state is None:
-        state = codec.state(base, id_col, vec_col)
-    if cells is None:
-        cells = _cached_cells(codec, base, id_col, vec_col)
-    scan = codec.scan(cells, state, id_col)
-    if label_hist is not None:
-        probes = _ivf_probes_labeled(
-            queries, cents, query_labels, label_hist, nprobe,
-            int(rerank_r), query_id_col, query_vec_col,
-        )
-    else:
-        probes = _ivf_probes(
-            queries, cents, nprobe, query_id_col, query_vec_col
-        )
-    if codec.kernel is None or (
-        KNN.query_batch_count(queries) > KNN.QUERY_BATCH_MAX
-    ):
-        cand = _probe_join(
-            codec, scan, state, probes, queries, labels, query_labels,
-            codec.kernel is None, id_col, query_id_col, query_vec_col,
-        )
-    else:
-        cells_by_query = _collected_probe_routing(probes, query_id_col)
-        probed = sorted({c for cs in cells_by_query.values() for c in cs})
-        src = scan.where(_in_cells(probed))
-        q_in, scorer = codec.kernel(
-            state, queries, query_id_col, query_vec_col
-        )
-        label_name = qlabel_name = None
-        if labels is not None:
-            src, q_in, label_name, qlabel_name = _attach_labels(
-                src, labels, id_col, q_in, query_labels, query_id_col
-            )
-        cand = KNN._pair_kernel(
-            src, q_in, scorer, id_col, query_id_col,
-            cells_by_query=cells_by_query,
-            label_col=label_name,
-            qlabel_col=qlabel_name,
-            emit_topk=int(rerank_r),
-        )
-    wr = Window.partitionBy(query_id_col).orderBy(
-        F.col(codec.score_col).asc(), F.col(id_col).asc()
-    )
-    pruned = (
-        cand.withColumn("rr", F.row_number().over(wr))
-        .where(F.col("rr") <= rerank_r)
-        .select(query_id_col, id_col)
-    )
-    return _exact_rerank(
-        pruned, base, queries, k, id_col, vec_col, query_id_col, query_vec_col
+    return _codec_search(
+        codec, base, queries, k, rerank_r, state, cells, labels,
+        query_labels, id_col, vec_col, query_id_col, query_vec_col,
+        True, cents, nprobe, label_hist,
     )
 
 

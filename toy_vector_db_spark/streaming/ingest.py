@@ -1,16 +1,18 @@
-"""Structured-Streaming ingest into the IVF-PQ vector index.
+"""Structured-Streaming ingest into the vector indexes.
 
-The batch upsert (operators/similarity.ivfpq_upsert) proves the frozen-
+The batch upserts (operators/similarity ``*_upsert``) prove the frozen-
 quantizer append contract; this module drives the SAME contract through
 the streaming engine: arriving vectors flow readStream → foreachBatch,
-each micro-batch is assigned + encoded under the frozen quantizers and
-APPENDED as parquet into the index sink directory — the continuous-
-ingest shape of a production vector pipeline (source swaps to
-Kafka/queue, sink to the cell-partitioned index table, checkpointing
-makes it exactly-once). Because per-row assignment/encoding is
-deterministic and batch boundaries only partition the work, the drained
+each micro-batch is encoded (and, for IVF, assigned) under the frozen
+quantizer state and APPENDED as parquet into the index sink directory —
+the continuous-ingest shape of a production vector pipeline (source
+swaps to Kafka/queue, sink to the cell-partitioned index table,
+checkpointing makes it exactly-once). One drain serves every compressed
+index (IVF-PQ, SQ8, BQ2: ``_drain_codes`` over a ``FineCodec``); HNSW
+has its own shard-append drain. Because per-row assignment/encoding is
+deterministic and batch boundaries only partition the work, a drained
 index is row-identical to the batch upsert — so search over it shares
-ivfpq_upsert_search's DuckDB oracle (asserted by the driver and in
+the upsert key's DuckDB oracle (asserted by the registry oracles and in
 tests).
 """
 
@@ -21,6 +23,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from toy_vector_db_spark.operators import similarity
 from toy_vector_db_spark.sources.fixtures import FIXTURE_DIR
 
 
@@ -52,10 +55,72 @@ def _stream_embeddings_dir(spark: SparkSession, sf_dir: str) -> str:
     return d
 
 
-# (appId, sf_dir, lo, hi) → sink dir of an already-drained ingest: the
-# stream is drained once per session; reruns read the written artifact —
-# exactly how a long-lived ingest pipeline's consumers behave.
+# (appId, sf_dir, lo, hi, index tag) → sink dir of an already-drained
+# ingest: the stream is drained once per session; reruns read the written
+# artifact — exactly how a long-lived ingest pipeline's consumers behave.
 _INGEST_CACHE: dict[tuple, str] = {}
+
+
+def _drain_codes(
+    codec,
+    spark: SparkSession,
+    sf_dir: str,
+    lo: int,
+    hi: int,
+    state,
+    cents: DataFrame | None = None,
+) -> DataFrame:
+    """CONTINUOUS ingest into a compressed index — the streaming twin of
+    ``similarity._upsert`` for any ``similarity.FineCodec``: the arriving
+    slice (lo ≤ vec_id < hi) drains readStream → foreachBatch, and each
+    micro-batch runs the upsert's batch-encode step
+    (``similarity._encode_batch``: encode under the frozen ``state`` and,
+    for an IVF index, assign cells under the frozen ``cents``), appending
+    the rows as parquet to the index sink. Per-row encode/assign makes
+    the drained rows identical to the batch upsert's regardless of batch
+    boundaries, so search over them shares the upsert key's DuckDB
+    oracle. The sink directory and cache key come from the index tag
+    (``codec.name``, ``ivf``-prefixed for a cell-keyed index). Returns
+    the ingested rows read back from the sink."""
+    tag = codec.name if cents is None else f"ivf{codec.name}"
+    key = (spark.sparkContext.applicationId, sf_dir, lo, hi, tag)
+    if key not in _INGEST_CACHE:
+        sf_tag = os.path.basename(os.path.normpath(sf_dir))
+        sink = os.path.join(
+            FIXTURE_DIR, "sink_out", f"stream_{tag}", sf_tag, f"{lo}_{hi}"
+        )
+        if os.path.exists(sink):
+            shutil.rmtree(sink)
+        os.makedirs(sink, exist_ok=True)
+
+        src_dir = _stream_embeddings_dir(spark, sf_dir)
+        schema = spark.read.parquet(src_dir).schema
+        arriving = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir)
+            .where(f"vec_id >= {lo} AND vec_id < {hi}")
+        )
+
+        def _process(batch_df: DataFrame, _batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            batch = batch_df.select("vec_id", "embedding")
+            similarity._encode_batch(codec, batch, state, cents).write.mode(
+                "append"
+            ).parquet(sink)
+
+        q = (
+            arriving.writeStream.foreachBatch(_process)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        _INGEST_CACHE[key] = sink
+    return spark.read.parquet(_INGEST_CACHE[key])
 
 
 def stream_ingest_codes(
@@ -66,172 +131,27 @@ def stream_ingest_codes(
     cents: DataFrame,
     books: list,
 ) -> DataFrame:
-    """Drain the arriving vector slice (lo ≤ vec_id < hi) through the
-    streaming engine into the index sink: per micro-batch, assign cells
-    under the frozen ``cents``, encode codes under the frozen ``books``
-    (both vectorized kernels — operators/similarity), and append the
-    cell-keyed code rows as parquet. Returns the ingested codes⋈cells
-    frame read back from the sink."""
-    from toy_vector_db_spark.operators import similarity
-
-    key = (spark.sparkContext.applicationId, sf_dir, lo, hi)
-    if key not in _INGEST_CACHE:
-        tag = os.path.basename(os.path.normpath(sf_dir))
-        sink = os.path.join(
-            FIXTURE_DIR, "sink_out", "stream_ingest", tag, f"{lo}_{hi}"
-        )
-        if os.path.exists(sink):
-            shutil.rmtree(sink)
-        os.makedirs(sink, exist_ok=True)
-
-        src_dir = _stream_embeddings_dir(spark, sf_dir)
-        schema = spark.read.parquet(src_dir).schema
-        arriving = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .where(f"vec_id >= {lo} AND vec_id < {hi}")
-        )
-
-        def _process(batch_df: DataFrame, _batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            codes = similarity.encode_codes(batch_df, books)
-            assign = similarity.ivf_assign(batch_df, cents).select(
-                "vec_id", "centroid_id"
-            )
-            codes.join(assign, "vec_id").write.mode("append").parquet(sink)
-
-        q = (
-            arriving.writeStream.foreachBatch(_process)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        _INGEST_CACHE[key] = sink
-    return spark.read.parquet(_INGEST_CACHE[key])
+    """IVF-PQ drain (the streaming twin of ``similarity.ivfpq_upsert``):
+    cells under the frozen ``cents``, codes under the frozen ``books``;
+    returns the ingested codes⋈cells rows."""
+    return _drain_codes(similarity._PQ, spark, sf_dir, lo, hi, books, cents)
 
 
 def stream_ingest_sq_codes(
-    spark: SparkSession,
-    sf_dir: str,
-    lo: int,
-    hi: int,
-    bounds: DataFrame,
+    spark: SparkSession, sf_dir: str, lo: int, hi: int, bounds: DataFrame
 ) -> DataFrame:
-    """CONTINUOUS ingest into the SQ8 index (round 8): the streaming
-    twin of ``similarity.sq_upsert``, exactly as ``stream_ingest_codes``
-    twins ``ivfpq_upsert`` — the fourth family completes the streaming
-    trio. The arriving slice (lo ≤ vec_id < hi) drains readStream →
-    foreachBatch; each micro-batch is encoded against the FROZEN
-    broadcast ``bounds`` row (a pure per-row Catalyst expression — the
-    cheapest ingest of any family: no assignment, no codebook lookup,
-    no graph surgery) and appended as parquet to the index sink.
-    Per-row encode makes the drained code set row-identical to the
-    batch upsert regardless of batch boundaries, so search over it
-    shares sq_upsert_search's DuckDB oracle exactly. Returns the
-    ingested (vec_id, codes) frame read back from the sink."""
-    from toy_vector_db_spark.operators import similarity
-
-    key = (spark.sparkContext.applicationId, sf_dir, lo, hi, "sq")
-    if key not in _INGEST_CACHE:
-        tag = os.path.basename(os.path.normpath(sf_dir))
-        sink = os.path.join(
-            FIXTURE_DIR, "sink_out", "stream_sq", tag, f"{lo}_{hi}"
-        )
-        if os.path.exists(sink):
-            shutil.rmtree(sink)
-        os.makedirs(sink, exist_ok=True)
-
-        src_dir = _stream_embeddings_dir(spark, sf_dir)
-        schema = spark.read.parquet(src_dir).schema
-        arriving = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .where(f"vec_id >= {lo} AND vec_id < {hi}")
-        )
-
-        def _process(batch_df: DataFrame, _batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            batch = batch_df.select("vec_id", "embedding")
-            similarity.sq_code_array(batch, bounds).write.mode(
-                "append"
-            ).parquet(sink)
-
-        q = (
-            arriving.writeStream.foreachBatch(_process)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        _INGEST_CACHE[key] = sink
-    return spark.read.parquet(_INGEST_CACHE[key])
+    """SQ8 drain (the streaming twin of ``similarity.sq_upsert``): codes
+    under the frozen ``bounds``; returns the ingested (vec_id, codes)."""
+    return _drain_codes(similarity._SQ, spark, sf_dir, lo, hi, bounds)
 
 
 def stream_ingest_bq2_codes(
-    spark: SparkSession,
-    sf_dir: str,
-    lo: int,
-    hi: int,
-    bounds: DataFrame,
+    spark: SparkSession, sf_dir: str, lo: int, hi: int, bounds: DataFrame
 ) -> DataFrame:
-    """CONTINUOUS ingest into the BQ2 index (round 9): the streaming
-    twin of ``similarity.bq2_upsert`` — same drain shape as
-    ``stream_ingest_sq_codes`` (readStream → foreachBatch, each
-    micro-batch encoded against the FROZEN broadcast |nv|-max bounds
-    row — a pure per-row Catalyst expression — and appended as parquet
-    to the index sink). Per-row encode makes the drained code set
-    row-identical to the batch upsert regardless of batch boundaries,
-    so search over it shares bq2_upsert_search's DuckDB oracle
-    exactly."""
-    from toy_vector_db_spark.operators import similarity
-
-    key = (spark.sparkContext.applicationId, sf_dir, lo, hi, "bq2")
-    if key not in _INGEST_CACHE:
-        tag = os.path.basename(os.path.normpath(sf_dir))
-        sink = os.path.join(
-            FIXTURE_DIR, "sink_out", "stream_bq2", tag, f"{lo}_{hi}"
-        )
-        if os.path.exists(sink):
-            shutil.rmtree(sink)
-        os.makedirs(sink, exist_ok=True)
-
-        src_dir = _stream_embeddings_dir(spark, sf_dir)
-        schema = spark.read.parquet(src_dir).schema
-        arriving = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .where(f"vec_id >= {lo} AND vec_id < {hi}")
-        )
-
-        def _process(batch_df: DataFrame, _batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            batch = batch_df.select("vec_id", "embedding")
-            similarity.bq2_code_array(batch, bounds).write.mode(
-                "append"
-            ).parquet(sink)
-
-        q = (
-            arriving.writeStream.foreachBatch(_process)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        _INGEST_CACHE[key] = sink
-    return spark.read.parquet(_INGEST_CACHE[key])
+    """BQ2 drain (the streaming twin of ``similarity.bq2_upsert``): codes
+    under the frozen |nv|-max ``bounds``; returns the ingested
+    (vec_id, codes)."""
+    return _drain_codes(similarity._BQ2, spark, sf_dir, lo, hi, bounds)
 
 
 def stream_ingest_hnsw(
