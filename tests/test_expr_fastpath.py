@@ -245,11 +245,14 @@ def test_lit_vec_memo_tells_signed_zeros_apart(spark):
 
 
 def test_pq_lut_cache_key_is_content_keyed(spark, emb):
-    """Advice r14 (low): _PQ_LUT_CACHE fingerprinted codebooks with
+    """Advice r14 (low): the PQ LUT memo fingerprinted codebooks with
     Python's salted 64-bit hash(bytes) — collisions improbable, not
-    impossible. Now shape + sha256 digest: two different codebook sets
-    must produce different LUTs (and the same set must hit the memo)."""
+    impossible. Now shape + sha256 digest, on the collected query
+    batch: two different codebook sets must produce different LUTs (and
+    the same set must hit the memo)."""
     import numpy as np
+
+    from toy_vector_db_spark.operators import knn as K
 
     qs = emb.limit(4).select(
         F.col("vec_id").alias("query_id"),
@@ -258,10 +261,11 @@ def test_pq_lut_cache_key_is_content_keyed(spark, emb):
     rng = np.random.default_rng(7)
     books1 = [rng.normal(size=(4, 8)).tolist() for _ in range(2)]
     books2 = [rng.normal(size=(4, 8)).tolist() for _ in range(2)]
-    qids1, luts1 = S._collected_pq_luts(qs, books1, "query_id", "query_vec")
-    qids1b, luts1b = S._collected_pq_luts(qs, books1, "query_id", "query_vec")
+    qb = K._collected_batch(qs, "query_id", "query_vec")
+    luts1 = S._pq_luts(qb, books1)
+    luts1b = S._pq_luts(qb, books1)
     assert luts1 is luts1b  # memo hit for identical content
-    _, luts2 = S._collected_pq_luts(qs, books2, "query_id", "query_vec")
+    luts2 = S._pq_luts(qb, books2)
     assert not np.allclose(luts1[0], luts2[0])  # no cross-codebook hit
 
 

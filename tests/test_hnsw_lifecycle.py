@@ -3,6 +3,7 @@ shard-append ingest and tombstone delete, each proven against the
 from-scratch ground truth — the same equivalence discipline as the
 IVF-PQ lifecycle keys (tests/test_similarity.py's upsert ≡ rebuild)."""
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from toy_vector_db_spark.operators import evaluation, hnsw, knn
@@ -178,11 +179,21 @@ def _stages_of(spark, group, fn):
     # the status store is fed asynchronously by the listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+
+    def ran(sid):
+        # past spark.ui.retainedStages the store evicts SKIPPED stages
+        # first (their completion time is -1), so a stage of a finished
+        # job that is no longer in the store was skipped
+        try:
+            return store.lastStageAttempt(sid).status().toString() != "SKIPPED"
+        except Py4JJavaError:
+            return False
+
     stages = [
         sid
         for jid in tracker.getJobIdsForGroup(group)
         for sid in tracker.getJobInfo(jid).stageIds
-        if store.lastStageAttempt(sid).status().toString() != "SKIPPED"
+        if ran(sid)
     ]
     return out, len(stages)
 

@@ -115,7 +115,9 @@ def test_sq_adc_kernel_equals_fold_form(spark, embeddings):
     """The SQ ADC Arrow kernel (round 8) must match the interpreted
     _sq_dist fold — the form the DuckDB oracle evaluates — bit for bit
     over the full pair set: acc += (x_j − y_j)² one dim at a time in j
-    order from 0.0, no FMA, no pairwise summation."""
+    order from 0.0, no FMA, no pairwise summation. The kernel normalizes
+    the raw queries in numpy; the fold reads Catalyst's normalized
+    ``qnv``, so this also pins the two normalizations equal."""
     from toy_vector_db_spark.operators import similarity
 
     base, qs = _splits(embeddings)
@@ -136,7 +138,9 @@ def test_sq_adc_kernel_equals_fold_form(spark, embeddings):
     }
     kern = {
         (r["query_id"], r["vec_id"]): r["ad2"]
-        for r in knn._pair_kernel(deq, nq, similarity._sq_scorer()).collect()
+        for r in knn._pair_kernel(
+            deq, qs, similarity._sq_scorer("query_vec")
+        ).collect()
     }
     assert fold == kern  # exact float equality, full pair set
 

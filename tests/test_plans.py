@@ -5,6 +5,8 @@ un-pushes the prefix-split filter would pass value tests and silently wreck
 scale behavior — these tests pin the plans.
 """
 
+import time
+
 import pytest
 
 from toy_vector_db_spark import registry
@@ -599,3 +601,76 @@ def test_bq_hamming_partial_topk_before_exchange(plans):
     assert re.search(
         r"\+- Exchange [^\n]*\n[\s:]*\+- WindowGroupLimit", plan
     ), "no map-side partial WindowGroupLimit under the query_id exchange"
+
+
+@pytest.mark.parametrize("family", ["ivfpq", "ivfsq"])
+def test_bounded_ivf_request_constructs_with_one_job(
+    spark, sf_dir, monkeypatch, family
+):
+    """A bounded IVF request runs ONE Spark action while its plan is
+    built — the query frame's Arrow collect — and derives the batch
+    guard, the probe routing and (PQ) the lookup tables from it on the
+    driver; it adds at most one session-cache entry. Jobs are counted
+    per job group. Only the oversized leg (QUERY_BATCH_MAX = 0) builds
+    the Catalyst _ivf_probes frame."""
+    from pyspark.sql import functions as F
+
+    from toy_vector_db_spark import caches
+    from toy_vector_db_spark.operators import knn, similarity
+    from toy_vector_db_spark.sources.ndjson import split_count
+
+    emb = registry.table(spark, sf_dir, "embeddings")
+    cut = split_count(emb.count(), 0.95)
+    base = emb.where(F.col("vec_id") < cut).select("vec_id", "embedding")
+    search = getattr(similarity, f"knn_{family}")
+
+    def point(qid):
+        return emb.where(F.col("vec_id") == qid).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("query_vec"),
+        )
+
+    # warm the build-time artifacts (centroids, codes, rerank count)
+    search(base, point(cut), 10).collect()
+    built = []
+    ivf_probes = similarity._ivf_probes
+
+    def counting(*a, **kw):
+        built.append(1)
+        return ivf_probes(*a, **kw)
+
+    monkeypatch.setattr(similarity, "_ivf_probes", counting)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"construct.{family}"
+    # a query id no other test collects, so the batch memo misses
+    qid = cut + 1 + ["ivfpq", "ivfsq"].index(family)
+    snap = caches.snapshot()
+    sc.setJobGroup(group, "bounded point construction")
+    try:
+        df = search(base, point(qid), 10)
+        added = caches.added_since(snap)
+        sc.setJobGroup(f"{group}.collect", "bounded point collect")
+        assert len(df.collect()) == 10
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store applies listener events in order and
+    # asynchronously: once the collect's jobs show up finished, every
+    # construction job has been recorded
+    deadline = time.monotonic() + 30
+    while True:
+        done = [
+            tracker.getJobInfo(j)
+            for j in tracker.getJobIdsForGroup(f"{group}.collect")
+        ]
+        if done and all(i is not None and i.status == "SUCCEEDED" for i in done):
+            break
+        assert time.monotonic() < deadline, "collect jobs never finished"
+        time.sleep(0.01)
+    assert len(tracker.getJobIdsForGroup(group)) == 1
+    assert len(added) <= 1
+    assert built == []
+
+    monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 0)
+    assert len(search(base, point(qid + 2), 10).collect()) == 10
+    assert built

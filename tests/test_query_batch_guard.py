@@ -3,8 +3,8 @@
 The Arrow pair kernel ships the query batch to the driver and into task
 closures — sane only for a bounded serving batch. These tests pin the
 guard: an oversized query frame must produce the pure-Catalyst fallback
-plan (no driver collect, no Arrow kernel node, no broadcast of the
-oversized side), and the fallback must be value-identical to the kernel
+plan (no batch kept on the driver, no Arrow kernel node, no broadcast
+of the oversized side), and the fallback must be value-identical to the kernel
 on the fixture workloads (so driver hashes cannot move).
 """
 
@@ -34,8 +34,8 @@ def _splits(spark, embeddings):
 def _oversized_queries(spark, embeddings, nrows):
     """A query frame that is structurally valid but larger than any
     serving batch — spark.range with a literal vector, built lazily, so
-    constructing the PLAN is cheap; the guard only ever runs a count on
-    it."""
+    constructing the PLAN is cheap; the guard collects at most MAX+1 of
+    its rows and keeps none of them."""
     vec = [
         float(x)
         for x in embeddings.where(F.col("vec_id") == 0)
@@ -56,8 +56,12 @@ def test_oversized_batch_gets_catalyst_plan_no_collect(spark, embeddings):
     plan = explain.formatted_plan(out)
     # pure-Catalyst fallback: no Arrow kernel node in the plan
     assert "PythonMapInArrow" not in plan and "MapInArrow" not in plan
-    # the oversized frame was never collected to the driver
-    assert dict(knn._QUERY_BATCH_CACHE) == before
+    # no batch of the oversized frame is kept on the driver: the memo
+    # holds at most its oversized marker
+    added = [
+        v for k, v in knn._QUERY_BATCH_CACHE.items() if k not in before
+    ]
+    assert all(v is None for v in added)
     # and the oversized (right/query) side is never the broadcast side —
     # with the hint dropped, Spark is free to broadcast the SMALL base
     # side instead (BuildLeft at fixture scale: correct), but must not
@@ -94,10 +98,8 @@ def test_fallback_values_match_kernel(spark, embeddings, monkeypatch):
     base, qs = _splits(spark, embeddings)
     kernel = knn.knn_exact_batch(base, qs, 10).collect()
     monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 1)
-    knn._QUERY_COUNT_CACHE.clear()
     fallback = knn.knn_exact_batch(base, qs, 10).collect()
     assert sorted(map(tuple, kernel)) == sorted(map(tuple, fallback))
-    knn._QUERY_COUNT_CACHE.clear()
 
 
 def test_fallback_values_match_kernel_ivf(spark, embeddings, monkeypatch):
@@ -109,12 +111,10 @@ def test_fallback_values_match_kernel_ivf(spark, embeddings, monkeypatch):
         base, qs, 10, cents=cents, assign=assign, cell_vectors=cv
     ).collect()
     monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 1)
-    knn._QUERY_COUNT_CACHE.clear()
     fallback = similarity.knn_ivf(
         base, qs, 10, cents=cents, assign=assign, cell_vectors=cv
     ).collect()
     assert sorted(map(tuple, kernel)) == sorted(map(tuple, fallback))
-    knn._QUERY_COUNT_CACHE.clear()
 
 
 def test_fallback_values_match_kernel_dual_metric(spark, embeddings,
@@ -122,10 +122,8 @@ def test_fallback_values_match_kernel_dual_metric(spark, embeddings,
     base, qs = _splits(spark, embeddings)
     kernel = knn.pair_scores(base, qs, dual_metric=True).collect()
     monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 1)
-    knn._QUERY_COUNT_CACHE.clear()
     fallback = knn.pair_scores(base, qs, dual_metric=True).collect()
     assert sorted(map(tuple, kernel)) == sorted(map(tuple, fallback))
-    knn._QUERY_COUNT_CACHE.clear()
 
 
 def test_oversized_with_cells_routing_raises(spark, embeddings):
@@ -140,10 +138,11 @@ def test_query_batch_count_is_limit_bounded(spark):
     exact for frames at or under QUERY_BATCH_MAX, capped at MAX+1 above
     it (the guard only compares against MAX, so a frame just over the
     threshold must not pay a full extra scan)."""
-    small = spark.range(37).select(F.col("id").alias("query_id"))
+    vec = F.array(F.lit(1.0)).alias("query_vec")
+    small = spark.range(37).select(F.col("id").alias("query_id"), vec)
     assert knn.query_batch_count(small) == 37
     big = spark.range(knn.QUERY_BATCH_MAX + 500_000).select(
-        F.col("id").alias("query_id")
+        F.col("id").alias("query_id"), vec
     )
     c = knn.query_batch_count(big)
     assert c == knn.QUERY_BATCH_MAX + 1  # capped, still > MAX
@@ -157,16 +156,17 @@ def test_count_guard_recounts_when_staging_dir_grows(spark, tmp_path):
     includes an input-file snapshot and the guard re-counts after the
     directory grows."""
     staging = str(tmp_path / "staging")
-    spark.range(10).select(F.col("id").alias("query_id")).write.parquet(
+    vec = F.array(F.lit(1.0)).alias("query_vec")
+    spark.range(10).select(F.col("id").alias("query_id"), vec).write.parquet(
         staging
     )
-    first = spark.read.parquet(staging).select("query_id")
+    first = spark.read.parquet(staging).select("query_id", "query_vec")
     assert knn.query_batch_count(first) == 10
     # the staging dir grows between calls (a new micro-batch lands)
     spark.range(100, 125).select(
-        F.col("id").alias("query_id")
+        F.col("id").alias("query_id"), vec
     ).write.mode("append").parquet(staging)
-    second = spark.read.parquet(staging).select("query_id")
+    second = spark.read.parquet(staging).select("query_id", "query_vec")
     # the hazard precondition this test exists for: when the two plans
     # hash identically, only the file snapshot can distinguish them
     if first.semanticHash() == second.semanticHash():
@@ -187,15 +187,15 @@ def test_collected_batch_cache_recollects_when_staging_dir_grows(
         F.array(F.lit(1.0), F.lit(2.0)).alias("query_vec"),
     ).write.parquet(staging)
     first = spark.read.parquet(staging)
-    got1 = knn._collected_queries(first, "query_id", "query_vec")
-    assert len(got1) == 5
+    got1 = knn._collected_batch(first, "query_id", "query_vec")
+    assert len(got1.qids) == 5
     spark.range(100, 103).select(
         F.col("id").alias("query_id"),
         F.array(F.lit(3.0), F.lit(4.0)).alias("query_vec"),
     ).write.mode("append").parquet(staging)
     second = spark.read.parquet(staging)
-    got2 = knn._collected_queries(second, "query_id", "query_vec")
-    assert len(got2) == 8, "cache served the stale pre-growth batch"
+    got2 = knn._collected_batch(second, "query_id", "query_vec")
+    assert len(got2.qids) == 8, "cache served the stale pre-growth batch"
 
 
 def test_fallback_values_match_kernel_sq_adc(spark, embeddings, monkeypatch):
@@ -208,10 +208,8 @@ def test_fallback_values_match_kernel_sq_adc(spark, embeddings, monkeypatch):
     base = base.select("vec_id", "embedding")
     kernel = similarity.knn_sq_rerank(base, qs, 10).collect()
     monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 1)
-    knn._QUERY_COUNT_CACHE.clear()
     fallback = similarity.knn_sq_rerank(base, qs, 10).collect()
     assert sorted(map(tuple, kernel)) == sorted(map(tuple, fallback))
-    knn._QUERY_COUNT_CACHE.clear()
 
 
 def test_fallback_values_match_kernel_pq_adc(spark, embeddings, monkeypatch):
@@ -227,10 +225,8 @@ def test_fallback_values_match_kernel_pq_adc(spark, embeddings, monkeypatch):
     base = base.select("vec_id", "embedding")
     kernel = similarity.knn_pq_adc(base, qs, 10).collect()
     monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 1)
-    knn._QUERY_COUNT_CACHE.clear()
     fallback = similarity.knn_pq_adc(base, qs, 10).collect()
     assert sorted(map(tuple, kernel)) == sorted(map(tuple, fallback))
-    knn._QUERY_COUNT_CACHE.clear()
 
 
 @pytest.mark.parametrize("family", ["ivfpq", "ivfsq", "ivfbq2"])
@@ -266,7 +262,6 @@ def test_fallback_values_match_kernel_ivf_codec(
         assert "_score(" in explain.formatted_plan(df), (family, name)
         kernel[name] = df.collect()
     monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 1)
-    knn._QUERY_COUNT_CACHE.clear()
     for name, kw in variants.items():
         df = search(base, qs, 10, **kw)
         assert "_score(" not in explain.formatted_plan(df), (family, name)
@@ -274,7 +269,6 @@ def test_fallback_values_match_kernel_ivf_codec(
         assert sorted(map(tuple, kernel[name])) == sorted(
             map(tuple, fallback)
         ), (family, name)
-    knn._QUERY_COUNT_CACHE.clear()
 
 
 def test_count_guard_recounts_on_in_place_rewrite(spark, tmp_path):
@@ -294,7 +288,7 @@ def test_count_guard_recounts_on_in_place_rewrite(spark, tmp_path):
     ).coalesce(1).write.parquet(staging)
     first = spark.read.parquet(staging)
     assert knn.query_batch_count(first) == 10
-    assert len(knn._collected_queries(first, "query_id", "query_vec")) == 10
+    assert len(knn._collected_batch(first, "query_id", "query_vec").qids) == 10
 
     # rewrite IN PLACE with the same filenames: build the replacement
     # elsewhere, then copy the new bytes over the old part files
@@ -326,7 +320,7 @@ def test_count_guard_recounts_on_in_place_rewrite(spark, tmp_path):
     assert knn.query_batch_count(second) == 25, (
         "guard served the stale pre-rewrite count"
     )
-    got = knn._collected_queries(second, "query_id", "query_vec")
-    assert len(got) == 25 and got[0][1] == [3.0, 4.0], (
+    got = knn._collected_batch(second, "query_id", "query_vec")
+    assert len(got.qids) == 25 and got.X[0].tolist() == [3.0, 4.0], (
         "cache served the stale pre-rewrite batch"
     )

@@ -1510,11 +1510,10 @@ def test_sq_adc_emit_topk_bounded_emission_is_lossless(spark, embeddings):
     deq = codes.crossJoin(F.broadcast(bounds)).select(
         "vec_id", similarity._sq_deq("codes", "mins", "maxs").alias("deq")
     ).repartition(16)
-    nq = similarity._sq_queries(qs, "query_id", "query_vec")
-    scorer = similarity._sq_scorer()
+    scorer = similarity._sq_scorer("query_vec")
     r = 12
-    full = knn._pair_kernel(deq, nq, scorer)
-    capped = knn._pair_kernel(deq, nq, scorer, emit_topk=r)
+    full = knn._pair_kernel(deq, qs, scorer)
+    capped = knn._pair_kernel(deq, qs, scorer, emit_topk=r)
     assert _window_topr(capped, "ad2", r) == _window_topr(full, "ad2", r)
     n_q = qs.count()
     emitted = capped.count()
@@ -1536,9 +1535,9 @@ def test_sq_adc_emit_topk_bounded_emission_is_lossless(spark, embeddings):
             int(row["centroid_id"])
         )
     capped_r = knn._pair_kernel(
-        deqc, nq, scorer, cells_by_query=routing, emit_topk=r
+        deqc, qs, scorer, cells_by_query=routing, emit_topk=r
     )
-    full_r = knn._pair_kernel(deqc, nq, scorer, cells_by_query=routing)
+    full_r = knn._pair_kernel(deqc, qs, scorer, cells_by_query=routing)
     assert _window_topr(capped_r, "ad2", r) == _window_topr(full_r, "ad2", r)
     assert capped_r.count() <= full_r.count()
 

@@ -175,3 +175,98 @@ def test_late_data_staged_mtimes_are_load_bearing(spark, sf_dir, tmp_path):
         map(tuple, windows.streaming_late_data_counts(spark, sf_dir).collect())
     )
     assert a == b and len(a) > 0
+
+
+def test_drain_state_partitions_restore_conf_at_start(
+    spark, sf_dir, monkeypatch
+):
+    """_drain_to_memory sets spark.sql.shuffle.partitions only around
+    start(): the stream keeps the requested state-partition count (its
+    session clone is taken at start), while the session conf already
+    reads its old value during the drain."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from toy_vector_db_spark.streaming.windows import (
+        _drain_to_memory,
+        _events_stream,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    want = 3 if before != "3" else 2
+    seen = {}
+    drain = StreamingQuery.processAllAvailable
+
+    def spying(self):
+        seen["query"] = self
+        seen["conf"] = spark.conf.get(key)
+        return drain(self)
+
+    monkeypatch.setattr(StreamingQuery, "processAllAvailable", spying)
+    agg = _events_stream(spark, sf_dir).groupBy("event_type").count()
+    out = _drain_to_memory(agg, "complete", state_partitions=want)
+    assert out.count() > 0
+    assert seen["conf"] == before
+    assert spark.conf.get(key) == before
+    ops = seen["query"].lastProgress["stateOperators"]
+    assert ops and all(op["numShufflePartitions"] == want for op in ops)
+
+
+def test_concurrent_drains_keep_their_state_partitions(
+    spark, sf_dir, monkeypatch
+):
+    """More concurrent drains than cores, each asking for its own state
+    partition count: under the drain lock every stream starts with the
+    count it asked for, and the session conf ends where it began."""
+    import sys
+    import threading
+
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from toy_vector_db_spark.streaming.windows import (
+        _drain_to_memory,
+        _events_stream,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    agg = _events_stream(spark, sf_dir).groupBy("event_type").count()
+    seen = {}
+    drain = StreamingQuery.processAllAvailable
+
+    def spying(self):
+        seen[threading.get_ident()] = self
+        return drain(self)
+
+    monkeypatch.setattr(StreamingQuery, "processAllAvailable", spying)
+    n = spark.sparkContext.defaultParallelism + 1
+    want, errors = {}, []
+
+    def run(parts):
+        want[threading.get_ident()] = parts
+        try:
+            _drain_to_memory(agg, "complete", state_partitions=parts)
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [
+            threading.Thread(target=run, args=(p,)) for p in range(1, n + 1)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert spark.conf.get(key) == before
+    assert len(seen) == n
+    for tid, q in seen.items():
+        ops = q.lastProgress["stateOperators"]
+        assert ops and all(
+            op["numShufflePartitions"] == want[tid] for op in ops
+        ), (want[tid], ops)

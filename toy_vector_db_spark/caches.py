@@ -47,14 +47,11 @@ def _cache_dicts() -> list[dict]:
         similarity._CODEC_CACHE,
         similarity._LABEL_HIST_CACHE,
         similarity._PROBE_ROUTING_CACHE,
-        similarity._PQ_LUT_CACHE,
         dedup._PAIRS_CACHE,
         dedup._SEM_BCAST_CACHE,
         hnsw._INDEX_CACHE,
         hnsw._PACKED_EDGE_CACHE,
         knn._QUERY_BATCH_CACHE,
-        knn._QUERY_COUNT_CACHE,
-        knn._QLABEL_MAP_CACHE,
         ingest._INGEST_CACHE,
         stream_windows._STREAM_SCHEMA_CACHE,
         registry._N_CACHE,
@@ -72,8 +69,8 @@ def snapshot() -> list[tuple[dict, frozenset]]:
 
 def _unpersist(value: Any) -> None:
     # cache values are DataFrames, tuples of DataFrames, broadcast
-    # handles, plain lists/ints or path strings; release what Spark is
-    # holding storage for
+    # handles, plain lists/ints, collected query batches or path
+    # strings; release what Spark is holding storage for
     from pyspark import Broadcast
     from pyspark.sql import DataFrame
 

@@ -213,6 +213,15 @@ def _scored_product(
 # here; the probe-join form in similarity.knn_ivf), which are
 # bit-parity-tested against the kernel, so the fallback changes the plan
 # shape, never the values.
+#
+# The guard and the bounded leg share ONE Spark action per query frame:
+# ``_collected_batch`` runs limit(QUERY_BATCH_MAX + 1).toArrow() once
+# and the row count, the query matrix, the IVF probe routing, the PQ
+# LUTs and the label map are all numpy steps over that batch. An
+# oversized frame therefore pays a ≤ MAX+1-row Arrow collect before it
+# falls back (0.33-0.51 s at 100k-150k × 64 dims on 4 cores, against
+# 0.09-0.16 s for a bare limit-count) — small beside scoring ≥ 100k
+# queries, and it buys bounded requests their single construction job.
 QUERY_BATCH_MAX = 100_000
 
 # _TopRAcc's worst-case per-task buffer is nq × max(2R, R+8192) rows ×
@@ -234,9 +243,8 @@ def emit_topk_within_budget(n_q: int, r: int) -> bool:
 def _row_mask(qi, n, cells, cell_mask_lists, lab, qlabels):
     """Boolean mask of the batch rows query ``qi`` may score — IVF cell
     routing ∧ in-kernel label equality (round 12, verdict r11 item 2) —
-    or None meaning 'all rows'. A query absent from the qlabel dict
-    (None entry) matches nothing: inner-join semantics, identical to
-    the Catalyst post-filter form the kernels replaced."""
+    or None meaning 'all rows'. A query whose label is null matches
+    nothing: the equality semantics of the Catalyst leg."""
     m = None
     if cell_mask_lists is not None:
         m = np.isin(cells, cell_mask_lists[qi])
@@ -249,22 +257,6 @@ def _row_mask(qi, n, cells, cell_mask_lists, lab, qlabels):
         )
         m = lm if m is None else (m & lm)
     return m
-
-
-# (appId, queries plan hash, input-file snapshot) → UPPER-BOUNDED row
-# count backing the guard: one scalar count job per distinct query frame
-# per session (the _rerank_budget cached-count idiom). Round-8 (advice
-# item 4): the count is limit(MAX+1)-bounded — the guard only ever
-# compares against QUERY_BATCH_MAX, so a frame just over the threshold
-# costs a short-circuit partial scan, not a full extra pass. Round 10
-# (verdict r9 item 5): the key now includes a fingerprint of the frame's
-# backing FILES, closing the staleness hazard the round-9 CAVEAT
-# documented — a serving process re-reading a GROWING staging dir gets a
-# fresh plan whose semantic hash can equal the old one (the relation
-# hashes by path, not by file list), and the stale count could silently
-# keep the collect path past QUERY_BATCH_MAX. Re-listing is driver-side
-# plan metadata (df.inputFiles), not a Spark job.
-_QUERY_COUNT_CACHE: dict[tuple, int] = {}
 
 
 def _input_snapshot(df: DataFrame) -> int:
@@ -307,8 +299,8 @@ def _input_snapshot(df: DataFrame) -> int:
 
 def _frame_key(df: DataFrame, *extra) -> tuple:
     """(appId, plan hash, input-file snapshot, *extra): the memo key of
-    every per-query-frame session cache (counts, collected batches, label
-    maps, probe routing, PQ LUTs)."""
+    every per-query-frame session cache (the collected batches, and the
+    label-aware probe routing)."""
     return (
         df.sparkSession.sparkContext.applicationId,
         df.semanticHash(),
@@ -317,68 +309,88 @@ def _frame_key(df: DataFrame, *extra) -> tuple:
     )
 
 
-def query_batch_count(queries: DataFrame) -> int:
-    """Row count of the query frame, capped at QUERY_BATCH_MAX + 1
-    (exact when ≤ QUERY_BATCH_MAX — limit returns every row there —
-    and 'too big' otherwise, which is all the guard needs)."""
-    key = _frame_key(queries)
-    if key not in _QUERY_COUNT_CACHE:
-        _QUERY_COUNT_CACHE[key] = queries.limit(
-            QUERY_BATCH_MAX + 1
-        ).count()
-    return _QUERY_COUNT_CACHE[key]
+class _QueryBatch:
+    """One collected query frame: ``qids`` (int64 [n]), ``X`` (float64
+    [n, d]) and one Python list per ``extra`` column, plus ``derived`` —
+    what later steps compute from this batch alone (probe routing per
+    (centroid key, nprobe), PQ LUTs per codebook fingerprint), memoized
+    with it so a repeated frame reuses them and a fresh one adds a
+    single cache entry. ``key`` is the batch's memo key."""
+
+    __slots__ = ("key", "qids", "X", "extra", "derived")
+
+    def __init__(self, key, qids, X, extra):
+        self.key = key
+        self.qids = qids
+        self.X = X
+        self.extra = extra
+        self.derived: dict = {}
 
 
-# (appId, queries plan hash, input-file snapshot, cols) → collected
-# query batch. The query side is the BROADCAST side by construction (a
-# query workload, not the corpus — enforced by the QUERY_BATCH_MAX guard
-# above); collecting it driver-side is the same data movement as
-# F.broadcast, cached per session like the centroid/codebook artifacts.
-# Same round-10 staleness fix as _QUERY_COUNT_CACHE: a re-read of a
-# grown staging dir must not serve the OLD collected batch.
-_QUERY_BATCH_CACHE: dict[tuple, list] = {}
+# _frame_key(df, cols…, bound) → _QueryBatch, or None for a frame over
+# QUERY_BATCH_MAX rows (the "oversized" marker, so a repeated oversized
+# frame is not re-collected). The bound is part of the key: changing
+# QUERY_BATCH_MAX misses every earlier entry. The input-file snapshot in
+# _frame_key keeps a re-read of a grown or rewritten staging dir from
+# serving the old batch. The query side is the broadcast side by
+# construction; collecting it is the same data movement as F.broadcast.
+_QUERY_BATCH_CACHE: dict[tuple, "_QueryBatch | None"] = {}
 
 
-def _collected_queries(
-    queries: DataFrame, query_id_col: str, query_vec_col: str
-) -> list[tuple[int, list[float]]]:
-    key = _frame_key(queries, query_id_col, query_vec_col)
+def _collected_batch(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    extra: tuple = (),
+    bounded: bool = True,
+) -> "_QueryBatch | None":
+    """The frame's (id, vec AS array<double>[, extra…]) rows as one
+    ``_QueryBatch``, from ONE Spark action: limit(QUERY_BATCH_MAX +
+    1).toArrow() (Arrow, not Row collect — 4.5× faster at 100k rows,
+    and one job where limit().count() took two). None when the frame
+    holds more than QUERY_BATCH_MAX rows. ``bounded=False`` drops the
+    limit for frames small by construction (a centroid table)."""
+    bound = QUERY_BATCH_MAX if bounded else None
+    key = _frame_key(df, id_col, vec_col, *extra, bound)
     if key not in _QUERY_BATCH_CACHE:
-        _QUERY_BATCH_CACHE[key] = [
-            (int(r[0]), [float(x) for x in r[1]])
-            for r in queries.select(
-                query_id_col, F.col(query_vec_col).cast("array<double>")
-            ).collect()
-        ]
+        sel = df.select(
+            id_col, F.col(vec_col).cast("array<double>"), *extra
+        )
+        t = (sel if bound is None else sel.limit(bound + 1)).toArrow()
+        if bound is not None and t.num_rows > bound:
+            _QUERY_BATCH_CACHE[key] = None
+        else:
+            _QUERY_BATCH_CACHE[key] = _QueryBatch(
+                key,
+                t.column(0).to_numpy().astype(np.int64, copy=False),
+                list_col_to_matrix(t.column(1).combine_chunks()),
+                tuple(t.column(2 + i).to_pylist() for i in range(len(extra))),
+            )
     return _QUERY_BATCH_CACHE[key]
 
 
-_QLABEL_MAP_CACHE: dict[tuple, dict] = {}
+def query_batch_count(
+    queries: DataFrame,
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+) -> int:
+    """Row count of the query frame, capped at QUERY_BATCH_MAX + 1
+    (exact when ≤ QUERY_BATCH_MAX and 'too big' otherwise, which is all
+    the guard needs) — read off the ``_collected_batch`` memo, so the
+    guard and the bounded leg share one Spark action."""
+    b = _collected_batch(queries, query_id_col, query_vec_col)
+    return QUERY_BATCH_MAX + 1 if b is None else len(b.qids)
 
 
-def _collected_qlabel_map(
-    queries: DataFrame, query_id_col: str, qlabel_col: str
-) -> dict:
-    """{query_id: label} for the bounded kernels' in-kernel IDSelector
-    routing — collected from the QUERIES frame itself (the caller joined
-    the query's label on as ``qlabel_col``), under the same
-    QUERY_BATCH_MAX contract as the query vectors (round 13: the label
-    rides the distributed query frame end to end; this collect is the
-    bounded-batch materialization of it, not a separate driver-side
-    source of truth — oversized batches never reach it because the
-    kernels' Catalyst fallbacks filter on the COLUMN instead).
-
-    Memoized per (appId, semanticHash, file snapshot) exactly like
-    _collected_queries (advice r13: the uncached form paid one extra
-    Spark job over the query frame on EVERY bounded filtered serving
-    call); registered in caches._cache_dicts."""
-    key = _frame_key(queries, query_id_col, qlabel_col)
-    if key not in _QLABEL_MAP_CACHE:
-        _QLABEL_MAP_CACHE[key] = {
-            int(r[0]): r[1]
-            for r in queries.select(query_id_col, qlabel_col).collect()
-        }
-    return _QLABEL_MAP_CACHE[key]
+def _seq_mags(X: np.ndarray) -> np.ndarray:
+    """Row L2 norms of X, accumulated left-to-right over the dim axis
+    then sqrt — one rounding per op, no FMA, no pairwise summation: the
+    IEEE sequence of V.magnitude's aggregate fold and DuckDB's
+    list_reduce, bit for bit."""
+    mag = np.zeros(X.shape[0])
+    for j in range(X.shape[1]):
+        mag += X[:, j] * X[:, j]
+    return np.sqrt(mag)
 
 
 class _TopRAcc:
@@ -459,20 +471,15 @@ class _PairScorer(NamedTuple):
     emission loop itself (routing masks, top-R, Arrow output) lives once,
     in ``_pair_kernel``. ``payload`` are the base-side columns the score
     reads (after the id); ``query_vec_col`` is the collected query column;
-    ``prep(queries, qrows)`` turns the collected batch into ``(qids,
-    score)`` where ``score(batch)`` returns one (rows, nq) float64 matrix
-    per ``score_cols`` entry (the first one ranks the top-R cut)."""
+    ``prep(qb)`` turns the collected ``_QueryBatch`` into ``score`` where
+    ``score(batch)`` returns one (rows, nq) float64 matrix per
+    ``score_cols`` entry (the first one ranks the top-R cut)."""
 
     name: str
     payload: tuple
     query_vec_col: str
     score_cols: tuple
     prep: Callable
-
-
-def _query_matrix(qrows) -> tuple[np.ndarray, np.ndarray]:
-    qids = np.array([q[0] for q in qrows], dtype=np.int64)
-    return qids, np.array([q[1] for q in qrows], dtype=np.float64)
 
 
 def _cosine_scorer(
@@ -491,18 +498,15 @@ def _cosine_scorer(
     semantics). ``dual_metric`` adds the polarization-identity euclidean
     ``sqrt(greatest(0, |v|² + |q|² − 2·dot))`` from the same dot pass."""
 
-    def prep(queries, qrows):
-        qids, Q = _query_matrix(qrows)
-        qmags = np.array([_py_magnitude(q[1]) for q in qrows])
+    def prep(qb):
+        Q = qb.X
+        qmags = _seq_mags(Q)
 
         def score(batch):
             X = list_col_to_matrix(batch.column("_vd"))
             n, d = X.shape
-            mag = np.zeros(n)
-            for j in range(d):
-                mag += X[:, j] * X[:, j]
-            mag = np.sqrt(mag)
-            acc = np.zeros((n, len(qids)))
+            mag = _seq_mags(X)
+            acc = np.zeros((n, len(Q)))
             for j in range(d):
                 acc += X[:, j: j + 1] * Q[:, j][None, :]
             sims = acc / (mag[:, None] * qmags[None, :])
@@ -517,7 +521,7 @@ def _cosine_scorer(
                 np.maximum(vm2[:, None] + qm2[None, :] - 2.0 * acc, 0.0)
             )]
 
-        return qids, score
+        return score
 
     return _PairScorer(
         "cosine",
@@ -549,7 +553,7 @@ def _pair_kernel(
     routing allows — the ONE Arrow pair kernel every bounded-batch scorer
     (cosine, PQ ADC, SQ ADC) runs through. The collected query batch
     rides in the closure (the broadcast side by construction; bounded
-    and session-cached via ``_collected_queries`` — callers guard with
+    and session-cached via ``_collected_batch`` — callers guard with
     QUERY_BATCH_MAX first), the base scans distributed with only (id,
     payload[, cell][, label]) crossing into Arrow, and each emitted pair
     row is a few scalars.
@@ -576,12 +580,21 @@ def _pair_kernel(
     schema = f"{query_id_col} long, {id_col} long, " + ", ".join(
         f"{c} double" for c in scorer.score_cols
     )
-    qrows = _collected_queries(queries, query_id_col, scorer.query_vec_col)
-    if not qrows:
-        # empty query batch → empty pair set (np.array([]) would be 1-D
-        # and break the (nq, d) slicing in the scorers)
+    qb = _collected_batch(
+        queries, query_id_col, scorer.query_vec_col,
+        (qlabel_col,) if qlabel_col is not None else (),
+    )
+    if qb is None:
+        raise ValueError(
+            f"the pair kernel needs a bounded query batch (> "
+            f"{QUERY_BATCH_MAX} rows); guard with query_batch_count"
+        )
+    if not len(qb.qids):
+        # empty query batch → empty pair set (a (0, 0) query matrix
+        # would break the (nq, d) slicing in the scorers)
         return base.sparkSession.createDataFrame([], schema)
-    qids, score = scorer.prep(queries, qrows)
+    qids = qb.qids
+    score = scorer.prep(qb)
     nq = len(qids)
     if emit_topk is not None and not emit_topk_within_budget(nq, emit_topk):
         emit_topk = None  # buffer would not fit: stream full emission
@@ -591,10 +604,7 @@ def _pair_kernel(
             np.array(cells_by_query.get(int(qid), []), dtype=np.int64)
             for qid in qids
         ]
-    qlabels = None
-    if qlabel_col is not None:
-        qmap = _collected_qlabel_map(queries, query_id_col, qlabel_col)
-        qlabels = [qmap.get(int(qid)) for qid in qids]
+    qlabels = qb.extra[0] if qlabel_col is not None else None
     cols = [id_col, *scorer.payload]
     if cells_by_query is not None:
         cols.append(cell_col)
@@ -679,15 +689,19 @@ def pair_scores(
     follow ``_pair_kernel``.
 
     GUARD: above QUERY_BATCH_MAX query rows this falls back to the
-    pure-Catalyst ``_scored_product`` form (no driver collect, no
-    broadcast of the oversized side) — bit-identical values, different
-    physical plan. There the label equality references both sides of
-    the product, so Catalyst folds it into the pair-producing join
-    itself and no unfiltered pair row reaches a shuffle."""
+    pure-Catalyst ``_scored_product`` form (no query batch kept on the
+    driver, no broadcast of the oversized side) — bit-identical values,
+    different physical plan. There the label equality references both
+    sides of the product, so Catalyst folds it into the pair-producing
+    join itself and no unfiltered pair row reaches a shuffle."""
     if emit_topk is not None and dual_metric:
         raise ValueError("emit_topk is incompatible with dual_metric")
     _check_label_pair(label_col, qlabel_col)
-    if query_batch_count(queries) > QUERY_BATCH_MAX:
+    qb = _collected_batch(
+        queries, query_id_col, query_vec_col,
+        (qlabel_col,) if qlabel_col is not None else (),
+    )
+    if qb is None:
         if cells_by_query is not None:
             # the caller already holds a per-query routing dict, i.e.
             # it collected the oversized frame itself — that's the

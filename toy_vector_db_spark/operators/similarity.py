@@ -474,16 +474,63 @@ def _ivf_probes(
     )
 
 
+def _centroid_matrix(cents: DataFrame) -> tuple:
+    """(key, centroid ids int64 [C], centroid matrix float64 [C, d]) of a
+    centroid frame (centroid_id, centroid_vec). Session-trained centroids
+    are already on the driver (``_TRAINED_CACHE``); any other frame —
+    the ``centroids_df`` first-K stand-in, injected or frozen centroids
+    — is collected once through ``knn._collected_batch``."""
+    for key, (vals, df) in _TRAINED_CACHE.items():
+        if df is cents:
+            return (
+                ("trained", key),
+                np.array([v[0] for v in vals], dtype=np.int64),
+                np.array([v[1] for v in vals], dtype=np.float64),
+            )
+    cb = KNN._collected_batch(
+        cents, "centroid_id", "centroid_vec", bounded=False
+    )
+    return cb.key, cb.qids, cb.X
+
+
+def _driver_probes(
+    qb: "KNN._QueryBatch", cents: DataFrame, nprobe: int
+) -> dict[int, list]:
+    """{query_id: [centroid_id, …]} — the ``nprobe`` nearest cells of
+    every query in the collected batch ``qb``, ranked in numpy on the
+    driver: the same routing as the Catalyst ``_ivf_probes`` frame, with
+    no Spark job. The op order is ``_ivf_probes``' term by term:
+    magnitudes and dots each accumulate left-to-right over the
+    dimensions (the zip_with fold stops at the shorter vector), then
+    qd = 1 − max(0, dot / (q_mag · c_mag)), ranked by (qd, centroid_id)
+    — array_sort's struct order. Memoized on ``qb`` per (centroid key,
+    nprobe); pinned equal to the collected Catalyst routing in
+    tests/test_driver_routing.py."""
+    ckey, cids, C = _centroid_matrix(cents)
+    rkey = ("probes", ckey, nprobe)
+    if rkey not in qb.derived:
+        Q = qb.X
+        dot = np.zeros((len(Q), len(C)))
+        for j in range(min(Q.shape[1], C.shape[1])):
+            dot += Q[:, j: j + 1] * C[:, j][None, :]
+        qm, cm = KNN._seq_mags(Q), KNN._seq_mags(C)
+        qd = 1.0 - np.maximum(0.0, dot / (qm[:, None] * cm[None, :]))
+        routing: dict[int, list] = {}
+        for i, qid in enumerate(qb.qids):
+            order = np.lexsort((cids, qd[i]))[:nprobe]
+            routing.setdefault(int(qid), []).extend(cids[order].tolist())
+        qb.derived[rkey] = routing
+    return qb.derived[rkey]
+
+
 # (appId, probes plan hash, input snapshot, id col) → {query_id:
-# [centroid_id, ...]} — the driver-side probe routing of a BOUNDED query
-# batch. Round 14: every bounded IVF-family serving call re-collected
-# this per call (one full Spark job over the probe frame — profiled at
-# ~0.5 s of each key's ~1.1 s driver-side construction, more than some
-# keys' executor time). The routing is deterministic given the trained
-# centroids and the query frame, both already session-cached, so it is
-# memoized per (appId, semanticHash, file snapshot) exactly like
-# knn._collected_queries / _collected_qlabel_map; bounded by the same
-# QUERY_BATCH_MAX contract (nq·nprobe ints). Registered in
+# [centroid_id, ...]}: the collected routing of a label-aware
+# ``_ivf_probes_labeled`` frame, whose histogram-guided cell choice stays
+# a Catalyst plan (plain routing is ``_driver_probes``, no Spark job).
+# Deterministic given the build-time histogram, the centroids and the
+# query frame, so it is memoized per (appId, semanticHash, file
+# snapshot) like knn._collected_batch and bounded by the same
+# QUERY_BATCH_MAX contract (nq·cells ints). Registered in
 # caches._cache_dicts.
 _PROBE_ROUTING_CACHE: dict[tuple, dict] = {}
 
@@ -698,24 +745,29 @@ def knn_ivf(
         cents = centroids_df(base, n_centroids, id_col, vec_col)
 
     # probe routing lands driver-side (nq×nprobe scalars — the query
-    # batch is bounded by construction): the union of probed cells
-    # becomes a LITERAL IN-filter on the cell column — on the written
-    # cell-partitioned layout that is static partition pruning, stronger
-    # than the DPP the broadcast-join form relied on — and the per-query
-    # cell sets route inside the scoring kernel, so a base row is scored
-    # only against the queries probing its cell (round 6; the previous
-    # form joined probes then evaluated an interpreted fold per pair —
-    # ~25 µs/pair vs ~1 µs in the vectorized kernel, bit-identical).
-    probes = _ivf_probes(queries, cents, nprobe, query_id_col, query_vec_col)
-    if KNN.query_batch_count(queries) > KNN.QUERY_BATCH_MAX:
+    # batch is bounded by construction), ranked in numpy from the one
+    # collected query batch (_driver_probes, no Spark job): the union of
+    # probed cells becomes a LITERAL IN-filter on the cell column — on
+    # the written cell-partitioned layout that is static partition
+    # pruning, stronger than the DPP the broadcast-join form relied on —
+    # and the per-query cell sets route inside the scoring kernel, so a
+    # base row is scored only against the queries probing its cell
+    # (round 6; the previous form joined probes then evaluated an
+    # interpreted fold per pair — ~25 µs/pair vs ~1 µs in the vectorized
+    # kernel, bit-identical).
+    qb = KNN._collected_batch(queries, query_id_col, query_vec_col)
+    if qb is None:
         # GUARD (round 7, verdict item 4): a corpus-sized query frame must
-        # not route through the driver (nq×nprobe rows collected below).
-        # Fallback: join the probe frame to the cell table on centroid_id
-        # — no broadcast hint on either side (the query side is big; AQE
-        # picks the join strategy), distance inline with the same hoisted
-        # magnitudes, identical values. The probed-cells scan filter is
-        # still applied: the DISTINCT probed cell set is bounded by C
+        # not route through the driver. Fallback: the Catalyst probe
+        # frame joined to the cell table on centroid_id — no broadcast
+        # hint on either side (the query side is big; AQE picks the join
+        # strategy), distance inline with the same hoisted magnitudes,
+        # identical values. The probed-cells scan filter is still
+        # applied: the DISTINCT probed cell set is bounded by C
         # (= n_centroids, 16), not by nq, so that collect stays scalar.
+        probes = _ivf_probes(
+            queries, cents, nprobe, query_id_col, query_vec_col
+        )
         probed_cells = sorted(
             int(r[0])
             for r in probes.select("centroid_id").distinct().collect()
@@ -732,14 +784,14 @@ def knn_ivf(
             query_id_col, id_col, "dist"
         )
     else:
-        cells_by_query = _collected_probe_routing(probes, query_id_col)
+        cells_by_query = _driver_probes(qb, cents, nprobe)
         probed_cells = sorted(
             {c for cs in cells_by_query.values() for c in cs}
         )
 
         scored = KNN.pair_scores(
             cell_vectors.where(_in_cells(probed_cells)),
-            queries.select(query_id_col, query_vec_col),
+            queries,
             id_col, vec_col, query_id_col, query_vec_col,
             cells_by_query=cells_by_query,
             # the next step is the per-query top-k window with no
@@ -964,11 +1016,7 @@ def _pq_subspace_d2(X: np.ndarray, b_arr: np.ndarray) -> list:
     np.cumsum over the subspace slice is the same sequential (x−y)² left
     fold (0.0 + x₁ ≡ x₁) that aggregate(zip_with(...)) and DuckDB's
     list_sum evaluate."""
-    n, d = X.shape
-    mag = np.zeros(n)
-    for j in range(d):
-        mag += X[:, j] * X[:, j]
-    nv = X / np.sqrt(mag)[:, None]
+    nv = X / KNN._seq_mags(X)[:, None]
     sub = b_arr.shape[2]
     out = []
     for m in range(b_arr.shape[0]):
@@ -1157,52 +1205,26 @@ def _attach_labels(
     )
 
 
-# (appId, queries plan hash, input snapshot, cols, books fingerprint) →
-# (qids int64 array, [per-subspace (n_q, K) LUT arrays]). Round 14: every
-# bounded PQ serving call rebuilt the ADC lookup tables driver-side —
-# profiled at 0.18-0.28 s of numpy (the parity cumsum fold over an
-# (n_q, K, sub) transient) per call — although they are deterministic
-# from the collected query batch and the trained codebooks, both already
-# session-cached. Memoized per the _collected_queries key plus a content
-# fingerprint of the codebooks (books come from _PQ_BOOKS_CACHE, but a
-# frozen-quantizer caller may pass its own list — fingerprinting the
-# CONTENT, not the object id, so a caller with different codebooks can
-# never hit another quantizer's entry). Round 15 (advice r14): the
-# fingerprint is the array shape + a sha256 digest of the bytes — the
-# round-14 hash(bytes) was Python's salted 64-bit hash, under which a
-# collision (improbable, not impossible) would have silently served
-# another codebook's LUTs. Bounded by the same QUERY_BATCH_MAX contract
-# as the query batch itself. Registered in caches._cache_dicts.
-_PQ_LUT_CACHE: dict[tuple, tuple] = {}
-
-
-def _collected_pq_luts(
-    queries: DataFrame,
-    books: list,
-    query_id_col: str,
-    query_vec_col: str,
-) -> tuple:
+def _pq_luts(qb: "KNN._QueryBatch", books: list) -> list:
+    """The ADC lookup tables of the collected query batch ``qb`` under
+    ``books``: per subspace, the (n_q, K) squared distances — the
+    ``_adc_lut_frame`` kernel's op sequence on the same float64 inputs.
+    Memoized on ``qb`` (round 14: rebuilding them cost 0.18-0.28 s of
+    numpy per bounded PQ call) under a CONTENT fingerprint of the books,
+    the array shape + a sha256 digest of the bytes (round 15, advice
+    r14): a frozen-quantizer caller may pass its own list, and neither
+    the object id nor Python's salted 64-bit hash may ever hand one
+    codebook's LUTs to another."""
     b_arr = np.array(books)  # (M, K, sub)
-    key = KNN._frame_key(
-        queries,
-        query_id_col,
-        query_vec_col,
-        b_arr.shape,
-        hashlib.sha256(b_arr.tobytes()).digest(),
-    )
-    if key not in _PQ_LUT_CACHE:
-        qids, X = KNN._query_matrix(
-            KNN._collected_queries(queries, query_id_col, query_vec_col)
-        )
-        # the _adc_lut_frame kernel's op sequence on the same float64
-        # inputs
-        _PQ_LUT_CACHE[key] = (qids, _pq_subspace_d2(X, b_arr))
-    return _PQ_LUT_CACHE[key]
+    key = ("pq_luts", b_arr.shape, hashlib.sha256(b_arr.tobytes()).digest())
+    if key not in qb.derived:
+        qb.derived[key] = _pq_subspace_d2(qb.X, b_arr)
+    return qb.derived[key]
 
 
 def _pq_scorer(books: list, query_id_col: str, query_vec_col: str):
     """PQ ADC as a ``knn._pair_kernel`` scorer: the collected query
-    batch's LUTs (``_collected_pq_luts``) ride in the closure, so the
+    batch's LUTs (``_pq_luts``) ride in the closure, so the
     serving plan has no query-side Python stage and no LUT broadcast
     join (that form cost ~0.75 s of knn_ivfpq's 2.3 s at sf0.1).
     BIT-IDENTICAL to ``_adc_lut_frame`` ⋈ codes + ``_adc_expr`` (asserted
@@ -1210,18 +1232,17 @@ def _pq_scorer(books: list, query_id_col: str, query_vec_col: str):
     sequence, and the per-candidate sum accumulates the M lookups in m
     order from 0.0 — exactly _adc_expr's left fold."""
 
-    def prep(queries, qrows):
-        qids, luts = _collected_pq_luts(
-            queries, books, query_id_col, query_vec_col
-        )
+    def prep(qb):
+        luts = _pq_luts(qb, books)
+        nq = len(qb.qids)
 
         def score(batch):
-            acc = np.zeros((batch.num_rows, len(qids)))
+            acc = np.zeros((batch.num_rows, nq))
             for m, lut in enumerate(luts):
                 acc += lut[:, batch.column(f"c{m}").to_numpy()].T
             return [acc]
 
-        return qids, score
+        return score
 
     return KNN._PairScorer(
         "pq", tuple(f"c{m}" for m in range(len(books))), query_vec_col,
@@ -1597,31 +1618,32 @@ def _sq_deq(codes: str, mins: str, maxs: str) -> "F.Column":
     )
 
 
-def _sq_scorer():
+def _sq_scorer(query_vec_col: str):
     """SQ ADC as a ``knn._pair_kernel`` scorer over the dequantized
-    ``deq`` rows and the collected normalized queries ``qnv`` (normalized
-    by Catalyst, so there is no normalization drift to re-prove; the
+    ``deq`` rows and the collected queries, normalized in numpy (the
     interpreted fold measured ~10 µs/pair, the kernel ~1 µs).
-    BIT-IDENTICAL to the ``_sq_dist`` fold (asserted in
-    tests/test_knn_kernel.py): ``acc += (x_j − y_j)·(x_j − y_j)`` one
+    BIT-IDENTICAL to the ``_sq_dist`` fold over ``_sq_queries``' ``qnv``
+    (asserted in tests/test_knn_kernel.py): the normalization is
+    ``_normalize``'s — a left-to-right magnitude fold, sqrt, one divide
+    per element — and ``acc += (x_j − y_j)·(x_j − y_j)`` runs one
     dimension at a time in j order from 0.0 — one subtract, one
     multiply, one add per dim, no FMA, no pairwise summation."""
 
-    def prep(queries, qrows):
-        qids, Q = KNN._query_matrix(qrows)
+    def prep(qb):
+        Q = qb.X / KNN._seq_mags(qb.X)[:, None]
 
         def score(batch):
             D = list_col_to_matrix(batch.column("deq"))
             n, d = D.shape
-            acc = np.zeros((n, len(qids)))
+            acc = np.zeros((n, len(Q)))
             for j in range(d):
                 t = D[:, j: j + 1] - Q[:, j][None, :]
                 acc += t * t
             return [acc]
 
-        return qids, score
+        return score
 
-    return KNN._PairScorer("sq", ("deq",), "qnv", ("ad2",), prep)
+    return KNN._PairScorer("sq", ("deq",), query_vec_col, ("ad2",), prep)
 
 
 def knn_sq_rerank(
@@ -1968,7 +1990,7 @@ _SQ = FineCodec(
     scan=lambda codes, bounds: _decoded(
         codes, bounds, _sq_deq("codes", "mins", "maxs"), "deq"
     ),
-    kernel=lambda bounds, q, qi, qv: (_sq_queries(q, qi, qv), _sq_scorer()),
+    kernel=lambda bounds, q, qi, qv: (q, _sq_scorer(qv)),
     catalyst=lambda bounds, q, qi, qv: (
         _sq_queries(q, qi, qv), _sq_dist("deq", "qnv")
     ),
@@ -2116,39 +2138,49 @@ def _candidates(
     id_col: str,
     query_id_col: str,
     query_vec_col: str,
+    cents: DataFrame | None = None,
+    nprobe: int = N_PROBE,
 ) -> DataFrame:
     """(query_id, id, codec.score_col) candidate pairs for a per-query
     top-``r`` cut — the fine-scan step of every compressed-index search.
-    ``probes`` (IVF) restricts each query to its probed cells; None (a
-    flat scan) scores every row of ``scan``.
+    IVF (``cents`` given) restricts each query to its ``nprobe`` nearest
+    cells, or to the cells of a prebuilt label-aware ``probes`` frame;
+    a flat scan (no ``cents``) scores every row of ``scan``.
 
     BOUNDED (≤ knn.QUERY_BATCH_MAX query rows, codec with a kernel):
     ``knn._pair_kernel`` with the codec's scorer, emitting each
-    partition's top ``r`` per query. The IVF probe routing is collected
-    driver-side (nq·nprobe ints, session-memoized): the union of probed
-    cells becomes a literal IN-filter on the scan and each row is scored
-    only against the queries probing its cell.
+    partition's top ``r`` per query. The query frame is collected once
+    (``knn._collected_batch``, which is also the guard) and the IVF
+    routing is ranked from it in numpy (``_driver_probes``; a ``probes``
+    frame is collected instead): the union of probed cells becomes a
+    literal IN-filter on the scan and each row is scored only against
+    the queries probing its cell.
 
     CATALYST (an oversized batch, or a codec without a kernel): the
     codec's score expression over scan ⋈ query frame — through the probe
     frame on centroid_id for IVF, a cross product when flat — with no
-    query collect. The query side broadcasts only when the codec has no
-    kernel (BQ, at every batch size); otherwise nothing is broadcast,
-    and IVF's only driver collect is the DISTINCT probed-cell set —
-    bounded by C, not nq — that prunes the scan. Bit-identical values,
-    different physical plan.
+    query batch kept on the driver (the guard's collect stops at
+    QUERY_BATCH_MAX + 1 rows and keeps none). The query side broadcasts
+    only when the codec has no kernel (BQ, at every batch size);
+    otherwise nothing is broadcast, and IVF's only other driver collect
+    is the DISTINCT probed-cell set — bounded by C, not nq — that prunes
+    the scan. Bit-identical values, different physical plan.
 
     ``labels``/``query_labels`` (the IDSelector): the stored label rides
     the scan, the query's label the query-side frame (``_attach_labels``),
     so the equality runs inside the kernel's row mask or the
     pair-producing join — no leg shuffles an unfiltered pair frame."""
     label_name = qlabel_name = None
-    if codec.kernel is not None and (
-        KNN.query_batch_count(queries) <= KNN.QUERY_BATCH_MAX
-    ):
+    qb = None
+    if codec.kernel is not None:
+        qb = KNN._collected_batch(queries, query_id_col, query_vec_col)
+    if qb is not None:
         cells_by_query = None
-        if probes is not None:
-            cells_by_query = _collected_probe_routing(probes, query_id_col)
+        if cents is not None:
+            cells_by_query = (
+                _driver_probes(qb, cents, nprobe) if probes is None
+                else _collected_probe_routing(probes, query_id_col)
+            )
             probed = sorted({c for cs in cells_by_query.values() for c in cs})
             scan = scan.where(_in_cells(probed))
         q_in, scorer = codec.kernel(
@@ -2170,6 +2202,10 @@ def _candidates(
         state, queries, query_id_col, query_vec_col
     )
     side = q_frame
+    if cents is not None and probes is None:
+        probes = _ivf_probes(
+            queries, cents, nprobe, query_id_col, query_vec_col
+        )
     if probes is not None:
         side = probes.select(query_id_col, "centroid_id")
         if codec.kernel is not None:
@@ -2223,9 +2259,10 @@ def _codec_search(
 
       1. coarse probe (``ivf``): each query probes its ``nprobe``
          nearest cells of ``cents`` (default: the session-trained
-         centroids of ``base``; ``_ivf_probes``), or with
-         ``label_hist`` the cells holding its label
-         (``_ivf_probes_labeled``). A flat search skips it.
+         centroids of ``base``; ``_driver_probes`` on a bounded batch,
+         ``_ivf_probes`` otherwise), or with ``label_hist`` the cells
+         holding its label (``_ivf_probes_labeled``). A flat search
+         skips it.
       2. fine scan: the codec scores ``codes`` (default: the session
          build over ``base``) and keeps the top R per query
          (``_candidates``, then one (score, id) window) — R =
@@ -2272,13 +2309,10 @@ def _codec_search(
             queries, cents, query_labels, label_hist, nprobe,
             int(rerank_r), query_id_col, query_vec_col,
         )
-    elif ivf:
-        probes = _ivf_probes(
-            queries, cents, nprobe, query_id_col, query_vec_col
-        )
     cand = _candidates(
         codec, codec.scan(codes, state), state, queries, rerank_r, probes,
         labels, query_labels, id_col, query_id_col, query_vec_col,
+        cents=cents if ivf else None, nprobe=nprobe,
     )
     wr = Window.partitionBy(query_id_col).orderBy(
         F.col(codec.score_col).asc(), F.col(id_col).asc()

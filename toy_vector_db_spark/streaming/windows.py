@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -108,6 +109,13 @@ def _state_partitions(spark: SparkSession, staged_dir: str) -> int:
     return max(1, min(spark.sparkContext.defaultParallelism, int(want)))
 
 
+# Held across set → start() → restore of spark.sql.shuffle.partitions in
+# _drain_to_memory, so no drain starts while the session-wide conf holds
+# another drain's state-partition count. Other users of the session can
+# still see that count during the start() window.
+_DRAIN_CONF_LOCK = threading.Lock()
+
+
 def _drain_to_memory(
     agg: DataFrame, mode: str, state_partitions: int | None = None
 ) -> DataFrame:
@@ -116,30 +124,28 @@ def _drain_to_memory(
 
     ``state_partitions`` (round 15): the shuffle-partition conf in force
     at ``start()`` becomes the query's state-store partition count for
-    its whole lifetime; set it for the stream only and restore the
-    session value afterwards. Aggregation results are partition-count
-    independent (the driver already verifies these queries at several
-    core counts)."""
+    its whole lifetime. ``start()`` runs the query on a clone of the
+    session taken then, so the session value is restored right after
+    it — the drain itself runs with the session conf untouched — and a
+    module lock serializes set → start → restore across threads.
+    Aggregation results are partition-count independent (the driver
+    already verifies these queries at several core counts)."""
     spark = agg.sparkSession
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    prev = None
-    if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            agg.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
+    writer = agg.writeStream.outputMode(mode).format("memory").queryName(name)
+    key = "spark.sql.shuffle.partitions"
+    with _DRAIN_CONF_LOCK:
+        prev = spark.conf.get(key)
+        if state_partitions is not None:
+            spark.conf.set(key, str(state_partitions))
         try:
-            q.processAllAvailable()
+            q = writer.start()
         finally:
-            q.stop()
+            spark.conf.set(key, prev)
+    try:
+        q.processAllAvailable()
     finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        q.stop()
     return spark.table(name)
 
 
