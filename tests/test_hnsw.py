@@ -183,23 +183,40 @@ def test_local_hnsw_exactish_on_small_set():
     assert got == [int(w) for w in want]
 
 
-def test_packed_index_guards_mismatched_artifacts(spark, embeddings, split):
-    """Round 11: serving cogroups each shard's vectors with its CSR-
-    PACKED edge row; a packed row from a DIFFERENT build (stale cache,
-    post-compaction cells with pre-compaction pack) must raise the
-    consistency handshake, not silently walk local indices into the
-    wrong rows."""
+def test_packed_index_guards_mismatched_artifacts(
+    spark, embeddings, split, monkeypatch
+):
+    """A packed serving row is self-contained (ids, vectors, CSR), so a
+    search can no longer pair one build's vectors with another build's
+    edges. Two guards remain. Packing a mismatched (cells, edges) pair
+    raises in _csr_from_edges. And the search kernel checks every row's
+    ``ids_fp``, ``n`` and indptr lengths against the row's own ids on
+    both legs (bounded map and Catalyst cogroup), so a tampered or
+    stale row raises instead of walking local indices into the wrong
+    vectors."""
     base, qs = split
     parted, edges = hnsw.cached_index(base, "#pack_guard", 4)
-    # a packed frame built against a DIFFERENT vector set (one row
-    # dropped) — fingerprints cannot match
+    # vectors of one build (a row dropped), edges of another
     parted_minus = parted.where(F.col("vec_id") != 0)
-    bad_packed = hnsw.pack_index(
-        parted_minus, edges.where(F.col("src") != 0).where(F.col("dst") != 0)
-    )
-    routed = hnsw._replicate_queries(qs, parted, "query_id", "query_vec")
-    with pytest.raises(Exception, match="packed index does not match"):
-        hnsw._prebuilt_search(
-            parted, bad_packed, routed, 5, 100,
-            "vec_id", "embedding", "query_id", "query_vec",
-        ).collect()
+    with pytest.raises(Exception, match="absent from this shard"):
+        hnsw.pack_index(parted_minus, edges).collect()
+
+    packed = hnsw.pack_index(parted, edges)
+    tampered = {
+        "ids_fp": packed.withColumn("ids_fp", F.lit(b"\x00" * 8)),
+        "n": packed.withColumn("n", F.col("n") + 1),
+        "indptr": packed.withColumn(
+            "l0_indptr", F.expr("substring(l0_indptr, 9)")
+        ),
+    }
+    bounded = knn.QUERY_BATCH_MAX
+    for bad in tampered.values():
+        for batch_max in (bounded, 0):
+            monkeypatch.setattr(knn, "QUERY_BATCH_MAX", batch_max)
+            with pytest.raises(
+                Exception, match="does not match its own ids"
+            ):
+                hnsw._prebuilt_search(
+                    parted, bad, qs, 5, 100,
+                    "vec_id", "query_id", "query_vec",
+                ).collect()

@@ -658,3 +658,93 @@ def test_delete_serving_ef_widens_past_tombstone_mass(spark, embeddings):
         evaluation.evaluate_recall(res, exact).agg(F.avg("recall")).first()[0]
     )
     assert rec >= 0.9, f"deleted-graph recall under heavy tombstones = {rec}"
+
+
+def _hex_rows(df):
+    return sorted(
+        (r["query_id"], r["vec_id"], r["dist"].hex(), r["rank"])
+        for r in df.collect()
+    )
+
+
+def test_bounded_and_catalyst_legs_return_identical_rows(
+    spark, embeddings, monkeypatch
+):
+    """The bounded search leg (one map over the packed rows) and the
+    Catalyst leg (QUERY_BATCH_MAX = 0: a cogroup of the packed rows with
+    the routed queries; every tombstone set is then too large to
+    collect, so that leg counts, widens the cut and anti-joins) return
+    identical (query_id, vec_id, dist bits, rank) rows for every search
+    shape: plain, tombstoned with k + |S| ≤ ef (count skipped) and
+    k + |S| > ef (count run), exhaustive, and IVF-routed plain and
+    tombstoned. The heavy set holds every query's ef nearest ids, so a
+    beam left at ef (a count wrongly skipped) holds almost no live row
+    on the one-shard index and starves the queries below k."""
+    n = embeddings.count()
+    cut = split_count(n, 0.95)
+    base = embeddings.where(F.col("vec_id") < cut)
+    n_base = base.count()
+    qs = embeddings.where(F.col("vec_id") >= cut).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+    )
+    k, ef = 10, 40
+    light = base.select("vec_id").where(F.col("vec_id") % 97 == 0)
+    heavy = knn.knn_exact_batch(base, qs, ef).select("vec_id").distinct()
+    assert k + light.count() <= ef < k + heavy.count()
+    parted, edges = hnsw.hnsw_index(base, 4)
+    one_p, one_e = hnsw.hnsw_index(base, 1)
+    cells, c_edges, cents = hnsw.routed_index(base)
+    cases = {
+        "prebuilt": lambda: hnsw.knn_hnsw_prebuilt(
+            parted, edges, qs, k, ef),
+        "deleted_count_skipped": lambda: hnsw.knn_hnsw_deleted(
+            parted, edges, light, qs, k, ef),
+        "deleted_count_run": lambda: hnsw.knn_hnsw_deleted(
+            one_p, one_e, heavy, qs, k, ef),
+        "exhaustive": lambda: hnsw.knn_hnsw_prebuilt(
+            parted, edges, qs, k, ef=n_base, emit=n_base),
+        "exhaustive_deleted": lambda: hnsw.knn_hnsw_deleted(
+            parted, edges, light, qs, k, ef=n_base, emit=n_base),
+        "routed": lambda: hnsw.knn_hnsw_routed_prebuilt(
+            cells, c_edges, cents, qs, k, ef=ef),
+        "routed_deleted": lambda: hnsw.knn_hnsw_routed_deleted(
+            cells, c_edges, cents, heavy, qs, k, ef=ef),
+    }
+    bounded = {name: _hex_rows(run()) for name, run in cases.items()}
+    monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 0)
+    catalyst = {name: _hex_rows(run()) for name, run in cases.items()}
+    for name in cases:
+        assert bounded[name] == catalyst[name], name
+    n_q = qs.count()
+    for name in ("deleted_count_run", "exhaustive_deleted"):
+        assert len(bounded[name]) == n_q * k, (name, len(bounded[name]))
+
+
+def test_upserted_pack_keeps_a_flat_spread_layout(spark, embeddings):
+    """Along a 5-upsert chain the incrementally packed serving frame
+    keeps the base pack's partition count and its hash layout on
+    ``part``: the bounded search runs one map task per partition, and
+    the bare union had added a partition per upsert with every shard in
+    the last one ([0,0,0,0,0,0,0,0,8] after five upserts)."""
+    n = embeddings.count()
+    cut = split_count(n, 0.95)
+    base = embeddings.where(F.col("vec_id") < cut)
+    init_cut = split_count(cut, 0.75)
+    parted, edges = hnsw.hnsw_index(base.where(F.col("vec_id") < init_cut), P)
+    width = min(P, spark.sparkContext.defaultParallelism)
+
+    def layout(packed):
+        counts = dict(
+            packed.groupBy(F.spark_partition_id().alias("p")).count().collect()
+        )
+        return [counts.get(i, 0) for i in range(packed.rdd.getNumPartitions())]
+
+    first = layout(hnsw.cached_packed_index(parted, edges))
+    assert len(first) == spark.sparkContext.defaultParallelism
+    assert sum(first) == P and max(first) < P
+    assert sum(1 for c in first if c) >= width // 2
+    for batch in _chain_batches(base, init_cut, cut, 5):
+        parted, edges = hnsw.hnsw_upsert(parted, edges, batch, P)
+        key = hnsw._packed_key(parted, edges, "vec_id")
+        assert layout(hnsw._PACKED_EDGE_CACHE[key]) == first

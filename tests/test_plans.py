@@ -674,3 +674,68 @@ def test_bounded_ivf_request_constructs_with_one_job(
     monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 0)
     assert len(search(base, point(qid + 2), 10).collect()) == 10
     assert built
+
+
+def test_bounded_hnsw_delete_is_one_map_and_one_exchange(spark, sf_dir):
+    """A bounded knn_hnsw_deleted over an upserted index searches the
+    self-contained packed shard rows in ONE map: it constructs with at
+    most one Spark job on a cold query frame (the query collect; the
+    tombstone set collected once for its frame), and its executed plan
+    has no cogroup, one MapInArrow and one Exchange — the top-k
+    window's, on query_id. The vector table is never shuffled."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from toy_vector_db_spark.operators import hnsw
+    from toy_vector_db_spark.sources.ndjson import split_count
+
+    emb = registry.table(spark, sf_dir, "embeddings")
+    cut = split_count(emb.count(), 0.95)
+    init_cut = split_count(cut, 0.75)
+    base = emb.where(F.col("vec_id") < cut).select("vec_id", "embedding")
+    parted, edges = hnsw.hnsw_index(base.where(F.col("vec_id") < init_cut), 4)
+    hnsw.cached_packed_index(parted, edges)
+    parted, edges = hnsw.hnsw_upsert(
+        parted, edges, base.where(F.col("vec_id") >= init_cut), 4
+    )
+    dead = base.select("vec_id").where(F.col("vec_id") % 17 == 0)
+
+    def point(qid):
+        return emb.where(F.col("vec_id") == qid).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("query_vec"),
+        )
+
+    # warm the index's packed rows and the tombstone set
+    hnsw.knn_hnsw_deleted(parted, edges, dead, point(cut), 10).collect()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "construct.hnsw_deleted"
+    sc.setJobGroup(group, "bounded point construction")
+    try:
+        df = hnsw.knn_hnsw_deleted(parted, edges, dead, point(cut + 4), 10)
+        sc.setJobGroup(f"{group}.collect", "bounded point collect")
+        assert len(df.collect()) == 10
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while True:
+        done = [
+            tracker.getJobInfo(j)
+            for j in tracker.getJobIdsForGroup(f"{group}.collect")
+        ]
+        if done and all(i is not None and i.status == "SUCCEEDED" for i in done):
+            break
+        assert time.monotonic() < deadline, "collect jobs never finished"
+        time.sleep(0.01)
+    assert len(tracker.getJobIdsForGroup(group)) <= 1
+    # the adaptive plan prints its final and initial forms; read the final
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    assert "FlatMapCoGroupsInPandas" not in plan, plan
+    assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
+    exchanges = re.findall(r"\bExchange (\w+)\(([^)]*)", plan)
+    assert len(exchanges) == 1, plan
+    assert exchanges[0][0] == "hashpartitioning", plan
+    assert exchanges[0][1].startswith("query_id#"), plan

@@ -27,16 +27,19 @@ dataflow, so it cannot be a DataFrame expression. The scale-out design:
     batches in, numpy kernel, no JVM round-trips) — build is embarrassingly
     parallel and deterministic (levels come from a per-id splitmix64 hash,
     insertion order is id order within the shard);
-  * every query beam-searches every shard's graph (fan-out P), emitting ≤ef
+  * every query beam-searches every shard's graph (fan-out P), emitting ≤k
     candidates per shard; a global window top-k with EXACT distances reranks
     (same rerank shape as the reference's :317-326).
 
 ONE search kernel (``_prebuilt_search``) serves every search: it walks
-graphs rebuilt from CSR-packed edge rows (``pack_index``). A prebuilt
-index feeds it the session-cached pack; the fused ``knn_hnsw`` /
-``knn_hnsw_routed`` build the edges lazily and feed it an uncached pack,
-persisting nothing. The rebuilt graph searches exactly like the
-insert-built one — pinned without Spark by
+graphs rebuilt from self-contained packed shard rows (``pack_index``:
+ids, vectors and CSR adjacency in one row per shard). A bounded query
+batch is one map over those rows with the batch in the closure, the
+top-k window its only exchange. A prebuilt index feeds it the
+session-cached pack; the fused ``knn_hnsw`` / ``knn_hnsw_routed`` build
+the edges lazily and feed it an uncached pack, persisting nothing. The
+rebuilt graph searches exactly like the insert-built one — pinned
+without Spark by
 tests/test_hnsw.py::test_reconstruction_matches_insert_built_graph.
 
 At 100 TB: P grows with the corpus so each shard stays in one executor's
@@ -441,11 +444,10 @@ def _dict_graph(
 
 def _ids_fingerprint(ids: np.ndarray) -> bytes:
     """Process-stable fingerprint of a shard's sorted id array — the
-    consistency handshake between a packed edge row and the vector
-    shard it was packed against (sha1, not Python hash(), so executors
-    and sessions agree). Returned as RAW BYTES and carried in a BINARY
-    column: a nullable LONG column in the tagged aux union converts to
-    float64 in pandas and silently rounds values above 2^53."""
+    consistency check a packed serving row's ids must pass before the
+    search kernel trusts its local indices (sha1, not Python hash(), so
+    executors and sessions agree). Raw bytes in a BINARY column: no
+    pandas float64 conversion can round it."""
     import hashlib
 
     return hashlib.sha1(
@@ -472,13 +474,11 @@ def hnsw_index(
     persisted and computed exactly once.
 
     The vector table is persisted ALREADY HASH-PARTITIONED on the shard
-    key (round 15, guide §2.4): every downstream groupBy("part") —
-    the edge build, the pack cogroup, and EVERY serving cogroup — needs
-    ClusteredDistribution(part), so caching the exchanged layout makes
-    the per-serve exchange of the heavy vector side (the 64-double
-    embedding column) a build-time cost paid once instead of a
-    per-search shuffle. This is the in-memory form of writing the index
-    table bucketed by shard key. Same rows, same per-shard groups —
+    key (round 15, guide §2.4): both downstream groupBy("part") — the
+    edge build and the pack cogroup — need ClusteredDistribution(part)
+    and share the one exchange of the heavy vector side (the 64-double
+    embedding column); searches read only the packed rows. This is the
+    in-memory form of writing the index table bucketed by shard key. Same rows, same per-shard groups —
     partitioning only decides placement, and the kernels sort by id
     within each shard."""
     spark = base.sparkSession
@@ -522,62 +522,51 @@ def _session_index(df: DataFrame, key: tuple, build):
     return _INDEX_CACHE[full]
 
 
-def _replicate_queries(
-    queries: DataFrame,
-    parted: DataFrame,
-    query_id_col: str,
-    query_vec_col: str,
-) -> DataFrame:
-    """Fan each query out to every shard of ``parted`` WITHOUT driver-side
-    collection: crossJoin with the (tiny, broadcast) distinct part-id
-    table. The query side stays a distributed DataFrame end-to-end —
-    |Q|×P rows flow through the cogroup exchange, which is the fan-out
-    inherent to searching all shards, spread over executors instead of
-    serialized into every task closure."""
-    return (
-        queries.select(query_id_col, query_vec_col)
-        .crossJoin(F.broadcast(parted.select("part").distinct()))
-    )
-
-
-# (appId, parted hash, edges hash, id_col) → persisted PACKED index
-# frame. Packing runs ONE cogroup pass over (ids, edges) per distinct
-# artifact pair per session; every query batch after that ships ~one
-# row per shard instead of one row per edge.
+# (appId, parted hash, edges hash, input snapshots, id_col, vec_col) →
+# persisted PACKED index frame. Packing runs ONE cogroup pass over
+# (vectors, edges) per distinct artifact pair per session; every search
+# after that reads ~one self-contained row per shard.
 _PACKED_EDGE_CACHE: dict[tuple, DataFrame] = {}
 
 _PACK_SCHEMA = (
-    "part int, n long, ids_fp binary, "
+    "part int, n long, ids_fp binary, ids binary, d int, vecs binary, "
     + ", ".join(f"l{kk}_indptr binary, l{kk}_indices binary"
                 for kk in range(L))
 )
+_PACK_COLS = [f.split()[0] for f in _PACK_SCHEMA.split(", ")]
 
 
 def pack_index(
     parted: DataFrame,
     edges: DataFrame,
     id_col: str = "vec_id",
+    vec_col: str = "embedding",
 ) -> DataFrame:
-    """CSR-PACK the per-shard edge lists (round 11, the second half of
-    verdict r10 item 3): one row per shard carrying each layer's
-    (indptr, indices) arrays as BINARY columns, plus the shard's row
-    count and an id-array fingerprint. The row-per-edge frame is the
-    build/lifecycle format (unions, touched-shard passthrough,
-    partitioned writes); this is the SERVING format — the aux side of
-    the search cogroup drops from |edges| rows re-shipped, re-shuffled,
-    and pandas-converted per query batch to ~one row per shard,
-    reconstructed via zero-copy np.frombuffer in the kernel. The
-    global→local mapping (and its mismatched-artifact guard) runs once
-    here, at pack time; the serve kernel re-checks consistency against
-    the fingerprint before trusting the local indices."""
+    """The SERVING row of every shard, self-contained: the shard's
+    sorted int64 ids (``ids``), its id-sorted float64 vector matrix
+    (``vecs``, ``d`` wide) and each layer's CSR adjacency over local
+    offsets (``l{layer}_indptr`` / ``l{layer}_indices``), all BINARY,
+    plus the row count ``n`` and an id fingerprint ``ids_fp``. A search
+    reads nothing else — it never joins the vector table again — so a
+    bounded request is one map over these rows (_prebuilt_search). The
+    vector table and the row-per-edge frame stay the lifecycle format
+    (unions, touched-shard passthrough, upserts).
+
+    The global→local mapping and its mismatched-artifact guard
+    (_csr_from_edges) run once, here; the search kernel re-checks each
+    row's ids against its own ``n``, ``ids_fp`` and indptr lengths
+    before trusting the local indices. The price of self-containment is
+    a second copy of the vectors (8·d bytes a row) and a shard bound of
+    Spark's 2 GiB binary cell: about 4.19M vectors a shard at d=64."""
 
     def _pack(vec_pdf: pd.DataFrame, edge_pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["part", "n", "ids_fp"] + [
-            f"l{kk}_{w}" for kk in range(L) for w in ("indptr", "indices")
-        ]
         if vec_pdf.empty:
-            return pd.DataFrame(columns=cols)
-        ids = np.sort(vec_pdf[id_col].to_numpy(dtype=np.int64))
+            return pd.DataFrame(columns=_PACK_COLS)
+        vec_pdf = vec_pdf.sort_values(id_col, ignore_index=True)
+        ids = vec_pdf[id_col].to_numpy(dtype=np.int64)
+        vecs = np.stack(vec_pdf[vec_col].to_numpy()).astype(
+            np.float64, copy=False
+        )
         csrs = _csr_from_edges(
             ids, edge_pdf[["layer", "src", "pos", "dst"]].astype("int64")
         )
@@ -585,21 +574,41 @@ def pack_index(
             "part": int(vec_pdf["part"].iloc[0]),
             "n": len(ids),
             "ids_fp": _ids_fingerprint(ids),
+            "ids": ids.tobytes(),
+            "d": vecs.shape[1],
+            "vecs": vecs.tobytes(),
         }
         for kk, csr in enumerate(csrs):
             row[f"l{kk}_indptr"] = b"" if csr is None else csr[0].tobytes()
             row[f"l{kk}_indices"] = b"" if csr is None else csr[1].tobytes()
-        return pd.DataFrame([row], columns=cols)
+        return pd.DataFrame([row], columns=_PACK_COLS)
 
     return (
-        parted.select("part", id_col)
+        parted.select("part", id_col, vec_col)
         .groupBy("part")
         .cogroup(edges.groupBy("part"))
         .applyInPandas(_pack, schema=_PACK_SCHEMA)
     )
 
 
-def _packed_key(parted: DataFrame, edges: DataFrame, id_col: str) -> tuple:
+def _spread(packed: DataFrame) -> DataFrame:
+    """``packed`` hash-laid-out on ``part`` over the session's task
+    slots. The bounded search is one map task per partition, so shards
+    spread over min(P, defaultParallelism) tasks instead of sharing
+    one; a repartition by number, which AQE never coalesces, also holds
+    the partition count flat along an upsert chain, where each
+    incremental pack's union would otherwise add one."""
+    return packed.repartition(
+        packed.sparkSession.sparkContext.defaultParallelism, "part"
+    )
+
+
+def _packed_key(
+    parted: DataFrame,
+    edges: DataFrame,
+    id_col: str,
+    vec_col: str = "embedding",
+) -> tuple:
     # key includes the input-file snapshots (round 12, r11 advice): a
     # file-backed frame rewritten in place keeps its semantic hash, and
     # a stale packed graph would either serve silently (ids unchanged)
@@ -614,15 +623,19 @@ def _packed_key(parted: DataFrame, edges: DataFrame, id_col: str) -> tuple:
         knn._input_snapshot(parted),
         knn._input_snapshot(edges),
         id_col,
+        vec_col,
     )
 
 
 def cached_packed_index(
-    parted: DataFrame, edges: DataFrame, id_col: str = "vec_id"
+    parted: DataFrame,
+    edges: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
 ) -> DataFrame:
-    key = _packed_key(parted, edges, id_col)
+    key = _packed_key(parted, edges, id_col, vec_col)
     if key not in _PACKED_EDGE_CACHE:
-        p = pack_index(parted, edges, id_col).persist()
+        p = _spread(pack_index(parted, edges, id_col, vec_col)).persist()
         p.count()
         _PACKED_EDGE_CACHE[key] = p
     return _PACKED_EDGE_CACHE[key]
@@ -635,6 +648,7 @@ def _incremental_pack(
     new_edges: DataFrame,
     touched: list[int],
     id_col: str = "vec_id",
+    vec_col: str = "embedding",
 ) -> None:
     """Pre-populate the packed-serving artifact for an UPSERTED
     (parted, edges) pair from the base pair's packed rows (round 12,
@@ -649,16 +663,19 @@ def _incremental_pack(
     serve packs fully) — and always safe: the serve kernel re-checks
     every packed row against the shard's vector ids (ids_fp) before
     trusting it."""
-    base = _PACKED_EDGE_CACHE.get(_packed_key(old_parted, old_edges, id_col))
+    base = _PACKED_EDGE_CACHE.get(
+        _packed_key(old_parted, old_edges, id_col, vec_col)
+    )
     if base is None:
         return
-    new_key = _packed_key(new_parted, new_edges, id_col)
+    new_key = _packed_key(new_parted, new_edges, id_col, vec_col)
     if new_key in _PACKED_EDGE_CACHE:
         return
     delta = pack_index(
         new_parted.where(F.col("part").isin(touched)),
         new_edges.where(F.col("part").isin(touched)),
         id_col,
+        vec_col,
     )
     # localCheckpoint (eager) instead of persist (round 13, advice r12):
     # the union references the BASE packed frame, so a long ingest
@@ -669,15 +686,15 @@ def _incremental_pack(
     # checkpointed block lost to executor failure is not recomputable —
     # the serve then repacks cold from the lifecycle frames, the same
     # cost as a fresh session (and a non-event on local[n], where
-    # executor loss is process loss).
-    p = (
-        base.where(~F.col("part").isin(touched))
-        .unionByName(delta)
-        .localCheckpoint(eager=True)
-    )
+    # executor loss is process loss). _spread holds the base pack's
+    # layout: a bare union adds the delta's partition on every upsert,
+    # and AQE coalesces every touched shard into it.
+    p = _spread(
+        base.where(~F.col("part").isin(touched)).unionByName(delta)
+    ).localCheckpoint(eager=True)
     _PACKED_EDGE_CACHE[new_key] = p
     old = _PACKED_EDGE_CACHE.pop(
-        _packed_key(old_parted, old_edges, id_col), None
+        _packed_key(old_parted, old_edges, id_col, vec_col), None
     )
     if old is not None:
         # release the superseded artifact. For a localCheckpoint frame
@@ -698,31 +715,39 @@ def _incremental_pack(
 def _prebuilt_search(
     parted: DataFrame,
     packed: DataFrame,
-    routed_queries: DataFrame,
+    queries: DataFrame,
     k: int,
     ef: int,
     id_col: str,
-    vec_col: str,
     query_id_col: str,
     query_vec_col: str,
     emit: int | None = None,
+    cents: DataFrame | None = None,
+    nprobe: int | None = None,
+    query_label_col: str | None = None,
+    tombstones: DataFrame | None = None,
 ) -> DataFrame:
-    """THE HNSW search kernel (Algorithm 5 per shard, then one global
-    top-k — REPOSE's local-top-k-then-merge shape): cogroup each shard's
-    vectors with its CSR-PACKED edge row (``pack_index``) AND the
-    queries routed to it, rebuild the graph via np.frombuffer (no insert
-    cost, no per-edge work, no per-edge shipping), beam-search every
-    query, global exact rerank.
+    """THE HNSW search (Algorithm 5 per shard, then one global top-k —
+    REPOSE's local-top-k-then-merge shape) over the self-contained
+    packed shard rows of ``pack_index``: each row rebuilds its shard's
+    graph (_graph_shell plus the row's CSR arrays — no insert cost, no
+    per-edge work), beam-searches the queries routed to it and emits its
+    top candidates; ``_window_topk`` is the global exact rerank.
 
-    ``routed_queries`` is any distributed (part, query_id, query_vec)
-    frame — full fan-out for hash shards, nprobe cells for IVF routing,
-    one label graph for filtered search. Cogroup takes exactly two
-    sides, so the packed edge row and the routed query set ride in ONE
-    tagged auxiliary frame (packed rows carry null query columns and
-    vice versa) — nothing is collected to the driver. Prebuilt callers
-    pass the session-cached pack (cached_packed_index); round 10
-    shipped and dict-reconstructed all |edges| rows on EVERY query
-    batch, measured as the dominant routed-serving term at 200k.
+    A query searches every shard (hash shards), the ``nprobe`` cells
+    nearest it under ``cents`` (IVF cells), or the one shard equal to
+    its ``query_label_col`` (label graphs). Two legs run the one
+    per-shard kernel, ``_shard``:
+
+    * bounded — the query frame collects to at most QUERY_BATCH_MAX
+      rows (knn._collected_batch): ONE mapInArrow over the packed rows,
+      with the batch and each query's shard list (all, or
+      similarity._driver_probes) in the closure, so the top-k window is
+      the only exchange;
+    * Catalyst — an oversized batch, and label routing, whose validity
+      check lives in the routing projection (_label_part_expr): a
+      two-sided cogroup of the packed rows with the routed (part, query)
+      frame.
 
     ``emit`` (default k) = candidates emitted per (query, shard).
     Callers that re-score and re-rank the emission downstream
@@ -732,100 +757,179 @@ def _prebuilt_search(
     boundary swap would otherwise change the set). With emit set and
     ef >= shard size the kernel also appends any graph-unreachable
     points (pruning can in principle disconnect layer 0), making the
-    degenerate ef=n configuration provably exhaustive."""
-    null_bin = [
-        F.lit(None).cast("binary").alias(f"l{kk}_{w}")
-        for kk in range(L)
-        for w in ("indptr", "indices")
-    ]
-    q_tagged = routed_queries.select(
-        "part",
-        F.lit(None).cast("long").alias("n"),
-        F.lit(None).cast("binary").alias("ids_fp"),
-        *null_bin,
-        F.col(query_id_col).alias("qid"),
-        F.col(query_vec_col).cast("array<double>").alias("qvec"),
-    )
-    aux = packed.select(
-        "part", "n", "ids_fp",
-        *[F.col(f"l{kk}_{w}") for kk in range(L)
-          for w in ("indptr", "indices")],
-        F.lit(None).cast("long").alias("qid"),
-        F.lit(None).cast("array<double>").alias("qvec"),
-    ).unionByName(q_tagged)
+    degenerate ef=n configuration provably exhaustive.
 
-    def _search(vec_pdf: pd.DataFrame, aux_pdf: pd.DataFrame) -> pd.DataFrame:
-        q_pdf = aux_pdf[aux_pdf["qid"].notna()]
-        if vec_pdf.empty or q_pdf.empty:
-            return pd.DataFrame(
-                {query_id_col: pd.Series(dtype="int64"),
-                 id_col: pd.Series(dtype="int64"),
-                 "dist": pd.Series(dtype="float64")}
+    ``tombstones`` are ids deleted from the index but kept in its graph
+    as routing waypoints (compaction rewrites the graph). The beam
+    widens to k + T, T the tombstone rows present in ``parted`` —
+    LocalHNSW.search returns at most ef rows, so an unwidened beam could
+    hold only tombstones — and each shard drops the tombstones from its
+    beam BEFORE its cut, so it emits its top live candidates and the
+    global top-k is the live top-k: the rows of widening the cut to
+    k + T, ranking globally, anti-joining and re-ranking, which the
+    in-kernel filter replaces. The ids S collect once per frame through
+    the query-batch memo; as T ≤ |S|, the count job is skipped when
+    k + |S| ≤ ef (the beam is ef either way). A set over
+    QUERY_BATCH_MAX ids is not collected: the count runs, the emission
+    widens to k + T, and a broadcast anti-join filters the candidates
+    before the top-k window."""
+    import pyarrow as pa
+
+    from toy_vector_db_spark.operators import knn, similarity
+
+    dead = anti = None
+    if tombstones is not None:
+        ts = tombstones.select(id_col).where(F.col(id_col).isNotNull())
+        tb = knn._collected_batch(ts, id_col, None)
+        t_total = 0
+        if tb is None or k + len(tb.qids) > ef:
+            t_total = parted.join(ts, id_col).count()
+            ef = max(ef, k + t_total)
+        if tb is None:
+            anti, emit = ts, max(emit or 0, k + t_total)
+        else:
+            dead, emit = np.unique(tb.qids), max(emit or 0, k)
+    if cents is not None and nprobe is None:
+        nprobe = similarity_nprobe()
+    m_emit = k if emit is None else emit
+    schema = f"{query_id_col} long, {id_col} long, dist double"
+
+    def _shard(row, qids, qvecs) -> tuple[list, list, list]:
+        """(query ids, vec ids, dists) of one packed shard row's top
+        candidates for each of ``qids``."""
+        n, d = int(row["n"]), int(row["d"])
+        ids = np.frombuffer(row["ids"], dtype=np.int64)
+        indptrs = [row[f"l{kk}_indptr"] for kk in range(L)]
+        # the row must describe itself: a packed row built from another
+        # build's pieces raises instead of walking local indices into
+        # the wrong vectors
+        if (
+            len(ids) != n
+            or bytes(row["ids_fp"]) != _ids_fingerprint(ids)
+            or len(row["vecs"]) != 8 * n * d
+            or any(bp and len(bp) != 8 * (n + 1) for bp in indptrs)
+        ):
+            raise ValueError(
+                "hnsw packed index row does not match its own ids — the "
+                "shard's vectors and edges are not from the same "
+                "build/compaction"
             )
-        vec_pdf = vec_pdf.sort_values(id_col, ignore_index=True)
-        ids = vec_pdf[id_col].to_numpy()
-        vecs = np.stack(vec_pdf[vec_col].to_numpy())
-        idx = _graph_shell(ids, vecs)
-        p_pdf = aux_pdf[aux_pdf["ids_fp"].notna()]
-        if not p_pdf.empty:
-            prow = p_pdf.iloc[0]
-            # consistency handshake: the packed row must describe THESE
-            # vectors (same count, same sorted-id fingerprint) — a
-            # stale/mismatched packed artifact raises instead of
-            # silently walking local indices into the wrong rows
-            if int(prow["n"]) != len(ids) or bytes(
-                prow["ids_fp"]
-            ) != _ids_fingerprint(ids):
-                raise ValueError(
-                    "hnsw packed index does not match this shard's "
-                    "vectors — cells and packed edges are not from the "
-                    "same build/compaction"
+        # an owned, aligned copy: BLAS dgemv rounds differently on a
+        # misaligned buffer, and the distances must not depend on where
+        # Arrow placed the bytes
+        vecs = np.frombuffer(row["vecs"], dtype=np.float64)
+        idx = _graph_shell(ids, vecs.reshape(n, d).copy())
+        for kk, bp in enumerate(indptrs):
+            if bp:
+                idx.csr[kk] = (
+                    np.frombuffer(bp, dtype=np.int64),
+                    np.frombuffer(row[f"l{kk}_indices"], dtype=np.int64),
                 )
-            for kk in range(L):
-                bp, bi = prow[f"l{kk}_indptr"], prow[f"l{kk}_indices"]
-                if bp:
-                    idx.csr[kk] = (
-                        np.frombuffer(bp, dtype=np.int64),
-                        np.frombuffer(bi, dtype=np.int64),
-                    )
-        n_local = len(ids)
-        m_emit = k if emit is None else emit
+        is_dead = None if dead is None else np.isin(ids, dead)
         out_q, out_id, out_d = [], [], []
-        for qid, qv in zip(q_pdf["qid"].to_numpy(), q_pdf["qvec"].to_numpy()):
-            # emit only this shard's top-k (not top-ef): the global top-k
-            # is a subset of per-shard top-ks, and search() returns
+        for qid, qv in zip(qids, qvecs):
+            # emit only this shard's top m_emit (not top-ef): the global
+            # top-k is a subset of per-shard top-ks, and search() returns
             # (dist, local) sorted by dist with ties broken by local index
             # == global id order (ids are sorted) — exactly the global
-            # rerank's ordering, so truncation is bit-identical while
-            # cutting the rerank exchange ef/k-fold (round-2 verdict fix).
-            # np.array (not asarray): a float64 qvec arrives as a zero-copy
-            # view of the Arrow buffer at arbitrary alignment, and BLAS
-            # dgemv rounds differently on misaligned input — the fresh
-            # aligned copy keeps distances independent of buffer layout
+            # rerank's ordering, so truncation is bit-identical.
+            # np.array (not asarray): a fresh aligned query copy, as above
             qa = np.array(qv, dtype=np.float64)
             res = idx.search(qa, ef)
-            if emit is not None and ef >= n_local and len(res) < n_local:
+            if emit is not None and ef >= n and len(res) < n:
                 # disconnected layer 0: append unreachable points so the
                 # exhaustive configuration stays provably exact
                 got = {local for _, local in res}
-                missing = [i for i in range(n_local) if i not in got]
+                missing = [i for i in range(n) if i not in got]
                 dm = idx._dist(qa, missing)
                 res = sorted(res + list(zip(dm.tolist(), missing)))
-            for d, local in res[:m_emit]:
+            if is_dead is not None:
+                res = [r for r in res if not is_dead[r[1]]]
+            for dist, local in res[:m_emit]:
                 out_q.append(int(qid))
                 out_id.append(int(ids[local]))
-                out_d.append(float(d))
-        return pd.DataFrame(
-            {query_id_col: out_q, id_col: out_id, "dist": out_d}
+                out_d.append(float(dist))
+        return out_q, out_id, out_d
+
+    qb = None
+    if query_label_col is None:
+        qb = knn._collected_batch(queries, query_id_col, query_vec_col)
+    if qb is not None:
+        qids, Q = qb.qids, qb.X
+        rows_of = None  # every query searches every shard
+        if cents is not None:
+            probes = similarity._driver_probes(qb, cents, nprobe)
+            by_cell: dict[int, list] = {}
+            for i, qid in enumerate(qids.tolist()):
+                for c in set(probes[qid]):
+                    by_cell.setdefault(c, []).append(i)
+            rows_of = {c: np.array(r) for c, r in by_cell.items()}
+
+        def _map(batches):
+            for batch in batches:
+                for row in batch.to_pylist():
+                    sel = (
+                        slice(None) if rows_of is None
+                        else rows_of.get(row["part"])
+                    )
+                    if sel is None or not len(qids):
+                        continue
+                    cols = _shard(row, qids[sel], Q[sel])
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(c, t) for c, t in zip(
+                            cols, (pa.int64(), pa.int64(), pa.float64())
+                        )],
+                        names=[query_id_col, id_col, "dist"],
+                    )
+
+        cands = packed.mapInArrow(_map, schema)
+    else:
+        if query_label_col is not None:
+            routed = queries.select(
+                query_id_col, query_vec_col,
+                _label_part_expr(
+                    query_label_col, "knn_hnsw_filtered queries"
+                ).alias("part"),
+            )
+        elif cents is not None:
+            routed = _probed_cells(
+                queries, cents, nprobe, query_id_col, query_vec_col
+            )
+        else:
+            # packed holds one row per shard: its part column is the
+            # (tiny, broadcast) shard list, no distinct needed; aliased,
+            # or the cogroup below would self-join packed's column
+            routed = queries.select(query_id_col, query_vec_col).crossJoin(
+                F.broadcast(packed.select(F.col("part").alias("part")))
+            )
+        routed = routed.select(
+            "part",
+            F.col(query_id_col).alias("qid"),
+            F.col(query_vec_col).cast("array<double>").alias("qvec"),
         )
 
-    cands = (
-        parted.groupBy("part")
-        .cogroup(aux.groupBy("part"))
-        .applyInPandas(
-            _search, schema=f"{query_id_col} long, {id_col} long, dist double"
+        def _cogrouped(p_pdf: pd.DataFrame, q_pdf: pd.DataFrame):
+            if p_pdf.empty or q_pdf.empty:
+                return pd.DataFrame(
+                    {query_id_col: pd.Series(dtype="int64"),
+                     id_col: pd.Series(dtype="int64"),
+                     "dist": pd.Series(dtype="float64")}
+                )
+            out_q, out_id, out_d = _shard(
+                p_pdf.iloc[0], q_pdf["qid"].to_numpy(),
+                q_pdf["qvec"].to_numpy(),
+            )
+            return pd.DataFrame(
+                {query_id_col: out_q, id_col: out_id, "dist": out_d}
+            )
+
+        cands = (
+            packed.groupBy("part")
+            .cogroup(routed.groupBy("part"))
+            .applyInPandas(_cogrouped, schema=schema)
         )
-    )
+    if anti is not None:
+        cands = cands.join(F.broadcast(anti), id_col, "left_anti")
     return _window_topk(cands, k, id_col, query_id_col)
 
 
@@ -857,16 +961,13 @@ def knn_hnsw_prebuilt(
     query_vec_col: str = "query_vec",
     emit: int | None = None,
 ) -> DataFrame:
-    """H10 search over a PREBUILT hash-sharded index: queries fan out to
-    all shards as a distributed frame and the search kernel walks the
-    session-cached pack of (parted, edges). ``emit`` widens the
-    per-shard emission for callers that re-score downstream (the
-    exhaustive degenerate; see _prebuilt_search)."""
-    routed = _replicate_queries(queries, parted, query_id_col, query_vec_col)
+    """H10 search over a PREBUILT hash-sharded index: every query
+    searches every shard of the session-cached pack of (parted, edges).
+    ``emit`` widens the per-shard emission for callers that re-score
+    downstream (the exhaustive degenerate; see _prebuilt_search)."""
     return _prebuilt_search(
-        parted, cached_packed_index(parted, edges, id_col), routed, k, ef,
-        id_col, vec_col, query_id_col, query_vec_col,
-        emit=emit,
+        parted, cached_packed_index(parted, edges, id_col, vec_col),
+        queries, k, ef, id_col, query_id_col, query_vec_col, emit=emit,
     )
 
 
@@ -884,17 +985,16 @@ def knn_hnsw(
 ) -> DataFrame:
     """H10 top-k ANN in one call: build-then-prebuilt. The shard graphs
     are built lazily exactly as ``build_edges`` builds them, packed
-    UNCACHED, and searched by the one kernel (_prebuilt_search) with the
-    queries fanned out to every shard, then the global exact rerank over
-    the ≤ k·P candidates per query. Persists nothing and adds no session
-    cache entry; ``emit`` as in knn_hnsw_prebuilt."""
+    UNCACHED, and searched by the one kernel (_prebuilt_search) with
+    every query on every shard, then the global exact rerank over the
+    ≤ k·P candidates per query. Persists nothing; the one session cache
+    entry it may add is the collected query batch. ``emit`` as in
+    knn_hnsw_prebuilt."""
     parted = _with_part(base.select(id_col, vec_col), num_partitions, id_col)
     edges = _edges_from_parted(parted, id_col, vec_col)
-    routed = _replicate_queries(queries, parted, query_id_col, query_vec_col)
     return _prebuilt_search(
-        parted, pack_index(parted, edges, id_col), routed, k, ef,
-        id_col, vec_col, query_id_col, query_vec_col,
-        emit=emit,
+        parted, pack_index(parted, edges, id_col, vec_col), queries, k, ef,
+        id_col, query_id_col, query_vec_col, emit=emit,
     )
 
 
@@ -926,10 +1026,9 @@ def knn_hnsw_routed(
     )
     cells = _cell_parted(base, cents, id_col, vec_col)
     edges = _edges_from_parted(cells, id_col, vec_col)
-    routed = _probed_cells(queries, cents, nprobe, query_id_col, query_vec_col)
     return _prebuilt_search(
-        cells, pack_index(cells, edges, id_col), routed, k, ef,
-        id_col, vec_col, query_id_col, query_vec_col,
+        cells, pack_index(cells, edges, id_col, vec_col), queries, k, ef,
+        id_col, query_id_col, query_vec_col, cents=cents, nprobe=nprobe,
     )
 
 
@@ -956,7 +1055,9 @@ def _probed_cells(
     query_id_col: str, query_vec_col: str,
 ) -> DataFrame:
     """(query_id, query_vec, part): each query once per its nprobe
-    nearest cells — the routed-query side of the search kernel.
+    nearest cells — the routed-query side of the search kernel's
+    Catalyst leg (the bounded leg routes with similarity._driver_probes,
+    pinned equal to this routing).
     Zero-shuffle routing (round 15, guide §2.4) through the IVF
     family's _ivf_probes — the collapsed array-of-structs broadcast +
     per-row array_sort/slice, proven rank-equivalent to the previous
@@ -994,9 +1095,8 @@ def routed_index(
         base, n_centroids, id_col=id_col, vec_col=vec_col
     ).persist()
     # persisted hash-partitioned on the cell key (round 15, guide §2.4
-    # — see hnsw_index): the per-cell edge build, the pack cogroup and
-    # every routed serving cogroup reuse this layout instead of
-    # re-shuffling the vector table per call
+    # — see hnsw_index): the per-cell edge build and the pack cogroup
+    # share this layout
     cells = (
         _cell_parted(base, cents, id_col, vec_col)
         .repartition(base.sparkSession.sparkContext.defaultParallelism, "part")
@@ -1038,11 +1138,10 @@ def knn_hnsw_routed_prebuilt(
     its nprobe nearest centroids, then beam-search only the probed cells
     of the session-cached pack. Build cost is paid once
     (``routed_index``), not per invocation."""
-    routed = _probed_cells(queries, cents, nprobe, query_id_col, query_vec_col)
     return _prebuilt_search(
-        cells, cached_packed_index(cells, edges, id_col), routed, k, ef,
-        id_col, vec_col, query_id_col, query_vec_col,
-        emit=emit,
+        cells, cached_packed_index(cells, edges, id_col, vec_col), queries,
+        k, ef, id_col, query_id_col, query_vec_col,
+        emit=emit, cents=cents, nprobe=nprobe,
     )
 
 
@@ -1086,25 +1185,16 @@ def knn_hnsw_routed_deleted(
     query_vec_col: str = "query_vec",
     emit: int | None = None,
 ) -> DataFrame:
-    """Tombstone DELETE on the routed index (round 8): deleted ids stay
-    in the per-cell edge lists as routing waypoints and are filtered
-    AFTER beam emission — knn_hnsw_deleted's contract on the routed
-    family. The candidate cut AND the per-cell beam are widened by the
-    TOTAL tombstone count T (the round-8 multi-shard starvation fix
-    applies doubly here: probed cells AND shards both contribute
-    tombstones to the global top-kk window; the beam widening keeps the
-    cut non-vacuous when T > ef − k — see knn_hnsw_deleted), a bounded
-    scalar agg. Shares the anti-join + re-rank tail with the
-    hash-sharded family (_tombstone_filtered_topk)."""
-    t_total = cells.join(tombstones.select(id_col), id_col).count()
-    kk = k + int(t_total or 0)
-    cand = knn_hnsw_routed_prebuilt(
-        cells, edges, cents, queries, kk, nprobe, max(ef, kk),
-        id_col, vec_col, query_id_col, query_vec_col,
-        emit=max(emit or 0, kk),
-    )
-    return _tombstone_filtered_topk(
-        cand, tombstones, k, id_col, query_id_col
+    """Tombstone DELETE on the routed index (round 8): knn_hnsw_deleted
+    with IVF-cell routing — the two differ only in which shards a query
+    searches. Deleted ids stay in the per-cell edge lists as routing
+    waypoints; each probed cell drops them from its beam before its
+    cut, and the beam widens by the tombstone count when it must (the
+    one tombstone rule, in _prebuilt_search)."""
+    return _prebuilt_search(
+        cells, cached_packed_index(cells, edges, id_col, vec_col), queries,
+        k, ef, id_col, query_id_col, query_vec_col,
+        emit=emit, cents=cents, nprobe=nprobe, tombstones=tombstones,
     )
 
 
@@ -1289,18 +1379,12 @@ def knn_hnsw_filtered(
     serving call and it re-evaluates on every run's actual rows, so a
     growing re-read source can't serve stale validity (round-8 review)
     — a bad label fails the job with the offending value in the
-    message instead of silently mis-routing."""
-    routed = queries.select(
-        query_id_col,
-        query_vec_col,
-        _label_part_expr(
-            query_label_col, "knn_hnsw_filtered queries"
-        ).alias("part"),
-    )
+    message instead of silently mis-routing. Label routing therefore
+    always takes the search's Catalyst leg."""
     return _prebuilt_search(
-        parted, cached_packed_index(parted, edges, id_col), routed, k, ef,
-        id_col, vec_col, query_id_col, query_vec_col,
-        emit=emit,
+        parted, cached_packed_index(parted, edges, id_col, vec_col), queries,
+        k, ef, id_col, query_id_col, query_vec_col,
+        emit=emit, query_label_col=query_label_col,
     )
 
 
@@ -1501,7 +1585,7 @@ def _upsert_parted(
     # artifact incrementally — untouched shards' rows pass through, only
     # the touched shards re-pack (from the new_edges leaf)
     _incremental_pack(
-        parted, edges, union_parted, new_edges, touched, id_col
+        parted, edges, union_parted, new_edges, touched, id_col, vec_col
     )
     return union_parted, new_edges
 
@@ -1521,56 +1605,24 @@ def knn_hnsw_deleted(
 ) -> DataFrame:
     """Tombstone DELETE on the graph (round 7): deleted ids stay in the
     edge lists as routing waypoints (the graph is never rewritten — that
-    is compaction's job) and are filtered AFTER the per-shard beam
-    emission, before the global rerank — the HNSW twin of
+    is compaction's job) and never reach the results — the HNSW twin of
     ivfpq_delete_search's anti-join.
 
-    Starvation guard: the candidate cut is widened to k + T where T is
-    the TOTAL tombstone count present in the index (a bounded scalar agg
-    — at 100 TB the live tombstone set between compactions is bounded by
-    ops policy, the same argument the IVF-PQ delete leg makes). T — not
-    the per-shard max — because knn_hnsw_prebuilt applies a GLOBAL
-    top-kk window before the anti-join: with P>1 shards, tombstones from
-    several shards can together occupy more than any one shard's count
-    of the global top-kk slots (round-7 advice item 1). k+T guarantees
-    ≥k live rows survive the global cut, and each shard's emission of
-    top-kk ≥ top-(k + its own tombstones) surfaces its true live top-k.
-
-    The BEAM is widened to kk too (round 8): LocalHNSW.search returns
-    at most ef rows, so an emission request of kk past an unwidened
-    ef=100 beam would silently emit only the beam's ef candidates — in
-    the worst case all tombstones — and the k+T guarantee above would
-    be vacuous whenever T > ef − k. Widening ef under delete is the
-    standard filtered-search move (Faiss efSearch widening); the cost
-    is the tombstone count, which compaction bounds."""
-    t_total_row = (
-        parted.join(tombstones.select(id_col), id_col).count()
+    Each shard drops the tombstones from its beam BEFORE its per-shard
+    cut, so it emits its top live candidates and the global top-k is the
+    live top-k; the beam widens to k + T, T the tombstone rows present
+    in the index, because LocalHNSW.search returns at most ef rows and a
+    beam full of tombstones would starve the live top-k (the standard
+    filtered-search move, Faiss efSearch widening; compaction bounds the
+    cost). The count of T is skipped when k + |S| ≤ ef for the
+    collected tombstone set S. The rule, and its fallback for a set too
+    large to collect, live once in _prebuilt_search, shared with
+    knn_hnsw_routed_deleted."""
+    return _prebuilt_search(
+        parted, cached_packed_index(parted, edges, id_col, vec_col),
+        queries, k, ef, id_col, query_id_col, query_vec_col,
+        emit=emit, tombstones=tombstones,
     )
-    kk = k + int(t_total_row or 0)
-    cand = knn_hnsw_prebuilt(
-        parted, edges, queries, kk, max(ef, kk),
-        id_col, vec_col, query_id_col, query_vec_col,
-        emit=max(emit or 0, kk),
-    )
-    return _tombstone_filtered_topk(
-        cand, tombstones, k, id_col, query_id_col
-    )
-
-
-def _tombstone_filtered_topk(
-    cand: DataFrame,
-    tombstones: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Shared delete-leg tail for both graph families: broadcast
-    anti-join the tombstones out of the (widened) candidate stream,
-    then re-rank to the final top-k."""
-    live = cand.join(
-        F.broadcast(tombstones.select(id_col)), id_col, "left_anti"
-    )
-    return _window_topk(live.drop("rank"), k, id_col, query_id_col)
 
 
 class HNSWIndex:

@@ -311,11 +311,12 @@ def _frame_key(df: DataFrame, *extra) -> tuple:
 
 class _QueryBatch:
     """One collected query frame: ``qids`` (int64 [n]), ``X`` (float64
-    [n, d]) and one Python list per ``extra`` column, plus ``derived`` —
-    what later steps compute from this batch alone (probe routing per
-    (centroid key, nprobe), PQ LUTs per codebook fingerprint), memoized
-    with it so a repeated frame reuses them and a fresh one adds a
-    single cache entry. ``key`` is the batch's memo key."""
+    [n, d], None for an id-only frame) and one Python list per ``extra``
+    column, plus ``derived`` — what later steps compute from this batch
+    alone (probe routing per (centroid key, nprobe), PQ LUTs per codebook
+    fingerprint), memoized with it so a repeated frame reuses them and a
+    fresh one adds a single cache entry. ``key`` is the batch's memo
+    key."""
 
     __slots__ = ("key", "qids", "X", "extra", "derived")
 
@@ -340,7 +341,7 @@ _QUERY_BATCH_CACHE: dict[tuple, "_QueryBatch | None"] = {}
 def _collected_batch(
     df: DataFrame,
     id_col: str,
-    vec_col: str,
+    vec_col: str | None,
     extra: tuple = (),
     bounded: bool = True,
 ) -> "_QueryBatch | None":
@@ -349,22 +350,29 @@ def _collected_batch(
     1).toArrow() (Arrow, not Row collect — 4.5× faster at 100k rows,
     and one job where limit().count() took two). None when the frame
     holds more than QUERY_BATCH_MAX rows. ``bounded=False`` drops the
-    limit for frames small by construction (a centroid table)."""
+    limit for frames small by construction (a centroid table).
+    ``vec_col=None`` collects an id-only frame (a tombstone set): the
+    batch's ``X`` is then None."""
     bound = QUERY_BATCH_MAX if bounded else None
     key = _frame_key(df, id_col, vec_col, *extra, bound)
     if key not in _QUERY_BATCH_CACHE:
-        sel = df.select(
-            id_col, F.col(vec_col).cast("array<double>"), *extra
-        )
+        vec = []
+        if vec_col is not None:
+            vec.append(F.col(vec_col).cast("array<double>"))
+        sel = df.select(id_col, *vec, *extra)
         t = (sel if bound is None else sel.limit(bound + 1)).toArrow()
         if bound is not None and t.num_rows > bound:
             _QUERY_BATCH_CACHE[key] = None
         else:
+            first = 1 + len(vec)
             _QUERY_BATCH_CACHE[key] = _QueryBatch(
                 key,
                 t.column(0).to_numpy().astype(np.int64, copy=False),
-                list_col_to_matrix(t.column(1).combine_chunks()),
-                tuple(t.column(2 + i).to_pylist() for i in range(len(extra))),
+                list_col_to_matrix(t.column(1).combine_chunks())
+                if vec else None,
+                tuple(
+                    t.column(first + i).to_pylist() for i in range(len(extra))
+                ),
             )
     return _QUERY_BATCH_CACHE[key]
 
