@@ -523,28 +523,19 @@ def ivf_train_decomposition(spark, sf_dir: str) -> None:
     posexplode emit. Times each term in isolation (warm upstream, min
     of 5) plus the full key with its owned caches evicted per rep —
     exactly what a timed bench sample measures."""
-    from toy_vector_db_spark import registry
+    from toy_vector_db_spark import caches, registry
     from toy_vector_db_spark.registry import _split
 
     base, _ = _split(spark, sf_dir)
     key_fn = registry.queries()["ivf_train"]
+    # the store before an ivf_train run: restoring it evicts what the
+    # run populates (bench evicts exactly these before each timed sample
+    # via warmup-pass ownership)
+    cold = caches.snapshot()
     key_fn(spark, sf_dir).collect()  # warm scans + JIT once, untimed
 
     def evict_owned():
-        # the caches an ivf_train run populates (bench evicts exactly
-        # these before each timed sample via warmup-pass ownership)
-        for d in (
-            similarity._ASSIGN_CACHE,
-            similarity._CELL_VECTORS_CACHE,
-        ):
-            for v in d.values():
-                try:
-                    v.unpersist()
-                except Exception:
-                    pass
-            d.clear()
-        similarity._SAMPLE_CACHE.clear()
-        similarity._TRAINED_CACHE.clear()
+        caches.restore(cold)
 
     def timed(fn, reps=5):
         walls = []
@@ -556,7 +547,7 @@ def ivf_train_decomposition(spark, sf_dir: str) -> None:
 
     # term 1: the bounded training-sample collect (cold each rep)
     def sample():
-        similarity._SAMPLE_CACHE.clear()
+        caches.restore(cold)
         similarity._train_sample(base, "vec_id", "embedding")
 
     t_sample = timed(sample)
@@ -564,9 +555,10 @@ def ivf_train_decomposition(spark, sf_dir: str) -> None:
     # of the 16-row result is part of the term — it is how the trained
     # centroids re-enter Spark)
     similarity._train_sample(base, "vec_id", "embedding")
+    warm_sample = caches.snapshot()
 
     def kmeans():
-        similarity._TRAINED_CACHE.clear()
+        caches.restore(warm_sample)
         similarity.cached_trained_centroids(base)
 
     t_kmeans = timed(kmeans)
@@ -574,18 +566,10 @@ def ivf_train_decomposition(spark, sf_dir: str) -> None:
     # the FULL base under the trained centroids, persist+count the
     # assignment and the cell-partitioned base table (centroids warm)
     similarity.cached_trained_centroids(base)
+    warm_cents = caches.snapshot()
 
     def cell_build():
-        for d in (
-            similarity._ASSIGN_CACHE,
-            similarity._CELL_VECTORS_CACHE,
-        ):
-            for v in d.values():
-                try:
-                    v.unpersist()
-                except Exception:
-                    pass
-            d.clear()
+        caches.restore(warm_cents)
         similarity.cached_cell_vectors(base)
 
     t_cells = timed(cell_build)

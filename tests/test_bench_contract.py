@@ -11,7 +11,6 @@ compact trailing summary line.
 import ast
 import json
 import pathlib
-import re
 
 from toy_vector_db_spark import caches
 
@@ -19,27 +18,32 @@ REPO = pathlib.Path(__file__).resolve().parent.parent
 PKG = REPO / "toy_vector_db_spark"
 
 
-def test_every_session_cache_is_registered():
-    """Grep the package for module-level _*_CACHE / _CACHE dicts and
-    assert each is in caches._cache_dicts() — a new session cache that
-    bench.py doesn't roll back silently turns a build-key repeat back
-    into a dict-hit measurement."""
-    pattern = re.compile(r"^(_[A-Z0-9_]*CACHE)\s*[:=]", re.M)
-    found: set[tuple[str, str]] = set()
-    for py in PKG.rglob("*.py"):
-        rel = py.relative_to(PKG).as_posix()[:-3].replace("/", ".")
-        for m in pattern.finditer(py.read_text()):
-            found.add((f"toy_vector_db_spark.{rel}", m.group(1)))
-    import importlib
-
-    dict_ids = {id(d) for d in caches._cache_dicts()}
-    missing = []
-    for mod_name, var in sorted(found):
-        mod = importlib.import_module(mod_name)
-        obj = getattr(mod, var)
-        if isinstance(obj, dict) and id(obj) not in dict_ids:
-            missing.append(f"{mod_name}.{var}")
-    assert not missing, f"session caches not in caches._cache_dicts(): {missing}"
+def test_no_module_level_cache_dict():
+    """Every session memo lives in caches.py's one store, where bench.py
+    snapshots and evicts it: a module-level dict bound to a ``*_CACHE``
+    name is a memo the store does not see, so a build-key repeat would
+    silently turn back into a dict-hit measurement."""
+    found = []
+    for py in sorted(PKG.rglob("*.py")):
+        for node in ast.parse(py.read_text()).body:
+            if isinstance(node, ast.Assign):
+                targets, value = node.targets, node.value
+            elif isinstance(node, ast.AnnAssign):
+                targets, value = [node.target], node.value
+            else:
+                continue
+            is_dict = isinstance(value, (ast.Dict, ast.DictComp)) or (
+                isinstance(value, ast.Call)
+                and getattr(value.func, "id", None) == "dict"
+            )
+            for t in targets:
+                if (
+                    is_dict
+                    and isinstance(t, ast.Name)
+                    and t.id.endswith("_CACHE")
+                ):
+                    found.append(f"{py.relative_to(PKG).as_posix()}:{t.id}")
+    assert not found, f"module-level cache dicts outside caches.py: {found}"
 
 
 def test_one_pair_kernel_owns_the_emission_loop():
@@ -129,16 +133,14 @@ def test_one_hnsw_search_kernel():
 
 
 def test_snapshot_restore_drops_only_new_entries():
-    d = caches._cache_dicts()[0]
-    sentinel_old = ("__test_old__",)
-    d[sentinel_old] = [1]
+    caches.memo("__test__", lambda: [1], "old")
     snap = caches.snapshot()
-    sentinel_new = ("__test_new__",)
-    d[sentinel_new] = [2]
+    caches.memo("__test__", lambda: [2], "new")
     dropped = caches.restore(snap)
     assert dropped == 1
-    assert sentinel_old in d and sentinel_new not in d
-    del d[sentinel_old]
+    assert caches.get("__test__", "old") == [1]
+    assert caches.get("__test__", "new") is None
+    caches.evict("__test__", "old")
 
 
 def test_added_since_and_drop_track_build_key_ownership():
@@ -147,19 +149,16 @@ def test_added_since_and_drop_track_build_key_ownership():
     exactly those before every sample — upstream artifacts stay warm.
     added_since must report only post-snapshot entries; drop must evict
     them (idempotently) and leave everything else."""
-    d = caches._cache_dicts()[0]
-    upstream = ("__test_upstream__",)
-    d[upstream] = [0]
+    caches.memo("__test__", lambda: [0], "upstream")
     snap = caches.snapshot()
-    mine = ("__test_mine__",)
-    d[mine] = [1]
+    caches.memo("__test__", lambda: [1], "mine")
     added = caches.added_since(snap)
-    assert (d, mine) in [(dd, k) for dd, k in added]
-    assert all(k != upstream for _, k in added)
+    assert [k for _, k in added] == [("__test__", "mine")]
     assert caches.drop(added) == 1
-    assert mine not in d and upstream in d
+    assert caches.get("__test__", "mine") is None
+    assert caches.get("__test__", "upstream") == [0]
     assert caches.drop(added) == 0  # second evict is a no-op
-    del d[upstream]
+    caches.evict("__test__", "upstream")
 
 
 def test_bench_warmup_runs_every_headline_key_untimed():

@@ -72,15 +72,13 @@ def test_vector_builders_str_vs_column(emb):
 def test_expr_cache_hits_and_is_registered(emb):
     from toy_vector_db_spark import caches
 
-    assert any(
-        d is V._EXPR_CACHE for d in caches._cache_dicts()
-    ), "vector._EXPR_CACHE missing from caches._cache_dicts()"
-    V._EXPR_CACHE.clear()
+    caches.evict("expr", "mag", "embedding")
     c1 = V.magnitude("embedding")
     c2 = V.magnitude("embedding")
     assert c1 is c2, "memo must return the same Column object on a hit"
+    assert caches.get("expr", "mag", "embedding") is c1, "not in the store"
     # a dropped entry (bench eviction) just re-parses
-    V._EXPR_CACHE.clear()
+    caches.evict("expr", "mag", "embedding")
     c3 = V.magnitude("embedding")
     assert c3 is not c1
     rows = emb.select(c1.alias("a"), c3.alias("b")).collect()

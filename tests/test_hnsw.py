@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from toy_vector_db_spark import caches
 from toy_vector_db_spark.operators import evaluation, hnsw, knn
 from toy_vector_db_spark.sources.ndjson import split_count
 
@@ -102,8 +103,8 @@ def test_fused_search_leaves_nothing_behind(spark, split):
 
     def state():
         return (
-            {k: id(v) for k, v in hnsw._INDEX_CACHE.items()},
-            {k: id(v) for k, v in hnsw._PACKED_EDGE_CACHE.items()},
+            [id(v) for v in caches.values("hnsw_index")],
+            [id(v) for v in caches.values("hnsw_packed")],
             spark.sparkContext._jsc.getPersistentRDDs().size(),
         )
 

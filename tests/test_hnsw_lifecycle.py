@@ -6,6 +6,7 @@ IVF-PQ lifecycle keys (tests/test_similarity.py's upsert ≡ rebuild)."""
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
+from toy_vector_db_spark import caches
 from toy_vector_db_spark.operators import evaluation, hnsw, knn
 from toy_vector_db_spark.sources.ndjson import split_count
 
@@ -144,12 +145,9 @@ def test_incremental_pack_prepopulates_and_matches_full(spark, embeddings):
     parted0, edges0 = hnsw.hnsw_index(initial, P)
     hnsw.cached_packed_index(parted0, edges0)  # base pack in session cache
     parted1, edges1 = hnsw.hnsw_upsert(parted0, edges0, batch, P)
-    key1 = hnsw._packed_key(parted1, edges1, "vec_id")
-    assert key1 in hnsw._PACKED_EDGE_CACHE, "upsert did not pre-populate"
-    inc = {
-        r["part"]: r.asDict()
-        for r in hnsw._PACKED_EDGE_CACHE[key1].collect()
-    }
+    packed1 = caches.get("hnsw_packed", parted1, edges1, "vec_id", "embedding")
+    assert packed1 is not None, "upsert did not pre-populate"
+    inc = {r["part"]: r.asDict() for r in packed1.collect()}
     full = {
         r["part"]: r.asDict()
         for r in hnsw.pack_index(parted1, edges1).collect()
@@ -746,5 +744,5 @@ def test_upserted_pack_keeps_a_flat_spread_layout(spark, embeddings):
     assert sum(1 for c in first if c) >= width // 2
     for batch in _chain_batches(base, init_cut, cut, 5):
         parted, edges = hnsw.hnsw_upsert(parted, edges, batch, P)
-        key = hnsw._packed_key(parted, edges, "vec_id")
-        assert layout(hnsw._PACKED_EDGE_CACHE[key]) == first
+        packed = caches.get("hnsw_packed", parted, edges, "vec_id", "embedding")
+        assert layout(packed) == first

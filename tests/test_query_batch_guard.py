@@ -11,6 +11,7 @@ on the fixture workloads (so driver hashes cannot move).
 import pytest
 from pyspark.sql import functions as F
 
+from toy_vector_db_spark import caches
 from toy_vector_db_spark.operators import knn, similarity
 from toy_vector_db_spark.plans import explain
 from toy_vector_db_spark.sources.ndjson import split_count
@@ -51,7 +52,7 @@ def _oversized_queries(spark, embeddings, nrows):
 def test_oversized_batch_gets_catalyst_plan_no_collect(spark, embeddings):
     base, _ = _splits(spark, embeddings)
     big = _oversized_queries(spark, embeddings, knn.QUERY_BATCH_MAX + 1)
-    before = dict(knn._QUERY_BATCH_CACHE)
+    before = caches.snapshot()
     out = knn.pair_scores(base, big)
     plan = explain.formatted_plan(out)
     # pure-Catalyst fallback: no Arrow kernel node in the plan
@@ -59,7 +60,7 @@ def test_oversized_batch_gets_catalyst_plan_no_collect(spark, embeddings):
     # no batch of the oversized frame is kept on the driver: the memo
     # holds at most its oversized marker
     added = [
-        v for k, v in knn._QUERY_BATCH_CACHE.items() if k not in before
+        d[k] for d, k in caches.added_since(before) if k[0] == "query_batch"
     ]
     assert all(v is None for v in added)
     # and the oversized (right/query) side is never the broadcast side —
@@ -170,7 +171,7 @@ def test_count_guard_recounts_when_staging_dir_grows(spark, tmp_path):
     # the hazard precondition this test exists for: when the two plans
     # hash identically, only the file snapshot can distinguish them
     if first.semanticHash() == second.semanticHash():
-        assert knn._input_snapshot(first) != knn._input_snapshot(second)
+        assert caches._input_snapshot(first) != caches._input_snapshot(second)
     assert knn.query_batch_count(second) == 35, (
         "guard served the stale pre-growth count"
     )

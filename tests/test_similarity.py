@@ -596,26 +596,26 @@ def test_rerank_budget_cap(spark, embeddings):
     corpus per query at any scale, a linear serving cost no deployment
     ships. The cap must be inactive at fixture scale (no result drift)
     and binding at simulated production scale."""
-    key = (
-        spark.sparkContext.applicationId,
-        embeddings.semanticHash(),
-        "vec_id",
-    )
-    old = similarity._COUNT_CACHE.get(key)
+    from toy_vector_db_spark import caches
+
+    def inject(n):
+        caches.evict("count", embeddings)
+        caches.memo("count", lambda: n, embeddings)
+
+    old = caches.get("count", embeddings)
     try:
         # simulated billion-vector corpus: budget = the constant cap
-        similarity._COUNT_CACHE[key] = 10**9
+        inject(10**9)
         assert similarity._rerank_budget(embeddings, 10) == similarity.RERANK_CAP
         # fixture-scale corpus: cap inactive, uncapped formula unchanged
-        similarity._COUNT_CACHE[key] = 1900
+        inject(1900)
         assert similarity._rerank_budget(embeddings, 10) == max(
             similarity.RERANK_MULT * 10, 190
         )
     finally:
-        if old is None:
-            similarity._COUNT_CACHE.pop(key, None)
-        else:
-            similarity._COUNT_CACHE[key] = old
+        caches.evict("count", embeddings)
+        if old is not None:
+            inject(old)
 
 
 def test_fixed_rerank_budget_recall(spark, embeddings, monkeypatch):

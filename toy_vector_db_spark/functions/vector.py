@@ -28,6 +28,8 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from toy_vector_db_spark import caches
+
 
 def _dbl(v: Column) -> Column:
     """Cast an array<float> column to array<double> for stable arithmetic."""
@@ -77,9 +79,8 @@ def _sql_ident(name: str) -> str:
 # names, double literals via the D suffix, identical op order), so
 # results are bit-identical; tests/test_expr_fastpath.py pins the two
 # forms equal and the oracle hashes pin cross-engine parity.
-# Registered in caches._cache_dicts (bench hygiene; entries are pure
-# unresolved expressions, dropping one only re-parses on next use).
-_EXPR_CACHE: dict[tuple, Column] = {}
+# Entries live in the session memo (caches.memo, kind "expr"); they are
+# pure unresolved expressions, so dropping one only re-parses on next use.
 
 
 def _sql_dbl(v: str) -> str:
@@ -96,11 +97,7 @@ def _sql_dot_fold(a: str, b: str) -> str:
 
 
 def _cached_expr(key: tuple, sql: str) -> Column:
-    c = _EXPR_CACHE.get(key)
-    if c is None:
-        c = F.expr(sql)
-        _EXPR_CACHE[key] = c
-    return c
+    return caches.memo("expr", lambda: F.expr(sql), *key)
 
 
 def dot(a: Column | str, b: Column | str) -> Column:

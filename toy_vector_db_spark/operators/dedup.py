@@ -38,6 +38,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from toy_vector_db_spark import caches
 from toy_vector_db_spark.functions.rounding import rnd
 from toy_vector_db_spark.functions.vector import _cached_expr, _plain_refs
 
@@ -626,24 +627,15 @@ def simhash_near_pairs(corpus: DataFrame, max_hamming: int = 6) -> DataFrame:
     )
 
 
-# (appId, corpus plan hash, threshold) → persisted verified-pair frame.
-# The pair graph is the shared build artifact of the dedup pipeline
-# (pairs report AND cluster resolution consume it) — computed once per
-# session like the ANN index caches.
-_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def cached_minhash_pairs(corpus: DataFrame, threshold: float = 0.4) -> DataFrame:
-    key = (
-        corpus.sparkSession.sparkContext.applicationId,
-        corpus.semanticHash(),
-        threshold,
+    """The persisted verified-pair frame: the shared build artifact of
+    the dedup pipeline (pairs report AND cluster resolution consume
+    it), computed once per session like the ANN indexes."""
+    return caches.persisted(
+        "minhash_pairs",
+        lambda: minhash_lsh_pairs(corpus, threshold),
+        corpus, threshold,
     )
-    if key not in _PAIRS_CACHE:
-        p = minhash_lsh_pairs(corpus, threshold).persist()
-        p.count()
-        _PAIRS_CACHE[key] = p
-    return _PAIRS_CACHE[key]
 
 
 # -- duplicate-cluster resolution (connected components) ---------------------
@@ -1079,18 +1071,6 @@ SEM_ASSIGN_BLOCK_DOUBLES = 32 << 20
 # routes to the exact fold).
 SEM_MATMUL_TIE_MARGIN = 1e-9
 
-# (appId, payload sha1) → SparkContext.broadcast of the centroid payload
-# (round 13, advice r12): ONE broadcast per distinct centroid set per
-# session, reused across assignment calls. The round-12 form created a
-# fresh broadcast on every call and never released it, so repeated
-# large-centroid assignments accumulated broadcast blocks on the driver
-# and executors for the session's lifetime. Registered in
-# caches._cache_dicts(); eviction UNPERSISTS the handle (advice r13:
-# destroy would break any persisted frame that lazily re-references the
-# broadcast on recompute; unpersist keeps it re-broadcastable).
-_SEM_BCAST_CACHE: dict[tuple, object] = {}
-
-
 _BLAS_CAPPED = False
 
 
@@ -1230,14 +1210,19 @@ def _semdedup_assign_kernel(
     ):
         import hashlib
 
-        sc = base_m.sparkSession.sparkContext
+        # ONE broadcast per distinct centroid set per session, reused
+        # across assignment calls: a fresh broadcast per call, never
+        # released, accumulated blocks for the session's lifetime.
+        # Eviction UNPERSISTS the handle (caches._unpersist)
+        spark = base_m.sparkSession
         fp = hashlib.sha1(
             cids.tobytes() + cmag.tobytes() + C.tobytes()
         ).hexdigest()
-        key = (sc.applicationId, fp)
-        if key not in _SEM_BCAST_CACHE:
-            _SEM_BCAST_CACHE[key] = sc.broadcast(payload)
-        handle = _SEM_BCAST_CACHE[key]
+        handle = caches.memo(
+            "sem_broadcast",
+            lambda: spark.sparkContext.broadcast(payload),
+            spark, fp,
+        )
         payload = None  # keep the big arrays OUT of the task closure
     src = base_m.select(
         id_col, F.col(vec_col).cast("array<double>").alias("_vd")

@@ -58,6 +58,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from toy_vector_db_spark import caches
+
 # Reference hyperparameters (src/hnsw.rs:45-50)
 L = 4
 M_CONN = 16
@@ -455,15 +457,6 @@ def _ids_fingerprint(ids: np.ndarray) -> bytes:
     ).digest()[:8]
 
 
-# Per-session prebuilt-index cache: (applicationId, key, P) → persisted
-# (vectors-with-part, edges). Build once, search many — the operational
-# shape of a vector index (the reference also times search over an
-# already-built index, src/main.rs:41-43). At 100 TB the edges DataFrame
-# is written to parquet as an index table instead of memory-persisted;
-# the search path below is identical either way.
-_INDEX_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
 def hnsw_index(
     base: DataFrame,
     num_partitions: int = 8,
@@ -487,8 +480,8 @@ def hnsw_index(
         .repartition(spark.sparkContext.defaultParallelism, "part")
         .persist()
     )
-    edges = _edges_from_parted(parted, id_col, vec_col).persist()
-    edges.count()  # force the build (parted materializes as its input)
+    # the edge build materializes parted as its input
+    edges = caches.materialized(_edges_from_parted(parted, id_col, vec_col))
     return parted, edges
 
 
@@ -499,34 +492,17 @@ def cached_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
-    return _session_index(
-        base, (cache_key, num_partitions),
+    """``hnsw_index``, built once per session per (base, cache_key,
+    shard count). Build once, search many — the operational shape of a
+    vector index (the reference also times search over an already-built
+    index, src/main.rs:41-43). At 100 TB the edges are written to
+    parquet as an index table instead of memory-persisted; the search
+    path is identical either way."""
+    return caches.memo(
+        "hnsw_index",
         lambda: hnsw_index(base, num_partitions, id_col, vec_col),
+        base, cache_key, num_partitions, id_col, vec_col,
     )
-
-
-def _session_index(df: DataFrame, key: tuple, build):
-    """The session memo of every built index: ``build()`` runs once per
-    (application, ``key``, input-file snapshot of ``df``) — the snapshot
-    keeps a file-backed input rewritten in place from serving the index
-    built before the rewrite."""
-    from toy_vector_db_spark.operators import knn
-
-    full = (
-        df.sparkSession.sparkContext.applicationId,
-        *key,
-        knn._input_snapshot(df),
-    )
-    if full not in _INDEX_CACHE:
-        _INDEX_CACHE[full] = build()
-    return _INDEX_CACHE[full]
-
-
-# (appId, parted hash, edges hash, input snapshots, id_col, vec_col) →
-# persisted PACKED index frame. Packing runs ONE cogroup pass over
-# (vectors, edges) per distinct artifact pair per session; every search
-# after that reads ~one self-contained row per shard.
-_PACKED_EDGE_CACHE: dict[tuple, DataFrame] = {}
 
 _PACK_SCHEMA = (
     "part int, n long, ids_fp binary, ids binary, d int, vecs binary, "
@@ -603,42 +579,20 @@ def _spread(packed: DataFrame) -> DataFrame:
     )
 
 
-def _packed_key(
-    parted: DataFrame,
-    edges: DataFrame,
-    id_col: str,
-    vec_col: str = "embedding",
-) -> tuple:
-    # key includes the input-file snapshots (round 12, r11 advice): a
-    # file-backed frame rewritten in place keeps its semantic hash, and
-    # a stale packed graph would either serve silently (ids unchanged)
-    # or raise persistently on the ids_fp handshake until eviction —
-    # the same staleness fix knn's query caches got in round 10
-    from toy_vector_db_spark.operators import knn
-
-    return (
-        parted.sparkSession.sparkContext.applicationId,
-        parted.semanticHash(),
-        edges.semanticHash(),
-        knn._input_snapshot(parted),
-        knn._input_snapshot(edges),
-        id_col,
-        vec_col,
-    )
-
-
 def cached_packed_index(
     parted: DataFrame,
     edges: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    key = _packed_key(parted, edges, id_col, vec_col)
-    if key not in _PACKED_EDGE_CACHE:
-        p = _spread(pack_index(parted, edges, id_col, vec_col)).persist()
-        p.count()
-        _PACKED_EDGE_CACHE[key] = p
-    return _PACKED_EDGE_CACHE[key]
+    """The persisted packed serving frame of (parted, edges): ONE pack
+    cogroup per artifact pair per session; every search after that
+    reads ~one self-contained row per shard."""
+    return caches.persisted(
+        "hnsw_packed",
+        lambda: _spread(pack_index(parted, edges, id_col, vec_col)),
+        parted, edges, id_col, vec_col,
+    )
 
 
 def _incremental_pack(
@@ -663,53 +617,46 @@ def _incremental_pack(
     serve packs fully) — and always safe: the serve kernel re-checks
     every packed row against the shard's vector ids (ids_fp) before
     trusting it."""
-    base = _PACKED_EDGE_CACHE.get(
-        _packed_key(old_parted, old_edges, id_col, vec_col)
-    )
+    base = caches.get("hnsw_packed", old_parted, old_edges, id_col, vec_col)
     if base is None:
         return
-    new_key = _packed_key(new_parted, new_edges, id_col, vec_col)
-    if new_key in _PACKED_EDGE_CACHE:
-        return
-    delta = pack_index(
-        new_parted.where(F.col("part").isin(touched)),
-        new_edges.where(F.col("part").isin(touched)),
-        id_col,
-        vec_col,
-    )
-    # localCheckpoint (eager) instead of persist (round 13, advice r12):
-    # the union references the BASE packed frame, so a long ingest
-    # session would otherwise chain one persisted frame per micro-batch
-    # — unbounded storage and linearly deepening plans. Checkpointing
-    # cuts the lineage (plan depth stays O(1) across ingests) and makes
-    # the superseded base safe to evict and unpersist below. Trade: a
-    # checkpointed block lost to executor failure is not recomputable —
-    # the serve then repacks cold from the lifecycle frames, the same
-    # cost as a fresh session (and a non-event on local[n], where
-    # executor loss is process loss). _spread holds the base pack's
-    # layout: a bare union adds the delta's partition on every upsert,
-    # and AQE coalesces every touched shard into it.
-    p = _spread(
-        base.where(~F.col("part").isin(touched)).unionByName(delta)
-    ).localCheckpoint(eager=True)
-    _PACKED_EDGE_CACHE[new_key] = p
-    old = _PACKED_EDGE_CACHE.pop(
-        _packed_key(old_parted, old_edges, id_col, vec_col), None
-    )
-    if old is not None:
-        # release the superseded artifact. For a localCheckpoint frame
-        # Dataset.unpersist only clears CacheManager entries — the
-        # checkpoint blocks are RDD-level storage that the
-        # ContextCleaner releases once the superseded Dataset becomes
-        # unreachable (advice r13: release is GC-DEFERRED, not
-        # immediate). Dropping the cache entry here removes the last
-        # live reference, so at most one superseded frame per lineage
-        # transiently holds blocks between eviction and the cleaner's
-        # next pass. The bound holds at any chain depth: new_parted and
-        # new_edges are themselves checkpoint leaves (_upsert_parted),
-        # so neither this frame nor the next upsert's plan references
-        # anything older than the pair it was packed from.
-        old.unpersist()
+
+    def build():
+        delta = pack_index(
+            new_parted.where(F.col("part").isin(touched)),
+            new_edges.where(F.col("part").isin(touched)),
+            id_col,
+            vec_col,
+        )
+        # localCheckpoint (eager) instead of persist (round 13, advice r12):
+        # the union references the BASE packed frame, so a long ingest
+        # session would otherwise chain one persisted frame per micro-batch
+        # — unbounded storage and linearly deepening plans. Checkpointing
+        # cuts the lineage (plan depth stays O(1) across ingests) and makes
+        # the superseded base safe to evict and unpersist below. Trade: a
+        # checkpointed block lost to executor failure is not recomputable —
+        # the serve then repacks cold from the lifecycle frames, the same
+        # cost as a fresh session (and a non-event on local[n], where
+        # executor loss is process loss). _spread holds the base pack's
+        # layout: a bare union adds the delta's partition on every upsert,
+        # and AQE coalesces every touched shard into it.
+        return _spread(
+            base.where(~F.col("part").isin(touched)).unionByName(delta)
+        ).localCheckpoint(eager=True)
+
+    caches.memo("hnsw_packed", build, new_parted, new_edges, id_col, vec_col)
+    # release the superseded artifact. For a localCheckpoint frame
+    # Dataset.unpersist only clears CacheManager entries — the
+    # checkpoint blocks are RDD-level storage that the ContextCleaner
+    # releases once the superseded Dataset becomes unreachable (release
+    # is GC-DEFERRED, not immediate). Dropping the entry here removes
+    # the last live reference, so at most one superseded frame per
+    # lineage transiently holds blocks between eviction and the
+    # cleaner's next pass. The bound holds at any chain depth:
+    # new_parted and new_edges are themselves checkpoint leaves
+    # (_upsert_parted), so neither this frame nor the next upsert's plan
+    # references anything older than the pair it was packed from.
+    caches.evict("hnsw_packed", old_parted, old_edges, id_col, vec_col)
 
 
 def _prebuilt_search(
@@ -1102,8 +1049,7 @@ def routed_index(
         .repartition(base.sparkSession.sparkContext.defaultParallelism, "part")
         .persist()
     )
-    edges = _edges_from_parted(cells, id_col, vec_col).persist()
-    edges.count()  # force the build
+    edges = caches.materialized(_edges_from_parted(cells, id_col, vec_col))
     return cells, edges, cents
 
 
@@ -1114,9 +1060,10 @@ def cached_routed_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    return _session_index(
-        base, ("routed", cache_key, n_centroids),
+    return caches.memo(
+        "hnsw_routed_index",
         lambda: routed_index(base, n_centroids, id_col, vec_col),
+        base, cache_key, n_centroids, id_col, vec_col,
     )
 
 
@@ -1219,8 +1166,9 @@ def routed_compact(
     live_cells = cells.join(
         F.broadcast(tombstones.select(id_col)), id_col, "left_anti"
     ).persist()
-    new_edges = _edges_from_parted(live_cells, id_col, vec_col).persist()
-    new_edges.count()
+    new_edges = caches.materialized(
+        _edges_from_parted(live_cells, id_col, vec_col)
+    )
     return live_cells, new_edges
 
 
@@ -1229,17 +1177,12 @@ def cached_routed_compact(
     tombstones: DataFrame,
     cache_key: str,
 ) -> tuple[DataFrame, DataFrame]:
-    """Session cache for the compacted index. The key includes the
-    semantic hashes of BOTH inputs — a cache_key-only key would hand a
-    second caller with a different tombstone set the first caller's
-    compacted index (deleted rows resurfacing with no error)."""
-    from toy_vector_db_spark.operators import knn
-
-    return _session_index(
-        tombstones,
-        ("routed_compact", cache_key, cells.semanticHash(),
-         tombstones.semanticHash(), knn._input_snapshot(cells)),
+    """``routed_compact``, built once per session per (cells,
+    tombstones, cache_key)."""
+    return caches.memo(
+        "hnsw_routed_compact",
         lambda: routed_compact(cells, tombstones),
+        cells, tombstones, cache_key,
     )
 
 
@@ -1339,8 +1282,7 @@ def labeled_index(
             F.col(label_col).try_cast("int").alias("part"),
         ).persist()
     )
-    edges = _edges_from_parted(cells, id_col, vec_col).persist()
-    edges.count()
+    edges = caches.materialized(_edges_from_parted(cells, id_col, vec_col))
     return cells, edges
 
 
@@ -1351,9 +1293,10 @@ def cached_labeled_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
-    return _session_index(
-        base, ("labeled", cache_key, label_col),
+    return caches.memo(
+        "hnsw_labeled_index",
         lambda: labeled_index(base, label_col, id_col, vec_col),
+        base, cache_key, label_col, id_col, vec_col,
     )
 
 

@@ -27,13 +27,13 @@ truncates to k — O(n log n) single-threaded. Spark-first translation:
 from __future__ import annotations
 
 import math
-import os
 from typing import Callable, NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from toy_vector_db_spark import caches
 from toy_vector_db_spark.functions.arrowkit import list_col_to_matrix
 
 from toy_vector_db_spark.functions import vector as V
@@ -259,83 +259,21 @@ def _row_mask(qi, n, cells, cell_mask_lists, lab, qlabels):
     return m
 
 
-def _input_snapshot(df: DataFrame) -> int:
-    """Order-insensitive fingerprint of the files backing a DataFrame —
-    empty (stable) for non-file-backed plans, where the semantic hash
-    alone remains the correct cache key.
-
-    Round 11 (advice r10): the fingerprint includes each file's size and
-    mtime, not just its path — an in-place rewrite that PRESERVES
-    filenames (compaction, dynamic-partition overwrite) must also
-    invalidate the cached count/batch, or a pre-rewrite count could keep
-    the collect path past QUERY_BATCH_MAX. Stat-ing is driver-side
-    metadata (no Spark job); files Spark lists but the OS can't stat
-    (e.g. a remote scheme this local harness never uses) degrade to
-    path-only entries rather than erroring the serving path."""
-    from urllib.parse import unquote, urlparse
-
-    try:
-        files = df.inputFiles()
-    except Exception:  # non-file relations / analysis corner cases
-        files = []
-    entries = []
-    for f in sorted(files):
-        # inputFiles() renders Hadoop Paths as URIs — seen as both
-        # file:///p and file:/p, with special characters percent-
-        # encoded; urlparse+unquote handles every form (a hardcoded
-        # prefix strip mis-parsed file:/p and encoded paths, silently
-        # degrading the fingerprint to path-only — review r11)
-        if f.startswith("file:"):
-            p = unquote(urlparse(f).path)
-        else:
-            p = f
-        try:
-            st = os.stat(p)
-            entries.append((f, st.st_size, st.st_mtime_ns))
-        except OSError:
-            entries.append((f, -1, -1))
-    return hash(tuple(entries))
-
-
-def _frame_key(df: DataFrame, *extra) -> tuple:
-    """(appId, plan hash, input-file snapshot, *extra): the memo key of
-    every per-query-frame session cache (the collected batches, and the
-    label-aware probe routing)."""
-    return (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        _input_snapshot(df),
-        *extra,
-    )
-
-
 class _QueryBatch:
     """One collected query frame: ``qids`` (int64 [n]), ``X`` (float64
     [n, d], None for an id-only frame) and one Python list per ``extra``
     column, plus ``derived`` — what later steps compute from this batch
-    alone (probe routing per (centroid key, nprobe), PQ LUTs per codebook
-    fingerprint), memoized with it so a repeated frame reuses them and a
-    fresh one adds a single cache entry. ``key`` is the batch's memo
-    key."""
+    alone (probe routing per centroid fingerprint and nprobe, PQ LUTs
+    per codebook fingerprint), memoized with it so a repeated frame
+    reuses them and a fresh one adds a single store entry."""
 
-    __slots__ = ("key", "qids", "X", "extra", "derived")
+    __slots__ = ("qids", "X", "extra", "derived")
 
-    def __init__(self, key, qids, X, extra):
-        self.key = key
+    def __init__(self, qids, X, extra):
         self.qids = qids
         self.X = X
         self.extra = extra
         self.derived: dict = {}
-
-
-# _frame_key(df, cols…, bound) → _QueryBatch, or None for a frame over
-# QUERY_BATCH_MAX rows (the "oversized" marker, so a repeated oversized
-# frame is not re-collected). The bound is part of the key: changing
-# QUERY_BATCH_MAX misses every earlier entry. The input-file snapshot in
-# _frame_key keeps a re-read of a grown or rewritten staging dir from
-# serving the old batch. The query side is the broadcast side by
-# construction; collecting it is the same data movement as F.broadcast.
-_QUERY_BATCH_CACHE: dict[tuple, "_QueryBatch | None"] = {}
 
 
 def _collected_batch(
@@ -354,27 +292,31 @@ def _collected_batch(
     ``vec_col=None`` collects an id-only frame (a tombstone set): the
     batch's ``X`` is then None."""
     bound = QUERY_BATCH_MAX if bounded else None
-    key = _frame_key(df, id_col, vec_col, *extra, bound)
-    if key not in _QUERY_BATCH_CACHE:
+
+    def build():
         vec = []
         if vec_col is not None:
             vec.append(F.col(vec_col).cast("array<double>"))
         sel = df.select(id_col, *vec, *extra)
         t = (sel if bound is None else sel.limit(bound + 1)).toArrow()
         if bound is not None and t.num_rows > bound:
-            _QUERY_BATCH_CACHE[key] = None
-        else:
-            first = 1 + len(vec)
-            _QUERY_BATCH_CACHE[key] = _QueryBatch(
-                key,
-                t.column(0).to_numpy().astype(np.int64, copy=False),
-                list_col_to_matrix(t.column(1).combine_chunks())
-                if vec else None,
-                tuple(
-                    t.column(first + i).to_pylist() for i in range(len(extra))
-                ),
-            )
-    return _QUERY_BATCH_CACHE[key]
+            return None
+        first = 1 + len(vec)
+        return _QueryBatch(
+            t.column(0).to_numpy().astype(np.int64, copy=False),
+            list_col_to_matrix(t.column(1).combine_chunks()) if vec else None,
+            tuple(t.column(first + i).to_pylist() for i in range(len(extra))),
+        )
+
+    # the bound is part of the key: changing QUERY_BATCH_MAX misses
+    # every earlier entry. A frame over the bound stores None (the
+    # oversized marker, so a repeated oversized frame is not
+    # re-collected). The query side is the broadcast side by
+    # construction; collecting it is the same data movement as
+    # F.broadcast.
+    return caches.memo(
+        "query_batch", build, df, id_col, vec_col, *extra, bound
+    )
 
 
 def query_batch_count(

@@ -34,6 +34,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from toy_vector_db_spark import caches
 from toy_vector_db_spark.functions.arrowkit import (
     list_col_to_matrix,
     matrix_to_list_array,
@@ -118,23 +119,6 @@ KMEANS_ITERS = 3
 TRAIN_SAMPLE = 4096
 
 
-def _base_key(base: DataFrame, *extra) -> tuple:
-    """(appId, plan hash, *extra): the memo key of every per-base session
-    cache in this module."""
-    return (
-        base.sparkSession.sparkContext.applicationId,
-        base.semanticHash(),
-        *extra,
-    )
-
-
-# (appId, base plan hash, id_col, vec_col) → the collected training sample.
-# IVF training and PQ training share the same sample; without the cache
-# each trainer re-ran the scan+orderBy+collect job (~1 s of per-session
-# overhead charged to whichever build key ran second).
-_SAMPLE_CACHE: dict[tuple, list] = {}
-
-
 def _train_sample(
     base: DataFrame, id_col: str, vec_col: str
 ) -> list[tuple[int, list[float]]]:
@@ -143,17 +127,20 @@ def _train_sample(
     regardless of corpus size, the same bounded driver-side build as the
     codebook collect the round-2 verdict blessed. At 100 TB everything
     that scales with the corpus (assignment, search, encoding) stays
-    distributed; only this fixed-size sample ever reaches the driver."""
-    key = _base_key(base, id_col, vec_col)
-    if key not in _SAMPLE_CACHE:
-        _SAMPLE_CACHE[key] = [
+    distributed; only this fixed-size sample ever reaches the driver.
+    IVF and PQ training share it; without the memo each trainer re-ran
+    the scan+orderBy+collect job."""
+    return caches.memo(
+        "train_sample",
+        lambda: [
             (int(r[0]), [float(x) for x in r[1]])
             for r in base.where(F.col(id_col) < TRAIN_SAMPLE)
             .select(id_col, F.col(vec_col).cast("array<double>"))
             .orderBy(id_col)
             .collect()
-        ]
-    return _SAMPLE_CACHE[key]
+        ],
+        base, id_col, vec_col,
+    )
 
 
 def trained_centroids(
@@ -229,17 +216,6 @@ def trained_centroids(
     )
 
 
-# (appId, plan hash, n, iters) → (collected trained centroids, the
-# literal DataFrame built from them). Training is a multi-stage job, run
-# once per session; consumers broadcast the 16-row literal table with
-# zero lineage. The DataFrame is memoized ALONGSIDE the rows (round 14):
-# createDataFrame-per-call handed every consumer a fresh RDD-backed plan
-# whose semanticHash differed call-to-call, which silently defeated any
-# downstream plan-keyed session cache (the probe-routing cache missed on
-# every serving call and re-paid its bounded collect).
-_TRAINED_CACHE: dict[tuple, tuple] = {}
-
-
 def cached_trained_centroids(
     base: DataFrame,
     n: int = N_CENTROIDS,
@@ -247,9 +223,14 @@ def cached_trained_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    spark = base.sparkSession
-    key = _base_key(base, n, iters, id_col, vec_col)
-    if key not in _TRAINED_CACHE:
+    """The trained centroids as a literal DataFrame, trained once per
+    session. The store keeps the collected rows ALONGSIDE the frame
+    (``_centroid_matrix`` reads them), and one frame object per base:
+    createDataFrame-per-call handed every consumer a fresh RDD-backed
+    plan whose semanticHash differed call-to-call, which silently
+    defeated every downstream plan-keyed memo."""
+
+    def build():
         rows = (
             trained_centroids(base, n, iters, id_col, vec_col)
             .orderBy("centroid_id")
@@ -259,13 +240,11 @@ def cached_trained_centroids(
             (int(r["centroid_id"]), [float(x) for x in r["centroid_vec"]])
             for r in rows
         ]
-        _TRAINED_CACHE[key] = (
-            vals,
-            spark.createDataFrame(
-                vals, "centroid_id bigint, centroid_vec array<double>"
-            ),
+        return vals, base.sparkSession.createDataFrame(
+            vals, "centroid_id bigint, centroid_vec array<double>"
         )
-    return _TRAINED_CACHE[key][1]
+
+    return caches.memo("trained", build, base, n, iters, id_col, vec_col)[1]
 
 
 def ivf_assign(base: DataFrame, cents: DataFrame,
@@ -302,35 +281,25 @@ def ivf_assign(base: DataFrame, cents: DataFrame,
     )
 
 
-# (appId, base plan hash, id_col, vec_col) → persisted (id, centroid_id)
-# frame under the TRAINED quantizer. The assignment is part of the index
-# artifact — at 100 TB it is the partition-key column WRITTEN with the
-# codes at build time — so recomputing the base×C argmin on every search
-# would charge a build cost to the query path. Same session-cache pattern
-# as _CODEC_CACHE.
-_ASSIGN_CACHE: dict[tuple, DataFrame] = {}
-
-
 def cached_trained_assign(
     base: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    key = _base_key(base, id_col, vec_col)
-    if key not in _ASSIGN_CACHE:
-        cents = cached_trained_centroids(base, id_col=id_col, vec_col=vec_col)
-        a = ivf_assign(base, cents, id_col, vec_col).select(
-            id_col, "centroid_id"
-        ).persist()
-        a.count()
-        _ASSIGN_CACHE[key] = a
-    return _ASSIGN_CACHE[key]
-
-
-# (appId, base plan hash, id_col, vec_col) → path of the WRITTEN cell-
-# partitioned codes table (parquet, partitionBy centroid_id) — the actual
-# on-disk index artifact the docstrings describe. Written once per session.
-_WRITTEN_INDEX_CACHE: dict[tuple, str] = {}
+    """Persisted (id, centroid_id) frame under the TRAINED quantizer.
+    The assignment is part of the index artifact — at 100 TB it is the
+    partition-key column WRITTEN with the codes at build time — so
+    recomputing the base×C argmin on every search would charge a build
+    cost to the query path."""
+    return caches.persisted(
+        "assign",
+        lambda: ivf_assign(
+            base,
+            cached_trained_centroids(base, id_col=id_col, vec_col=vec_col),
+            id_col, vec_col,
+        ).select(id_col, "centroid_id"),
+        base, id_col, vec_col,
+    )
 
 
 def written_codes_cells(
@@ -351,9 +320,7 @@ def written_codes_cells(
 
     from toy_vector_db_spark.sources.fixtures import FIXTURE_DIR
 
-    spark = base.sparkSession
-    key = _base_key(base, id_col, vec_col)
-    if key not in _WRITTEN_INDEX_CACHE:
+    def build():
         # path derives from the CONTENT key (plan hash + column names,
         # NOT the app id): the codes are deterministic for a given plan,
         # so a later session overwrites the directory with identical
@@ -361,9 +328,8 @@ def written_codes_cells(
         # applicationId; distinct plans/columns still get distinct dirs
         # (a plan-hash-only path would let different column choices
         # overwrite each other while a live frame still lazily reads it)
-        import hashlib
-
-        tag = hashlib.md5(repr(key[1:]).encode()).hexdigest()[:12]
+        content = (base.semanticHash(), id_col, vec_col)
+        tag = hashlib.md5(repr(content).encode()).hexdigest()[:12]
         path = os.path.join(FIXTURE_DIR, "sink_out", "ivfpq_index", tag)
         # repartition on the partition column BEFORE the write (round 12,
         # verdict r11 item 4 — the ivfpq_build decomposition): without
@@ -378,17 +344,14 @@ def written_codes_cells(
         cached_codes_cells(base, id_col, vec_col).repartition(
             N_CENTROIDS, "centroid_id"
         ).write.mode("overwrite").partitionBy("centroid_id").parquet(path)
-        _WRITTEN_INDEX_CACHE[key] = path
-    return spark.read.parquet(_WRITTEN_INDEX_CACHE[key])
+        return path
+
+    return base.sparkSession.read.parquet(
+        caches.memo("written_index", build, base, id_col, vec_col)
+    )
 
 
-# (appId, base plan hash, id_col) → base-split row count, for the
-# scale-aware rerank budget. One count per session against the (persisted)
-# codes/base lineage — a scalar, not a data collect.
-_COUNT_CACHE: dict[tuple, int] = {}
-
-
-def _rerank_budget(base: DataFrame, k: int, id_col: str = "vec_id") -> int:
+def _rerank_budget(base: DataFrame, k: int) -> int:
     """Scale-aware, CAPPED ADC rerank budget: R = max(RERANK_MULT·k,
     min(ceildiv(n_base, RERANK_DEN), RERANK_CAP)).
 
@@ -405,11 +368,9 @@ def _rerank_budget(base: DataFrame, k: int, id_col: str = "vec_id") -> int:
     is the knob that scales. Ceil-division and min/max are integer-exact
     in both engines; the oracle computes the identical budget via a
     count(*) scalar subquery with LEAST/GREATEST
-    (oracles_similarity.rerank_budget_sql)."""
-    key = _base_key(base, id_col)
-    if key not in _COUNT_CACHE:
-        _COUNT_CACHE[key] = base.count()
-    n = _COUNT_CACHE[key]
+    (oracles_similarity.rerank_budget_sql). The base count is one
+    scalar job per session."""
+    n = caches.memo("count", base.count, base)
     return max(RERANK_MULT * k, min(-(-n // RERANK_DEN), RERANK_CAP))
 
 
@@ -475,22 +436,22 @@ def _ivf_probes(
 
 
 def _centroid_matrix(cents: DataFrame) -> tuple:
-    """(key, centroid ids int64 [C], centroid matrix float64 [C, d]) of a
+    """(centroid ids int64 [C], centroid matrix float64 [C, d]) of a
     centroid frame (centroid_id, centroid_vec). Session-trained centroids
-    are already on the driver (``_TRAINED_CACHE``); any other frame —
-    the ``centroids_df`` first-K stand-in, injected or frozen centroids
-    — is collected once through ``knn._collected_batch``."""
-    for key, (vals, df) in _TRAINED_CACHE.items():
+    are already on the driver (``cached_trained_centroids`` stores the
+    rows beside the frame); any other frame — the ``centroids_df``
+    first-K stand-in, injected or frozen centroids — is collected once
+    through ``knn._collected_batch``."""
+    for vals, df in caches.values("trained"):
         if df is cents:
             return (
-                ("trained", key),
                 np.array([v[0] for v in vals], dtype=np.int64),
                 np.array([v[1] for v in vals], dtype=np.float64),
             )
     cb = KNN._collected_batch(
         cents, "centroid_id", "centroid_vec", bounded=False
     )
-    return cb.key, cb.qids, cb.X
+    return cb.qids, cb.X
 
 
 def _driver_probes(
@@ -503,11 +464,14 @@ def _driver_probes(
     magnitudes and dots each accumulate left-to-right over the
     dimensions (the zip_with fold stops at the shorter vector), then
     qd = 1 − max(0, dot / (q_mag · c_mag)), ranked by (qd, centroid_id)
-    — array_sort's struct order. Memoized on ``qb`` per (centroid key,
-    nprobe); pinned equal to the collected Catalyst routing in
-    tests/test_driver_routing.py."""
-    ckey, cids, C = _centroid_matrix(cents)
-    rkey = ("probes", ckey, nprobe)
+    — array_sort's struct order. Memoized on ``qb`` per (centroid
+    content fingerprint, nprobe) — the ``_pq_luts`` rule; pinned equal
+    to the collected Catalyst routing in tests/test_driver_routing.py."""
+    cids, C = _centroid_matrix(cents)
+    rkey = (
+        "probes", C.shape,
+        hashlib.sha256(cids.tobytes() + C.tobytes()).digest(), nprobe,
+    )
     if rkey not in qb.derived:
         Q = qb.X
         dot = np.zeros((len(Q), len(C)))
@@ -523,35 +487,24 @@ def _driver_probes(
     return qb.derived[rkey]
 
 
-# (appId, probes plan hash, input snapshot, id col) → {query_id:
-# [centroid_id, ...]}: the collected routing of a label-aware
-# ``_ivf_probes_labeled`` frame, whose histogram-guided cell choice stays
-# a Catalyst plan (plain routing is ``_driver_probes``, no Spark job).
-# Deterministic given the build-time histogram, the centroids and the
-# query frame, so it is memoized per (appId, semanticHash, file
-# snapshot) like knn._collected_batch and bounded by the same
-# QUERY_BATCH_MAX contract (nq·cells ints). Registered in
-# caches._cache_dicts.
-_PROBE_ROUTING_CACHE: dict[tuple, dict] = {}
-
-
 def _collected_probe_routing(
     probes: DataFrame, query_id_col: str
 ) -> dict[int, list]:
-    key = KNN._frame_key(probes, query_id_col)
-    if key not in _PROBE_ROUTING_CACHE:
+    """{query_id: [centroid_id, ...]}: the collected routing of a
+    label-aware ``_ivf_probes_labeled`` frame, whose histogram-guided
+    cell choice stays a Catalyst plan (plain routing is
+    ``_driver_probes``, no Spark job). Deterministic given the
+    build-time histogram, the centroids and the query frame, so it is
+    memoized per frame like knn._collected_batch and bounded by the same
+    QUERY_BATCH_MAX contract (nq·cells ints)."""
+
+    def build():
         routing: dict[int, list] = {}
         for r in probes.select(query_id_col, "centroid_id").collect():
             routing.setdefault(int(r[0]), []).append(int(r[1]))
-        _PROBE_ROUTING_CACHE[key] = routing
-    return _PROBE_ROUTING_CACHE[key]
+        return routing
 
-
-# (appId, base plan hash, labels plan hash) → persisted per-label
-# cell-hit histogram: a BUILD-time artifact (written beside the
-# centroids at 100 TB), so serving never recomputes the assign⋈labels
-# aggregate per query batch.
-_LABEL_HIST_CACHE: dict[tuple, DataFrame] = {}
+    return caches.memo("probe_routing", build, probes, query_id_col)
 
 
 def cached_label_cell_hist(
@@ -560,12 +513,14 @@ def cached_label_cell_hist(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    key = _base_key(base, labels.semanticHash(), id_col, vec_col)
-    if key not in _LABEL_HIST_CACHE:
-        h = label_cell_hist(base, labels, id_col, vec_col).persist()
-        h.count()
-        _LABEL_HIST_CACHE[key] = h
-    return _LABEL_HIST_CACHE[key]
+    """Persisted per-label cell-hit histogram: a BUILD-time artifact
+    (written beside the centroids at 100 TB), so serving never
+    recomputes the assign⋈labels aggregate per query batch."""
+    return caches.persisted(
+        "label_hist",
+        lambda: label_cell_hist(base, labels, id_col, vec_col),
+        base, labels, id_col, vec_col,
+    )
 
 
 def label_cell_hist(
@@ -656,47 +611,39 @@ def _ivf_probes_labeled(
     ).select(query_id_col, query_vec_col, "_q_mag", "centroid_id")
 
 
-# (appId, base plan hash, id_col, vec_col) → persisted serving-side base
-# table (id, vec, _v_mag, centroid_id). At 100 TB this IS the stored base
-# table — vectors written partitioned by centroid_id with their norms at
-# index-build time — so a search never re-joins the cell assignment (or
-# re-folds magnitudes) at query time. Round-6 verdict item 7: the
-# per-search base⋈assign join charged index-build work to every query.
-_CELL_VECTORS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def cached_cell_vectors(
     base: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    key = _base_key(base, id_col, vec_col)
-    if key not in _CELL_VECTORS_CACHE:
-        # build the serving table in ONE materializing job (round 15):
-        # the previous shape first persisted+counted the bare assignment
-        # frame, then persisted+counted this join of it — two sequential
-        # jobs over the same corpus inside the ivf_train build key. The
-        # assignment rides inline here, and the _ASSIGN_CACHE entry
-        # becomes a projection of this persisted frame (identical rows:
-        # the inner join on the id preserves every (id, centroid_id)
-        # pair), so consumers that only need the assignment scan the
-        # same cached storage.
+    """Persisted serving-side base table (id, vec, _v_mag,
+    centroid_id). At 100 TB this IS the stored base table — vectors
+    written partitioned by centroid_id with their norms at index-build
+    time — so a search never re-joins the cell assignment (or re-folds
+    magnitudes) at query time."""
+
+    def build():
+        # ONE materializing job: the assignment rides inline here, and
+        # the "assign" entry becomes a projection of this persisted
+        # frame (identical rows: the inner join on the id preserves
+        # every (id, centroid_id) pair), so consumers that only need the
+        # assignment scan the same cached storage
         cents = cached_trained_centroids(base, id_col=id_col, vec_col=vec_col)
         assign = ivf_assign(base, cents, id_col, vec_col).select(
             id_col, "centroid_id"
         )
-        cv = (
+        cv = caches.materialized(
             base.withColumn("_v_mag", V.magnitude(vec_col))
             .join(assign, id_col)
             .select(id_col, vec_col, "_v_mag", "centroid_id")
-            .persist()
         )
-        cv.count()
-        _CELL_VECTORS_CACHE[key] = cv
-        akey = _base_key(base, id_col, vec_col)
-        if akey not in _ASSIGN_CACHE:
-            _ASSIGN_CACHE[akey] = cv.select(id_col, "centroid_id")
-    return _CELL_VECTORS_CACHE[key]
+        caches.memo(
+            "assign", lambda: cv.select(id_col, "centroid_id"),
+            base, id_col, vec_col,
+        )
+        return cv
+
+    return caches.memo("cell_vectors", build, base, id_col, vec_col)
 
 
 def knn_ivf(
@@ -887,10 +834,6 @@ def _sq_dist(a, b) -> "F.Column":
     )
 
 
-# (appId, plan hash, cols) → trained per-subspace PQ codebooks
-_PQ_BOOKS_CACHE: dict[tuple, list] = {}
-
-
 def trained_pq_codebooks(
     base: DataFrame,
     id_col: str = "vec_id",
@@ -909,11 +852,18 @@ def trained_pq_codebooks(
     distances accumulate (x−y)² left-to-right over the slice axis, member
     means fold in id order, argmin ties to the smallest codeword id —
     every op bit-identical to the old Catalyst fold form and to the
-    DuckDB kmeans_chain oracle (asserted in tests at every SF)."""
-    key = _base_key(base, id_col, vec_col)
-    if key in _PQ_BOOKS_CACHE:
-        return _PQ_BOOKS_CACHE[key]
-    rows = _train_sample(base, id_col, vec_col)
+    DuckDB kmeans_chain oracle (asserted in tests at every SF). Trained
+    once per session per base."""
+    return caches.memo(
+        "pq_books",
+        lambda: _lloyd_pq_books(_train_sample(base, id_col, vec_col)),
+        base, id_col, vec_col,
+    )
+
+
+def _lloyd_pq_books(rows: list) -> list[list[list[float]]]:
+    """``trained_pq_codebooks``' Lloyd's iterations over the collected
+    training sample ``rows`` ((id, vector) in id order)."""
     NV = np.array(
         [_py_normalize(v) for _, v in rows], dtype=np.float64
     )  # (S, d)
@@ -952,28 +902,7 @@ def trained_pq_codebooks(
                 bm.append([float(x) for x in a / len(members)])
             new_books.append(bm)
         books = new_books
-    _PQ_BOOKS_CACHE[key] = books
     return books
-
-
-# (artifact tag, appId, base plan hash, id_col, vec_col) → a persisted
-# per-base codec artifact: the flat PQ codes, a fine quantizer's state
-# row (SQ / BQ2 bounds) or an IVF family's cell-keyed codes. One memo for
-# every codec, registered in caches._cache_dicts.
-_CODEC_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _persisted(
-    tag: str, build: Callable, base: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
-    """``build(base, id_col, vec_col)`` persisted and materialized NOW
-    (the caller is the build step), once per session per base plan."""
-    key = (tag, *_base_key(base, id_col, vec_col))
-    if key not in _CODEC_CACHE:
-        df = build(base, id_col, vec_col).persist()
-        df.count()
-        _CODEC_CACHE[key] = df
-    return _CODEC_CACHE[key]
 
 
 def pq_codes(
@@ -989,9 +918,11 @@ def pq_codes(
     the fold-form expression the DuckDB oracle evaluates. The codes
     frame persists per session: it IS the index artifact (a parquet
     index table at 100 TB), and every ADC search scans it."""
-    return _persisted(
+    return caches.persisted(
         "pq_codes",
-        lambda b, i, v: encode_codes(b, trained_pq_codebooks(b, i, v), i, v),
+        lambda: encode_codes(
+            base, trained_pq_codebooks(base, id_col, vec_col), id_col, vec_col
+        ),
         base, id_col, vec_col,
     )
 
@@ -1002,7 +933,7 @@ def _pq_encode(
     """The PQ codes of ``base`` under ``books``: the persisted
     ``pq_codes`` artifact when ``books`` are base's own session-trained
     codebooks, a fresh encode otherwise (a batch under frozen books)."""
-    if books is _PQ_BOOKS_CACHE.get(_base_key(base, id_col, vec_col)):
+    if books is caches.get("pq_books", base, id_col, vec_col):
         return pq_codes(base, id_col, vec_col)
     return encode_codes(base, books, id_col, vec_col)
 
@@ -1520,7 +1451,10 @@ def cached_sq_bounds(
     """Session-cached persisted bounds row (the trained_centroids idiom):
     the one-pass min/max scan runs once per distinct base plan per
     session; every serving call reuses the persisted one-row frame."""
-    return _persisted("sq_bounds", sq_bounds, base, id_col, vec_col)
+    return caches.persisted(
+        "sq_bounds", lambda: sq_bounds(base, id_col, vec_col),
+        base, id_col, vec_col,
+    )
 
 
 def _sq_code_expr(x, mn, mx):
@@ -1768,7 +1702,10 @@ def cached_bq2_bounds(
 ) -> DataFrame:
     """Session-cached persisted BQ2 bounds row (the cached_sq_bounds
     idiom)."""
-    return _persisted("bq2_bounds", bq2_bounds, base, id_col, vec_col)
+    return caches.persisted(
+        "bq2_bounds", lambda: bq2_bounds(base, id_col, vec_col),
+        base, id_col, vec_col,
+    )
 
 
 def bq2_code_array(
@@ -2040,12 +1977,14 @@ def _cached_cells(
     mixed-family serving stack runs the base×C argmin scan once, not per
     fine quantizer."""
 
-    def build(b, i, v):
-        state = codec.state(b, i, v)
-        assign = cached_trained_assign(b, i, v)
-        return codec.encode(b, state, i, v).join(assign, i)
+    def build():
+        state = codec.state(base, id_col, vec_col)
+        assign = cached_trained_assign(base, id_col, vec_col)
+        return codec.encode(base, state, id_col, vec_col).join(assign, id_col)
 
-    return _persisted(f"ivf{codec.name}_cells", build, base, id_col, vec_col)
+    return caches.persisted(
+        f"ivf{codec.name}_cells", build, base, id_col, vec_col
+    )
 
 
 def cached_codes_cells(
@@ -2293,7 +2232,7 @@ def _codec_search(
             "state trained on the full base silently mis-decodes it"
         )
     if rerank_r is None:
-        rerank_r = max(codec.rerank_mult * k, _rerank_budget(base, k, id_col))
+        rerank_r = max(codec.rerank_mult * k, _rerank_budget(base, k))
     if ivf and cents is None:
         cents = cached_trained_centroids(base, id_col=id_col, vec_col=vec_col)
     if state is None:

@@ -17,11 +17,13 @@ UNROUNDED value with an id tiebreak in both engines (risk #4).
 from __future__ import annotations
 
 import os
+import pathlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from toy_vector_db_spark import caches
 from toy_vector_db_spark.functions.rounding import rnd
 
 from toy_vector_db_spark.functions import text as TXT
@@ -183,49 +185,22 @@ def oracle_sql() -> dict[str, str]:
     return _ordered({k: stabilize_sql_rounding(v) for k, v in _ORACLES.items()})
 
 
-# (appId, sf_dir, name, path snapshot) → the scan DataFrame. Round 14
-# (guide §7.3 driver discipline): every registry query rebuilt its input
-# scans per call, and each spark.read.parquet is a driver-side file
-# listing + footer schema read — profiled at ~0.1 s of every key's
-# construction. A long-lived engine session registers its tables once
-# (this memo IS the catalog); the plan is an unresolved scan, so every
-# collect still reads the parquet from disk — nothing about results or
-# executed work is cached. Keyed on a stat snapshot of the backing path
-# (size + mtime_ns, per part file for directories) so an in-place
-# rewrite invalidates, the same staleness rule as knn._input_snapshot.
-# A stable scan plan also makes semanticHash-keyed session caches
-# hittable across calls by construction. Registered in
-# caches._cache_dicts (bench hygiene).
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _path_snapshot(path: str):
-    try:
-        st = os.stat(path)
-    except OSError:
-        return ("missing",)
-    if os.path.isdir(path):
-        entries = []
-        for de in sorted(os.scandir(path), key=lambda d: d.name):
-            try:
-                s = de.stat()
-                entries.append((de.name, s.st_size, s.st_mtime_ns))
-            except OSError:
-                entries.append((de.name, -1, -1))
-        return tuple(entries)
-    return (st.st_size, st.st_mtime_ns)
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        name,
-        _path_snapshot(f"{sf_dir}/{name}.parquet"),
+    """The scan DataFrame of one fixture table, memoized per session and
+    path snapshot (guide §7.3 driver discipline): each
+    spark.read.parquet is a driver-side file listing + footer schema
+    read — profiled at ~0.1 s of every key's construction. A long-lived
+    engine session registers its tables once (this memo IS the
+    catalog); the plan is an unresolved scan, so every collect still
+    reads the parquet from disk — nothing about results or executed work
+    is cached. An in-place rewrite of the path misses. A stable scan
+    plan also makes the plan-keyed memos hittable across calls by
+    construction."""
+    return caches.memo(
+        "table",
+        lambda: _read_table(spark, sf_dir, name),
+        spark, pathlib.Path(f"{sf_dir}/{name}.parquet"),
     )
-    if key not in _TABLE_CACHE:
-        _TABLE_CACHE[key] = _read_table(spark, sf_dir, name)
-    return _TABLE_CACHE[key]
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -250,16 +225,11 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-
-_N_CACHE: dict[str, int] = {}
-
-
 def _emb_count(spark: SparkSession, sf_dir: str) -> int:
-    """Row count of the (immutable) embeddings fixture, cached per sf_dir —
+    """Row count of the embeddings fixture, counted once per session —
     saves one Spark job for every split-based query."""
-    if sf_dir not in _N_CACHE:
-        _N_CACHE[sf_dir] = table(spark, sf_dir, "embeddings").count()
-    return _N_CACHE[sf_dir]
+    emb = table(spark, sf_dir, "embeddings")
+    return caches.memo("count", emb.count, emb)
 
 
 # ---------------------------------------------------------------------------
@@ -1339,15 +1309,21 @@ euc_topk AS ({_topk_cte(_EUC_SCORED_ALG)})
 """
 
 
-# (appId, sf_dir) → persisted (relevant, retrieved) top-k frames: the two
-# retrieval result sets all three evaluation keys score. An evaluation
-# pipeline materializes its retrieval runs once and computes every metric
-# over them — recomputing the base×queries product per metric key charged
-# the same BNLJ three times.
-_EVAL_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
 def _eval_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Persisted (retrieved, relevant) top-k frames, once per session:
+    the two retrieval result sets all three evaluation keys score. An
+    evaluation pipeline materializes its retrieval runs once and
+    computes every metric over them — recomputing the base×queries
+    product per metric key charged the same BNLJ three times."""
+    return caches.memo(
+        "eval_frames", lambda: _scored_eval_frames(spark, sf_dir),
+        spark, sf_dir,
+    )
+
+
+def _scored_eval_frames(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
     """One cross-join pass scoring BOTH metrics, then BOTH top-k window
     ranks stacked in a single plan over the same query_id exchange: one
     base×queries BNLJ, one shuffle, two sorts. The union-of-topk frame is
@@ -1358,9 +1334,6 @@ def _eval_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
     to whichever eval key ran first. Distance expressions are unchanged
     (cosine = knn_exact_batch's cached-magnitude form), so values stay
     bit-identical to the oracle."""
-    ck = (spark.sparkContext.applicationId, sf_dir)
-    if ck in _EVAL_CACHE:
-        return _EVAL_CACHE[ck]
     base, qs = _split(spark, sf_dir)
     from pyspark.sql import Window
 
@@ -1398,7 +1371,6 @@ def _eval_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
         F.col("euc_dist").alias("dist"),
         F.col("rank_euc").alias("rank"),
     )
-    _EVAL_CACHE[ck] = (retrieved, relevant)
     return retrieved, relevant
 
 
@@ -1950,7 +1922,7 @@ def q_ivfpq_compact_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # content-keyed path (the written_codes_cells idiom): identical
     # inputs overwrite with identical bytes instead of accumulating dirs.
     # The quantizer knobs are PART of the content key (round-8 fix:
-    # unlike _WRITTEN_INDEX_CACHE, whose session-level cache rewrites on
+    # unlike the written_codes_cells memo, which rewrites on
     # every new appId, this marker-gated write PERSISTS across sessions
     # — a knob change like PQ_K 64→256 would otherwise silently serve
     # the stale artifact while the oracle computes with the new knobs)

@@ -23,6 +23,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from toy_vector_db_spark import caches
 from toy_vector_db_spark.operators import similarity
 from toy_vector_db_spark.sources.fixtures import FIXTURE_DIR
 
@@ -55,12 +56,6 @@ def _stream_embeddings_dir(spark: SparkSession, sf_dir: str) -> str:
     return d
 
 
-# (appId, sf_dir, lo, hi, index tag) → sink dir of an already-drained
-# ingest: the stream is drained once per session; reruns read the written
-# artifact — exactly how a long-lived ingest pipeline's consumers behave.
-_INGEST_CACHE: dict[tuple, str] = {}
-
-
 def _drain_codes(
     codec,
     spark: SparkSession,
@@ -81,10 +76,12 @@ def _drain_codes(
     boundaries, so search over them shares the upsert key's DuckDB
     oracle. The sink directory and cache key come from the index tag
     (``codec.name``, ``ivf``-prefixed for a cell-keyed index). Returns
-    the ingested rows read back from the sink."""
+    the ingested rows read back from the sink. The stream is drained
+    once per session; reruns read the written artifact — exactly how a
+    long-lived ingest pipeline's consumers behave."""
     tag = codec.name if cents is None else f"ivf{codec.name}"
-    key = (spark.sparkContext.applicationId, sf_dir, lo, hi, tag)
-    if key not in _INGEST_CACHE:
+
+    def drain() -> str:
         sf_tag = os.path.basename(os.path.normpath(sf_dir))
         sink = os.path.join(
             FIXTURE_DIR, "sink_out", f"stream_{tag}", sf_tag, f"{lo}_{hi}"
@@ -119,8 +116,11 @@ def _drain_codes(
             q.processAllAvailable()
         finally:
             q.stop()
-        _INGEST_CACHE[key] = sink
-    return spark.read.parquet(_INGEST_CACHE[key])
+        return sink
+
+    return spark.read.parquet(
+        caches.memo("ingest", drain, spark, sf_dir, lo, hi, tag)
+    )
 
 
 def stream_ingest_codes(
@@ -178,17 +178,16 @@ def stream_ingest_hnsw(
     tests/test_hnsw_lifecycle.py) — which is why search over it shares
     hnsw_upsert_search's oracle.
 
-    Returns (parted, edges) read back from the sink — the same tuple
-    shape every HNSW search entry point takes."""
+    The initial index over ids < ``lo`` is the batch upsert key's
+    memoized one, built over the registry split's base, so ``lo`` must
+    not pass the split cut. Returns (parted, edges) read back from the
+    sink — the same tuple shape every HNSW search entry point takes."""
     from pyspark.sql import functions as F
 
+    from toy_vector_db_spark import registry
     from toy_vector_db_spark.operators import hnsw as H
 
-    key = (
-        spark.sparkContext.applicationId, sf_dir, lo, hi,
-        "hnsw", num_partitions,
-    )
-    if key not in _INGEST_CACHE:
+    def drain() -> str:
         tag = os.path.basename(os.path.normpath(sf_dir))
         sink = os.path.join(
             FIXTURE_DIR, "sink_out", "stream_hnsw", tag, f"{lo}_{hi}"
@@ -198,10 +197,11 @@ def stream_ingest_hnsw(
         pdir = os.path.join(sink, "parted")
         edir = os.path.join(sink, "edges")
 
-        initial = spark.read.parquet(
-            os.path.join(sf_dir, "embeddings.parquet")
-        ).where(f"vec_id < {lo}")
-        # the SAME session-cached initial index the batch upsert key uses
+        # the plan of registry.q_hnsw_upsert_search's initial frame, so
+        # the same store key and the same built index
+        initial = registry._split(spark, sf_dir)[0].where(
+            F.col("vec_id") < lo
+        )
         parted0, edges0 = H.cached_index(
             initial, f"{sf_dir}#hnsw_upsert_init", num_partitions
         )
@@ -253,8 +253,11 @@ def stream_ingest_hnsw(
             q.processAllAvailable()
         finally:
             q.stop()
-        _INGEST_CACHE[key] = sink
-    sink = _INGEST_CACHE[key]
+        return sink
+
+    sink = caches.memo(
+        "ingest", drain, spark, sf_dir, lo, hi, "hnsw", num_partitions
+    )
     return (
         spark.read.parquet(os.path.join(sink, "parted")),
         spark.read.parquet(os.path.join(sink, "edges")),

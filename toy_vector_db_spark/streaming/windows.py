@@ -16,6 +16,7 @@ window/group keys exactly like the batch groupBy.
 from __future__ import annotations
 
 import os
+import pathlib
 import shutil
 import threading
 import uuid
@@ -23,6 +24,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from toy_vector_db_spark import caches
 from toy_vector_db_spark.functions.rounding import rnd
 from pyspark.sql import types as T
 
@@ -49,27 +51,17 @@ def _stream_input_dir(sf_dir: str) -> str:
     return d
 
 
-# (appId, staged dir, file snapshot) → the inferred events schema. Every
-# streaming key re-ran a batch parquet read (driver-side listing +
-# footer) per call just to hand readStream its schema; the schema is a
-# pure function of the staged file (round 14, the registry._TABLE_CACHE
-# discipline). Registered in caches._cache_dicts.
-_STREAM_SCHEMA_CACHE: dict[tuple, object] = {}
-
-
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from toy_vector_db_spark.registry import _path_snapshot
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     d = _stream_input_dir(sf_dir)
-    skey = (
-        spark.sparkContext.applicationId,
-        d,
-        _path_snapshot(os.path.join(d, "events.parquet")),
+    # the inferred schema, memoized per staged file snapshot: readStream
+    # needs it, and a batch parquet read per call is a driver-side
+    # listing + footer read
+    raw_schema = caches.memo(
+        "stream_schema",
+        lambda: spark.read.parquet(d).schema,
+        spark, pathlib.Path(d, "events.parquet"),
     )
-    if skey not in _STREAM_SCHEMA_CACHE:
-        _STREAM_SCHEMA_CACHE[skey] = spark.read.parquet(d).schema
-    raw_schema = _STREAM_SCHEMA_CACHE[skey]
     raw = spark.readStream.schema(raw_schema).parquet(d)
     if isinstance(raw.schema["ts"].dataType, T.LongType):
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
