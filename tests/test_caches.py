@@ -102,3 +102,50 @@ def test_streaming_hnsw_ingest_reuses_the_upsert_index(spark, sf_dir):
     kinds = [k[0] for _, k in caches.added_since(snap)]
     assert "ingest" in kinds
     assert "hnsw_index" not in kinds, kinds
+
+
+def test_repeated_lookup_keys_a_frame_over_py4j_once(
+    spark, tmp_path, monkeypatch, store
+):
+    """The frame's appId, semanticHash and file list are derived once
+    per DataFrame object; its files are still stat'ed on every lookup,
+    so a rewrite under the same object misses."""
+    part = tmp_path / "t" / "part-0.parquet"
+    part.parent.mkdir()
+    pq.write_table(pa.table({"x": pa.array([1, 2], pa.int64())}), part)
+    df = spark.read.parquet(str(part.parent))
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    commands = []
+
+    def counting_send(command, *args, **kwargs):
+        commands.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting_send)
+    assert caches.memo("__test__", lambda: 1, df) == 1
+    assert caches.memo("__test__", lambda: 2, df) == 1  # hit
+    pq.write_table(pa.table({"x": pa.array([1, 2, 3], pa.int64())}), part)
+    st = os.stat(part)
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert caches.memo("__test__", lambda: 3, df) == 3  # files changed
+    assert sum("\nsemanticHash\n" in c for c in commands) == 1
+    assert sum("\ninputFiles\n" in c for c in commands) == 1
+
+
+def test_evicting_cell_vectors_drops_the_assign_it_seeded(spark, store):
+    """cached_cell_vectors seeds the "assign" entry as a projection of
+    its persisted frame; evicting the frame's entry takes the projection
+    with it, while an assign entry built on its own stays."""
+    schema = "vec_id long, embedding array<double>"
+    seeded = spark.createDataFrame(_vectors(300, 8, 3), schema)
+    similarity.cached_cell_vectors(seeded)
+    assert caches.get("assign", seeded, "vec_id", "embedding") is not None
+    caches.evict("cell_vectors", seeded, "vec_id", "embedding")
+    assert caches.get("assign", seeded, "vec_id", "embedding") is None
+
+    own = spark.createDataFrame(_vectors(300, 8, 4), schema)
+    assign = similarity.cached_trained_assign(own)
+    similarity.cached_cell_vectors(own)
+    caches.evict("cell_vectors", own, "vec_id", "embedding")
+    assert caches.get("assign", own, "vec_id", "embedding") is assign

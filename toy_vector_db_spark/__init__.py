@@ -17,6 +17,17 @@ Layout:
                  similarity search, text analytics, relational suite)
     streaming/   Structured Streaming operators over the events table
     plans/       plan-inspection helpers (pushdown/broadcast/codegen audits)
+    pyworker.py  Python-worker patch: a stat-checked zip-directory refresh
 """
 
 __version__ = "0.1.0"
+
+from pyspark import TaskContext as _TaskContext
+
+# inside a Python worker (never on the driver): every engine kernel
+# unpickles by reference to an engine module, so a reused worker is
+# patched from its first engine task on (see pyworker.py)
+if _TaskContext.get() is not None:
+    from . import pyworker
+
+    pyworker.install()

@@ -23,6 +23,19 @@ the old bytes. A path's snapshot (``_path_snapshot``) does the same for
 a file or directory named by the caller before any plan exists (a
 registry scan, a staged stream's schema).
 
+A DataFrame object's plan never changes, and Spark lists the files of a
+path it reads once, when the frame is read. So the py4j half of a
+frame's key (appId, semanticHash, input-file list) is derived once per
+frame object (``_frame``); only the ``os.stat`` of its files runs on
+every lookup. (A catalog table whose partitions change under one frame
+object is the exception: its new files are not in the memoized list.)
+
+An entry may be derived from another: ``memo(..., owner=(kind,
+*parts))`` declares it, and removing the owner's entry (``evict``,
+``drop``, ``restore``) removes the derived entry with it — the
+``"assign"`` projection ``similarity.cached_cell_vectors`` seeds over
+its persisted frame leaves with that frame.
+
 Bench hygiene: ``snapshot`` / ``added_since`` / ``drop`` / ``restore``
 let bench.py record the entries a build key's warmup run added and evict
 exactly those before each timed sample, so every repeat re-executes the
@@ -35,11 +48,35 @@ keeps serving frames whose storage is gone.
 from __future__ import annotations
 
 import os
+import weakref
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 _store: dict[tuple, Any] = {}
+# derived entry's key -> its owner's key (memo's ``owner``)
+_owner: dict[tuple, tuple] = {}
+# DataFrame -> (appId, semanticHash, sorted input files)
+_frame_parts: "weakref.WeakKeyDictionary[DataFrame, tuple]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _frame(df: DataFrame) -> tuple:
+    """(appId, semanticHash, sorted input files) of a DataFrame, over
+    py4j once per frame object."""
+    frame = _frame_parts.get(df)
+    if frame is None:
+        try:
+            files = tuple(sorted(df.inputFiles()))
+        except Exception:  # non-file relations / analysis corner cases
+            files = ()
+        frame = _frame_parts[df] = (
+            df.sparkSession.sparkContext.applicationId,
+            df.semanticHash(),
+            files,
+        )
+    return frame
 
 
 def _input_snapshot(df: DataFrame) -> int:
@@ -54,12 +91,8 @@ def _input_snapshot(df: DataFrame) -> int:
     scheme) degrade to path-only entries rather than erroring."""
     from urllib.parse import unquote, urlparse
 
-    try:
-        files = df.inputFiles()
-    except Exception:  # non-file relations / analysis corner cases
-        files = []
     entries = []
-    for f in sorted(files):
+    for f in _frame(df)[2]:
         # inputFiles() renders Hadoop Paths as URIs — seen as both
         # file:///p and file:/p, with special characters percent-
         # encoded; urlparse+unquote handles every form
@@ -93,11 +126,7 @@ def _path_snapshot(path: str) -> tuple:
 
 def _part(p: Any) -> Any:
     if isinstance(p, DataFrame):
-        return (
-            p.sparkSession.sparkContext.applicationId,
-            p.semanticHash(),
-            _input_snapshot(p),
-        )
+        return (*_frame(p)[:2], _input_snapshot(p))
     if isinstance(p, SparkSession):
         return p.sparkContext.applicationId
     if isinstance(p, os.PathLike):
@@ -110,11 +139,17 @@ def _key(kind: str, parts: tuple) -> tuple:
     return (kind, *map(_part, parts))
 
 
-def memo(kind: str, build: Callable[[], Any], *parts) -> Any:
-    """``build()``'s value, built once per (kind, parts) key."""
+def memo(
+    kind: str, build: Callable[[], Any], *parts, owner: tuple | None = None
+) -> Any:
+    """``build()``'s value, built once per (kind, parts) key. ``owner``,
+    another entry's (kind, *parts), declares the value built here as
+    derived from that entry: removing the owner removes it too."""
     key = _key(kind, parts)
     if key not in _store:
         _store[key] = build()
+        if owner is not None:
+            _owner[key] = _key(owner[0], owner[1:])
     return _store[key]
 
 
@@ -139,9 +174,18 @@ def get(kind: str, *parts) -> Any:
 
 def evict(kind: str, *parts) -> None:
     """Drop the key's entry, if any, releasing what Spark holds for it."""
-    key = _key(kind, parts)
-    if key in _store:
-        _unpersist(_store.pop(key))
+    _remove(_key(kind, parts))
+
+
+def _remove(key: tuple) -> int:
+    """Drop the key's entry and the entries derived from it, unpersisting
+    what they hold; returns entries dropped."""
+    if key not in _store:
+        return 0
+    _unpersist(_store.pop(key))
+    _owner.pop(key, None)
+    derived = [k for k, o in _owner.items() if o == key]
+    return 1 + sum(map(_remove, derived))
 
 
 def values(kind: str) -> list:
@@ -194,15 +238,11 @@ def added_since(snap: list[tuple[dict, frozenset]]) -> list[tuple[dict, Any]]:
 
 
 def drop(entries: list[tuple[dict, Any]]) -> int:
-    """Evict the given (mapping, key) entries, unpersisting any Spark
-    frames they held; missing keys are skipped (a prior drop in the same
-    timed loop already removed them). Returns entries dropped."""
-    dropped = 0
-    for d, k in entries:
-        if k in d:
-            _unpersist(d.pop(k))
-            dropped += 1
-    return dropped
+    """Evict the given (mapping, key) entries and the entries derived
+    from them, unpersisting any Spark frames they held; missing keys are
+    skipped (a prior drop in the same timed loop already removed them).
+    Returns entries dropped."""
+    return sum(_remove(k) for _, k in entries)
 
 
 def restore(snap: list[tuple[dict, frozenset]]) -> int:

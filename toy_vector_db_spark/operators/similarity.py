@@ -627,7 +627,8 @@ def cached_cell_vectors(
         # the "assign" entry becomes a projection of this persisted
         # frame (identical rows: the inner join on the id preserves
         # every (id, centroid_id) pair), so consumers that only need the
-        # assignment scan the same cached storage
+        # assignment scan the same cached storage; the projection is
+        # owned by this entry and leaves the store with it
         cents = cached_trained_centroids(base, id_col=id_col, vec_col=vec_col)
         assign = ivf_assign(base, cents, id_col, vec_col).select(
             id_col, "centroid_id"
@@ -640,6 +641,7 @@ def cached_cell_vectors(
         caches.memo(
             "assign", lambda: cv.select(id_col, "centroid_id"),
             base, id_col, vec_col,
+            owner=("cell_vectors", base, id_col, vec_col),
         )
         return cv
 

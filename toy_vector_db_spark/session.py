@@ -4,6 +4,17 @@ way a real cluster deployment would be: AQE on, Arrow on, UTC timezone.
 At 100 TB the same settings apply cluster-wide; ``shuffle_partitions`` would
 be sized to ~2-3× total executor cores (or left to AQE coalescing), and
 ``spark.sql.files.maxPartitionBytes`` tuned so scan tasks stay ~128-256 MB.
+
+The Python workers get a patch rather than a conf, because no Spark
+setting changes what follows. Every PySpark task starts with ``importlib.invalidate_caches()``,
+and on CPython 3.11 that re-reads pyspark.zip, the spark-core jar and
+the py4j zip once per importer, 26,672 directory entries and 170-390 ms
+per task, most of a point request's Python stage. Importing the package
+inside a worker (every engine kernel unpickles by reference to an
+engine module) runs ``pyworker.install``, which re-reads an archive only
+when its stat changed. The driver is never patched, and the patch is a
+no-op on CPython 3.12+ (where the refresh is already lazy) and on any
+interpreter whose zipimport lacks the 3.11 internals it replaces.
 """
 
 from __future__ import annotations
