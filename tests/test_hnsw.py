@@ -85,7 +85,8 @@ def test_reconstruction_matches_insert_built_graph():
         old = hnsw.LocalHNSW(vecs[:n_old])
         old.build(levels[:n_old])
         grown = hnsw._dict_graph(
-            ids[:n_old], vecs, hnsw._edge_rows(0, ids[:n_old], old)
+            ids[:n_old], vecs,
+            hnsw._csr_from_edges(ids[:n_old], hnsw._edge_rows(0, ids[:n_old], old)),
         )
         for local in range(n_old, n):
             grown.insert(local, levels[local])

@@ -162,12 +162,34 @@ def test_incremental_pack_prepopulates_and_matches_full(spark, embeddings):
     scratch_p, scratch_e = hnsw.hnsw_index(base, P)
     scratch = hnsw.knn_hnsw_prebuilt(scratch_p, scratch_e, qs, 10).collect()
     assert sorted(map(tuple, served)) == sorted(map(tuple, scratch))
+    # an interleaved-id chain (even ids indexed, odd ids upserted in
+    # two batches): touched shards rebuild from scratch, and every
+    # upsert's packed frame still equals the full pack byte for byte
+    parted, edges = hnsw.hnsw_index(base.where(F.col("vec_id") % 2 == 0), P)
+    hnsw.cached_packed_index(parted, edges)
+    odd = base.where(F.col("vec_id") % 2 == 1)
+    for batch in (odd.where(F.col("vec_id") % 4 == 1),
+                  odd.where(F.col("vec_id") % 4 == 3)):
+        parted, edges = hnsw.hnsw_upsert(parted, edges, batch, P)
+        packed = caches.get("hnsw_packed", parted, edges, "vec_id", "embedding")
+        assert {r["part"]: r.asDict() for r in packed.collect()} == {
+            r["part"]: r.asDict()
+            for r in hnsw.pack_index(parted, edges).collect()
+        }
+    assert _edge_set(edges) == _edge_set(scratch_e)
 
 
 def _stages_of(spark, group, fn):
     """Run ``fn`` under its own Spark job group; return its result and
     the number of stages its jobs ran (stages skipped because their
     shuffle output was reused are not counted)."""
+    out, work = _spark_work(spark, group, fn)
+    return out, work["stages"]
+
+
+def _spark_work(spark, group, fn):
+    """Run ``fn`` under its own Spark job group; return its result and
+    what its jobs did: jobs, stages ran and shuffle bytes read."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
@@ -187,13 +209,18 @@ def _stages_of(spark, group, fn):
         except Py4JJavaError:
             return False
 
+    jobs = tracker.getJobIdsForGroup(group)
     stages = [
-        sid
-        for jid in tracker.getJobIdsForGroup(group)
-        for sid in tracker.getJobInfo(jid).stageIds
+        sid for jid in jobs for sid in tracker.getJobInfo(jid).stageIds
         if ran(sid)
     ]
-    return out, len(stages)
+    return out, {
+        "jobs": len(jobs),
+        "stages": len(stages),
+        "shuffle_read": sum(
+            store.lastStageAttempt(sid).shuffleReadBytes() for sid in stages
+        ),
+    }
 
 
 def _plan_nodes(df):
@@ -229,6 +256,7 @@ def test_upsert_chain_keeps_stages_and_lineage_flat(spark, embeddings):
     assert nodes[-1] == nodes[0], nodes
 
     cells, edges, cents = hnsw.routed_index(initial)
+    hnsw.cached_packed_index(cells, edges)  # a cold index packs in its first upsert
     stages, nodes = [], []
     for c, batch in enumerate(_chain_batches(base, init_cut, cut, 2)):
         (cells, edges), s = _stages_of(
@@ -240,6 +268,109 @@ def test_upsert_chain_keeps_stages_and_lineage_flat(spark, embeddings):
     assert stages[-1] == stages[0], stages
     assert nodes[-1] == nodes[0], nodes
     assert cells.count() == base.count()
+
+
+def test_upsert_chain_runs_few_jobs_and_no_shuffle(spark, embeddings):
+    """An upsert into a packed index is one map over its packed rows:
+    along a 4-upsert chain each upsert runs at most 4 Spark jobs (the
+    batch collect, the ids-already-indexed map, the insert map's eager
+    checkpoint) and reads no shuffle bytes — the vector table, the edge
+    rows and the packed rows stay where they are. Hash-sharded and
+    cell-routed alike (the routed batch routes on the driver)."""
+    n = embeddings.count()
+    cut = split_count(n, 0.95)
+    base = embeddings.where(F.col("vec_id") < cut)
+    init_cut = split_count(cut, 0.75)
+    initial = base.where(F.col("vec_id") < init_cut)
+    batches = _chain_batches(base, init_cut, cut, 4)
+
+    parted, edges = hnsw.hnsw_index(initial, P)
+    hnsw.cached_packed_index(parted, edges)
+    for c, batch in enumerate(batches):
+        (parted, edges), work = _spark_work(
+            spark, f"hnsw_upsert.work.{c}",
+            lambda: hnsw.hnsw_upsert(parted, edges, batch, P),
+        )
+        assert work["jobs"] <= 4 and work["shuffle_read"] == 0, (c, work)
+
+    cells, edges, cents = hnsw.routed_index(initial)
+    hnsw.cached_packed_index(cells, edges)
+    for c, batch in enumerate(batches):
+        (cells, edges), work = _spark_work(
+            spark, f"hnsw_routed_upsert.work.{c}",
+            lambda: hnsw.hnsw_routed_upsert(cells, edges, cents, batch),
+        )
+        assert work["jobs"] <= 4 and work["shuffle_read"] == 0, (c, work)
+    assert cells.count() == base.count()
+
+
+def test_chunked_upsert_equals_one_pass(spark, embeddings, monkeypatch):
+    """A batch over QUERY_BATCH_MAX rows runs as id-ordered chunks
+    through the same insert map and gives the one-pass graph: the same
+    edges and the same packed bytes. The batch interleaves with the
+    index's ids (scratch shard rebuilds) and then extends them (append
+    chunks). A repeated id is still caught in the chunked form."""
+    import pytest
+
+    n = embeddings.count()
+    cut = split_count(n, 0.95)
+    base = embeddings.where(F.col("vec_id") < cut)
+    init_cut = split_count(cut, 0.75)
+    gap = F.col("vec_id") % 9 == 0
+    initial = base.where((F.col("vec_id") < init_cut) & ~gap)
+    batch = base.where(
+        ((F.col("vec_id") < init_cut) & gap)
+        | F.col("vec_id").between(init_cut, init_cut + 19)
+    )
+
+    def upsert():
+        parted, edges = hnsw.hnsw_index(initial, P)
+        parted, edges = hnsw.hnsw_upsert(parted, edges, batch, P)
+        packed = caches.get("hnsw_packed", parted, edges, "vec_id", "embedding")
+        return _edge_set(edges), {r["part"]: r.asDict() for r in packed.collect()}
+
+    one_pass = upsert()
+    monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 7)
+    assert batch.count() > 7
+    assert upsert() == one_pass
+    scratch = hnsw.build_edges(initial.unionByName(batch), P)
+    assert one_pass[0] == _edge_set(scratch)
+    parted, edges = hnsw.hnsw_index(initial, P)
+    with pytest.raises(ValueError, match="duplicate ids within"):
+        hnsw.hnsw_upsert(parted, edges, batch.unionByName(batch), P)
+
+
+def test_routed_upsert_builds_a_cell_new_to_the_index(spark, embeddings):
+    """A routed upsert whose batch routes into a cell the index holds no
+    rows of builds that cell's graph from its batch rows: the result is
+    the frozen-centroid rebuild of the union, edge for edge."""
+    from toy_vector_db_spark.operators import similarity
+
+    n = embeddings.count()
+    cut = split_count(n, 0.95)
+    base = embeddings.where(F.col("vec_id") < cut)
+    init_cut = split_count(cut, 0.75)
+    cells0, edges0, cents = hnsw.routed_index(
+        base.where(F.col("vec_id") < init_cut)
+    )
+    empty = cells0.select("part").first()[0]
+    kept = F.col("part") != empty
+    batch = cells0.where(~kept).select("vec_id", "embedding").unionByName(
+        base.where(F.col("vec_id") >= init_cut).select("vec_id", "embedding")
+    )
+    cells1, edges1 = hnsw.hnsw_routed_upsert(
+        cells0.where(kept), edges0.where(kept), cents, batch
+    )
+    assert cells1.where(~kept).count() >= cells0.where(~kept).count() > 0
+    assign = similarity.ivf_assign(base, cents).select(
+        "vec_id", F.col("centroid_id").cast("int").alias("part")
+    )
+    scratch = hnsw._edges_from_parted(
+        base.select("vec_id", "embedding").join(assign, "vec_id"),
+        "vec_id", "embedding",
+    )
+    assert _edge_set(edges1) == _edge_set(scratch)
+    assert cells1.count() == base.count()
 
 
 def test_search_plan_over_upsert_chain_stays_flat(spark, embeddings):
@@ -742,7 +873,9 @@ def test_upserted_pack_keeps_a_flat_spread_layout(spark, embeddings):
     assert len(first) == spark.sparkContext.defaultParallelism
     assert sum(first) == P and max(first) < P
     assert sum(1 for c in first if c) >= width // 2
+    assert max(first) - min(first) <= 1, first
     for batch in _chain_batches(base, init_cut, cut, 5):
         parted, edges = hnsw.hnsw_upsert(parted, edges, batch, P)
         packed = caches.get("hnsw_packed", parted, edges, "vec_id", "embedding")
-        assert layout(packed) == first
+        now = layout(packed)
+        assert now == first and max(now) - min(now) <= 1, now

@@ -225,7 +225,7 @@ def stream_ingest_hnsw(
             batch = batch_df.select("vec_id", "embedding")
             parted = spark.read.parquet(pdir)
             edges = spark.read.parquet(edir)
-            _, e2 = H.hnsw_upsert(parted, edges, batch, num_partitions)
+            p2, e2 = H.hnsw_upsert(parted, edges, batch, num_partitions)
             touched = [
                 int(r[0])
                 for r in H._with_part(batch, num_partitions, "vec_id")
@@ -243,6 +243,9 @@ def stream_ingest_hnsw(
                 H._with_part(batch, num_partitions, "vec_id")
                 .write.mode("append").partitionBy("part").parquet(pdir)
             )
+            # the next micro-batch reads the index back from the sink:
+            # release the packed leaf this upsert registered for (p2, e2)
+            caches.evict("hnsw_packed", p2, e2, "vec_id", "embedding")
 
         q = (
             arriving.writeStream.foreachBatch(_process)
