@@ -219,6 +219,6 @@ def test_packed_index_guards_mismatched_artifacts(
                 Exception, match="does not match its own ids"
             ):
                 hnsw._prebuilt_search(
-                    parted, bad, qs, 5, 100,
+                    bad, qs, 5, 100,
                     "vec_id", "query_id", "query_vec",
                 ).collect()

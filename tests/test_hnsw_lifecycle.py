@@ -494,6 +494,30 @@ def test_streaming_hnsw_ingest_equals_batch_upsert(spark, sf_dir, embeddings):
     assert _edge_set(edges_stream) == _edge_set(edges_batch)
 
 
+def test_streaming_hnsw_drain_carries_the_packed_index(
+    spark, sf_dir, monkeypatch
+):
+    """The drain keeps its index in memory from micro-batch to
+    micro-batch: the initial index packs at most once, so a micro-batch
+    after the first finds its input's packed leaf and shuffles nothing
+    to re-pack it (an index re-read from the sink packs in every
+    micro-batch)."""
+    from toy_vector_db_spark import registry
+    from toy_vector_db_spark.streaming import ingest
+
+    calls = {"pack_index": 0, "hnsw_upsert": 0}
+    for name in calls:
+        def counted(*a, _f=getattr(hnsw, name), _n=name, **kw):
+            calls[_n] += 1
+            return _f(*a, **kw)
+        monkeypatch.setattr(hnsw, name, counted)
+    cut = split_count(registry._emb_count(spark, sf_dir), registry.SPLIT_RATIO)
+    lo = split_count(cut, registry.UPSERT_RATIO)
+    caches.evict("ingest", spark, sf_dir, lo, cut, "hnsw", P)  # drain anew
+    ingest.stream_ingest_hnsw(spark, sf_dir, lo, cut, P)
+    assert calls["pack_index"] <= 1 < calls["hnsw_upsert"], calls
+
+
 def test_hnsw_filtered_predicate_and_recall(spark, embeddings):
     """Label-partitioned graph search: every result satisfies the
     query's label predicate BY CONSTRUCTION (routing is the filter), and
@@ -852,10 +876,12 @@ def test_bounded_and_catalyst_legs_return_identical_rows(
 
 def test_upserted_pack_keeps_a_flat_spread_layout(spark, embeddings):
     """Along a 5-upsert chain the incrementally packed serving frame
-    keeps the base pack's partition count and its hash layout on
+    keeps the base pack's partition count and its range layout on
     ``part``: the bounded search runs one map task per partition, and
     the bare union had added a partition per upsert with every shard in
-    the last one ([0,0,0,0,0,0,0,0,8] after five upserts)."""
+    the last one ([0,0,0,0,0,0,0,0,8] after five upserts). A routed
+    upsert that opens a cell re-spreads instead of adding the new
+    shard's own partition."""
     n = embeddings.count()
     cut = split_count(n, 0.95)
     base = embeddings.where(F.col("vec_id") < cut)
@@ -879,3 +905,17 @@ def test_upserted_pack_keeps_a_flat_spread_layout(spark, embeddings):
         packed = caches.get("hnsw_packed", parted, edges, "vec_id", "embedding")
         now = layout(packed)
         assert now == first and max(now) - min(now) <= 1, now
+
+    cells, c_edges, cents = hnsw.routed_index(
+        base.where(F.col("vec_id") < init_cut)
+    )
+    shut = F.col("part") != cells.select("part").first()[0]
+    cells, c_edges = cells.where(shut), c_edges.where(shut)
+    before = layout(hnsw.cached_packed_index(cells, c_edges))
+    batch = base.where(F.col("vec_id") >= init_cut)
+    cells, c_edges = hnsw.hnsw_routed_upsert(cells, c_edges, cents, batch)
+    assert cells.where(~shut).count() > 0  # the upsert opened the cell
+    packed = caches.get("hnsw_packed", cells, c_edges, "vec_id", "embedding")
+    now = layout(packed)
+    assert len(now) == len(before) and sum(now) == sum(before) + 1, now
+    assert max(now) - min(now) <= 1, now

@@ -623,8 +623,28 @@ def cached_packed_index(
     )
 
 
+def _per_row(fn):
+    """A mapInPandas body that yields ``fn(row)`` for every packed row."""
+    return lambda pdfs: (fn(r) for pdf in pdfs for r in pdf.to_dict("records"))
+
+
+def _held(packed: DataFrame, ids: np.ndarray) -> dict:
+    """{part: how many of ``ids`` the shard holds} for every packed row,
+    read off the rows' ``ids`` alone: one small map, no vector decoded."""
+    return dict(packed.select("part", "ids").mapInPandas(_per_row(
+        lambda r: pd.DataFrame({"part": [r["part"]], "n": [int(np.isin(
+            ids, np.frombuffer(r["ids"], np.int64)).sum())]})
+    ), "part int, n long").collect())
+
+
+def _packed_ids(packed: DataFrame, id_col: str) -> DataFrame:
+    """The ids the packed rows hold, one row each, read off ``ids``."""
+    return packed.select("ids").mapInPandas(_per_row(
+        lambda r: pd.DataFrame({id_col: np.frombuffer(r["ids"], np.int64)})
+    ), f"{id_col} long")
+
+
 def _prebuilt_search(
-    parted: DataFrame,
     packed: DataFrame,
     queries: DataFrame,
     k: int,
@@ -672,7 +692,7 @@ def _prebuilt_search(
 
     ``tombstones`` are ids deleted from the index but kept in its graph
     as routing waypoints (compaction rewrites the graph). The beam
-    widens to k + T, T the tombstone rows present in ``parted`` —
+    widens to k + T, T the tombstone rows present in the index —
     LocalHNSW.search returns at most ef rows, so an unwidened beam could
     hold only tombstones — and each shard drops the tombstones from its
     beam BEFORE its cut, so it emits its top live candidates and the
@@ -680,10 +700,12 @@ def _prebuilt_search(
     k + T, ranking globally, anti-joining and re-ranking, which the
     in-kernel filter replaces. The ids S collect once per frame through
     the query-batch memo; as T ≤ |S|, the count job is skipped when
-    k + |S| ≤ ef (the beam is ef either way). A set over
-    QUERY_BATCH_MAX ids is not collected: the count runs, the emission
-    widens to k + T, and a broadcast anti-join filters the candidates
-    before the top-k window."""
+    k + |S| ≤ ef (the beam is ef either way), and otherwise is one map
+    over the packed rows' ``ids`` (_held), no vector decoded. A set over
+    QUERY_BATCH_MAX ids is not collected: the count joins it with the
+    packed ids (_packed_ids), the emission widens to k + T, and a
+    broadcast anti-join filters the candidates before the top-k
+    window."""
     import pyarrow as pa
 
     from toy_vector_db_spark.operators import knn, similarity
@@ -693,9 +715,11 @@ def _prebuilt_search(
         ts = tombstones.select(id_col).where(F.col(id_col).isNotNull())
         tb = knn._collected_batch(ts, id_col, None)
         t_total = 0
-        if tb is None or k + len(tb.qids) > ef:
-            t_total = parted.join(ts, id_col).count()
-            ef = max(ef, k + t_total)
+        if tb is None:
+            t_total = _packed_ids(packed, id_col).join(ts, id_col).count()
+        elif k + len(tb.qids) > ef:
+            t_total = sum(_held(packed, tb.qids).values())
+        ef = max(ef, k + t_total)
         if tb is None:
             anti, emit = ts, max(emit or 0, k + t_total)
         else:
@@ -853,7 +877,7 @@ def knn_hnsw_prebuilt(
     ``emit`` widens the per-shard emission for callers that re-score
     downstream (the exhaustive degenerate; see _prebuilt_search)."""
     return _prebuilt_search(
-        parted, cached_packed_index(parted, edges, id_col, vec_col),
+        cached_packed_index(parted, edges, id_col, vec_col),
         queries, k, ef, id_col, query_id_col, query_vec_col, emit=emit,
     )
 
@@ -880,7 +904,7 @@ def knn_hnsw(
     parted = _with_part(base.select(id_col, vec_col), num_partitions, id_col)
     edges = _edges_from_parted(parted, id_col, vec_col)
     return _prebuilt_search(
-        parted, pack_index(parted, edges, id_col, vec_col), queries, k, ef,
+        pack_index(parted, edges, id_col, vec_col), queries, k, ef,
         id_col, query_id_col, query_vec_col, emit=emit,
     )
 
@@ -914,7 +938,7 @@ def knn_hnsw_routed(
     cells = _cell_parted(base, cents, id_col, vec_col)
     edges = _edges_from_parted(cells, id_col, vec_col)
     return _prebuilt_search(
-        cells, pack_index(cells, edges, id_col, vec_col), queries, k, ef,
+        pack_index(cells, edges, id_col, vec_col), queries, k, ef,
         id_col, query_id_col, query_vec_col, cents=cents, nprobe=nprobe,
     )
 
@@ -1026,7 +1050,7 @@ def knn_hnsw_routed_prebuilt(
     of the session-cached pack. Build cost is paid once
     (``routed_index``), not per invocation."""
     return _prebuilt_search(
-        cells, cached_packed_index(cells, edges, id_col, vec_col), queries,
+        cached_packed_index(cells, edges, id_col, vec_col), queries,
         k, ef, id_col, query_id_col, query_vec_col,
         emit=emit, cents=cents, nprobe=nprobe,
     )
@@ -1085,7 +1109,7 @@ def knn_hnsw_routed_deleted(
     cut, and the beam widens by the tombstone count when it must (the
     one tombstone rule, in _prebuilt_search)."""
     return _prebuilt_search(
-        cells, cached_packed_index(cells, edges, id_col, vec_col), queries,
+        cached_packed_index(cells, edges, id_col, vec_col), queries,
         k, ef, id_col, query_id_col, query_vec_col,
         emit=emit, cents=cents, nprobe=nprobe, tombstones=tombstones,
     )
@@ -1271,7 +1295,7 @@ def knn_hnsw_filtered(
     message instead of silently mis-routing. Label routing therefore
     always takes the search's Catalyst leg."""
     return _prebuilt_search(
-        parted, cached_packed_index(parted, edges, id_col, vec_col), queries,
+        cached_packed_index(parted, edges, id_col, vec_col), queries,
         k, ef, id_col, query_id_col, query_vec_col,
         emit=emit, query_label_col=query_label_col,
     )
@@ -1344,8 +1368,10 @@ def _upsert_parted(
     1. one bounded Arrow collect of the batch (_batch_chunks; NULL and
        repeated ids raise here);
     2. the index's packed rows, ``cached_packed_index`` — a served
-       index hits the memo, a cold one packs here, as its first search
-       would;
+       index, or a pair an earlier upsert returned, hits the memo; a
+       cold one (say, re-read from storage) packs here, the one
+       shuffle of the path, so a caller that upserts again passes the
+       returned pair on (streaming.ingest.stream_ingest_hnsw does);
     3. one map over the packed rows with the batch ids in the closure:
        ids already in the index raise (append-only contract);
     4. ONE map over the packed rows with each shard's batch rows in the
@@ -1431,17 +1457,11 @@ def _grown(
 ) -> DataFrame:
     """``packed`` with the batch rows (``ids``, vectors ``X``, shard
     ``parts``) inserted, as an eager checkpoint leaf that keeps
-    ``packed``'s partitions. Raises when an id is already indexed."""
+    ``packed``'s partitions (re-spread, one exchange, when the batch
+    opens a shard). Raises when an id is already indexed."""
     import pyarrow as pa
 
-    def _held(pdfs):  # per shard: does it hold a batch id?
-        for pdf in pdfs:
-            yield pdf.assign(ids=[np.isin(ids, np.frombuffer(x, np.int64)).any()
-                                  for x in pdf["ids"]])
-
-    held = dict(packed.select("part", "ids").mapInPandas(
-        _held, "part int, ids boolean"
-    ).collect())
+    held = _held(packed, ids)
     if any(held.values()):
         raise ValueError(
             "hnsw upsert: batch contains ids already present in the index; "
@@ -1449,11 +1469,12 @@ def _grown(
             "a new id, or compact, to update an existing row)"
         )
     fresh = set(parts.tolist()) - set(held)
-    if fresh:  # an empty row per new shard, so the map below builds it
+    if fresh:  # an empty row per new shard, so the map below builds it;
+        # re-spread, or the stub's partition would hold the shard alone
         blank = _pack_row(0, ids[:0], X[:0], [None] * L)
-        packed = packed.unionByName(packed.sparkSession.createDataFrame(
+        packed = _spread(packed.unionByName(packed.sparkSession.createDataFrame(
             [{**blank, "part": p} for p in fresh], packed.schema
-        ))
+        )))
     order = np.lexsort((ids, parts))
     keys, starts = np.unique(parts[order], return_index=True)
     rows_of = {
@@ -1500,26 +1521,22 @@ def _unpacked(
     column types, and each shard graph's edge rows in the build's own
     encoding (_edge_rows)."""
 
-    def _vectors(pdfs):
-        for row in (r for pdf in pdfs for r in pdf.to_dict("records")):
-            ids, vecs, _ = _unpack_row(row)
-            yield pd.DataFrame(
-                {id_col: ids, vec_col: list(vecs), "part": row["part"]}
-            )
+    def _vectors(row):
+        ids, vecs, _ = _unpack_row(row)
+        return pd.DataFrame({id_col: ids, vec_col: list(vecs), "part": row["part"]})
 
-    def _edges(pdfs):
-        for row in (r for pdf in pdfs for r in pdf.to_dict("records")):
-            ids, vecs, csrs = _unpack_row(row)
-            yield _edge_rows(row["part"], ids, _dict_graph(ids, vecs, csrs))
+    def _edges(row):
+        ids, vecs, csrs = _unpack_row(row)
+        return _edge_rows(row["part"], ids, _dict_graph(ids, vecs, csrs))
 
     types = {f.name: f.dataType for f in parted.schema.fields}
     vectors = packed.mapInPandas(
-        _vectors, f"{id_col} long, {vec_col} array<double>, part int"
+        _per_row(_vectors), f"{id_col} long, {vec_col} array<double>, part int"
     ).select(
         *(F.col(c).cast(types[c]).alias(c) for c in (id_col, vec_col)), "part"
     )
     return vectors, packed.mapInPandas(
-        _edges, "part int, layer int, src long, pos int, dst long"
+        _per_row(_edges), "part int, layer int, src long, pos int, dst long"
     )
 
 
@@ -1552,7 +1569,7 @@ def knn_hnsw_deleted(
     large to collect, live once in _prebuilt_search, shared with
     knn_hnsw_routed_deleted."""
     return _prebuilt_search(
-        parted, cached_packed_index(parted, edges, id_col, vec_col),
+        cached_packed_index(parted, edges, id_col, vec_col),
         queries, k, ef, id_col, query_id_col, query_vec_col,
         emit=emit, tombstones=tombstones,
     )

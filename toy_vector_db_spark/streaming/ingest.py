@@ -165,10 +165,12 @@ def stream_ingest_hnsw(
     twin of ``hnsw_upsert``, exactly as ``stream_ingest_codes`` twins
     ``ivfpq_upsert``. The arriving slice (lo ≤ vec_id < hi) drains
     readStream → foreachBatch; each micro-batch runs the shard-append
-    upsert against the CURRENT on-disk index state, and only the TOUCHED
-    shard partitions of the edge table are rewritten (dynamic partition
-    overwrite — the 100 TB shape: an index partition is rewritten only
-    when its shard ingests), while the vector table appends.
+    upsert against the CURRENT index state, carried in memory from the
+    previous micro-batch (its packed leaf, so only the first micro-batch
+    packs), and only the TOUCHED shard partitions of the edge table are
+    rewritten (dynamic partition overwrite — the 100 TB shape: an index
+    partition is rewritten only when its shard ingests), while the
+    vector table appends.
 
     Determinism: hnsw_upsert is proven shard-equal to a from-scratch
     build of its union for BOTH its paths (append replay and interleaved
@@ -219,33 +221,35 @@ def stream_ingest_hnsw(
             .where(f"vec_id >= {lo} AND vec_id < {hi}")
         )
 
+        # the index stays warm across micro-batches: each upsert grows
+        # the packed leaf the previous one registered for its output
+        # (only the first packs the initial index), and the sink is
+        # written, never read back, while the stream drains
+        index = [parted0, edges0]
+
         def _process(batch_df: DataFrame, _batch_id: int) -> None:
             if batch_df.isEmpty():
                 return
             batch = batch_df.select("vec_id", "embedding")
-            parted = spark.read.parquet(pdir)
-            edges = spark.read.parquet(edir)
-            p2, e2 = H.hnsw_upsert(parted, edges, batch, num_partitions)
+            index[:] = H.hnsw_upsert(*index, batch, num_partitions)
+            batch_p = H._with_part(batch, num_partitions, "vec_id")
             touched = [
-                int(r[0])
-                for r in H._with_part(batch, num_partitions, "vec_id")
-                .select("part").distinct().collect()
+                int(r[0]) for r in batch_p.select("part").distinct().collect()
             ]
-            # rewrite ONLY the touched shard partitions of the edge table
+            # rewrite ONLY the touched shard partitions of the edge table,
+            # decoding only their packed rows
+            packed = H.cached_packed_index(*index)
+            _, edges = H._unpacked(
+                packed.where(F.col("part").isin(touched)), index[0],
+                "vec_id", "embedding",
+            )
             (
-                e2.where(F.col("part").isin(touched))
-                .write.mode("overwrite")
+                edges.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("part")
                 .parquet(edir)
             )
-            (
-                H._with_part(batch, num_partitions, "vec_id")
-                .write.mode("append").partitionBy("part").parquet(pdir)
-            )
-            # the next micro-batch reads the index back from the sink:
-            # release the packed leaf this upsert registered for (p2, e2)
-            caches.evict("hnsw_packed", p2, e2, "vec_id", "embedding")
+            batch_p.write.mode("append").partitionBy("part").parquet(pdir)
 
         q = (
             arriving.writeStream.foreachBatch(_process)
@@ -256,6 +260,8 @@ def stream_ingest_hnsw(
             q.processAllAvailable()
         finally:
             q.stop()
+            # readers take the index from the sink: release the last leaf
+            caches.evict("hnsw_packed", *index, "vec_id", "embedding")
         return sink
 
     sink = caches.memo(
