@@ -149,3 +149,40 @@ def test_evicting_cell_vectors_drops_the_assign_it_seeded(spark, store):
     similarity.cached_cell_vectors(own)
     caches.evict("cell_vectors", own, "vec_id", "embedding")
     assert caches.get("assign", own, "vec_id", "embedding") is assign
+
+
+def test_evicting_ivfpq_cells_drops_the_exact_scan_derived_from_it(
+    spark, store
+):
+    """A bounded IVF-PQ search over the session-built cells persists its
+    scan ⋈ base frame as an entry owned by the "ivfpq_cells" entry:
+    evicting the cells drops it too, and the next search builds both
+    again. A search over an injected table reranks on the Catalyst tail
+    and persists no scan frame of its own."""
+    schema = "vec_id long, embedding array<double>"
+    base = spark.createDataFrame(_vectors(400, 16, 5), schema)
+    qs = spark.createDataFrame(
+        _vectors(3, 16, 6, first_id=1000),
+        "query_id long, query_vec array<double>",
+    )
+    cols = ("vec_id", "embedding")
+
+    def scan_of(cells):
+        return caches.get("exact_scan", "pq", cells, base, *cols)
+
+    assert len(similarity.knn_ivfpq(base, qs, 5).collect()) == 15
+    cells = similarity.cached_codes_cells(base)
+    scan = scan_of(cells)
+    assert scan is not None
+    similarity.knn_ivfpq(base, qs, 5).collect()
+    assert scan_of(cells) is scan  # reused, not rebuilt
+
+    injected = cells.where(cells["vec_id"] % 2 == 0)
+    similarity.knn_ivfpq(base, qs, 5, codes_cells=injected).collect()
+    assert scan_of(injected) is None
+
+    caches.evict("ivfpq_cells", base, *cols)
+    assert scan_of(cells) is None
+    assert len(similarity.knn_ivfpq(base, qs, 5).collect()) == 15
+    rebuilt = similarity.cached_codes_cells(base)
+    assert scan_of(rebuilt) is not None and scan_of(rebuilt) is not scan

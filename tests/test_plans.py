@@ -115,16 +115,26 @@ def test_ivf_assign_partial_agg_no_window(plans):
     assert plan.count("SortAggregate") >= 2
 
 
-def test_ivfpq_probe_and_rerank_broadcast(plans):
-    plan = plans("knn_ivfpq")
-    # probe LUTs (an Arrow kernel since round 6) and the rerank query side
-    # are broadcast — the codes/base tables never build a hash-join hash
-    # table over the big side
-    assert explain.count_broadcast_joins(plan) >= 2
-    assert "MapInArrow" in plan
-    # the big-side flow is: codes⋈assign (id join), probe join, top-R
-    # window, rerank join, top-k window — no cartesian product anywhere
-    assert "CartesianProduct" not in plan
+@pytest.mark.usefixtures("plans")
+def test_ivfpq_probe_and_rerank_broadcast(spark, sf_dir, monkeypatch):
+    """knn_ivfpq's serving plans, as executed. The Catalyst leg
+    (QUERY_BATCH_MAX = 0) broadcasts the probe side and the rerank's
+    query side — the codes/base tables never build a hash-join hash
+    table over the big side. The bounded leg broadcasts nothing: the
+    query batch rides in the pair kernel's closure, which also reranks
+    (one MapInArrow, no join). Neither has a cartesian product."""
+    from toy_vector_db_spark.operators import knn
+
+    fused = _served_nodes(registry.queries()["knn_ivfpq"](spark, sf_dir))
+    assert fused.count("MapInArrow") == 1, fused
+    assert "BroadcastExchange" not in fused, fused
+    assert not any("Join" in n for n in fused), fused
+    monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 0)
+    tail = _served_nodes(registry.queries()["knn_ivfpq"](spark, sf_dir))
+    assert tail.count("BroadcastExchange") >= 2, tail
+    assert "MapInArrow" in tail, tail
+    for names in (fused, tail):
+        assert "CartesianProduct" not in names, names
 
 
 def test_model_inference_scan_bound(plans):
@@ -270,29 +280,53 @@ def test_training_shard_single_exchange(plans):
     assert explain.count_exchanges(plan) == 1
 
 
-def test_sq_rerank_partial_topk_before_exchange(plans):
-    """SQ8 serving (round 8): the per-query ADC top-R cut must compile
-    to a WindowGroupLimit BELOW the exchange (map-side partial
-    limiting), so the query_id shuffle carries ~R·|queries| candidate
-    rows, not the full |base|·|queries| scored product — the property
-    that keeps the scan-everything family's shuffle bounded at 100 TB.
-    The one-row bounds frame and the query batch must enter as
-    broadcasts; the prefix-split filter must reach the parquet scan."""
-    import re
+@pytest.mark.usefixtures("plans")
+def test_sq_rerank_partial_topk_before_exchange(spark, sf_dir, monkeypatch):
+    """SQ8 serving (round 8), as executed: on both legs the per-query
+    ADC top-R cut must compile to a WindowGroupLimit BELOW the query_id
+    exchange (map-side partial limiting), so the shuffle carries ~R per
+    query and partition, not the full |base|·|queries| scored product —
+    the property that keeps the scan-everything family's shuffle
+    bounded at 100 TB. The Catalyst leg (QUERY_BATCH_MAX = 0) joins the
+    one-row bounds frame and the query batch as broadcasts, and its
+    prefix-split filter reaches the parquet scan; the bounded leg
+    reranks in the pair kernel over the persisted scan ⋈ base frame:
+    one exchange, no broadcast, no scan of the base."""
+    from toy_vector_db_spark.operators import knn
 
-    plan = plans("knn_sq_rerank")
-    # Spark emits Partial→Exchange→Final; in the formatted tree the
-    # map-side Partial prints as the Exchange's direct child
-    assert re.search(
-        r"\+- Exchange [^\n]*\n[\s:]*\+- WindowGroupLimit", plan
-    ), "no map-side partial WindowGroupLimit under the query_id exchange"
-    # bounds + queries ride broadcast joins, never a shuffle join
-    assert explain.count_broadcast_joins(plan) >= 2
-    assert "SortMergeJoin" not in plan
+    def served():
+        df = registry.queries()["knn_sq_rerank"](spark, sf_dir)
+        df.collect()
+        return _executed_nodes(df)
+
+    fused = served()
+    names = [n.nodeName() for n in fused]
+    assert names.count("Exchange") == 1, names
+    assert "BroadcastExchange" not in names, names
+    assert not any(n.startswith("Scan") for n in names), names
+    monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 0)
+    tail = served()
+    names = [n.nodeName() for n in tail]
+    assert names.count("BroadcastExchange") >= 2, names
+    assert "SortMergeJoin" not in names, names
     # the prefix-split predicate reaches the scan
     assert any(
-        "LessThan(vec_id" in f for f in explain.pushed_filters(plan)
-    )
+        "LessThan(vec_id" in n.toString()
+        for n in tail if n.nodeName().startswith("Scan parquet")
+    ), names
+    for nodes in (fused, tail):
+        partial = [
+            n.children().apply(0).nodeName()
+            for n in nodes
+            if n.nodeName() == "Exchange"
+            and n.outputPartitioning().toString().startswith(
+                "hashpartitioning(query_id#"
+            )
+        ]
+        assert "WindowGroupLimit" in partial, (
+            "no map-side partial WindowGroupLimit under the query_id "
+            "exchange", [n.nodeName() for n in nodes]
+        )
 
 
 def test_ivfsq_kernel_routed_partial_topk(plans):
@@ -603,16 +637,19 @@ def test_bq_hamming_partial_topk_before_exchange(plans):
     ), "no map-side partial WindowGroupLimit under the query_id exchange"
 
 
-@pytest.mark.parametrize("family", ["ivfpq", "ivfsq"])
+@pytest.mark.parametrize("family", ["ivfpq", "ivfsq", "ivfpq_filtered"])
 def test_bounded_ivf_request_constructs_with_one_job(
     spark, sf_dir, monkeypatch, family
 ):
     """A bounded IVF request runs ONE Spark action while its plan is
     built — the query frame's Arrow collect — and derives the batch
     guard, the probe routing and (PQ) the lookup tables from it on the
-    driver; it adds at most one session-cache entry. Jobs are counted
-    per job group. Only the oversized leg (QUERY_BATCH_MAX = 0) builds
-    the Catalyst _ivf_probes frame."""
+    driver; it adds at most one session-cache entry. A filtered request
+    collects each query with its label, left-joined, in that same
+    action; the join's broadcast side is a second job (a plain collect
+    and then a labeled one made three). Jobs are counted per job group.
+    Only the oversized leg (QUERY_BATCH_MAX = 0) builds the Catalyst
+    _ivf_probes frame."""
     from pyspark.sql import functions as F
 
     from toy_vector_db_spark import caches
@@ -622,7 +659,19 @@ def test_bounded_ivf_request_constructs_with_one_job(
     emb = registry.table(spark, sf_dir, "embeddings")
     cut = split_count(emb.count(), 0.95)
     base = emb.where(F.col("vec_id") < cut).select("vec_id", "embedding")
-    search = getattr(similarity, f"knn_{family}")
+    knn_family = getattr(similarity, f"knn_{family.split('_')[0]}")
+    kw = {}
+    if family.endswith("_filtered"):
+        label = (F.col("vec_id") % 3).cast("string")
+        kw = dict(
+            labels=base.select("vec_id", label.alias("label")),
+            query_labels=emb.select(
+                F.col("vec_id").alias("query_id"), label.alias("qlabel")
+            ),
+        )
+
+    def search(base, queries, k):
+        return knn_family(base, queries, k, **kw)
 
     def point(qid):
         return emb.where(F.col("vec_id") == qid).select(
@@ -644,7 +693,7 @@ def test_bounded_ivf_request_constructs_with_one_job(
     tracker = sc.statusTracker()
     group = f"construct.{family}"
     # a query id no other test collects, so the batch memo misses
-    qid = cut + 1 + ["ivfpq", "ivfsq"].index(family)
+    qid = cut + {"ivfpq": 1, "ivfsq": 2, "ivfpq_filtered": 8}[family]
     snap = caches.snapshot()
     sc.setJobGroup(group, "bounded point construction")
     try:
@@ -667,7 +716,8 @@ def test_bounded_ivf_request_constructs_with_one_job(
             break
         assert time.monotonic() < deadline, "collect jobs never finished"
         time.sleep(0.01)
-    assert len(tracker.getJobIdsForGroup(group)) == 1
+    jobs = 2 if kw else 1
+    assert len(tracker.getJobIdsForGroup(group)) == jobs
     assert len(added) <= 1
     assert built == []
 
@@ -739,3 +789,86 @@ def test_bounded_hnsw_delete_is_one_map_and_one_exchange(spark, sf_dir):
     assert len(exchanges) == 1, plan
     assert exchanges[0][0] == "hashpartitioning", plan
     assert exchanges[0][1].startswith("query_id#"), plan
+
+
+def _executed_nodes(df) -> list:
+    """The JVM nodes of ``df``'s final executed plan, query stages
+    unwrapped; a cached frame's scan is a leaf (its stored plan ran when
+    it was built, not in this query)."""
+    def walk(p):
+        if p.getClass().getSimpleName().endswith("QueryStageExec"):
+            yield from walk(p.plan())
+            return
+        yield p
+        kids = p.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i))
+
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return list(walk(plan))
+
+
+def _served_nodes(df) -> list:
+    """Collect ``df``, then the node names of its final executed plan."""
+    df.collect()
+    return [n.nodeName() for n in _executed_nodes(df)]
+
+
+@pytest.mark.parametrize("family", ["ivfpq", "ivfsq"])
+def test_bounded_ivf_point_is_one_map_and_one_exchange(spark, sf_dir, family):
+    """A bounded IVF point scores, cuts and reranks where the code rows
+    are: one Python stage (the pair kernel, which also computes the
+    exact distance of each query's top-R rows over the persisted
+    scan ⋈ base frame) and ONE exchange, the query_id hash that both
+    per-query windows (top R by score, then top k by exact distance)
+    share. No broadcast: the query batch rides in the kernel's closure,
+    and there is no per-request join with the base. Its collect runs at
+    most two jobs."""
+    from pyspark.sql import functions as F
+
+    from toy_vector_db_spark.operators import similarity
+    from toy_vector_db_spark.sources.ndjson import split_count
+
+    emb = registry.table(spark, sf_dir, "embeddings")
+    cut = split_count(emb.count(), 0.95)
+    base = emb.where(F.col("vec_id") < cut).select("vec_id", "embedding")
+    search = getattr(similarity, f"knn_{family}")
+
+    def point(qid):
+        return emb.where(F.col("vec_id") == qid).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("query_vec"),
+        )
+
+    # warm the build-time artifacts and the exact-scan frame
+    search(base, point(cut), 10).collect()
+    df = search(base, point(cut + 5), 10)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"collect.{family}.fused"
+    sc.setJobGroup(group, "bounded point collect")
+    try:
+        assert len(df.collect()) == 10
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while True:
+        done = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+        if done and all(i is not None and i.status == "SUCCEEDED" for i in done):
+            break
+        assert time.monotonic() < deadline, "collect jobs never finished"
+        time.sleep(0.01)
+    assert len(tracker.getJobIdsForGroup(group)) <= 2
+    nodes = _executed_nodes(df)
+    names = [n.nodeName() for n in nodes]
+    assert names.count("MapInArrow") == 1, names
+    assert "BroadcastExchange" not in names, names
+    assert not any("Join" in n for n in names), names
+    exchanges = [
+        n.outputPartitioning().toString()
+        for n in nodes if n.nodeName() == "Exchange"
+    ]
+    assert len(exchanges) == 1, names
+    assert exchanges[0].startswith("hashpartitioning(query_id#"), exchanges

@@ -325,3 +325,165 @@ def test_count_guard_recounts_on_in_place_rewrite(spark, tmp_path):
     assert len(got.qids) == 25 and got.X[0].tolist() == [3.0, 4.0], (
         "cache served the stale pre-rewrite batch"
     )
+
+
+@pytest.mark.parametrize("vec_type", ["float", "double"])
+def test_fused_rerank_equals_catalyst_tail(
+    spark, embeddings, monkeypatch, vec_type
+):
+    """The bounded leg of every kernel codec over the session-built
+    codes reranks inside the pair kernel (the exact distance of each
+    query's top-R rows, over the persisted scan ⋈ base frame); the
+    Catalyst leg, forced with QUERY_BATCH_MAX = 0, reranks in
+    similarity._exact_rerank. Both must return identical rows, dist
+    compared as hex: PQ, SQ and BQ2, flat and IVF, filtered and not. A
+    search over injected codes (an ivfpq_upsert frozen triple) keeps
+    the kernel's candidates but reranks in _exact_rerank, with the same
+    rows as its Catalyst leg. The
+    returned dist is rounded to ROUND decimals, so the kernel's
+    unrounded exact distance is also pinned, as hex, to the Catalyst
+    fold (knn._scored_product) on every pair it keeps; over the
+    double-typed corpus, whose values no float32 represents, a kernel
+    that rounds the vector to float32 before the dot fails there."""
+    cut = split_count(embeddings.count(), 0.95)
+    base = embeddings.where(F.col("vec_id") < cut)
+    qs = embeddings.where(F.col("vec_id") >= cut).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"),
+    )
+    if vec_type == "double":
+        # a per-dimension factor: values off the float32 grid, and a
+        # float32 rounding that is not a uniform rescale (which the
+        # cosine would not see)
+        scaled = (
+            "transform(embedding, (x, i) -> "
+            "CAST(x AS DOUBLE) * (1.0D + 1e-7D * ((i * 7919) % 13 - 6)))"
+        )
+        base = base.withColumn("embedding", F.expr(scaled))
+        qs = qs.withColumn(
+            "query_vec",
+            F.expr(scaled.replace("embedding", "query_vec")),
+        )
+    base = base.select("vec_id", "embedding")
+    init_cut = split_count(cut, 0.75)
+    labels = base.select(
+        "vec_id", (F.col("vec_id") % 3).cast("string").alias("label")
+    )
+    qlabels = qs.select(
+        "query_id", (F.col("query_id") % 3).cast("string").alias("qlabel")
+    )
+    kw = dict(labels=labels, query_labels=qlabels)
+    cells, cents, books = similarity.ivfpq_upsert(
+        base.where(F.col("vec_id") < init_cut),
+        base.where(F.col("vec_id") >= init_cut),
+    )
+    calls = {
+        "ivfpq": lambda: similarity.knn_ivfpq(base, qs, 10),
+        "ivfpq_filtered": lambda: similarity.knn_ivfpq(base, qs, 10, **kw),
+        "ivfsq": lambda: similarity.knn_ivfsq(base, qs, 10),
+        "ivfsq_filtered": lambda: similarity.knn_ivfsq(base, qs, 10, **kw),
+        "ivfbq2": lambda: similarity.knn_ivfbq2(base, qs, 10),
+        "ivfbq2_filtered": lambda: similarity.knn_ivfbq2(base, qs, 10, **kw),
+        "pq": lambda: similarity.knn_pq_rerank(base, qs, 10),
+        "sq": lambda: similarity.knn_sq_rerank(base, qs, 10),
+        "sq_filtered": lambda: similarity.knn_sq_rerank(base, qs, 10, **kw),
+        "bq2": lambda: similarity.knn_bq2_rerank(base, qs, 10),
+        "bq2_filtered": lambda: similarity.knn_bq2_rerank(
+            base, qs, 10, **kw
+        ),
+    }
+
+    def upserted():
+        return similarity.knn_ivfpq(
+            base, qs, 10, codes_cells=cells, cents=cents, books=books
+        )
+
+    def rows(df):
+        return sorted(
+            (r[0], r[1], r[2].hex(), r[3]) for r in df.collect()
+        )
+
+    kept = knn._pair_kernel(
+        base, qs, knn._cosine_scorer("embedding", "query_vec"),
+        emit_topk=40, exact_col="embedding",
+    )
+    fold = knn._scored_product(
+        base, qs, "vec_id", "embedding", "query_id", "query_vec"
+    )
+    pairs = kept.join(fold, ["query_id", "vec_id"]).select(
+        "xdist", fold["dist"]
+    ).collect()
+    assert len(pairs) == kept.count() > 0
+    assert all(x.hex() == d.hex() for x, d in pairs)
+
+    fused = {}
+    for name, fn in calls.items():
+        df = fn()
+        assert "xdist" in explain.formatted_plan(df), name
+        fused[name] = rows(df)
+        assert fused[name], name
+    df = upserted()
+    plan = explain.formatted_plan(df)
+    assert "MapInArrow" in plan and "xdist" not in plan
+    injected = rows(df)
+    assert injected
+    monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 0)
+    for name, fn in calls.items():
+        df = fn()
+        assert "xdist" not in explain.formatted_plan(df), name
+        assert rows(df) == fused[name], name
+    assert rows(upserted()) == injected
+
+
+def test_fused_buffer_over_budget_takes_the_catalyst_tail(
+    spark, embeddings, monkeypatch
+):
+    """The fused kernel's top-R buffer carries the exact distance beside
+    the id and the score: 24 B a row, not 16. A request whose buffer
+    fits at 16 B but not at 24 B reranks on the Catalyst tail
+    (_exact_rerank), with the same rows."""
+    base, qs = _splits(spark, embeddings)
+    base = base.select("vec_id", "embedding")
+    n_q = qs.count()
+    r = 160
+    fused = similarity.knn_ivfpq(base, qs, 10, rerank_r=r)
+    assert "xdist" in explain.formatted_plan(fused)
+    expected = sorted(map(tuple, fused.collect()))
+    rows = n_q * max(2 * r, r + 8192)
+    monkeypatch.setattr(knn, "EMIT_TOPK_BUDGET_BYTES", rows * 16)
+    assert knn.emit_topk_within_budget(n_q, r)
+    assert not knn.emit_topk_within_budget(n_q, r, exact=True)
+    reranked = []
+    tail = similarity._exact_rerank
+
+    def spy(*a, **kw):
+        reranked.append(1)
+        return tail(*a, **kw)
+
+    monkeypatch.setattr(similarity, "_exact_rerank", spy)
+    df = similarity.knn_ivfpq(base, qs, 10, rerank_r=r)
+    plan = explain.formatted_plan(df)
+    assert reranked and "xdist" not in plan and "_score(" in plan
+    assert sorted(map(tuple, df.collect())) == expected
+
+
+def test_fused_rerank_stops_at_the_pair_bound(spark, embeddings, monkeypatch):
+    """The fused rerank may compute an exact distance for every scanned
+    row, so a bounded search fuses only while |queries| × |base| ≤
+    similarity.FUSED_RERANK_PAIRS; one pair past it, the kernel's
+    candidates rerank in _exact_rerank, with the same rows."""
+    base, qs = _splits(spark, embeddings)
+    base = base.select("vec_id", "embedding")
+    pairs = qs.count() * base.count()
+    monkeypatch.setattr(similarity, "FUSED_RERANK_PAIRS", pairs)
+    for search in (similarity.knn_ivfsq, similarity.knn_pq_rerank):
+        fused = search(base, qs, 10)
+        assert "xdist" in explain.formatted_plan(fused)
+        monkeypatch.setattr(similarity, "FUSED_RERANK_PAIRS", pairs - 1)
+        tail = search(base, qs, 10)
+        plan = explain.formatted_plan(tail)
+        assert "MapInArrow" in plan and "xdist" not in plan
+        assert sorted(map(tuple, tail.collect())) == sorted(
+            map(tuple, fused.collect())
+        )
+        monkeypatch.setattr(similarity, "FUSED_RERANK_PAIRS", pairs)

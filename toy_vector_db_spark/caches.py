@@ -34,7 +34,9 @@ An entry may be derived from another: ``memo(..., owner=(kind,
 *parts))`` declares it, and removing the owner's entry (``evict``,
 ``drop``, ``restore``) removes the derived entry with it — the
 ``"assign"`` projection ``similarity.cached_cell_vectors`` seeds over
-its persisted frame leaves with that frame.
+its persisted frame leaves with that frame, and the exact-scan frame
+``similarity._exact_scan`` persists over a session-built cell artifact
+leaves with that artifact.
 
 Bench hygiene: ``snapshot`` / ``added_since`` / ``drop`` / ``restore``
 let bench.py record the entries a build key's warmup run added and evict
@@ -161,10 +163,15 @@ def materialized(df: DataFrame) -> DataFrame:
     return df
 
 
-def persisted(kind: str, build: Callable[[], DataFrame], *parts) -> DataFrame:
+def persisted(
+    kind: str,
+    build: Callable[[], DataFrame],
+    *parts,
+    owner: tuple | None = None,
+) -> DataFrame:
     """``memo`` of ``build()``'s frame, persisted and materialized when
-    it is built."""
-    return memo(kind, lambda: materialized(build()), *parts)
+    it is built (``owner`` as in ``memo``)."""
+    return memo(kind, lambda: materialized(build()), *parts, owner=owner)
 
 
 def get(kind: str, *parts) -> Any:

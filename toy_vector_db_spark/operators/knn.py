@@ -225,19 +225,24 @@ def _scored_product(
 QUERY_BATCH_MAX = 100_000
 
 # _TopRAcc's worst-case per-task buffer is nq × max(2R, R+8192) rows ×
-# 16 B (int64 id + float64 score). At QUERY_BATCH_MAX queries and the
-# R=16384 rerank budget that is ~50 GB — far past any sane task heap —
-# so the pair kernel gates the accumulator on this budget (round 12, r11
-# advice) and falls back to full STREAMING emission when it would not
-# fit: more shuffle rows, but per-task memory bounded by one Arrow
-# batch instead of the buffer, and values identical either way. 256 MiB
-# covers every shipped serving shape (250 queries × R=16384 ≈ 131 MB)
-# with headroom, while 32 concurrent tasks stay ≤ 8 GiB total.
+# 16 B (int64 id + float64 score), or 24 B when the row also carries its
+# exact distance (the fused rerank of ``_pair_kernel``'s ``exact_col``).
+# At QUERY_BATCH_MAX queries and the R=16384 rerank budget that is
+# ~50-75 GB — far past any sane task heap — so the pair kernel gates the
+# accumulator on this budget (round 12, r11 advice) and falls back to
+# full STREAMING emission when it would not fit: more shuffle rows, but
+# per-task memory bounded by one Arrow batch instead of the buffer, and
+# values identical either way. A compressed-index search whose fused
+# buffer would not fit reranks in similarity._exact_rerank instead
+# (similarity._codec_search). 256 MiB covers every shipped serving shape
+# (250 queries × R=16384 ≈ 197 MB with the distance) with headroom,
+# while 32 concurrent tasks stay ≤ 8 GiB total.
 EMIT_TOPK_BUDGET_BYTES = 256 << 20
 
 
-def emit_topk_within_budget(n_q: int, r: int) -> bool:
-    return n_q * max(2 * r, r + 8192) * 16 <= EMIT_TOPK_BUDGET_BYTES
+def emit_topk_within_budget(n_q: int, r: int, exact: bool = False) -> bool:
+    row_bytes = 24 if exact else 16
+    return n_q * max(2 * r, r + 8192) * row_bytes <= EMIT_TOPK_BUDGET_BYTES
 
 
 def _row_mask(qi, n, cells, cell_mask_lists, lab, qlabels):
@@ -361,16 +366,19 @@ class _TopRAcc:
     of batch boundaries and merge schedule (top-R of (top-R of prefix)
     ∪ suffix ≡ top-R of the whole), hence deterministic and a provable
     superset of the global top-R. Scores are never modified — the
-    downstream window sees identical doubles."""
+    downstream window sees identical doubles. ``n_extra`` float64
+    columns (the fused rerank's exact distance) ride beside each score
+    through every cut."""
 
-    def __init__(self, n_q: int, r: int):
+    def __init__(self, n_q: int, r: int, n_extra: int = 0):
         self.r = r
         self.thresh = max(2 * r, r + 8192)
-        self._ids: list[list[np.ndarray]] = [[] for _ in range(n_q)]
-        self._sc: list[list[np.ndarray]] = [[] for _ in range(n_q)]
+        self._n_cols = 2 + n_extra
+        # per query: (ids, score, *extra) array tuples awaiting a cut
+        self._parts: list[list[tuple]] = [[] for _ in range(n_q)]
         self._len = [0] * n_q
 
-    def add(self, qi: int, ids: np.ndarray, sc: np.ndarray) -> None:
+    def add(self, qi: int, ids: np.ndarray, sc: np.ndarray, *extra) -> None:
         if len(ids) == 0:
             return
         # detach views: a dist[:, qi] column slice pins the whole
@@ -378,42 +386,38 @@ class _TopRAcc:
         # its RecordBatch) until the next cut — copying keeps peak
         # memory at the ≤thresh buffers plus ONE in-flight batch
         # (review r11)
-        if ids.base is not None:
-            ids = ids.copy()
-        if sc.base is not None:
-            sc = sc.copy()
-        self._ids[qi].append(ids)
-        self._sc[qi].append(sc)
+        self._parts[qi].append(tuple(
+            a.copy() if a.base is not None else a for a in (ids, sc, *extra)
+        ))
         self._len[qi] += len(ids)
         if self._len[qi] > self.thresh:
             self._cut(qi)
 
     def _cut(self, qi: int) -> None:
-        ci = np.concatenate(self._ids[qi])
-        cs = np.concatenate(self._sc[qi])
-        if len(ci) > self.r:
-            order = np.lexsort((ci, cs))[: self.r]
-            ci, cs = ci[order], cs[order]
-        self._ids[qi] = [ci]
-        self._sc[qi] = [cs]
-        self._len[qi] = len(ci)
+        cols = [np.concatenate(c) for c in zip(*self._parts[qi])]
+        if len(cols[0]) > self.r:
+            order = np.lexsort((cols[0], cols[1]))[: self.r]
+            cols = [c[order] for c in cols]
+        self._parts[qi] = [tuple(cols)]
+        self._len[qi] = len(cols[0])
 
     def emit(self, qids: np.ndarray):
-        """(out_q, out_id, out_score) for the whole partition — each
-        query's exact top-R (or everything, if the partition holds
-        fewer than R rows for it)."""
+        """(out_q, out_id, out_score, *out_extra) for the whole partition
+        — each query's exact top-R (or everything, if the partition
+        holds fewer than R rows for it)."""
         live = [qi for qi in range(len(qids)) if self._len[qi]]
         for qi in live:
             self._cut(qi)
-        none = [np.empty(0, dtype=np.int64)]
         out_q = [np.full(self._len[qi], qids[qi], np.int64) for qi in live]
-        out_id = np.concatenate([self._ids[qi][0] for qi in live] or none)
-        out_d = [self._sc[qi][0] for qi in live] or [np.empty(0)]
-        return (
-            np.concatenate(out_q or none),
-            out_id.astype(np.int64, copy=False),
-            np.concatenate(out_d),
-        )
+        cols = [
+            np.concatenate(
+                [self._parts[qi][0][c] for qi in live]
+                or [np.empty(0, np.int64 if c == 0 else np.float64)]
+            )
+            for c in range(self._n_cols)
+        ]
+        cols[0] = cols[0].astype(np.int64, copy=False)
+        return (np.concatenate(out_q or [np.empty(0, np.int64)]), *cols)
 
 
 class _PairScorer(NamedTuple):
@@ -482,6 +486,11 @@ def _cosine_scorer(
     )
 
 
+# (row, query) pairs per float64 block of the fused exact rerank: bounds
+# its transient copies at 2 × 8192 × d doubles (8 MiB at d = 64)
+_EXACT_CHUNK = 8192
+
+
 def _check_label_pair(label_col, qlabel_col) -> None:
     if (label_col is None) != (qlabel_col is None):
         raise ValueError("label_col and qlabel_col must be passed together")
@@ -498,6 +507,7 @@ def _pair_kernel(
     emit_topk: int | None = None,
     label_col: str | None = None,
     qlabel_col: str | None = None,
+    exact_col: str | None = None,
 ) -> DataFrame:
     """(query_id, id, *score_cols) for every (query × base-row) pair the
     routing allows — the ONE Arrow pair kernel every bounded-batch scorer
@@ -522,13 +532,24 @@ def _pair_kernel(
     top-k with identical score doubles, turning |probed|×|queries| rows
     into partitions×queries×k. It is dropped (streaming full emission,
     values unchanged) when the buffer would exceed
-    EMIT_TOPK_BUDGET_BYTES."""
+    EMIT_TOPK_BUDGET_BYTES.
+
+    ``exact_col`` (requires an ``emit_topk`` that fits the budget with
+    the distance carried) fuses the exact rerank into the same pass: a
+    base-side full-precision vector column whose rows, once cut to each
+    query's batch-local top ``emit_topk`` by (score, id), get the exact
+    clamped cosine to the query, emitted as ``xdist`` beside the
+    scores. The fold is the ``_cosine_scorer`` / V.dot-V.magnitude op
+    order on the vector cast to float64 here (not in storage), so
+    ``xdist`` equals the Catalyst rerank's distance bit for bit; the
+    extra work is at most nq·emit_topk·d per Arrow batch."""
     import pyarrow as pa
 
     _check_label_pair(label_col, qlabel_col)
-    names = [query_id_col, id_col, *scorer.score_cols]
+    extra = ("xdist",) if exact_col is not None else ()
+    names = [query_id_col, id_col, *scorer.score_cols, *extra]
     schema = f"{query_id_col} long, {id_col} long, " + ", ".join(
-        f"{c} double" for c in scorer.score_cols
+        f"{c} double" for c in (*scorer.score_cols, *extra)
     )
     qb = _collected_batch(
         queries, query_id_col, scorer.query_vec_col,
@@ -546,7 +567,17 @@ def _pair_kernel(
     qids = qb.qids
     score = scorer.prep(qb)
     nq = len(qids)
-    if emit_topk is not None and not emit_topk_within_budget(nq, emit_topk):
+    if exact_col is not None:
+        if emit_topk is None or not emit_topk_within_budget(
+            nq, emit_topk, exact=True
+        ):
+            raise ValueError(
+                "exact_col needs an emit_topk whose buffer fits "
+                "EMIT_TOPK_BUDGET_BYTES; rerank on the Catalyst tail"
+            )
+        Q = qb.X
+        qmags = _seq_mags(Q)
+    elif emit_topk is not None and not emit_topk_within_budget(nq, emit_topk):
         emit_topk = None  # buffer would not fit: stream full emission
     cell_mask_lists = None
     if cells_by_query is not None:
@@ -560,10 +591,43 @@ def _pair_kernel(
         cols.append(cell_col)
     if label_col is not None:
         cols.append(label_col)
+    if exact_col is not None:
+        cols.append(exact_col)
     src = base.select(*cols)
 
+    def _exact(topr, batch, ids, sc, rows_by_q):
+        """Each query's batch-local top ``emit_topk`` rows by (score,
+        id), handed to the accumulator with their exact distance."""
+        for qi, rows in enumerate(rows_by_q):
+            if len(rows) > emit_topk:
+                rows = rows[np.lexsort((ids[rows], sc[rows, qi]))[:emit_topk]]
+            rows_by_q[qi] = rows
+        sel = np.concatenate(rows_by_q)
+        sel_q = np.repeat(np.arange(nq), [len(r) for r in rows_by_q])
+        # the vectors in their stored dtype (float32 on the fixtures),
+        # cast to float64 per chunk of selected (row, query) pairs
+        Xn = list_col_to_matrix(batch.column(exact_col), dtype=None)
+        xdist = np.empty(len(sel))
+        for lo in range(0, len(sel), _EXACT_CHUNK):
+            qs = sel_q[lo: lo + _EXACT_CHUNK]
+            X = Xn[sel[lo: lo + _EXACT_CHUNK]].astype(np.float64)
+            Qs = Q[qs]
+            dot = np.zeros(len(qs))
+            for j in range(X.shape[1]):
+                dot += X[:, j] * Qs[:, j]
+            sims = dot / (_seq_mags(X) * qmags[qs])
+            xdist[lo: lo + len(qs)] = 1.0 - np.maximum(sims, 0.0)
+        lo = 0
+        for qi, rows in enumerate(rows_by_q):
+            hi = lo + len(rows)
+            topr.add(qi, ids[rows], sc[rows, qi], xdist[lo:hi])
+            lo = hi
+
     def _score(batches):
-        topr = _TopRAcc(nq, emit_topk) if emit_topk is not None else None
+        topr = (
+            _TopRAcc(nq, emit_topk, len(extra))
+            if emit_topk is not None else None
+        )
         for batch in batches:
             if batch.num_rows == 0:
                 continue
@@ -586,6 +650,12 @@ def _pair_kernel(
                     _row_mask(qi, n, cells, cell_mask_lists, lab, qlabels)
                     for qi in range(nq)
                 ]
+            if exact_col is not None:
+                _exact(topr, batch, ids, mats[0], [
+                    np.arange(n) if masks is None else np.nonzero(masks[qi])[0]
+                    for qi in range(nq)
+                ])
+                continue
             if topr is not None:
                 for qi in range(nq):
                     if masks is None:
@@ -688,14 +758,19 @@ def pair_scores(
     )
 
 
-# NOTE: an Arrow-kernel variant of the bounded-R rerank rescore (explicit
-# pair list → point-fetch join → kernel) was built and measured ~0.5 s
-# SLOWER than the broadcast-join + inline-fold form at sf0.1: with only
-# R·|queries| ≈ 19k pairs, the extra Python hop breaks the whole-stage
-# pipeline into the top-k window for no vectorization payoff. The kernel
-# path is therefore reserved for |base|×|queries| products (pair_scores),
-# where it wins 10-25×; the rerank leg keeps the expression form
-# (similarity._exact_rerank).
+# NOTE: the exact rerank of a bounded compressed-index search rides the
+# candidate kernel itself (``_pair_kernel``'s ``exact_col``): the rows a
+# query keeps after its batch-local top-R cut get their exact distance
+# in the pass that scored them, and one query_id exchange carries both
+# per-query cuts. An earlier Arrow rerank measured ~0.5 s SLOWER than
+# the broadcast-join + inline-fold form at sf0.1, but that was a SEPARATE
+# Python hop (pair list → point-fetch join → a second kernel) that broke
+# the stage into the top-k window; the fused form adds no stage, no join
+# and no query broadcast. Its cost is an exact distance for up to every
+# scanned row (each Arrow batch keeps its own top R), so it is bounded
+# by |queries| × |base| (similarity.FUSED_RERANK_PAIRS); past that, and
+# on the Catalyst leg, the expression form (similarity._exact_rerank)
+# reranks.
 
 
 def argmin_dist(

@@ -370,8 +370,13 @@ def _rerank_budget(base: DataFrame, k: int) -> int:
     count(*) scalar subquery with LEAST/GREATEST
     (oracles_similarity.rerank_budget_sql). The base count is one
     scalar job per session."""
-    n = caches.memo("count", base.count, base)
+    n = _base_count(base)
     return max(RERANK_MULT * k, min(-(-n // RERANK_DEN), RERANK_CAP))
+
+
+def _base_count(base: DataFrame) -> int:
+    """|base|, one scalar job per session."""
+    return caches.memo("count", base.count, base)
 
 
 def _ivf_probes(
@@ -1114,7 +1119,10 @@ def _attach_labels(
     Returns ``(src_labeled, queries_labeled, label_name, qlabel_name)``.
     Both joins are INNER — rows/queries without a label row match
     nothing, the filtered-exact semantic every form of this predicate
-    has always had.
+    has always had. (The bounded kernel leg left-joins the query side
+    instead, ``_query_labels``, so the label rides the one query
+    collect; a missing label collects as None, which the kernel's row
+    mask matches to nothing — the same result.)
 
     CONTRACT (advice r13): ``labels`` and ``query_labels`` carry at most
     ONE row per id — they are attribute tables, not relations. A
@@ -1123,6 +1131,22 @@ def _attach_labels(
     dict silently collapsed such duplicates to an arbitrary winner —
     equally wrong, just quieter). Callers own the uniqueness; every
     fixture/test label frame is built one-row-per-id."""
+    queries, label_name, qlabel_name = _query_labels(
+        queries, labels, query_labels, id_col, query_id_col
+    )
+    return src.join(labels, id_col), queries, label_name, qlabel_name
+
+
+def _query_labels(
+    queries: DataFrame,
+    labels: DataFrame,
+    query_labels: DataFrame,
+    id_col: str,
+    query_id_col: str,
+    how: str = "inner",
+) -> tuple[DataFrame, str, str]:
+    """``(queries ⋈ query_labels, label_name, qlabel_name)``, the query
+    side of ``_attach_labels``, joined ``how``."""
     label_name = [c for c in labels.columns if c != id_col][0]
     qlabel_name = [c for c in query_labels.columns if c != query_id_col][0]
     if qlabel_name == label_name:
@@ -1131,8 +1155,7 @@ def _attach_labels(
         )
         qlabel_name = "_qlabel"
     return (
-        src.join(labels, id_col),
-        queries.join(query_labels, query_id_col),
+        queries.join(query_labels, query_id_col, how),
         label_name,
         qlabel_name,
     )
@@ -1193,15 +1216,17 @@ def _exact_rerank(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
 ) -> DataFrame:
-    """The shared exact-cosine rescore + top-k over a BOUNDED
-    (query_id, id) candidate list — the final leg of every
-    compressed-index search (``_codec_search``, flat and IVF alike):
-    id-join point-fetch of the full-precision vectors, broadcast query
-    join, inline clamped-cosine fold, per-query top-k window.
-    Deliberately the EXPRESSION form, not the Arrow kernel: with only
-    R·|queries| pairs the kernel's Python hop measured ~0.5 s slower
-    than the fold that pipelines straight into the window (see knn.py);
-    the kernel is for |base|×|queries| products."""
+    """The exact-cosine rescore + top-k over a BOUNDED (query_id, id)
+    candidate list — the rerank of every compressed-index search
+    (``_codec_search``, flat and IVF alike) that does not fuse it into
+    the candidate kernel: the Catalyst leg (an oversized query batch,
+    BQ), and a kernel leg over injected codes, over more than
+    FUSED_RERANK_PAIRS (query, row) pairs, or whose top-R buffer with
+    the distance would exceed knn.EMIT_TOPK_BUDGET_BYTES. Id-join
+    point-fetch of the full-precision vectors, broadcast query join,
+    inline clamped-cosine fold, per-query top-k window. A fused search
+    never comes here: its distances ride the candidate kernel
+    (knn._pair_kernel's ``exact_col``), bit-identical to this fold."""
     qv = queries.select(
         F.col(query_id_col).alias("_qid"),
         query_vec_col,
@@ -2067,6 +2092,49 @@ def _upsert(
     return existing.unionByName(new.select(*existing.columns)), cents, state
 
 
+# the full-precision vector column of an ``_exact_scan`` frame
+_EXACT_VEC = "_xv"
+
+# The fused rerank computes the exact distance of every row a query
+# keeps in a batch-local top-R cut. Over a corpus of many Arrow batches
+# or partitions that is up to every scanned row, where ``_exact_rerank``
+# computes R per query. A bounded search therefore fuses only while
+# |queries| × |base|, the most exact distances it can compute, stays
+# within the largest shapes measured: 64,000 × 256 and 256,000 × 64
+# (16.4M pairs) ran in 0.34-0.76 of the unfused wall on 4 cores
+# (SCALE.md, "Fused rerank"). Past it the kernel's candidates go to
+# ``_exact_rerank``.
+FUSED_RERANK_PAIRS = 1 << 24
+
+
+def _exact_scan(
+    codec: FineCodec,
+    scan: DataFrame,
+    base: DataFrame,
+    id_col: str,
+    vec_col: str,
+    owner: tuple | None,
+) -> DataFrame:
+    """Persisted ``scan ⋈ base(id, vec AS _xv)``: the codec's scan frame
+    with each row's full-precision vector beside its code, in the dtype
+    it is stored in (the kernel casts). It lets the bounded leg rerank
+    the rows it scores where they are — no per-request base join, no
+    query broadcast. Built at the first fused search over (scan, base)
+    and memoized per (codec, scan frame, base, id_col, vec_col);
+    ``owner``, the session-built cell artifact's entry, evicts it with
+    that artifact. Only codes the session encoded from ``base`` come
+    here, so every scan row has its base row."""
+    def build():
+        return scan.join(
+            base.select(id_col, F.col(vec_col).alias(_EXACT_VEC)), id_col
+        )
+
+    return caches.persisted(
+        "exact_scan", build, codec.name, scan, base, id_col, vec_col,
+        owner=owner,
+    )
+
+
 def _candidates(
     codec: FineCodec,
     scan: DataFrame,
@@ -2081,21 +2149,28 @@ def _candidates(
     query_vec_col: str,
     cents: DataFrame | None = None,
     nprobe: int = N_PROBE,
+    exact_scan: Callable[[int], DataFrame | None] | None = None,
 ) -> DataFrame:
-    """(query_id, id, codec.score_col) candidate pairs for a per-query
-    top-``r`` cut — the fine-scan step of every compressed-index search.
-    IVF (``cents`` given) restricts each query to its ``nprobe`` nearest
-    cells, or to the cells of a prebuilt label-aware ``probes`` frame;
-    a flat scan (no ``cents``) scores every row of ``scan``.
+    """(query_id, id, codec.score_col[, xdist]) candidate pairs for a
+    per-query top-``r`` cut — the fine-scan step of every
+    compressed-index search. IVF (``cents`` given) restricts each query
+    to its ``nprobe`` nearest cells, or to the cells of a prebuilt
+    label-aware ``probes`` frame; a flat scan (no ``cents``) scores
+    every row of ``scan``.
 
     BOUNDED (≤ knn.QUERY_BATCH_MAX query rows, codec with a kernel):
     ``knn._pair_kernel`` with the codec's scorer, emitting each
-    partition's top ``r`` per query. The query frame is collected once
+    partition's top ``r`` per query. The query frame — with each
+    query's label left-joined on a filtered call — is collected once
     (``knn._collected_batch``, which is also the guard) and the IVF
     routing is ranked from it in numpy (``_driver_probes``; a ``probes``
     frame is collected instead): the union of probed cells becomes a
     literal IN-filter on the scan and each row is scored only against
-    the queries probing its cell.
+    the queries probing its cell. When ``exact_scan`` (called with the
+    batch's query count) returns a frame — ``_exact_scan``, or None
+    where ``_codec_search`` does not fuse — the kernel scans that frame
+    instead and reranks in the same pass: every pair carries its exact
+    distance as ``xdist``.
 
     CATALYST (an oversized batch, or a codec without a kernel): the
     codec's score expression over scan ⋈ query frame — through the probe
@@ -2114,8 +2189,21 @@ def _candidates(
     label_name = qlabel_name = None
     qb = None
     if codec.kernel is not None:
-        qb = KNN._collected_batch(queries, query_id_col, query_vec_col)
+        q_in, scorer = codec.kernel(
+            state, queries, query_id_col, query_vec_col
+        )
+        if labels is not None:
+            q_in, label_name, qlabel_name = _query_labels(
+                q_in, labels, query_labels, id_col, query_id_col, "left"
+            )
+        qb = KNN._collected_batch(
+            q_in, query_id_col, scorer.query_vec_col,
+            (qlabel_name,) if labels is not None else (),
+        )
     if qb is not None:
+        xscan = exact_scan(len(qb.qids)) if exact_scan is not None else None
+        if xscan is not None:
+            scan = xscan
         cells_by_query = None
         if cents is not None:
             cells_by_query = (
@@ -2124,19 +2212,15 @@ def _candidates(
             )
             probed = sorted({c for cs in cells_by_query.values() for c in cs})
             scan = scan.where(_in_cells(probed))
-        q_in, scorer = codec.kernel(
-            state, queries, query_id_col, query_vec_col
-        )
         if labels is not None:
-            scan, q_in, label_name, qlabel_name = _attach_labels(
-                scan, labels, id_col, q_in, query_labels, query_id_col
-            )
+            scan = scan.join(labels, id_col)
         return KNN._pair_kernel(
             scan, q_in, scorer, id_col, query_id_col,
             cells_by_query=cells_by_query,
             label_col=label_name,
             qlabel_col=qlabel_name,
             emit_topk=int(r),
+            exact_col=_EXACT_VEC if xscan is not None else None,
         )
     hint = F.broadcast if codec.kernel is None else (lambda df: df)
     q_frame, score = codec.catalyst(
@@ -2208,8 +2292,18 @@ def _codec_search(
          build over ``base``) and keeps the top R per query
          (``_candidates``, then one (score, id) window) — R =
          ``rerank_r`` or max(codec.rerank_mult·k, ``_rerank_budget``).
-      3. exact rerank: full-precision cosine over the R survivors
-         (``_exact_rerank``), top ``k``.
+      3. exact rerank: full-precision cosine over the R survivors, top
+         ``k``. FUSED — the bounded kernel leg over the session-built
+         codes, while |queries| × |base| ≤ FUSED_RERANK_PAIRS and the
+         top-R buffer with the distance fits the kernel's budget — the
+         kernel computes it for the rows it keeps, over the persisted
+         scan ⋈ base frame ``_exact_scan``, and both per-query cuts
+         (top R by (score, id), then top k by (exact distance, id)) run
+         over ONE query_id exchange. Otherwise — injected codes (a
+         frozen upsert triple, the on-disk ``written_codes_cells``),
+         a larger request, an oversized batch or BQ — the R survivors
+         are reranked in ``_exact_rerank``: id join to ``base``,
+         broadcast query join.
 
     ``state`` is the quantizer state that encoded ``codes``; injected
     flat codes must come with it."""
@@ -2239,11 +2333,25 @@ def _codec_search(
         cents = cached_trained_centroids(base, id_col=id_col, vec_col=vec_col)
     if state is None:
         state = codec.state(base, id_col, vec_col)
-    if codes is None:
-        codes = (
-            _cached_cells(codec, base, id_col, vec_col)
-            if ivf else codec.encode(base, state, id_col, vec_col)
-        )
+    session_built = codes is None
+    owner = None
+    if session_built:
+        if ivf:
+            codes = _cached_cells(codec, base, id_col, vec_col)
+            owner = (f"ivf{codec.name}_cells", base, id_col, vec_col)
+        else:
+            codes = codec.encode(base, state, id_col, vec_col)
+    scan = codec.scan(codes, state)
+
+    def exact_scan(nq):
+        if (
+            not session_built
+            or nq * _base_count(base) > FUSED_RERANK_PAIRS
+            or not KNN.emit_topk_within_budget(nq, int(rerank_r), exact=True)
+        ):
+            return None
+        return _exact_scan(codec, scan, base, id_col, vec_col, owner)
+
     probes = None
     if label_hist is not None:
         probes = _ivf_probes_labeled(
@@ -2251,20 +2359,31 @@ def _codec_search(
             int(rerank_r), query_id_col, query_vec_col,
         )
     cand = _candidates(
-        codec, codec.scan(codes, state), state, queries, rerank_r, probes,
+        codec, scan, state, queries, rerank_r, probes,
         labels, query_labels, id_col, query_id_col, query_vec_col,
-        cents=cents if ivf else None, nprobe=nprobe,
+        cents=cents if ivf else None, nprobe=nprobe, exact_scan=exact_scan,
     )
     wr = Window.partitionBy(query_id_col).orderBy(
         F.col(codec.score_col).asc(), F.col(id_col).asc()
     )
-    pruned = (
-        cand.withColumn("rr", F.row_number().over(wr))
-        .where(F.col("rr") <= rerank_r)
-        .select(query_id_col, id_col)
+    top_r = cand.withColumn("rr", F.row_number().over(wr)).where(
+        F.col("rr") <= rerank_r
     )
-    return _exact_rerank(
-        pruned, base, queries, k, id_col, vec_col, query_id_col, query_vec_col
+    if "xdist" not in cand.columns:
+        return _exact_rerank(
+            top_r.select(query_id_col, id_col), base, queries, k,
+            id_col, vec_col, query_id_col, query_vec_col,
+        )
+    # same partitioning as the top-R window: no second exchange
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col("xdist").asc(), F.col(id_col).asc()
+    )
+    return (
+        top_r.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(
+            query_id_col, id_col, rnd("xdist", ROUND).alias("dist"), "rank"
+        )
     )
 
 
