@@ -487,3 +487,46 @@ def test_fused_rerank_stops_at_the_pair_bound(spark, embeddings, monkeypatch):
             map(tuple, fused.collect())
         )
         monkeypatch.setattr(similarity, "FUSED_RERANK_PAIRS", pairs)
+
+
+def test_unfused_flat_codes_encode_once(spark, embeddings, monkeypatch):
+    """Unfused flat SQ and BQ2 (here every bounded request, with
+    FUSED_RERANK_PAIRS at 0) scan codes the session encoded once: a
+    first request encodes the base at most once (not at all when an
+    earlier search built the codes), a second one neither encodes nor
+    adds a cache entry, and both return the rows of a search over
+    freshly encoded injected codes, distances compared as hex."""
+    base, qs = _splits(spark, embeddings)
+    base = base.select("vec_id", "embedding")
+    monkeypatch.setattr(similarity, "FUSED_RERANK_PAIRS", 0)
+
+    def rows(df):
+        return sorted(
+            (r[0], r[1], r[2].hex(), r[3]) for r in df.collect()
+        )
+
+    for name, search in (
+        ("_SQ", similarity.knn_sq_rerank), ("_BQ2", similarity.knn_bq2_rerank)
+    ):
+        codec = getattr(similarity, name)
+        encoded = []
+
+        def encode(*a, codec=codec, encoded=encoded):
+            encoded.append(1)
+            return codec.encode(*a)
+
+        monkeypatch.setattr(similarity, name, codec._replace(encode=encode))
+        first = rows(search(base, qs, 10))
+        built = len(encoded)
+        assert built <= 1, name
+        snap = caches.snapshot()
+        again = search(base, qs, 10)
+        assert "xdist" not in explain.formatted_plan(again)
+        assert rows(again) == first
+        assert len(encoded) == built and caches.added_since(snap) == [], name
+        state = codec.state(base, "vec_id", "embedding")
+        injected = search(
+            base, qs, 10, bounds=state,
+            codes=codec.encode(base, state, "vec_id", "embedding"),
+        )
+        assert rows(injected) == first, name

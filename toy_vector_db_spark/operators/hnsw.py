@@ -55,8 +55,10 @@ import math
 
 import numpy as np
 import pandas as pd
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from toy_vector_db_spark import caches
 
@@ -628,13 +630,35 @@ def _per_row(fn):
     return lambda pdfs: (fn(r) for pdf in pdfs for r in pdf.to_dict("records"))
 
 
+def _n_held(row_ids, ids: np.ndarray) -> int:
+    """How many of ``ids`` a packed row's ``ids`` bytes hold."""
+    return int(np.isin(ids, np.frombuffer(row_ids, np.int64)).sum())
+
+
 def _held(packed: DataFrame, ids: np.ndarray) -> dict:
     """{part: how many of ``ids`` the shard holds} for every packed row,
     read off the rows' ``ids`` alone: one small map, no vector decoded."""
     return dict(packed.select("part", "ids").mapInPandas(_per_row(
-        lambda r: pd.DataFrame({"part": [r["part"]], "n": [int(np.isin(
-            ids, np.frombuffer(r["ids"], np.int64)).sum())]})
+        lambda r: pd.DataFrame(
+            {"part": [r["part"]], "n": [_n_held(r["ids"], ids)]}
+        )
     ), "part int, n long").collect())
+
+
+class _PartCounts(AccumulatorParam):
+    """A {part: count} accumulator: merging sums the counts key by key,
+    so the result does not depend on the order tasks finish in. A
+    re-executed task adds its counts a second time, which can only grow
+    a count: a zero stays zero, a nonzero stays nonzero, and the key set
+    stays the set of parts the tasks saw."""
+
+    def zero(self, value: dict) -> dict:
+        return {}
+
+    def addInPlace(self, a: dict, b: dict) -> dict:
+        for part, n in b.items():
+            a[part] = a.get(part, 0) + n
+        return a
 
 
 def _packed_ids(packed: DataFrame, id_col: str) -> DataFrame:
@@ -1334,15 +1358,17 @@ def hnsw_upsert(
     the same vec_id twice in results. This matches ivfpq_upsert's
     contract (update = tombstone delete + re-insert under a new id, or
     compact first); unlike there, it is CHECKED here: against the
-    index, by one map over its packed rows, and within the batch (NULL
-    and repeated ids), in numpy on the collected batch.
+    index, inside the insert map (each packed row counts the batch ids
+    it already holds), and within the batch (NULL and repeated ids), in
+    numpy on the collected batch.
 
     Returns (parted', edges') in the exact shape ``hnsw_index`` emits,
     so every search entry point works unchanged on the upserted index:
     lazy projections of ONE checkpoint leaf, the re-packed serving
     frame (see ``_upsert_parted``), so along a chain of upserts each one
-    runs the same few stages and only its own kernel work, with no
-    shuffle and one in-memory copy of the index per upsert."""
+    runs the same two Spark jobs (the batch collect, the insert map's
+    checkpoint) and only its own kernel work, with no shuffle and one
+    in-memory copy of the index per upsert."""
     batch_p = _with_part(
         batch.select(id_col, vec_col), num_partitions, id_col
     )
@@ -1372,20 +1398,29 @@ def _upsert_parted(
        cold one (say, re-read from storage) packs here, the one
        shuffle of the path, so a caller that upserts again passes the
        returned pair on (streaming.ingest.stream_ingest_hnsw does);
-    3. one map over the packed rows with the batch ids in the closure:
-       ids already in the index raise (append-only contract);
-    4. ONE map over the packed rows with each shard's batch rows in the
-       closure, checkpointed eagerly (_grown): untouched rows pass
-       through byte for byte, a touched row re-packs in place, a shard
-       the index does not hold yet is built from its batch rows.
+    3. ONE map over the packed rows with each shard's batch rows in the
+       closure, checkpointed eagerly (_grown): every row counts the
+       batch ids it already holds (its ``ids`` alone, no vector
+       decoded) into a {part: count} accumulator, untouched rows pass
+       through byte for byte, a touched row re-packs in place;
+    4. on the driver, off that accumulator: a nonzero count raises
+       (append-only contract) before anything is registered, and a
+       batch shard missing from its keys is new to the index — only
+       then a second map over the re-spread rows builds it from its
+       batch rows.
 
-    The upserted pair are lazy projections of that one checkpoint leaf
-    (_unpacked), registered with it as their packed frame; the pack
-    they replace is evicted. Plan depth is O(1) along any chain, and no
-    step shuffles. A batch over QUERY_BATCH_MAX rows runs as id-ordered
-    chunks through the same map: a scratch shard rebuild is
-    deterministic and an append chunk is the tail of the scratch
-    insertion order, so the graph is the one-pass graph.
+    So an upsert into shards the index holds runs two Spark jobs, the
+    collect and the checkpoint. The upserted pair are lazy projections
+    of the last checkpoint leaf (_unpacked), registered with it as
+    their packed frame. The pack they replace is evicted when an
+    earlier upsert registered it; a pack ``cached_packed_index``
+    persisted stays with the pair it belongs to (a ``cached_index`` or
+    ``cached_routed_index`` value serves and upserts again from it).
+    Plan depth is O(1) along any chain, and no step shuffles. A batch
+    over QUERY_BATCH_MAX rows runs as id-ordered chunks through the
+    same map: a scratch shard rebuild is deterministic and an append
+    chunk is the tail of the scratch insertion order, so the graph is
+    the one-pass graph.
 
     Trade: a checkpointed block lost to executor failure is not
     recomputable (a non-event on local[n], where executor loss is
@@ -1394,7 +1429,7 @@ def _upsert_parted(
     from toy_vector_db_spark.functions.arrowkit import list_col_to_matrix
     from toy_vector_db_spark.operators import knn, similarity
 
-    grown = cached_packed_index(parted, edges, id_col, vec_col)
+    packed = grown = cached_packed_index(parted, edges, id_col, vec_col)
     part = ["part"] if cents is None else []
     sel = batch.select(id_col, F.col(vec_col).cast("array<double>"), *part)
     for t in _batch_chunks(sel, id_col):
@@ -1412,7 +1447,10 @@ def _upsert_parted(
     caches.memo(
         "hnsw_packed", lambda: grown, new_parted, new_edges, id_col, vec_col
     )
-    caches.evict("hnsw_packed", parted, edges, id_col, vec_col)
+    # only an upsert registers an unpersisted pack (its checkpoint
+    # leaf); a persisted one is cached_packed_index's and stays
+    if not packed.is_cached:
+        caches.evict("hnsw_packed", parted, edges, id_col, vec_col)
     return new_parted, new_edges
 
 
@@ -1457,24 +1495,54 @@ def _grown(
 ) -> DataFrame:
     """``packed`` with the batch rows (``ids``, vectors ``X``, shard
     ``parts``) inserted, as an eager checkpoint leaf that keeps
-    ``packed``'s partitions (re-spread, one exchange, when the batch
-    opens a shard). Raises when an id is already indexed."""
-    import pyarrow as pa
+    ``packed``'s partitions. Raises when an id is already indexed.
 
-    held = _held(packed, ids)
-    if any(held.values()):
+    The check rides the insert map (_inserted): every packed row adds
+    {part: batch ids it holds} to an accumulator, every row and not
+    only the touched ones, since a routed batch id can live in another
+    cell. After the checkpoint the driver reads it: any nonzero count
+    raises, and a batch part missing from its keys is a shard the
+    index does not hold yet, which a second map builds from an empty
+    stub row (re-spread, one exchange). Spark may apply the update of
+    a re-executed task twice; that only inflates a count and never
+    turns a zero nonzero or changes the key set (_PartCounts), so the
+    rule holds under task retries."""
+    held = packed.sparkSession.sparkContext.accumulator({}, _PartCounts())
+    grown = _inserted(packed, ids, X, parts, held)
+    if any(held.value.values()):
         raise ValueError(
             "hnsw upsert: batch contains ids already present in the index; "
             "the ingest is append-only (tombstone-delete + re-insert under "
             "a new id, or compact, to update an existing row)"
         )
-    fresh = set(parts.tolist()) - set(held)
-    if fresh:  # an empty row per new shard, so the map below builds it;
-        # re-spread, or the stub's partition would hold the shard alone
-        blank = _pack_row(0, ids[:0], X[:0], [None] * L)
-        packed = _spread(packed.unionByName(packed.sparkSession.createDataFrame(
-            [{**blank, "part": p} for p in fresh], packed.schema
-        )))
+    fresh = set(parts.tolist()) - set(held.value)
+    if not fresh:
+        return grown
+    # an empty row per new shard, so the map builds it; re-spread, or
+    # the stub's partition would hold the shard alone
+    blank = _pack_row(0, ids[:0], X[:0], [None] * L)
+    stubs = _spread(grown.unionByName(grown.sparkSession.createDataFrame(
+        [{**blank, "part": p} for p in fresh], grown.schema
+    )))
+    new = np.isin(parts, list(fresh))
+    return _inserted(stubs, ids[new], X[new], parts[new])
+
+
+def _inserted(
+    packed: DataFrame,
+    ids: np.ndarray,
+    X: np.ndarray,
+    parts: np.ndarray,
+    held=None,
+) -> DataFrame:
+    """ONE map over the packed rows, checkpointed eagerly: a row of a
+    shard in ``parts`` grows by its id-sorted batch rows (_grown_row),
+    every other row passes through byte for byte. With ``held``, a
+    _PartCounts accumulator, each row first adds how many of ``ids`` it
+    already holds; a row that holds any passes through unchanged, as
+    the caller raises."""
+    import pyarrow as pa
+
     order = np.lexsort((ids, parts))
     keys, starts = np.unique(parts[order], return_index=True)
     rows_of = {
@@ -1483,7 +1551,12 @@ def _grown(
 
     def _insert(batches):
         for b in batches:
-            touched = np.isin(b.column("part").to_numpy(), list(rows_of))
+            part = b.column("part").to_numpy()
+            touched = np.isin(part, list(rows_of))
+            if held is not None:
+                n = [_n_held(r.as_buffer(), ids) for r in b.column("ids")]
+                held.add(dict(zip(part.tolist(), n)))
+                touched &= np.equal(n, 0)
             yield b.filter(pa.array(~touched))
             for row in b.filter(pa.array(touched)).to_pylist():
                 grown = _grown_row(row, *rows_of[row["part"]])
@@ -1518,8 +1591,9 @@ def _unpacked(
 ) -> tuple[DataFrame, DataFrame]:
     """(parted', edges'): the lifecycle frames of an index as lazy
     projections of its packed rows — (id, vec, part) with ``parted``'s
-    column types, and each shard graph's edge rows in the build's own
-    encoding (_edge_rows)."""
+    column types (one cast projection, only where they differ from the
+    decoded long / array<double>), and each shard graph's edge rows in
+    the build's own encoding (_edge_rows)."""
 
     def _vectors(row):
         ids, vecs, _ = _unpack_row(row)
@@ -1529,12 +1603,16 @@ def _unpacked(
         ids, vecs, csrs = _unpack_row(row)
         return _edge_rows(row["part"], ids, _dict_graph(ids, vecs, csrs))
 
-    types = {f.name: f.dataType for f in parted.schema.fields}
     vectors = packed.mapInPandas(
         _per_row(_vectors), f"{id_col} long, {vec_col} array<double>, part int"
-    ).select(
-        *(F.col(c).cast(types[c]).alias(c) for c in (id_col, vec_col)), "part"
     )
+    types = {f.name: f.dataType for f in parted.schema.fields}
+    decoded = {id_col: T.LongType(), vec_col: T.ArrayType(T.DoubleType())}
+    if any(types[c] != t for c, t in decoded.items()):
+        vectors = vectors.selectExpr(*(
+            f"CAST(`{c}` AS {types[c].simpleString()}) AS `{c}`"
+            for c in (id_col, vec_col)
+        ), "part")
     return vectors, packed.mapInPandas(
         _per_row(_edges), "part int, layer int, src long, pos int, dst long"
     )

@@ -2339,8 +2339,18 @@ def _codec_search(
         if ivf:
             codes = _cached_cells(codec, base, id_col, vec_col)
             owner = (f"ivf{codec.name}_cells", base, id_col, vec_col)
-        else:
+        elif codec is _PQ or state is None:
+            # PQ's encode returns the persisted pq_codes artifact; BQ
+            # (no state) keeps its per-row expression
             codes = codec.encode(base, state, id_col, vec_col)
+        else:
+            # SQ / BQ2 codes persist once per (codec, base, state), so an
+            # unfused search scans them instead of re-encoding base
+            codes = caches.persisted(
+                "flat_codes",
+                lambda: codec.encode(base, state, id_col, vec_col),
+                codec.name, base, state, id_col, vec_col,
+            )
     scan = codec.scan(codes, state)
 
     def exact_scan(nq):
