@@ -151,7 +151,7 @@ def semdedup_scale(spark, base, n_base: int) -> None:
     # would measure a different assignment than the prune uses if the
     # operator's path ever changes (review r11)
     base_m = base.select(
-        "vec_id", "embedding", V.magnitude(F.col("embedding")).alias("_mag")
+        "vec_id", "embedding", V.magnitude("embedding").alias("_mag")
     )
     cents_rows = [
         (int(r["centroid_id"]), [float(x) for x in r["centroid_vec"]])

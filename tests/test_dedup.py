@@ -353,7 +353,7 @@ def test_semdedup_kernel_assign_parity(spark, embeddings):
     n_cells = dedup.SEM_KERNEL_MIN_CELLS + 16
     cents = similarity.cached_trained_centroids(embeddings, n=n_cells)
     base_m = embeddings.select(
-        "vec_id", "embedding", V.magnitude(F.col("embedding")).alias("_mag")
+        "vec_id", "embedding", V.magnitude("embedding").alias("_mag")
     )
     cents_rows = [
         (int(r["centroid_id"]), [float(x) for x in r["centroid_vec"]])
@@ -365,10 +365,10 @@ def test_semdedup_kernel_assign_parity(spark, embeddings):
             base_m, cents_rows, "vec_id", "embedding"
         ).collect()
     }
-    cents_m = cents.withColumn("_c_mag", V.magnitude(F.col("centroid_vec")))
+    cents_m = cents.withColumn("_c_mag", V.magnitude("centroid_vec"))
     c_sim = F.greatest(
         F.lit(0.0),
-        V.dot(F.col("embedding"), F.col("centroid_vec"))
+        V.dot("embedding", "centroid_vec")
         / (F.col("_mag") * F.col("_c_mag")),
     )
     expr = {
@@ -531,11 +531,11 @@ def test_semdedup_assign_matmul_tie_break_on_duplicate_centroids(spark):
     }
     cents = spark.createDataFrame(
         cents_rows, "centroid_id long, centroid_vec array<double>"
-    ).withColumn("_c_mag", V.magnitude(F.col("centroid_vec")))
+    ).withColumn("_c_mag", V.magnitude("centroid_vec"))
     c_sim = F.greatest(
         F.lit(0.0),
-        V.dot(F.col("embedding"), F.col("centroid_vec"))
-        / (V.magnitude(F.col("embedding")) * F.col("_c_mag")),
+        V.dot("embedding", "centroid_vec")
+        / (V.magnitude("embedding") * F.col("_c_mag")),
     )
     expr = {
         int(r["vec_id"]): (int(r["centroid_id"]), float(r["_cd"]))

@@ -42,11 +42,11 @@ def test_pair_scores_dual_metric_equals_staged_expressions(spark, embeddings):
     from toy_vector_db_spark.functions import vector as V
 
     base, qs = _splits(embeddings)
-    base_m = base.withColumn("_v_mag", V.magnitude(F.col("embedding")))
-    q_m = qs.withColumn("_q_mag", V.magnitude(F.col("query_vec")))
+    base_m = base.withColumn("_v_mag", V.magnitude("embedding"))
+    q_m = qs.withColumn("_q_mag", V.magnitude("query_vec"))
     staged = (
         base_m.crossJoin(F.broadcast(q_m))
-        .withColumn("_dot", V.dot(F.col("embedding"), F.col("query_vec")))
+        .withColumn("_dot", V.dot("embedding", "query_vec"))
         .withColumn(
             "cos_dist",
             F.lit(1.0)
@@ -133,7 +133,7 @@ def test_sq_adc_kernel_equals_fold_form(spark, embeddings):
         for r in deq.crossJoin(F.broadcast(nq)).select(
             "query_id",
             "vec_id",
-            similarity._sq_dist(F.col("deq"), F.col("qnv")).alias("ad2"),
+            similarity._sq_dist("deq", "qnv").alias("ad2"),
         ).collect()
     }
     kern = {

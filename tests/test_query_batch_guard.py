@@ -83,7 +83,6 @@ def test_oversized_batch_knn_ivf_probe_join_plan(spark, embeddings):
         big,
         10,
         cents=cents,
-        assign=similarity.cached_trained_assign(base),
         cell_vectors=similarity.cached_cell_vectors(base),
     )
     plan = explain.formatted_plan(out)
@@ -106,14 +105,13 @@ def test_fallback_values_match_kernel(spark, embeddings, monkeypatch):
 def test_fallback_values_match_kernel_ivf(spark, embeddings, monkeypatch):
     base, qs = _splits(spark, embeddings)
     cents = similarity.cached_trained_centroids(base)
-    assign = similarity.cached_trained_assign(base)
     cv = similarity.cached_cell_vectors(base)
     kernel = similarity.knn_ivf(
-        base, qs, 10, cents=cents, assign=assign, cell_vectors=cv
+        base, qs, 10, cents=cents, cell_vectors=cv
     ).collect()
     monkeypatch.setattr(knn, "QUERY_BATCH_MAX", 1)
     fallback = similarity.knn_ivf(
-        base, qs, 10, cents=cents, assign=assign, cell_vectors=cv
+        base, qs, 10, cents=cents, cell_vectors=cv
     ).collect()
     assert sorted(map(tuple, kernel)) == sorted(map(tuple, fallback))
 

@@ -116,10 +116,36 @@ def test_ivfpq_equivalence_and_recall(spark, embeddings):
     assert rec >= floor, f"IVF-PQ mean recall@10 = {rec}"
 
 
+def _subspace_slices(df, id_col, vec_col, sub):
+    """(id, m, _sl): one row per PQ subspace slice of ``vec_col``."""
+    from pyspark.sql import functions as FF
+
+    return df.select(
+        id_col,
+        FF.posexplode(FF.array(*[
+            FF.slice(vec_col, m * sub + 1, sub)
+            for m in range(similarity.PQ_M)
+        ])).alias("m", "_sl"),
+    )
+
+
+def _codebook_frame(spark, books):
+    """(m, k, _book): one row per PQ codeword."""
+    return spark.createDataFrame(
+        [
+            (m, k, [float(x) for x in books[m][k]])
+            for m in range(len(books))
+            for k in range(len(books[m]))
+        ],
+        "m int, k int, _book array<double>",
+    )
+
+
 def test_pq_codes_arrow_kernel_equals_fold_form(spark, embeddings):
     """pq_codes builds with a numpy mapInArrow kernel; the interpreted
-    Catalyst fold form (array_min over (sq_dist, k) structs — the shape
-    the DuckDB oracle mirrors) must produce the SAME codes bit-for-bit:
+    Catalyst fold form (the _sq_dist fold per codeword, min over
+    (d, k) structs — the shape the DuckDB oracle mirrors) must produce
+    the SAME codes bit-for-bit:
     np.cumsum is the same sequential left fold, np.argmin the same
     first-min tie-break."""
     from pyspark.sql import functions as FF
@@ -146,20 +172,22 @@ def test_pq_codes_arrow_kernel_equals_fold_form(spark, embeddings):
         "vec_id",
         FF.transform("_vd", lambda x: x / FF.col("_m")).alias("_nv"),
     )
-    cols = [FF.col("vec_id")]
-    for m in range(similarity.PQ_M):
-        v_m = FF.slice(FF.col("_nv"), m * sub + 1, sub)
-        cands = FF.array(*[
-            FF.struct(
-                similarity._sq_dist(v_m, FF.lit(books[m][k])).alias("d"),
-                FF.lit(k).alias("k"),
-            )
-            for k in range(similarity.PQ_K)
-        ])
-        cols.append(FF.array_min(cands).getField("k").cast("int").alias(f"c{m}"))
+    # every (subspace slice, codeword) pair scored by the _sq_dist fold;
+    # the code is the (d, k)-smallest codeword — first-min tie-break
+    best = (
+        _subspace_slices(nb, "vec_id", "_nv", sub)
+        .join(FF.broadcast(_codebook_frame(spark, books)), "m")
+        .select("vec_id", "m", "k",
+                similarity._sq_dist("_sl", "_book").alias("d"))
+        .groupBy("vec_id", "m")
+        .agg(FF.min(FF.struct("d", "k")).getField("k").alias("k"))
+    )
+    codes = {}
+    for r in best.collect():
+        codes.setdefault(r["vec_id"], {})[r["m"]] = r["k"]
     fold = {
-        r["vec_id"]: tuple(r[f"c{m}"] for m in range(similarity.PQ_M))
-        for r in nb.select(*cols).collect()
+        v: tuple(ms[m] for m in range(similarity.PQ_M))
+        for v, ms in codes.items()
     }
     kernel = {
         r["vec_id"]: tuple(r[f"c{m}"] for m in range(similarity.PQ_M))
@@ -511,20 +539,21 @@ def test_adc_lut_kernel_equals_fold_form(spark, embeddings):
         "query_id",
         FF.transform("_qv", lambda x: x / FF.col("_m")).alias("_nqv"),
     )
-    cols = [FF.col("query_id")]
-    for m in range(similarity.PQ_M):
-        qsl = FF.slice(FF.col("_nqv"), m * sub + 1, sub)
-        cols.append(
-            FF.array(*[
-                similarity._sq_dist(qsl, FF.lit(books[m][kk]))
-                for kk in range(similarity.PQ_K)
-            ]).alias(f"_lut{m}")
-        )
+    luts = {}
+    for r in (
+        _subspace_slices(nq, "query_id", "_nqv", sub)
+        .join(FF.broadcast(_codebook_frame(spark, books)), "m")
+        .select("query_id", "m", "k",
+                similarity._sq_dist("_sl", "_book").alias("d"))
+        .collect()
+    ):
+        luts[(r["query_id"], r["m"], r["k"])] = r["d"]
     fold = {
-        r["query_id"]: tuple(
-            tuple(r[f"_lut{m}"]) for m in range(similarity.PQ_M)
+        q: tuple(
+            tuple(luts[(q, m, kk)] for kk in range(similarity.PQ_K))
+            for m in range(similarity.PQ_M)
         )
-        for r in nq.select(*cols).collect()
+        for q in {key[0] for key in luts}
     }
     assert fold == kernel
 

@@ -5,7 +5,6 @@ import math
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from toy_vector_db_spark.functions import vector as V
 
@@ -35,10 +34,10 @@ def test_numpy_parity(vec_df):
         "id",
         "a",
         "b",
-        V.dot(F.col("a"), F.col("b")).alias("dot"),
-        V.magnitude(F.col("a")).alias("mag"),
-        V.cosine_distance(F.col("a"), F.col("b")).alias("cdist"),
-        V.euclidean_distance(F.col("a"), F.col("b")).alias("edist"),
+        V.dot("a", "b").alias("dot"),
+        V.magnitude("a").alias("mag"),
+        V.cosine_distance("a", "b").alias("cdist"),
+        V.euclidean_distance("a", "b").alias("edist"),
     ).collect()
     for r in got:
         a = np.asarray(r.a, dtype=np.float64)
@@ -51,10 +50,10 @@ def test_numpy_parity(vec_df):
 
 def test_distance_algebra(vec_df):
     rows = vec_df.select(
-        V.distance(F.col("a"), F.col("a")).alias("self_dist"),
-        V.distance(F.col("a"), F.col("b")).alias("d_ab"),
-        V.distance(F.col("b"), F.col("a")).alias("d_ba"),
-        V.euclidean_distance(F.col("a"), F.col("b")).alias("e_ab"),
+        V.distance("a", "a").alias("self_dist"),
+        V.distance("a", "b").alias("d_ab"),
+        V.distance("b", "a").alias("d_ba"),
+        V.euclidean_distance("a", "b").alias("e_ab"),
     ).collect()
     for r in rows:
         assert r.self_dist == pytest.approx(0.0, abs=1e-9)
@@ -70,8 +69,8 @@ def test_clamp_negative_similarity(spark):
         [([1.0, 0.0], [-1.0, 0.0])], "a array<float>, b array<float>"
     )
     (r,) = df.select(
-        V.cosine_similarity(F.col("a"), F.col("b")).alias("sim"),
-        V.cosine_distance(F.col("a"), F.col("b")).alias("dist"),
+        V.cosine_similarity("a", "b").alias("sim"),
+        V.cosine_distance("a", "b").alias("dist"),
     ).collect()
     assert r.sim == 0.0
     assert r.dist == 1.0
@@ -82,12 +81,12 @@ def test_dot_zip_stops_at_shorter(spark):
     df = spark.createDataFrame(
         [([1.0, 2.0, 3.0], [4.0, 5.0])], "a array<float>, b array<float>"
     )
-    (r,) = df.select(V.dot(F.col("a"), F.col("b")).alias("d")).collect()
+    (r,) = df.select(V.dot("a", "b").alias("d")).collect()
     assert r.d == pytest.approx(1 * 4 + 2 * 5)
 
 
 def test_magnitude_known_value(spark):
     df = spark.createDataFrame([([3.0, 4.0],)], "v array<float>")
-    (r,) = df.select(V.magnitude(F.col("v")).alias("m")).collect()
+    (r,) = df.select(V.magnitude("v").alias("m")).collect()
     assert r.m == pytest.approx(5.0)
     assert math.isclose(r.m, 5.0)

@@ -1,6 +1,6 @@
 """Vector scalar functions — the engine's expression library.
 
-Reference parity: /root/reference/src/vector.rs (V1-V6 in SURVEY.md §2.2):
+Reference parity (the reference's src/vector.rs, V1-V6 in SURVEY.md §2.2):
   magnitude           src/vector.rs:4-6
   dot                 src/vector.rs:9-11
   cosine_similarity   src/vector.rs:14-16  (clamped at 0 — non-standard!)
@@ -8,13 +8,23 @@ Reference parity: /root/reference/src/vector.rs (V1-V6 in SURVEY.md §2.2):
   euclidean_distance  src/vector.rs:23-29
   distance            src/vector.rs:31-33  (engine-wide alias of cosine_distance)
 
-Every function here is a pure Catalyst ``Column -> Column`` helper built from
-higher-order array functions (``aggregate``/``zip_with``) — no Python UDFs.
-That keeps the hot path JVM-side / codegen-friendly and SQL-expressible for
-the DuckDB oracle. Inputs are float32 arrays (the reference's ``Vec<f32>``);
-we cast to double before arithmetic so distance outputs are stable across
-engines (SURVEY.md §7 risk register #1), matching the oracle's
-``embedding::DOUBLE[]`` cast.
+Every function here takes column NAMES and returns one JVM-parsed SQL
+expression built from higher-order array functions (``aggregate`` /
+``zip_with``) — no Python UDFs. That keeps the hot path JVM-side /
+codegen-friendly and SQL-expressible for the DuckDB oracle. Inputs are
+float32 arrays (the reference's ``Vec<f32>``); we cast to double before
+arithmetic so distance outputs are stable across engines (SURVEY.md §7
+risk register #1), matching the oracle's ``embedding::DOUBLE[]`` cast.
+tests/test_expr_reference.py checks each builder bit for bit against a
+plain-Python left fold.
+
+The SQL text is the one implementation: the whole expression parses in
+ONE py4j call (``F.expr``), and the parsed, unresolved Column — an
+immutable expression tree that analysis re-resolves per plan — is
+memoized per (function, names) in the session memo (caches.memo, kind
+"expr"); dropping an entry only re-parses on next use. A Python-lambda
+Column build of the same fold cost ~40-60 py4j round-trips per dot,
+~0.3-0.5 s of an IVF serving key's driver-side construction.
 
 At 100 TB scale these expressions run inside whole-stage codegen over
 columnar parquet scans; the only data read is the embedding column itself
@@ -30,151 +40,92 @@ from pyspark.sql import functions as F
 
 from toy_vector_db_spark import caches
 
-
-def _dbl(v: Column) -> Column:
-    """Cast an array<float> column to array<double> for stable arithmetic."""
-    return v.cast("array<double>")
-
-
-# The str fast paths below interpolate caller-supplied column names into
-# raw SQL, which is only identity-preserving for plain (optionally
-# dot-qualified) identifiers — a name F.col() accepts but SQL needs
-# backticks for (spaces, hyphens, reserved words) would fail to parse or
-# bind differently (advice r14). Names outside this shape fall back to
-# the Column path via F.col, which has the exact pre-fast-path semantics.
 _SIMPLE_REF = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)*$")
-
-
-def _plain_refs(*args) -> bool:
-    return all(
-        isinstance(a, str) and _SIMPLE_REF.match(a) is not None for a in args
-    )
-
-
-def _as_col(v: Column | str) -> Column:
-    return F.col(v) if isinstance(v, str) else v
 
 
 def _sql_ident(name: str) -> str:
     """Render a caller-supplied column name for interpolation into a raw
     SQL fragment: plain (optionally dot-qualified) identifiers pass
-    through unchanged; anything else is backtick-quoted so the fragment
-    parses and binds to the same column F.col(name) would."""
+    through unchanged; anything else (spaces, hyphens, reserved words) is
+    backtick-quoted so the fragment parses and binds to that column."""
     if _SIMPLE_REF.match(name):
         return name
     return "`" + name.replace("`", "``") + "`"
-
-
-# Memoized SQL-parsed expression Columns for the str-argument fast path
-# (round 14, guide §1/§7.3 driver discipline): the Python HOF builders
-# below (F.aggregate/F.zip_with with Python lambdas) cost ~40-60 py4j
-# round-trips PER dot — profiled at ~0.3-0.5 s of every IVF-family
-# serving key's driver-side construction, more than some keys' executor
-# time. When callers pass plain SQL column references (the overwhelmingly
-# common case), the whole expression parses JVM-side in ONE py4j call
-# via F.expr and the resulting unresolved Column — an immutable
-# expression tree that analysis re-resolves per plan — is memoized per
-# (function, arg strings). The SQL text is built to produce the exact
-# same analyzed expression as the Column form (same lambda variable
-# names, double literals via the D suffix, identical op order), so
-# results are bit-identical; tests/test_expr_fastpath.py pins the two
-# forms equal and the oracle hashes pin cross-engine parity.
-# Entries live in the session memo (caches.memo, kind "expr"); they are
-# pure unresolved expressions, so dropping one only re-parses on next use.
-
-
-def _sql_dbl(v: str) -> str:
-    return f"CAST({v} AS ARRAY<DOUBLE>)"
-
-
-def _sql_dot_fold(a: str, b: str) -> str:
-    # mirrors the Column form below term by term: zip_with null-pads the
-    # shorter side, the fold coalesces padded products to 0.0
-    return (
-        f"aggregate(zip_with({_sql_dbl(a)}, {_sql_dbl(b)}, "
-        "(x, y) -> x * y), 0.0D, (acc, x) -> acc + coalesce(x, 0.0D))"
-    )
 
 
 def _cached_expr(key: tuple, sql: str) -> Column:
     return caches.memo("expr", lambda: F.expr(sql), *key)
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Σ aᵢ·bᵢ (reference: src/vector.rs:9-11).
+def _sql_dbl(v: str) -> str:
+    return f"CAST({v} AS ARRAY<DOUBLE>)"
 
-    The reference zips and stops at the shorter vector (no length check).
-    Spark's ``zip_with`` instead null-pads the shorter side, so the fold
-    coalesces padded products to 0 — arithmetically identical to stopping.
 
-    str args (plain SQL column references, e.g. ``"embedding"`` or
-    ``"a.embedding"``) take the memoized one-py4j-call F.expr path;
-    Column args build the identical expression via the HOF builders.
-    """
-    if _plain_refs(a, b):
-        return _cached_expr(("dot", a, b), _sql_dot_fold(a, b))
-    a, b = _as_col(a), _as_col(b)
-    return F.aggregate(
-        F.zip_with(_dbl(a), _dbl(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + F.coalesce(x, F.lit(0.0)),
+def _sql_fold(a: str, b: str, term: str) -> str:
+    """Σ term(x, y) over the zipped arrays as a left fold from 0.0:
+    zip_with null-pads the shorter side and the fold coalesces padded
+    terms to 0.0 — the reference zips and stops at the shorter vector,
+    arithmetically identical."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> {term}), 0.0D, "
+        "(acc, x) -> acc + coalesce(x, 0.0D))"
     )
 
 
-def magnitude(v: Column | str) -> Column:
+def _sql_dot_fold(a: str, b: str) -> str:
+    return _sql_fold(_sql_dbl(a), _sql_dbl(b), "x * y")
+
+
+def _sql_cosine_similarity(a: str, b: str, mag_b: str | None = None) -> str:
+    """The clamped cosine over SQL fragments ``a`` / ``b``; ``mag_b``
+    replaces b's magnitude fold with a precomputed literal."""
+    if mag_b is None:
+        mag_b = f"sqrt({_sql_dot_fold(b, b)})"
+    return (
+        f"greatest(0.0D, {_sql_dot_fold(a, b)} / "
+        f"(sqrt({_sql_dot_fold(a, a)}) * {mag_b}))"
+    )
+
+
+def dot(a: str, b: str) -> Column:
+    """Σ aᵢ·bᵢ (reference: src/vector.rs:9-11)."""
+    a, b = _sql_ident(a), _sql_ident(b)
+    return _cached_expr(("dot", a, b), _sql_dot_fold(a, b))
+
+
+def magnitude(v: str) -> Column:
     """L2 norm sqrt(Σ x²) (reference: src/vector.rs:4-6)."""
-    if _plain_refs(v):
-        return _cached_expr(("mag", v), f"sqrt({_sql_dot_fold(v, v)})")
-    v = _as_col(v)
-    return F.sqrt(dot(v, v))
+    v = _sql_ident(v)
+    return _cached_expr(("mag", v), f"sqrt({_sql_dot_fold(v, v)})")
 
 
-def cosine_similarity(a: Column | str, b: Column | str) -> Column:
+def cosine_similarity(a: str, b: str) -> Column:
     """max(0, dot/(‖a‖·‖b‖)) — the reference CLAMPS negative similarity to 0
     (src/vector.rs:15). The clamp is non-standard and must be reproduced
     exactly for parity; the DuckDB oracle writes ``greatest(0.0, ...)``.
     """
-    if _plain_refs(a, b):
-        return _cached_expr(
-            ("cossim", a, b),
-            f"greatest(0.0D, {_sql_dot_fold(a, b)} / "
-            f"(sqrt({_sql_dot_fold(a, a)}) * sqrt({_sql_dot_fold(b, b)})))",
-        )
-    a, b = _as_col(a), _as_col(b)
-    return F.greatest(F.lit(0.0), dot(a, b) / (magnitude(a) * magnitude(b)))
+    a, b = _sql_ident(a), _sql_ident(b)
+    return _cached_expr(("cossim", a, b), _sql_cosine_similarity(a, b))
 
 
-def cosine_distance(a: Column | str, b: Column | str) -> Column:
+def cosine_distance(a: str, b: str) -> Column:
     """1 − clamped cosine similarity → range [0, 1] (src/vector.rs:19-21)."""
-    if _plain_refs(a, b):
-        return _cached_expr(
-            ("cosdist", a, b),
-            f"1.0D - greatest(0.0D, {_sql_dot_fold(a, b)} / "
-            f"(sqrt({_sql_dot_fold(a, a)}) * sqrt({_sql_dot_fold(b, b)})))",
-        )
-    return F.lit(1.0) - cosine_similarity(a, b)
-
-
-def euclidean_distance(a: Column | str, b: Column | str) -> Column:
-    """sqrt(Σ (xᵢ−yᵢ)²) (src/vector.rs:23-29; defined but unused upstream)."""
-    if _plain_refs(a, b):
-        return _cached_expr(
-            ("euc", a, b),
-            f"sqrt(aggregate(zip_with({_sql_dbl(a)}, {_sql_dbl(b)}, "
-            "(x, y) -> (x - y) * (x - y)), 0.0D, "
-            "(acc, x) -> acc + coalesce(x, 0.0D)))",
-        )
-    a, b = _as_col(a), _as_col(b)
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(_dbl(a), _dbl(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + F.coalesce(x, F.lit(0.0)),
-        )
+    a, b = _sql_ident(a), _sql_ident(b)
+    return _cached_expr(
+        ("cosdist", a, b), f"1.0D - {_sql_cosine_similarity(a, b)}"
     )
 
 
-def distance(a: Column | str, b: Column | str) -> Column:
+def euclidean_distance(a: str, b: str) -> Column:
+    """sqrt(Σ (xᵢ−yᵢ)²) (src/vector.rs:23-29; defined but unused upstream)."""
+    a, b = _sql_ident(a), _sql_ident(b)
+    return _cached_expr(
+        ("euc", a, b),
+        f"sqrt({_sql_fold(_sql_dbl(a), _sql_dbl(b), '(x - y) * (x - y)')})",
+    )
+
+
+def distance(a: str, b: str) -> Column:
     """The engine-wide distance metric = cosine distance (src/vector.rs:31-33).
 
     Single swap point for the metric, exactly like the reference's alias.

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from toy_vector_db_spark import caches
 from toy_vector_db_spark.functions.rounding import rnd
-from toy_vector_db_spark.functions.vector import _cached_expr, _plain_refs
+from toy_vector_db_spark.functions.vector import _cached_expr, _sql_ident
 
 ROUND = 6
 P31 = 2_147_483_647  # 2^31 - 1, prime modulus for the universal hash family
@@ -107,10 +107,14 @@ def dedup_exact(corpus: DataFrame) -> DataFrame:
 
 
 # -- shingling ---------------------------------------------------------------
+#
+# Every builder below takes a column NAME and returns one memoized,
+# JVM-parsed SQL expression (functions/vector.py's rule): one py4j parse
+# per (builder, name, knob) per session, where a Python-lambda build
+# re-ran its lambdas on every call. tests/test_expr_reference.py checks
+# each against plain Python (str.split, hashlib.md5, % P31).
 
 def _word_shingles_sql(t: str, k: int) -> str:
-    # mirrors the Column form below term by term (same let-binding, same
-    # guard, same concat_ws/slice body)
     return (
         f"transform(array(split({t}, ' ')), toks -> "
         f"CASE WHEN size(toks) >= {k} THEN array_distinct("
@@ -120,54 +124,32 @@ def _word_shingles_sql(t: str, k: int) -> str:
     )
 
 
-def word_shingles(text: Column | str, k: int = 3) -> Column:
-    """Distinct word k-shingles as an array column (pure Catalyst). Guarded
-    for short texts: Spark's sequence(1, 0) would count DOWN, not produce
-    an empty range like DuckDB's.
+def word_shingles(text: str, k: int = 3) -> Column:
+    """Distinct word k-shingles of column ``text`` as an array column.
+    Guarded for short texts: Spark's sequence(1, 0) would count DOWN, not
+    produce an empty range like DuckDB's.
 
     The token array is LET-BOUND via the single-element-transform idiom
     (``transform(array(split(..)), toks -> body)[0]``): interpreted
     higher-order lambdas re-evaluate any OUTER subtree they reference once
     per element, so the inline form re-split the text for every shingle
     position (~300 splits/row on the fixture docs; measured 3.7× slower).
-    A lambda variable is evaluated once. Same strings bit-for-bit.
-
-    str args (a plain column reference) take the memoized one-py4j-call
-    F.expr path (round 14 — the two Python lambdas here rebuilt on every
-    call); bit-identity pinned in tests/test_expr_fastpath.py. Names
-    that are not plain dotted identifiers (would need backticks in raw
-    SQL — advice r14) fall back to the Column path via F.col."""
-    if _plain_refs(text):
-        return _cached_expr(
-            ("wshingles", text, k), _word_shingles_sql(text, k)
-        )
-    if isinstance(text, str):
-        text = F.col(text)
-
-    def _body(toks: Column) -> Column:
-        idx = F.sequence(F.lit(1), F.size(toks) - (k - 1))
-        return F.when(F.size(toks) >= k, F.array_distinct(
-            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
-        )).otherwise(F.array().cast("array<string>"))
-
-    return F.transform(F.array(F.split(text, " ")), _body).getItem(0)
+    A lambda variable is evaluated once. Same strings bit-for-bit."""
+    text = _sql_ident(text)
+    return _cached_expr(("wshingles", text, k), _word_shingles_sql(text, k))
 
 
-def char_ngrams(text: Column | str, n: int = 4) -> Column:
-    if _plain_refs(text):
-        return _cached_expr(
-            ("cngrams", text, n),
-            f"CASE WHEN length({text}) >= {n} THEN array_distinct("
-            f"transform(sequence(1, length({text}) - {n - 1}), "
-            f"i -> substring({text}, i, {n}))) "
-            "ELSE CAST(array() AS ARRAY<STRING>) END",
-        )
-    if isinstance(text, str):
-        text = F.col(text)
-    idx = F.sequence(F.lit(1), F.length(text) - (n - 1))
-    return F.when(F.length(text) >= n, F.array_distinct(
-        F.transform(idx, lambda i: F.substring(text, i, n))
-    )).otherwise(F.array().cast("array<string>"))
+def char_ngrams(text: str, n: int = 4) -> Column:
+    """Distinct character n-grams of column ``text`` (empty when shorter
+    than n)."""
+    text = _sql_ident(text)
+    return _cached_expr(
+        ("cngrams", text, n),
+        f"CASE WHEN length({text}) >= {n} THEN array_distinct("
+        f"transform(sequence(1, length({text}) - {n - 1}), "
+        f"i -> substring({text}, i, {n}))) "
+        "ELSE CAST(array() AS ARRAY<STRING>) END",
+    )
 
 
 # -- MinHash -----------------------------------------------------------------
@@ -180,64 +162,39 @@ def _shingle_hashes_sql(arr: str) -> str:
     )
 
 
-def shingle_hashes(shingles: Column | str) -> Column:
+def shingle_hashes(shingles: str) -> Column:
     """Per-row array of shingle hashes in [0, p). Hoist this into its OWN
     aliased column before fanning out to the 16 permutation folds:
     CollapseProject declines to inline a non-trivial expression referenced
     more than once, so the md5 pass runs once per row instead of once per
-    fold (measured 16× less md5 work at sf0.1). str args take the
-    memoized F.expr path."""
-    if _plain_refs(shingles):
-        return _cached_expr(
-            ("shhashes", shingles), _shingle_hashes_sql(shingles)
-        )
-    if isinstance(shingles, str):
-        shingles = F.col(shingles)
-    return F.transform(shingles, lambda s: md5_int(s) % P31)
+    fold (measured 16× less md5 work at sf0.1)."""
+    shingles = _sql_ident(shingles)
+    return _cached_expr(("shhashes", shingles), _shingle_hashes_sql(shingles))
 
 
 def shingle_hashes_of_text(text_col: str, k: int = 3) -> Column:
-    """The composed shingle_hashes(word_shingles(text)) column as ONE
-    memoized JVM-parsed expression — the minhash_lsh_pairs hot
-    projection (round 14: rebuilt per bench sample, ~0.2 s of py4j).
-    Non-identifier names compose the two Column paths instead."""
-    if not _plain_refs(text_col):
-        return shingle_hashes(word_shingles(F.col(text_col), k))
+    """shingle_hashes(word_shingles(text)) as ONE expression — the
+    minhash_lsh_pairs hot projection."""
+    text_col = _sql_ident(text_col)
     return _cached_expr(
         ("shhashes_text", text_col, k),
         _shingle_hashes_sql(_word_shingles_sql(text_col, k)),
     )
 
 
-def minhash_from_hashes(hashes: Column | str) -> list[Column]:
-    """16 minhash values from a precomputed hash array — pure arithmetic
-    folds (array_min over the permuted hashes), no explode, no shuffle.
-    str args take the memoized F.expr path (one parse per permutation
-    per session instead of 16 lambda builds per call)."""
-    if _plain_refs(hashes):
-        return [
-            _cached_expr(
-                ("minhash", hashes, i),
-                f"array_min(transform({hashes}, "
-                f"h -> ({a} * h + {b}) % {P31}))",
-            ).alias(f"m{i}")
-            for i, (a, b) in enumerate(zip(PERM_A, PERM_B))
-        ]
-    if isinstance(hashes, str):
-        hashes = F.col(hashes)
+def minhash_from_hashes(hashes: str) -> list[Column]:
+    """16 minhash values from a precomputed hash array column — pure
+    arithmetic folds (array_min over the permuted hashes), no explode, no
+    shuffle; one parse per permutation per session."""
+    hashes = _sql_ident(hashes)
     return [
-        F.array_min(
-            F.transform(hashes, lambda h: (F.lit(a) * h + F.lit(b)) % P31)
+        _cached_expr(
+            ("minhash", hashes, i),
+            f"array_min(transform({hashes}, "
+            f"h -> ({a} * h + {b}) % {P31}))",
         ).alias(f"m{i}")
         for i, (a, b) in enumerate(zip(PERM_A, PERM_B))
     ]
-
-
-def minhash_signature(shingles: Column) -> list[Column]:
-    """16 minhash values straight from a shingle array. Convenience form;
-    prefer hoisting ``shingle_hashes`` into its own projection first when
-    computing signatures for a whole corpus (see minhash_lsh_pairs)."""
-    return minhash_from_hashes(shingle_hashes(shingles))
 
 
 # Skew guard for the band-bucket self-join: a bucket of size B emits
@@ -322,7 +279,7 @@ def minhash_lsh_pairs(
 
     # slim (doc_id, band, sig) frame for the bucket self-join; the
     # banding array is a constant expression over the m0..m15 columns —
-    # memoized like the other round-14 F.expr fast paths
+    # memoized like the builders above
     bands_arr = _cached_expr(
         ("lshbands", BANDS, ROWS_PER_BAND),
         "array(" + ", ".join(
@@ -402,57 +359,21 @@ def minhash_lsh_pairs(
 SIMHASH_BITS = 32
 
 
-# SWAR spread mask: h & (SPREAD << s) picks every `spacing`-th bit of the
-# 32-bit hash and lands them on `spacing`-bit boundaries of one long, so
-# adding spreads across tokens accumulates 32/spacing counters per long.
-_SWAR_SPREAD = 0x01010101
+# SWAR spread mask: shiftright(h, s) & mask picks every `spacing`-th bit
+# of the 32-bit hash and lands them on `spacing`-bit boundaries of one
+# long, so adding spreads across tokens accumulates 32/spacing counters
+# per long.
 _SWAR_MAX_TOKENS = 255  # byte counters saturate past this
 _SWAR_MAX_TOKENS_16 = 65535  # 16-bit-spaced fallback bound
 
 
-def _swar_simhash(hs, spacing: int):
-    """One-pass SWAR SimHash fold over a hash array at the given counter
-    spacing (8 → four byte counters per long, 9 slots; 16 → two 16-bit
-    counters per long, 17 slots). vote_b = 2·cnt_b − T > 0 ⇔ 2·cnt_b > T,
-    so output is bit-identical to the per-bit-fold formulation at any
-    spacing wide enough for the token count."""
-    nslots = spacing  # one slot per within-group bit offset
-    lanes = 32 // spacing
-    mask = sum(1 << (i * spacing) for i in range(lanes))
-    counter_mask = (1 << spacing) - 1
-    zero = F.array_repeat(F.lit(0).cast("long"), nslots + 1)
-
-    def _merge(acc, h):
-        per_tok = F.array(
-            *[
-                F.shiftright(h, s).bitwiseAND(F.lit(mask)).cast("long")
-                for s in range(nslots)
-            ],
-            F.lit(1).cast("long"),
-        )
-        return F.zip_with(acc, per_tok, lambda a, v: a + v)
-
-    def _finish(acc):
-        t = F.element_at(acc, nslots + 1)
-        sig = None
-        for b in range(SIMHASH_BITS):
-            s, grp = b % nslots, b // nslots
-            cnt = F.shiftright(
-                F.element_at(acc, s + 1), spacing * grp
-            ).bitwiseAND(F.lit(counter_mask))
-            term = F.when(cnt * 2 > t, F.lit(1 << b)).otherwise(F.lit(0))
-            sig = term if sig is None else sig + term
-        return sig.cast("long")
-
-    return F.aggregate(hs, zero, _merge, _finish)
-
-
 def _swar_simhash_sql(hs: str, spacing: int) -> str:
-    """SQL twin of _swar_simhash over an hs array fragment — mirrors the
-    Column form term by term (same masks, same shift/and/count ops, same
-    CASE thresholds, same cast points), so the parsed expression computes
-    identical longs; pinned in tests/test_expr_fastpath.py and by the
-    simhash oracle hashes."""
+    """One-pass SWAR SimHash fold over the hash-array fragment ``hs`` at
+    the given counter spacing (8 → four byte counters per long, 9 slots;
+    16 → two 16-bit counters per long, 17 slots; the last slot counts
+    tokens). vote_b = 2·cnt_b − T > 0 ⇔ 2·cnt_b > T, so the output is the
+    per-bit majority vote at any spacing wide enough for the token count
+    (tests/test_expr_reference.py checks it against that vote)."""
     nslots = spacing
     lanes = 32 // spacing
     mask = sum(1 << (i * spacing) for i in range(lanes))
@@ -480,8 +401,8 @@ def _swar_simhash_sql(hs: str, spacing: int) -> str:
 
 def _simhash_sig_sql(text_col: str) -> str:
     """The whole per-row SimHash column as one SQL fragment: tokenize,
-    48-bit md5 hash per token, then the spacing-selected SWAR fold —
-    the exact CASE ladder of _simhash_sig_column below."""
+    48-bit md5 hash per token, then the SWAR fold whose counter spacing
+    fits the token count."""
     t = text_col
     hs = (
         f"transform(split({t}, ' '), s -> "
@@ -498,28 +419,6 @@ def _simhash_sig_sql(text_col: str) -> str:
         f"WHEN {ntok} <= {_SWAR_MAX_TOKENS_16} "
         f"THEN {_swar_simhash_sql(hs, 16)} "
         f"ELSE raise_error({err}) END"
-    )
-
-
-def _simhash_sig_column() -> Column:
-    """The Python-Column form of the SimHash signature expression — the
-    parity reference for the memoized SQL fast path (round 15: building
-    this costs ~450 py4j round-trips per call — two SWAR folds with a
-    32-term finish lambda — measured as ~0.4-0.5 s of
-    simhash_signatures' 0.97 s bench median)."""
-    hs = F.transform(F.split(F.col("text"), " "), md5_int)
-    ntok = F.size(F.split(F.col("text"), " "))
-    return (
-        F.when(ntok <= F.lit(_SWAR_MAX_TOKENS), _swar_simhash(hs, 8))
-        .when(ntok <= F.lit(_SWAR_MAX_TOKENS_16), _swar_simhash(hs, 16))
-        .otherwise(
-            F.raise_error(
-                F.lit(
-                    "simhash: SWAR counters need <=65535 tokens/doc; "
-                    "chunk longer docs first"
-                )
-            )
-        )
     )
 
 
@@ -546,13 +445,10 @@ def simhash_signatures(corpus: DataFrame) -> DataFrame:
     row, so short docs (all fixtures max at 100 tokens) pay only the
     byte-spaced fast path and hash identically to previous rounds.
 
-    Round 15 (guide §7.3 driver discipline): the signature column is a
-    memoized JVM-parsed expression — the Column builders above cost
-    ~450 py4j round-trips per call (two SWAR folds, a 32-term finish
-    lambda), ~0.4-0.5 s of every simhash key's construction. The SQL
-    twin mirrors the Column form op for op (_simhash_sig_column stays
-    as the parity reference, pinned bit-equal in
-    tests/test_expr_fastpath.py and by the oracle hashes)."""
+    The signature column is one memoized JVM-parsed expression: a
+    Python-lambda build of the two SWAR folds and the 32-term finish
+    cost ~450 py4j round-trips per call, ~0.4-0.5 s of every simhash
+    key's construction."""
     sig = _cached_expr(("simhash32", "text"), _simhash_sig_sql("text"))
     return corpus.select("doc_id", sig.alias("simhash"))
 

@@ -62,41 +62,49 @@ def with_distance(
     Perf: the query magnitude is a CONSTANT, but Catalyst does not fold
     aggregate() over literal arrays, so the naive V.distance() would
     recompute it per row — precompute it driver-side (bit-identically) and
-    inline as a literal. Row magnitudes are computed once per row.
+    inline as a literal. Row magnitudes are computed once per row. The
+    whole distance is one memoized SQL expression per (column, vector),
+    keyed like ``_lit_vec``.
     """
-    q = _lit_vec(query_vec)
-    q_mag = F.lit(_py_magnitude(query_vec))
-    v = F.col(vec_col)
-    sim = F.greatest(F.lit(0.0), V.dot(v, q) / (V.magnitude(v) * q_mag))
-    return df.withColumn(dist_col, F.lit(1.0) - sim)
+    v = V._sql_ident(vec_col)
+    key, q = _lit_vec(query_vec)
+    dist = V._cached_expr(
+        ("withdist", v, key),
+        "1.0D - " + V._sql_cosine_similarity(
+            v, q, _sql_double(_py_magnitude(query_vec))
+        ),
+    )
+    return df.withColumn(dist_col, dist)
 
 
-def _lit_vec(vec) -> "F.Column":
-    """Literal array<double> column for a query vector. F.lit(list)
-    builds the array one element-literal py4j call at a time — measured
-    136 ms for a 64-dim vector, most of knn_exact_single's construction
-    — while the equivalent SQL array literal parses JVM-side in one
-    call (~1 ms), memoized per vector content (round 14). repr() is the
-    shortest round-tripping decimal and SQL's double parse is correctly
-    rounded, so the literal is bit-identical (pinned in
-    tests/test_expr_fastpath.py); non-finite values (no fixture or
-    serving path produces them) fall back to F.lit.
+def _sql_double(x: float) -> str:
+    """SQL text of a double literal that parses back to exactly ``x``:
+    repr() is the shortest round-tripping decimal and SQL's double parse
+    is correctly rounded; a non-finite value is a cast from its string
+    name, which parses under ANSI mode too."""
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
+    return f"{x!r}D"
 
-    The memo key is the VALUE TUPLE itself (round 15, advice r14): the
-    round-14 key was hash(tuple(vals)), under which distinct vectors can
-    collide (hash(-1.0) == hash(-2.0) in CPython) and the second vector
-    would silently reuse the first one's literal. Keying on the tuple
-    makes a hash collision impossible. Each value is keyed on its
-    float.hex() form, not the float: 0.0 == -0.0 as floats, so a float
-    tuple key would hand [-0.0] the literal built for [0.0], while the
-    SQL literals (0.0D vs -0.0D) differ; hex() is exact and tells every
-    distinct double apart."""
+
+def _lit_vec(vec) -> tuple[tuple, str]:
+    """(memo key, SQL text) of a literal array<double> query vector.
+    F.lit(list) builds the array one element-literal py4j call at a time
+    — measured 136 ms for a 64-dim vector, most of knn_exact_single's
+    construction — while the SQL array literal parses JVM-side in one
+    call (~1 ms).
+
+    The key is the tuple of each value's float.hex() form. A
+    hash(tuple(vals)) key let distinct vectors collide (hash(-1.0) ==
+    hash(-2.0) in CPython), and a float-tuple key aliases 0.0 and -0.0,
+    whose literals differ; hex() is exact and tells every distinct
+    double apart."""
     vals = [float(x) for x in vec]
-    if not all(math.isfinite(x) for x in vals):
-        return F.lit(vals).cast("array<double>")
-    return V._cached_expr(
-        ("litvec", tuple(x.hex() for x in vals)),
-        "CAST(array(" + ", ".join(f"{x!r}D" for x in vals)
+    return (
+        tuple(x.hex() for x in vals),
+        "CAST(array(" + ", ".join(map(_sql_double, vals))
         + ") AS ARRAY<DOUBLE>)",
     )
 

@@ -43,7 +43,12 @@ from toy_vector_db_spark.functions.arrowkit import (
 from toy_vector_db_spark.functions.rounding import rnd
 
 from toy_vector_db_spark.functions import vector as V
-from toy_vector_db_spark.functions.vector import _cached_expr, _sql_ident
+from toy_vector_db_spark.functions.vector import (
+    _cached_expr,
+    _sql_dot_fold,
+    _sql_fold,
+    _sql_ident,
+)
 from toy_vector_db_spark.operators import knn as KNN
 
 ROUND = 6
@@ -408,19 +413,10 @@ def _ivf_probes(
     )
     q_m = queries.withColumn("_q_mag", V.magnitude(query_vec_col))
 
-    # the whole rank-slice column as ONE memoized JVM-parsed expression
-    # (round 14): the per-call Column form — a transform lambda whose
-    # body builds a dot fold against the lambda variable's struct
-    # fields — cost ~0.14 s of py4j round-trips on EVERY IVF-family
-    # serving call. Same expression term by term (same lambda body,
-    # same struct field names/order, same array_sort/slice), results
-    # bit-identical (oracle-pinned).
-    dot_sql = (
-        "aggregate(zip_with("
-        f"CAST({_sql_ident(query_vec_col)} AS ARRAY<DOUBLE>), "
-        "CAST(c.centroid_vec AS ARRAY<DOUBLE>), (x, y) -> x * y), "
-        "0.0D, (acc, x) -> acc + coalesce(x, 0.0D))"
-    )
+    # the whole rank-slice column as ONE memoized JVM-parsed expression:
+    # a Python-lambda build of this transform cost ~0.14 s of py4j
+    # round-trips on every IVF-family serving call
+    dot_sql = _sql_dot_fold(_sql_ident(query_vec_col), "c.centroid_vec")
     probes_expr = _cached_expr(
         ("ivfprobes", query_vec_col, nprobe),
         "slice(array_sort(transform(_cents, c -> named_struct("
@@ -664,34 +660,29 @@ def knn_ivf(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     cents: DataFrame | None = None,
-    assign: DataFrame | None = None,
     cell_vectors: DataFrame | None = None,
 ) -> DataFrame:
     """IVF search: probe the nprobe nearest cells per query, exact top-k
     within the probed cells. Two broadcast joins + one shuffle for the
     final per-query top-k; at scale the cell join is partition pruning.
     ``cents`` defaults to the first-K stand-in; pass
-    ``cached_trained_centroids(base)`` for the trained quantizer and
-    ``cached_trained_assign(base)`` to reuse the session-cached cell
-    assignment (the build-time artifact) instead of recomputing it.
-
-    WARNING: ``assign`` / ``cell_vectors`` must derive from the SAME
-    ``cents`` quantizer — a mismatched pair silently prunes the wrong
-    cells (no error, wrong neighbors). When only ``cents`` is passed the
-    assignment is derived from it here, which is always consistent; pass
-    the cached artifacts only as the consistent build-time set
-    (``cached_trained_centroids`` + ``cached_cell_vectors``).
+    ``cached_trained_centroids(base)`` for the trained quantizer.
     ``cell_vectors`` (round 6) is the persisted serving-side base table
     (id, vec, _v_mag, centroid_id) — with it, a search touches no join
     other than the broadcast probe join, matching the 100 TB layout where
-    the base is WRITTEN cell-partitioned with norms at build time."""
+    the base is WRITTEN cell-partitioned with norms at build time.
+    Without it the cell assignment is derived here from ``cents``.
+
+    WARNING: ``cell_vectors`` must derive from the SAME ``cents``
+    quantizer — a mismatched pair silently prunes the wrong cells (no
+    error, wrong neighbors). Pass it only as the consistent build-time
+    set (``cached_trained_centroids`` + ``cached_cell_vectors``)."""
     if cell_vectors is None:
         if cents is None:
             cents = centroids_df(base, n_centroids, id_col, vec_col)
-        if assign is None:
-            assign = ivf_assign(base, cents, id_col, vec_col).select(
-                id_col, "centroid_id"
-            )
+        assign = ivf_assign(base, cents, id_col, vec_col).select(
+            id_col, "centroid_id"
+        )
         cell_vectors = base.withColumn(
             "_v_mag", V.magnitude(vec_col)
         ).join(assign, id_col).select(id_col, vec_col, "_v_mag", "centroid_id")
@@ -795,8 +786,7 @@ def _normalize(v: str) -> "F.Column":
 
 def _normalize_sql(v: str) -> str:
     return (
-        f"zip_with({v}, array_repeat(sqrt(aggregate(zip_with({v}, {v}, "
-        "(x, y) -> x * y), 0.0D, (acc, x) -> acc + coalesce(x, 0.0D))), "
+        f"zip_with({v}, array_repeat(sqrt({_sql_fold(v, v, 'x * y')}), "
         f"size({v})), (x, m) -> x / m)"
     )
 
@@ -823,21 +813,13 @@ def _py_normalize(vec: list[float]) -> list[float]:
     return [x / mag for x in vec]
 
 
-def _sq_dist(a, b) -> "F.Column":
-    """Squared euclidean as a left fold — same op order as the engine's
-    euclidean_distance (minus the sqrt), so DuckDB's list_sum matches.
-    str args (plain column references over already-double arrays) take
-    the memoized F.expr path."""
-    if isinstance(a, str) and isinstance(b, str):
-        return _cached_expr(
-            ("sqdist", a, b),
-            f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-            "0.0D, (acc, x) -> acc + coalesce(x, 0.0D))",
-        )
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + F.coalesce(x, F.lit(0.0)),
+def _sq_dist(a: str, b: str) -> "F.Column":
+    """Squared euclidean between two already-double array columns as a
+    left fold — same op order as the engine's euclidean_distance (minus
+    the sqrt), so DuckDB's list_sum matches. One memoized F.expr parse."""
+    a, b = _sql_ident(a), _sql_ident(b)
+    return _cached_expr(
+        ("sqdist", a, b), _sql_fold(a, b, "(x - y) * (x - y)")
     )
 
 
@@ -2614,20 +2596,18 @@ def lsh_hyperplane_buckets(
         ).alias("planes")
     )
 
-    def _bucket(acc, p):
-        # 2^plane_id via pow: shiftleft takes only a literal shift amount;
-        # double pow is exact far beyond H=12
-        return acc + F.when(
-            V.dot(F.col(vec_col), p["plane_vec"]) > 0,
-            F.pow(F.lit(2.0), p["plane_id"]).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-
+    # 2^plane_id via pow: shiftleft takes only a literal shift amount;
+    # double pow is exact far beyond H=12. The outer lambda's variables
+    # are named apart from the dot fold's x / y / acc.
+    v = _sql_ident(vec_col)
+    bucket = _cached_expr(
+        ("lshbucket", v),
+        "aggregate(planes, CAST(0 AS BIGINT), (code, plane) -> code + "
+        f"CASE WHEN {_sql_dot_fold(v, 'plane.plane_vec')} > 0 "
+        "THEN CAST(pow(2.0D, plane.plane_id) AS BIGINT) "
+        "ELSE CAST(0 AS BIGINT) END)",
+    )
     return (
         base.crossJoin(F.broadcast(planes_row))
-        .select(
-            id_col,
-            F.aggregate(
-                "planes", F.lit(0).cast("long"), _bucket
-            ).alias("bucket"),
-        )
+        .select(id_col, bucket.alias("bucket"))
     )

@@ -81,11 +81,8 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the staged input bytes keeps the fixture drain at the small count it
 # warrants while a 100 TB source saturates to the session parallelism
 # (AQE cannot coalesce streaming state, so the derivation does what AQE
-# does for batch). Env-overridable for deployments that size state
-# explicitly.
-_STATE_PARTITION_TARGET_BYTES = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_TARGET_BYTES", 32 * 1024 * 1024)
-)
+# does for batch).
+_STATE_PARTITION_TARGET_BYTES = 32 * 1024 * 1024
 
 
 def _state_partitions(spark: SparkSession, staged_dir: str) -> int:
