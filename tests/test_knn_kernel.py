@@ -4,9 +4,12 @@ must produce the SAME doubles bit-for-bit — normalization/dot/magnitude
 accumulate left-to-right over the dim axis exactly like the interpreted
 aggregate() folds the DuckDB oracles mirror."""
 
+import numpy as np
+import pyarrow as pa
+import pytest
 from pyspark.sql import functions as F
 
-from toy_vector_db_spark.operators import knn
+from toy_vector_db_spark.operators import knn, similarity
 from toy_vector_db_spark.sources.ndjson import split_count
 
 
@@ -343,3 +346,284 @@ def test_topr_acc_is_batch_schedule_invariant():
     assert many_small == want
     assert uneven == want
     assert forced_cuts == want
+
+
+# -- the pair kernel's closure against a plain-numpy reference ------------
+#
+# ``knn._pair_kernel`` scores, masks, cuts and reranks whole Arrow batches
+# at once. The reference below is the per-query form it replaced, kept as
+# plain numpy: an ``np.isin`` cell mask and a label equality per query,
+# a full ``np.lexsort`` per query for the top-R cut, an exact fold over
+# strided (pair, dim) gathers that recomputes each row's magnitude for
+# every pair it is selected in, ADC scores as ``lut[:, codes].T`` sums
+# over ``np.cumsum`` LUTs. The kernel closure is replayed on the driver
+# over hand-built batches and its output compared as int64 views: the
+# same rows, in the same order, with the same bits.
+
+_M, _K, _SUB = 4, 8, 4
+_D = _M * _SUB
+_REF_CHUNK = 8192
+
+
+def _ref_mags(X):
+    mag = np.zeros(X.shape[0])
+    for j in range(X.shape[1]):
+        mag += X[:, j] * X[:, j]
+    return np.sqrt(mag)
+
+
+def _ref_subspace_d2(X, b_arr):
+    """The LUT core as an ``np.cumsum`` over the subspace axis, in row
+    blocks (the (rows, K, sub) difference is materialized)."""
+    sub = b_arr.shape[2]
+    out = [[] for _ in range(b_arr.shape[0])]
+    for lo in range(0, len(X), 1000):
+        blk = X[lo: lo + 1000]
+        nv = blk / _ref_mags(blk)[:, None]
+        for m in range(b_arr.shape[0]):
+            diff = nv[:, None, m * sub: (m + 1) * sub] - b_arr[m][None, :, :]
+            out[m].append(np.cumsum(diff * diff, axis=2)[:, :, -1])
+    return [np.concatenate(o) for o in out]
+
+
+def _reference_closure(batches, qids, Q, books, cells_by_query, qlabels,
+                       emit_topk, exact):
+    """The per-query emission loop ``knn._pair_kernel`` ran before it
+    became whole-batch, over the PQ ADC scorer."""
+    nq = len(qids)
+    luts = _ref_subspace_d2(Q, np.array(books))
+    qmags = _ref_mags(Q)
+    names = ["query_id", "vec_id", "ad2"] + (["xdist"] if exact else [])
+    topr = (
+        knn._TopRAcc(nq, emit_topk, int(exact))
+        if emit_topk is not None else None
+    )
+    cell_lists = None if cells_by_query is None else [
+        np.array(cells_by_query.get(int(q), []), dtype=np.int64)
+        for q in qids
+    ]
+    out_batches = []
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        ids = batch.column("vec_id").to_numpy().astype(np.int64)
+        n = len(ids)
+        sc = np.zeros((n, nq))
+        for m, lut in enumerate(luts):
+            sc += lut[:, batch.column(f"c{m}").to_numpy()].T
+        masks = None
+        if cell_lists is not None or qlabels is not None:
+            masks = []
+            for qi in range(nq):
+                mk = None
+                if cell_lists is not None:
+                    mk = np.isin(batch.column("centroid_id").to_numpy(),
+                                 cell_lists[qi])
+                if qlabels is not None:
+                    lab = batch.column("label").to_numpy(zero_copy_only=False)
+                    q = qlabels[qi]
+                    lm = (np.zeros(n, dtype=bool) if q is None
+                          else np.asarray(lab == q, dtype=bool))
+                    mk = lm if mk is None else (mk & lm)
+                masks.append(mk)
+        rows_by_q = [
+            np.arange(n) if masks is None else np.nonzero(masks[qi])[0]
+            for qi in range(nq)
+        ]
+        if exact:
+            for qi, rows in enumerate(rows_by_q):
+                if len(rows) > emit_topk:
+                    rows = rows[np.lexsort((ids[rows], sc[rows, qi]))[:emit_topk]]
+                rows_by_q[qi] = rows
+            sel = np.concatenate(rows_by_q)
+            sel_q = np.repeat(np.arange(nq), [len(r) for r in rows_by_q])
+            Xn = np.stack(batch.column("_xv").to_numpy(zero_copy_only=False))
+            xdist = np.empty(len(sel))
+            for lo in range(0, len(sel), _REF_CHUNK):
+                qs = sel_q[lo: lo + _REF_CHUNK]
+                X = Xn[sel[lo: lo + _REF_CHUNK]].astype(np.float64)
+                Qs = Q[qs]
+                dot = np.zeros(len(qs))
+                for j in range(X.shape[1]):
+                    dot += X[:, j] * Qs[:, j]
+                sims = dot / (_ref_mags(X) * qmags[qs])
+                xdist[lo: lo + len(qs)] = 1.0 - np.maximum(sims, 0.0)
+            lo = 0
+            for qi, rows in enumerate(rows_by_q):
+                topr.add(qi, ids[rows], sc[rows, qi], xdist[lo: lo + len(rows)])
+                lo += len(rows)
+            continue
+        if topr is not None:
+            for qi, rows in enumerate(rows_by_q):
+                topr.add(qi, ids[rows], sc[rows, qi])
+            continue
+        if masks is None:
+            out = [np.tile(qids, n), np.repeat(ids, nq), sc.ravel()]
+        else:
+            ri, qi = np.nonzero(np.stack(masks, axis=1))
+            out = [qids[qi], ids[ri], sc[ri, qi]]
+        out_batches.append(dict(zip(names, out)))
+    if topr is not None:
+        out_batches.append(dict(zip(names, topr.emit(qids))))
+    return names, out_batches
+
+
+def _bits(names, batches):
+    """Each output column, concatenated over the batches, as int64."""
+    cols = {}
+    for c in names:
+        parts = [np.asarray(b[c]) for b in batches]
+        a = np.concatenate(parts) if parts else np.empty(0)
+        cols[c] = a.astype(np.float64 if c not in ("query_id", "vec_id")
+                           else np.int64).view(np.int64)
+    return cols
+
+
+def _hand_batches(rng, sizes, dup_every):
+    """Arrow batches of (vec_id, c0..c3, centroid_id, label, _xv): random
+    codes and float32 vectors, with every ``dup_every``-th row a copy of
+    the row before it (exact ADC and exact distance ties), cells 0-10 and
+    labels a/b/c/None."""
+    batches, next_id = [], 0
+    for n in sizes:
+        codes = rng.integers(0, _K, (n, _M)).astype(np.int32)
+        vecs = rng.normal(size=(n, _D)).astype(np.float32)
+        for i in range(1, n):
+            if i % dup_every == 0:
+                codes[i], vecs[i] = codes[i - 1], vecs[i - 1]
+        cols = {"vec_id": pa.array(np.arange(next_id, next_id + n) * 7 % 1009,
+                                   pa.int64())}
+        for m in range(_M):
+            cols[f"c{m}"] = pa.array(codes[:, m], pa.int32())
+        cols["centroid_id"] = pa.array(rng.integers(0, 11, n).astype(np.int32))
+        cols["label"] = pa.array(
+            [["a", "b", "c", None][i] for i in rng.integers(0, 4, n)],
+            pa.string(),
+        )
+        cols["_xv"] = pa.array(list(vecs), pa.list_(pa.float32()))
+        batches.append(pa.RecordBatch.from_pydict(cols))
+        next_id += n
+    return batches
+
+
+def _replayed(spark, monkeypatch, batches, qdata, books, **kw):
+    """Run ``knn._pair_kernel`` over an empty frame of the batches'
+    schema, capture the closure it hands ``mapInArrow`` and replay it on
+    the driver over ``batches``."""
+    base = spark.createDataFrame(
+        [], "vec_id long, c0 int, c1 int, c2 int, c3 int, centroid_id int, "
+        "label string, _xv array<float>"
+    )
+    qs = spark.createDataFrame(
+        qdata, "query_id long, query_vec array<double>, qlabel string"
+    )
+    if kw.get("label_col") is None:
+        qs = qs.drop("qlabel")
+    captured = []
+    monkeypatch.setattr(
+        type(base), "mapInArrow",
+        lambda self, func, schema: captured.append(func) or self,
+    )
+    knn._pair_kernel(
+        base, qs, similarity._pq_scorer(books, "query_id", "query_vec"),
+        **kw,
+    )
+    monkeypatch.undo()
+    out = list(captured[0](iter(batches)))
+    names = out[0].schema.names if out else []
+    return names, [
+        {c: b.column(i).to_numpy() for i, c in enumerate(names)} for b in out
+    ]
+
+
+@pytest.mark.filterwarnings("ignore:invalid value:RuntimeWarning")
+@pytest.mark.parametrize("leg", ["fused", "topk", "streaming"])
+@pytest.mark.parametrize("routed", [False, True])
+def test_pair_kernel_closure_equals_per_query_reference(
+    spark, monkeypatch, leg, routed
+):
+    """The replayed closure emits exactly what the per-query loops did —
+    same rows, same order, same bits — over several batches (one empty,
+    one with fewer rows than R), cell routing (rows in cells that no
+    query probes, between and beyond the probed ids; a query probing
+    nothing),
+    labels with a None query label, a zero-norm query (NaN ADC and NaN
+    exact distance for every row) and duplicate base rows, so many
+    pairs tie exactly at the R-th score."""
+    rng = np.random.default_rng(17)
+    books = list(rng.normal(scale=0.3, size=(_M, _K, _SUB)))
+    batches = _hand_batches(rng, [70, 0, 3, 41], dup_every=3)
+    nq = 6
+    Q = rng.normal(size=(nq, _D))
+    Q[3] = 0.0
+    qids = np.array([5, 2, 9, 11, 4, 7], dtype=np.int64)
+    qlabels = ["a", None, "b", "a", "c", "b"] if routed else None
+    qdata = [
+        (int(q), [float(x) for x in Q[i]], None if qlabels is None else qlabels[i])
+        for i, q in enumerate(qids)
+    ]
+    cells = {5: [0, 2], 2: [1, 3, 4], 9: [2, 9], 11: [0, 1, 2, 3], 4: [], 7: [5]}
+    # cells 6-8 and 10 are in no query's list
+    kw = dict(
+        cells_by_query=cells if routed else None,
+        label_col="label" if routed else None,
+        qlabel_col="qlabel" if routed else None,
+        emit_topk=None if leg == "streaming" else 6,
+        exact_col="_xv" if leg == "fused" else None,
+    )
+    names, got = _replayed(spark, monkeypatch, batches, qdata, books, **kw)
+    ref_names, want = _reference_closure(
+        batches, qids, Q, books, kw["cells_by_query"], qlabels,
+        kw["emit_topk"], leg == "fused",
+    )
+    assert names == ref_names
+    g, w = _bits(names, got), _bits(names, want)
+    assert len(w["vec_id"]) > 0
+    for c in names:
+        assert np.array_equal(g[c], w[c]), c
+
+
+def test_top_rows_precut_keeps_ties_and_nan():
+    """``knn._top_rows``'s partition pre-cut selects exactly the rows a
+    full lexsort keeps, in the same order, when scores tie at the R-th
+    value and when they hold NaN — all of them NaN, as a zero-norm
+    query's ADC is, or only some."""
+    rng = np.random.default_rng(3)
+    n = 300
+    ids = rng.permutation(n).astype(np.int64)
+    cases = {
+        "ties": rng.integers(0, 5, n).astype(np.float64),
+        "all_nan": np.full(n, np.nan),
+        "some_nan": np.where(rng.random(n) < 0.3, np.nan, rng.random(n)),
+        "mostly_nan": np.where(rng.random(n) < 0.95, np.nan, rng.random(n)),
+        "signed_zero": np.where(rng.random(n) < 0.5, -0.0, 0.0),
+    }
+    for name, s in cases.items():
+        for rows in (np.arange(n), np.flatnonzero(rng.random(n) < 0.4)):
+            for r in (1, 7, 40, len(rows), len(rows) + 3):
+                want = (
+                    rows if len(rows) <= r
+                    else rows[np.lexsort((ids[rows], s[rows]))[:r]]
+                )
+                got = knn._top_rows(s, ids, rows, r)
+                assert np.array_equal(got, want), (name, r)
+
+
+@pytest.mark.parametrize("sub", [1, 8, 16])
+def test_pq_subspace_d2_matches_cumsum_fold_bit_for_bit(sub):
+    """``similarity._pq_subspace_d2``'s one-dim-at-a-time fold gives the
+    ``np.cumsum`` fold's doubles, compared as hex, for the query-batch
+    shapes (1 and 256 rows) and for a 10,000-row encode batch."""
+    rng = np.random.default_rng(sub)
+    b_arr = rng.normal(scale=0.2, size=(64 // sub, 256, sub))
+    X = rng.normal(size=(10_000, 64))
+    for rows in (X[:1], X[:256], X):
+        got = similarity._pq_subspace_d2(rows, b_arr)
+        want = _ref_subspace_d2(rows, b_arr)
+        for m, (g, w) in enumerate(zip(got, want)):
+            if g.tobytes() != w.tobytes():
+                i = np.flatnonzero(g.view(np.int64) != w.view(np.int64))[0]
+                pytest.fail(
+                    f"sub={sub} rows={len(rows)} m={m}: "
+                    f"{g.flat[i].hex()} != {w.flat[i].hex()}"
+                )

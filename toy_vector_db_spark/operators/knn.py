@@ -253,23 +253,80 @@ def emit_topk_within_budget(n_q: int, r: int, exact: bool = False) -> bool:
     return n_q * max(2 * r, r + 8192) * row_bytes <= EMIT_TOPK_BUDGET_BYTES
 
 
-def _row_mask(qi, n, cells, cell_mask_lists, lab, qlabels):
-    """Boolean mask of the batch rows query ``qi`` may score — IVF cell
-    routing ∧ in-kernel label equality (round 12, verdict r11 item 2) —
-    or None meaning 'all rows'. A query whose label is null matches
-    nothing: the equality semantics of the Catalyst leg."""
+def _row_mask(cells, routing, lab, labeling):
+    """The (nq × rows) boolean matrix of the (query, batch row) pairs the
+    kernel may score — IVF cell routing ∧ in-kernel label equality
+    (round 12, verdict r11 item 2) — or None meaning 'every pair'.
+
+    ``routing`` is the request's ``(cell_ids, probe)``: the sorted probed
+    cells and an (nq × (C + 1)) table whose last column is False, so the
+    cell rows gather as ``probe[:, cells]`` and a cell missing from the
+    table matches nothing. ``labeling`` is ``(values, index)``: the
+    distinct non-null query labels and each query's position among them,
+    ``len(values)`` for a null label, whose all-False row makes a query
+    without a label match nothing — the equality semantics of the
+    Catalyst leg. Each distinct label is compared (``lab == value``)
+    once per batch."""
     m = None
-    if cell_mask_lists is not None:
-        m = np.isin(cells, cell_mask_lists[qi])
+    if routing is not None:
+        cell_ids, probe = routing
+        pos = np.searchsorted(cell_ids, cells)
+        hit = pos < len(cell_ids)
+        hit[hit] = cell_ids[pos[hit]] == cells[hit]
+        m = probe[:, np.where(hit, pos, len(cell_ids))]
     if lab is not None:
-        q = qlabels[qi]
-        lm = (
-            np.zeros(n, dtype=bool)
-            if q is None
-            else np.asarray(lab == q, dtype=bool)
-        )
-        m = lm if m is None else (m & lm)
+        values, index = labeling
+        eq = np.zeros((len(values) + 1, len(lab)), dtype=bool)
+        for u, v in enumerate(values):
+            eq[u] = lab == v
+        m = eq[index] if m is None else (m & eq[index])
     return m
+
+
+def _routing_table(qids: np.ndarray, cells_by_query: dict):
+    """``_row_mask``'s ``routing`` pair for one request: the sorted cells
+    any query probes, and the (nq × (C + 1)) probe table, built once."""
+    lists = [
+        np.asarray(cells_by_query.get(int(q), []), dtype=np.int64)
+        for q in qids
+    ]
+    flat = np.concatenate(lists)
+    cell_ids = np.unique(flat)
+    probe = np.zeros((len(qids), len(cell_ids) + 1), dtype=bool)
+    probe[
+        np.repeat(np.arange(len(qids)), [len(c) for c in lists]),
+        np.searchsorted(cell_ids, flat),
+    ] = True
+    return cell_ids, probe
+
+
+def _label_table(qlabels: list):
+    """``_row_mask``'s ``labeling`` pair for one request: the distinct
+    non-null query labels (first-seen order) and each query's index
+    among them, ``len(values)`` for a null label."""
+    first: dict = {}
+    for q in qlabels:
+        if q is not None:
+            first.setdefault(q, len(first))
+    return list(first), np.array(
+        [len(first) if q is None else first[q] for q in qlabels],
+        dtype=np.intp,
+    )
+
+
+def _top_rows(s: np.ndarray, ids: np.ndarray, rows: np.ndarray, r: int):
+    """The first ``r`` of ``rows`` under (score asc, id asc) — exactly
+    ``rows[np.lexsort((ids[rows], s[rows]))[:r]]``, row order kept when
+    there are at most ``r``. ``np.partition`` first pre-cuts to the rows
+    whose score is not greater than the r-th (written ``~(s > kth)``, so
+    every tie at the r-th and every NaN stays in: NaN partitions and
+    sorts last, and a NaN r-th keeps everything), then only those
+    survivors are lexsorted."""
+    if len(rows) <= r:
+        return rows
+    sc = s[rows]
+    rows = rows[~(sc > np.partition(sc, r - 1)[r - 1])]
+    return rows[np.lexsort((ids[rows], s[rows]))[:r]]
 
 
 class _QueryBatch:
@@ -376,7 +433,14 @@ class _TopRAcc:
     superset of the global top-R. Scores are never modified — the
     downstream window sees identical doubles. ``n_extra`` float64
     columns (the fused rerank's exact distance) ride beside each score
-    through every cut."""
+    through every cut.
+
+    ``_pair_kernel`` hands it each query's rows already gathered from
+    the batch-wide arrays — a row of the transposed (nq × rows) score
+    matrix, or the fused leg's pre-cut pairs — and ``add`` copies any
+    view, so a buffer never pins a batch matrix. Each query's rows
+    arrive in row order when uncut and in (score, id) order when cut to
+    R, so every cut sees its candidates in one fixed order."""
 
     def __init__(self, n_q: int, r: int, n_extra: int = 0):
         self.r = r
@@ -494,9 +558,9 @@ def _cosine_scorer(
     )
 
 
-# (row, query) pairs per float64 block of the fused exact rerank: bounds
-# its transient copies at 2 × 8192 × d doubles (8 MiB at d = 64)
-_EXACT_CHUNK = 8192
+# (row, query) pairs per block of the fused exact rerank's fold: bounds
+# its transient gathers at a few arrays of 65536 doubles (512 KiB each)
+_EXACT_CHUNK = 1 << 16
 
 
 def _check_label_pair(label_col, qlabel_col) -> None:
@@ -550,7 +614,22 @@ def _pair_kernel(
     scores. The fold is the ``_cosine_scorer`` / V.dot-V.magnitude op
     order on the vector cast to float64 here (not in storage), so
     ``xdist`` equals the Catalyst rerank's distance bit for bit; the
-    extra work is at most nq·emit_topk·d per Arrow batch."""
+    extra work is at most nq·emit_topk·d per Arrow batch.
+
+    Each Arrow batch is handled whole, and every per-candidate value
+    keeps the op sequence of a per-query loop (tests/test_knn_kernel.py
+    replays this closure against that loop as the reference):
+    - the routing is one (nq × rows) matrix from ``_row_mask``;
+    - the score matrix is transposed once, so each query's scores are
+      one contiguous row;
+    - the fused cut is ``_top_rows`` per query: a partition pre-cut,
+      then a lexsort of the survivors, the same rows in the same order
+      as a full lexsort's first ``emit_topk``;
+    - the exact fold casts the batch vectors once to contiguous
+      (d × rows) lanes and the queries to (d × nq), computes each row's
+      magnitude once (``_seq_mags``), and runs ``dot += x_j · q_j`` for
+      j = 0..d−1 over the selected (row, query) pairs, then
+      ``1 − max(dot / (|x|·|q|), 0)`` — the same left fold per pair."""
     import pyarrow as pa
 
     _check_label_pair(label_col, qlabel_col)
@@ -583,17 +662,15 @@ def _pair_kernel(
                 "exact_col needs an emit_topk whose buffer fits "
                 "EMIT_TOPK_BUDGET_BYTES; rerank on the Catalyst tail"
             )
-        Q = qb.X
-        qmags = _seq_mags(Q)
+        QT = np.ascontiguousarray(qb.X.T)
+        qmags = _seq_mags(qb.X)
     elif emit_topk is not None and not emit_topk_within_budget(nq, emit_topk):
         emit_topk = None  # buffer would not fit: stream full emission
-    cell_mask_lists = None
-    if cells_by_query is not None:
-        cell_mask_lists = [
-            np.array(cells_by_query.get(int(qid), []), dtype=np.int64)
-            for qid in qids
-        ]
-    qlabels = qb.extra[0] if qlabel_col is not None else None
+    routing = (
+        _routing_table(qids, cells_by_query)
+        if cells_by_query is not None else None
+    )
+    labeling = _label_table(qb.extra[0]) if qlabel_col is not None else None
     cols = [id_col, *scorer.payload]
     if cells_by_query is not None:
         cols.append(cell_col)
@@ -603,32 +680,42 @@ def _pair_kernel(
         cols.append(exact_col)
     src = base.select(*cols)
 
-    def _exact(topr, batch, ids, sc, rows_by_q):
+    def _exact(topr, batch, ids, st, mask):
         """Each query's batch-local top ``emit_topk`` rows by (score,
         id), handed to the accumulator with their exact distance."""
-        for qi, rows in enumerate(rows_by_q):
-            if len(rows) > emit_topk:
-                rows = rows[np.lexsort((ids[rows], sc[rows, qi]))[:emit_topk]]
-            rows_by_q[qi] = rows
+        every = np.arange(len(ids))
+        rows_by_q = [
+            _top_rows(
+                st[qi], ids,
+                every if mask is None else np.flatnonzero(mask[qi]),
+                emit_topk,
+            )
+            for qi in range(nq)
+        ]
         sel = np.concatenate(rows_by_q)
         sel_q = np.repeat(np.arange(nq), [len(r) for r in rows_by_q])
         # the vectors in their stored dtype (float32 on the fixtures),
-        # cast to float64 per chunk of selected (row, query) pairs
-        Xn = list_col_to_matrix(batch.column(exact_col), dtype=None)
+        # cast to float64 once per batch as contiguous (d × rows) lanes;
+        # each row's magnitude is folded once and gathered per pair
+        XT = np.ascontiguousarray(
+            list_col_to_matrix(batch.column(exact_col), dtype=None).T,
+            dtype=np.float64,
+        )
+        mags = _seq_mags(XT.T)
         xdist = np.empty(len(sel))
         for lo in range(0, len(sel), _EXACT_CHUNK):
+            rs = sel[lo: lo + _EXACT_CHUNK]
             qs = sel_q[lo: lo + _EXACT_CHUNK]
-            X = Xn[sel[lo: lo + _EXACT_CHUNK]].astype(np.float64)
-            Qs = Q[qs]
-            dot = np.zeros(len(qs))
-            for j in range(X.shape[1]):
-                dot += X[:, j] * Qs[:, j]
-            sims = dot / (_seq_mags(X) * qmags[qs])
-            xdist[lo: lo + len(qs)] = 1.0 - np.maximum(sims, 0.0)
+            dot = np.zeros(len(rs))
+            for j in range(len(XT)):
+                dot += XT[j][rs] * QT[j][qs]
+            sims = dot / (mags[rs] * qmags[qs])
+            xdist[lo: lo + len(rs)] = 1.0 - np.maximum(sims, 0.0)
+        sc = st[sel_q, sel]
         lo = 0
         for qi, rows in enumerate(rows_by_q):
             hi = lo + len(rows)
-            topr.add(qi, ids[rows], sc[rows, qi], xdist[lo:hi])
+            topr.add(qi, ids[rows], sc[lo:hi], xdist[lo:hi])
             lo = hi
 
     def _score(batches):
@@ -644,7 +731,7 @@ def _pair_kernel(
             mats = score(batch)
             cells = (
                 batch.column(cell_col).to_numpy()
-                if cell_mask_lists is not None
+                if routing is not None
                 else None
             )
             lab = (
@@ -652,35 +739,29 @@ def _pair_kernel(
                 if label_col is not None
                 else None
             )
-            masks = None
-            if cells is not None or lab is not None:
-                masks = [
-                    _row_mask(qi, n, cells, cell_mask_lists, lab, qlabels)
-                    for qi in range(nq)
-                ]
+            mask = _row_mask(cells, routing, lab, labeling)
+            if topr is None:
+                if mask is None:
+                    out = [np.tile(qids, n), np.repeat(ids, nq)]
+                    out += [m.ravel() for m in mats]
+                else:
+                    ri, qi = np.nonzero(mask.T)
+                    out = [qids[qi], ids[ri]] + [m[ri, qi] for m in mats]
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(a) for a in out], names=names
+                )
+                continue
+            # each query's scores as one contiguous row
+            st = np.ascontiguousarray(mats[0].T)
             if exact_col is not None:
-                _exact(topr, batch, ids, mats[0], [
-                    np.arange(n) if masks is None else np.nonzero(masks[qi])[0]
-                    for qi in range(nq)
-                ])
+                _exact(topr, batch, ids, st, mask)
                 continue
-            if topr is not None:
-                for qi in range(nq):
-                    if masks is None:
-                        topr.add(qi, ids, mats[0][:, qi])
-                    else:
-                        rows = np.nonzero(masks[qi])[0]
-                        topr.add(qi, ids[rows], mats[0][rows, qi])
-                continue
-            if masks is None:
-                out = [np.tile(qids, n), np.repeat(ids, nq)]
-                out += [m.ravel() for m in mats]
-            else:
-                ri, qi = np.nonzero(np.stack(masks, axis=1))
-                out = [qids[qi], ids[ri]] + [m[ri, qi] for m in mats]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(a) for a in out], names=names
-            )
+            for qi in range(nq):
+                if mask is None:
+                    topr.add(qi, ids, st[qi])
+                else:
+                    rows = np.flatnonzero(mask[qi])
+                    topr.add(qi, ids[rows], st[qi, rows])
         if topr is not None:
             yield pa.RecordBatch.from_arrays(
                 [pa.array(a) for a in topr.emit(qids)], names=names

@@ -933,15 +933,23 @@ def _pq_subspace_d2(X: np.ndarray, b_arr: np.ndarray) -> list:
     core shared by the PQ encode, the ADC LUT kernel and the collected
     LUTs, BIT-IDENTICAL to the fold form: the magnitude accumulates
     left-to-right over the dim axis (one rounding per op, no FMA), and
-    np.cumsum over the subspace slice is the same sequential (x−y)² left
-    fold (0.0 + x₁ ≡ x₁) that aggregate(zip_with(...)) and DuckDB's
-    list_sum evaluate."""
-    nv = X / KNN._seq_mags(X)[:, None]
+    each entry is the sequential (x−y)² left fold over the subspace
+    slice, ``acc = d₀·d₀`` then ``acc = acc + dₜ·dₜ`` for t = 1..sub−1
+    (0.0 + x₁ ≡ x₁), the order aggregate(zip_with(...)) and DuckDB's
+    list_sum evaluate. The fold runs one subspace dim at a time over
+    whole (rows, K) matrices, reading the normalized rows and the
+    codewords as contiguous per-dim lanes."""
+    nvT = np.ascontiguousarray((X / KNN._seq_mags(X)[:, None]).T)
+    bT = np.ascontiguousarray(b_arr.transpose(0, 2, 1))  # (M, sub, K)
     sub = b_arr.shape[2]
     out = []
     for m in range(b_arr.shape[0]):
-        diff = nv[:, None, m * sub: (m + 1) * sub] - b_arr[m][None, :, :]
-        out.append(np.cumsum(diff * diff, axis=2)[:, :, -1])
+        dt = nvT[m * sub][:, None] - bT[m, 0][None, :]
+        acc = dt * dt
+        for t in range(1, sub):
+            dt = nvT[m * sub + t][:, None] - bT[m, t][None, :]
+            acc = acc + dt * dt
+        out.append(acc)
     return out
 
 
@@ -963,9 +971,9 @@ def encode_codes(
     this numpy kernel is BIT-IDENTICAL to the fold form — normalization
     accumulates the magnitude left-to-right over the dim axis exactly
     like the aggregate expression (one rounding per op, no FMA),
-    np.cumsum along the subspace axis is the same sequential left fold
-    (0.0 + x₁ ≡ x₁) the aggregate expression and the DuckDB list_sum
-    oracle evaluate, elementwise (v−c)² is the same IEEE op, and
+    ``_pq_subspace_d2`` folds (v−c)² sequentially over the subspace
+    slice — the left fold (0.0 + x₁ ≡ x₁) the aggregate expression and
+    the DuckDB list_sum oracle evaluate, the same IEEE ops — and
     np.argmin's first-min tie-break is the (d, k) struct-min order.
     Normalizing IN the kernel (round-4) folds what was a separate
     two-persist normalized-vector frame into this single pass.
@@ -1018,9 +1026,10 @@ def _adc_lut_frame(
     is BIT-IDENTICAL to the fold form the DuckDB oracle evaluates:
     normalization accumulates the magnitude left-to-right over the dim
     axis (one rounding per op, no FMA), each LUT entry is the
-    (x−y)² left fold over the subspace slice via np.cumsum (0.0 + x₁ ≡
-    x₁), exactly the aggregate(zip_with(...)) order — asserted against
-    the expression form in tests/test_similarity.py.
+    sequential (x−y)² left fold over the subspace slice
+    (``_pq_subspace_d2``; 0.0 + x₁ ≡ x₁), exactly the
+    aggregate(zip_with(...)) order — asserted against the expression
+    form in tests/test_similarity.py.
 
     Bounded query batches never build this frame: knn_pq_adc and
     knn_ivfpq score them through the ``_pq_scorer`` (LUTs in the kernel
@@ -1168,16 +1177,19 @@ def _pq_scorer(books: list, query_id_col: str, query_vec_col: str):
     BIT-IDENTICAL to ``_adc_lut_frame`` ⋈ codes + ``_adc_expr`` (asserted
     in tests/test_knn_kernel.py): the LUT entries are that kernel's op
     sequence, and the per-candidate sum accumulates the M lookups in m
-    order from 0.0 — exactly _adc_expr's left fold."""
+    order from 0.0 — exactly _adc_expr's left fold. Each LUT is
+    transposed once per request to (K, nq), so lookup m is one row
+    gather ``lut_t[codes_m]`` added into a C-order (rows, nq)
+    accumulator."""
 
     def prep(qb):
-        luts = _pq_luts(qb, books)
+        luts_t = [np.ascontiguousarray(lut.T) for lut in _pq_luts(qb, books)]
         nq = len(qb.qids)
 
         def score(batch):
             acc = np.zeros((batch.num_rows, nq))
-            for m, lut in enumerate(luts):
-                acc += lut[:, batch.column(f"c{m}").to_numpy()].T
+            for m, lut_t in enumerate(luts_t):
+                acc += lut_t[batch.column(f"c{m}").to_numpy().astype(np.intp)]
             return [acc]
 
         return score
